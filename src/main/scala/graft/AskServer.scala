@@ -61,7 +61,23 @@ import graft.operators.{AskPipeline, Embed, GraphIndex}
   * slots ≈ the knee ServeBench measures on YOUR corpus/box (it prints
   * a "SERVE sizing" recommendation line) and let excess requests
   * queue in the JDK server's unbounded accept queue: at c=16 offered
-  * load, 4 slots + 12 queued beat 16 slots on every metric.
+  * load, 4 slots + 12 queued beat 16 slots on every metric. Those knee
+  * figures (and SCALE.md's live-HTTP tables) were measured while
+  * every kept-alive response still paid the 40 ms stall described
+  * next: their latencies carry 40 ms that is not compute and their
+  * per-client throughput is understated, so re-measure before sizing
+  * from them.
+  *
+  * TCP_NODELAY on every socket this server writes: the JDK HttpServer
+  * leaves Nagle's algorithm on and sends a response's headers and body
+  * as separate segments, so on a kept-alive connection the body waits
+  * for the client's delayed ACK of the headers — 40 ms minimum on
+  * Linux, far more than a resident-tier ask computes. The HTTP
+  * endpoints get it from [[AskServer.newHttpServer]] through the JDK's
+  * `sun.net.httpserver.nodelay` property, which is JVM-WIDE: it holds
+  * for every JDK HttpServer in the process, so every one in graft is
+  * created through that factory. The WS listener sets it on each
+  * accepted socket.
   *
   * Cache semantics under interleaving are CONCURRENT-ARRIVAL, exactly
   * [[AskPipeline.askBatch]]'s: each ask probes the snapshot current at
@@ -105,7 +121,7 @@ final class AskServer(spark: SparkSession, index: DataFrame,
     if (residentCache) Some(new operators.ResidentLfuCache(capacity)) else None
   private val memory = scala.collection.mutable.Map.empty[String, Vector[(String, String)]]
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", bindPort), 0)
+  private val server = AskServer.newHttpServer(new InetSocketAddress("127.0.0.1", bindPort))
   server.createContext("/ask", (ex: HttpExchange) => safely(ex)(handleAsk))
   server.createContext("/ask/stream", (ex: HttpExchange) => safely(ex)(handleStream))
   // the pool must be shut down with the server or its non-daemon
@@ -183,6 +199,9 @@ final class AskServer(spark: SparkSession, index: DataFrame,
               } catch { case _: Exception => () }
               try conn.close() catch { case _: Exception => () }
             } else {
+              // token frames are small writes, flushed one by one: with
+              // Nagle on, each waits for the client's delayed ACK
+              conn.setTcpNoDelay(true)
               conn.setSoTimeout(WsIdleTimeoutMs)
               wsConns.add(conn)
               // each connection gets its OWN daemon thread: a WS handler
@@ -541,6 +560,20 @@ final class AskServer(spark: SparkSession, index: DataFrame,
   * CI-safe, loopback-only. `runMain graft.AskServer [--keep-alive]`
   * leaves the server up for manual poking. */
 object AskServer {
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** Create a JDK HttpServer whose accepted sockets have TCP_NODELAY set
+    * (see the [[AskServer]] class comment for the stall it removes).
+    * The JDK reads `sun.net.httpserver.nodelay` once per JVM, when the
+    * first HttpServer is created, so every HttpServer in graft, test
+    * stubs included, is created here; a value the JVM was started with
+    * wins. */
+  private[graft] def newHttpServer(addr: InetSocketAddress): HttpServer = {
+    if (System.getProperty(NoDelayProperty) == null)
+      System.setProperty(NoDelayProperty, "true")
+    HttpServer.create(addr, 0)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master("local[32]")

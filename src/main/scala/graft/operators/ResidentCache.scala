@@ -28,13 +28,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    at/over capacity first evict the minimum-freq entry, ties →
   *    HIGHEST entry_id ([[CacheLfu.evictionVictim]]).
   *
-  * THREAD-SAFETY: every public method synchronizes on this object —
-  * lookups and effect merges are microsecond array scans, so one
-  * monitor is not a throughput concern, and callers get the same
-  * concurrent-arrival semantics as [[graft.AskServer]]'s
-  * snapshot-probe-then-merge over the DataFrame medium (a probe sees
-  * some consistent state; effects merge atomically, Touch on an
-  * evicted id no-ops).
+  * THREAD-SAFETY: every public method synchronizes on this object, so
+  * callers get the same concurrent-arrival semantics as
+  * [[graft.AskServer]]'s snapshot-probe-then-merge over the DataFrame
+  * medium (a probe sees some consistent state; effects merge
+  * atomically, Touch on an evicted id no-ops). The monitor serialises
+  * every scan, and scans are not microseconds: a lookup on a full
+  * 1,000-entry cache at dim 1024 measured 1.79 ms p50 and 3.16 ms p99
+  * (perfbench ask-miss, traced, 4 vCPUs), all of it inside the
+  * monitor. Once the HTTP transport adds no stall, that makes it the
+  * largest serialised step of a cache-miss ask.
   */
 final class ResidentLfuCache(val capacity: Int = graft.Schemas.CacheCapacity) {
   require(capacity >= 1, s"ResidentLfuCache: capacity=$capacity must be >= 1")

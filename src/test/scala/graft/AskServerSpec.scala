@@ -18,20 +18,22 @@ class AskServerSpec extends AnyFunSuite {
   lazy val spark = SparkSessions.spark
 
   private val mapper = new ObjectMapper()
-  private lazy val http = HttpClient.newHttpClient()
+  // the JDK server speaks HTTP/1.1 only; pinning skips the h2c upgrade
+  // offer, and the client keeps one connection alive per server
+  private lazy val http = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
 
-  private lazy val index = {
+  private lazy val chunks = {
     import spark.implicits._
     val docs = Seq(
       (1L, "the planner chooses a broadcast hash join for small tables"),
       (2L, "vectors are normalized before the cosine scoring step runs"),
       (3L, "the shuffle file is written per map task and fetched by reducers"))
       .toDF("doc_id", "text")
-    Materialize(Embed.withEmbedding(
-      Ingest.chunk(docs.filter(Ingest.nonBlank(col("text"))), "text", 8)
-        .select("doc_id", "chunk_idx", "chunk_text"),
-      "chunk_text", "embedding"))
+    Ingest.chunk(docs.filter(Ingest.nonBlank(col("text"))), "text", 8)
+      .select("doc_id", "chunk_idx", "chunk_text")
   }
+
+  private lazy val index = Materialize(Embed.withEmbedding(chunks, "chunk_text", "embedding"))
 
   private def withServer(f: Int => Unit): Unit = {
     val srv = new AskServer(spark, index)
@@ -44,6 +46,59 @@ class AskServerSpec extends AnyFunSuite {
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
+
+  /** A server on the resident tier the benchmark serves —
+    * `hot(residentText = true)` graph, resident LFU cache, driver-side
+    * TF-IDF query embedder — so an ask schedules no Spark job and its
+    * round trip is transport plus driver compute. */
+  private def withResidentServer(f: AskServer => Unit): Unit = {
+    val (embedded, dfreq, n) = Embed.withTfIdfEmbedding(chunks, "chunk_text", "embedding")
+    val tfIndex = Materialize(embedded)
+    val dir = java.nio.file.Files.createTempDirectory("graft_askresident").toString
+    val h = operators.GraphIndex.build(spark, tfIndex, Seq("doc_id", "chunk_idx"),
+      "embedding", dir, nCentroids = 2, m = 4, nBuckets = 4, beamWidth = 8, hops = 2)
+    val hot = operators.GraphIndex.hot(spark, h, residentText = true)
+    val srv = new AskServer(spark, tfIndex, graph = Some(hot),
+      embedQuery = Some(Embed.tfIdfQueryEmbedder(dfreq, n)), residentCache = true)
+    srv.start()
+    try f(srv) finally { srv.stop(); hot.cool() }
+  }
+
+  private def medianMs(nanos: Seq[Long]): Double = {
+    val s = nanos.sorted
+    (s((s.length - 1) / 2) + s(s.length / 2)) / 2e6
+  }
+
+  /** A real JDK WebSocket client on `/ws/ask`; `ask` sends one query and
+    * returns every message up to and including its done/error line. */
+  private final class WsClient(wsPort: Int, chatId: String) {
+    private val msgs = new java.util.concurrent.LinkedBlockingQueue[String]()
+    private val listener = new java.net.http.WebSocket.Listener {
+      private val sb = new StringBuilder
+      override def onText(ws: java.net.http.WebSocket, data: CharSequence,
+                          last: Boolean): java.util.concurrent.CompletionStage[_] = {
+        sb.append(data)
+        if (last) { msgs.add(sb.toString); sb.setLength(0) }
+        ws.request(1); null
+      }
+    }
+    private val ws = http.newWebSocketBuilder()
+      .buildAsync(URI.create(s"ws://127.0.0.1:$wsPort/ws/ask"), listener).join()
+    def ask(q: String): Seq[String] = {
+      ws.sendText(s"""{"chat_id":"$chatId","query":${mapper.writeValueAsString(q)}}""", true)
+      val got = scala.collection.mutable.ArrayBuffer.empty[String]
+      var done = false
+      while (!done) {
+        val m = msgs.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(m != null, s"WS relay stalled on '$q'; got so far: $got")
+        got += m
+        val n = mapper.readTree(m)
+        done = n.has("done") || n.has("error")
+      }
+      got.toSeq
+    }
+    def close(): Unit = ws.sendClose(java.net.http.WebSocket.NORMAL_CLOSURE, "bye").join()
+  }
 
   test("staleCheck=refuse answers 503 once the graph snapshot goes stale; log serves on") {
     import spark.implicits._
@@ -339,41 +394,18 @@ class AskServerSpec extends AnyFunSuite {
     srv.start()
     val wsPort = srv.wsStart()
     try {
-      val msgs = new java.util.concurrent.LinkedBlockingQueue[String]()
-      val listener = new java.net.http.WebSocket.Listener {
-        private val sb = new StringBuilder
-        override def onText(ws: java.net.http.WebSocket, data: CharSequence,
-                            last: Boolean): java.util.concurrent.CompletionStage[_] = {
-          sb.append(data)
-          if (last) { msgs.add(sb.toString); sb.setLength(0) }
-          ws.request(1); null
-        }
-      }
-      val ws = http.newWebSocketBuilder()
-        .buildAsync(URI.create(s"ws://127.0.0.1:$wsPort/ws/ask"), listener).join()
-      def askWs(q: String): Seq[String] = {
-        ws.sendText(s"""{"chat_id":"w0","query":${mapper.writeValueAsString(q)}}""", true)
-        val got = scala.collection.mutable.ArrayBuffer.empty[String]
-        var done = false
-        while (!done) {
-          val m = msgs.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-          assert(m != null, s"WS relay stalled; got so far: $got")
-          got += m
-          done = mapper.readTree(m).has("done") || mapper.readTree(m).has("error")
-        }
-        got.toSeq
-      }
+      val ws = new WsClient(wsPort, "w0")
       // first ask: miss — token frames then done(from_cache=false)
-      val first = askWs("broadcast hash join planner")
+      val first = ws.ask("broadcast hash join planner")
       val d1 = mapper.readTree(first.last)
       assert(!d1.path("from_cache").asBoolean(true))
       val answer = first.init.map(m => mapper.readTree(m).path("token").asText()).mkString
       assert(answer.nonEmpty)
       // second ask on the SAME connection: served from the shared cache
-      val second = askWs("broadcast hash join planner")
+      val second = ws.ask("broadcast hash join planner")
       assert(mapper.readTree(second.last).path("from_cache").asBoolean(false))
       assert(second.init.map(m => mapper.readTree(m).path("token").asText()).mkString == answer)
-      ws.sendClose(java.net.http.WebSocket.NORMAL_CLOSURE, "bye").join()
+      ws.close()
       // the WS asks share serving state with HTTP: POST /ask hits the
       // same cache entry the WS miss created
       val r = mapper.readTree(post(srv.port, "/ask",
@@ -381,6 +413,21 @@ class AskServerSpec extends AnyFunSuite {
       assert(r.path("from_cache").asBoolean(false), "HTTP must hit the WS-seeded cache")
       assert(r.path("answer").asText() == answer)
     } finally srv.stop()
+    // back-to-back asks on one connection run at compute speed: every
+    // answer is several token frames, and with Nagle on the socket each
+    // frame after the first waited for the client's delayed ACK (40 ms)
+    withResidentServer { rs =>
+      val ws = new WsClient(rs.wsStart(), "w1")
+      val rounds = (0 until 24).map { i =>
+        val t0 = System.nanoTime()
+        val got = ws.ask(s"shuffle files fetched by reducers $i")
+        assert(mapper.readTree(got.last).has("done"), got)
+        System.nanoTime() - t0
+      }
+      ws.close()
+      assert(medianMs(rounds) < 30.0,
+        s"median WS ask round trip ${medianMs(rounds)} ms; all: ${rounds.map(_ / 1000000)}")
+    }
   }
 
   test("WS demo loop spec-pinned: capacity-2 LFU evicts the cold entry, frequent one survives") {
@@ -395,29 +442,9 @@ class AskServerSpec extends AnyFunSuite {
     srv.start()
     val wsPort = srv.wsStart()
     try {
-      val msgs = new java.util.concurrent.LinkedBlockingQueue[String]()
-      val listener = new java.net.http.WebSocket.Listener {
-        private val sb = new StringBuilder
-        override def onText(ws: java.net.http.WebSocket, data: CharSequence,
-                            last: Boolean): java.util.concurrent.CompletionStage[_] = {
-          sb.append(data)
-          if (last) { msgs.add(sb.toString); sb.setLength(0) }
-          ws.request(1); null
-        }
-      }
-      val ws = http.newWebSocketBuilder()
-        .buildAsync(URI.create(s"ws://127.0.0.1:$wsPort/ws/ask"), listener).join()
-      def fromCache(q: String): Boolean = {
-        ws.sendText(s"""{"chat_id":"demo","query":${mapper.writeValueAsString(q)}}""", true)
-        var done: Option[Boolean] = None
-        while (done.isEmpty) {
-          val m = msgs.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-          assert(m != null, s"WS relay stalled on '$q'")
-          val n = mapper.readTree(m)
-          if (n.has("done") || n.has("error")) done = Some(n.path("from_cache").asBoolean(false))
-        }
-        done.get
-      }
+      val ws = new WsClient(wsPort, "demo")
+      def fromCache(q: String): Boolean =
+        mapper.readTree(ws.ask(q).last).path("from_cache").asBoolean(false)
       val q1 = "broadcast hash join planner"
       val q2 = "cosine scoring normalized vectors"
       val q3 = "shuffle file map task reducers"
@@ -427,7 +454,7 @@ class AskServerSpec extends AnyFunSuite {
       assert(!fromCache(q3), "third distinct ask must miss and evict the LFU entry")
       assert(!fromCache(q2), "evicted entry must miss again on re-ask")
       assert(fromCache(q1), "the frequent entry must survive every eviction")
-      ws.sendClose(java.net.http.WebSocket.NORMAL_CLOSURE, "bye").join()
+      ws.close()
       // WS ↔ HTTP shared state: the same loop's cache serves POST /ask
       val r = mapper.readTree(post(srv.port, "/ask",
         s"""{"chat_id":"other","query":${mapper.writeValueAsString(q1)}}""").body())
@@ -457,6 +484,23 @@ class AskServerSpec extends AnyFunSuite {
       assert(ask(q1).path("from_cache").asBoolean(false),
         "the frequent entry must survive eviction")
     } finally srv.stop()
+  }
+
+  test("kept-alive HTTP/1.1 /ask on the resident tier runs at compute speed (no Nagle stall)") {
+    // the JDK server writes headers and body as separate segments; with
+    // Nagle on, the body of every response on a kept-alive connection
+    // waited for the client's delayed ACK of the headers (>= 40 ms)
+    withResidentServer { srv =>
+      val rounds = (0 until 40).map { i =>
+        val t0 = System.nanoTime()
+        val r = post(srv.port, "/ask",
+          s"""{"chat_id":"ka","query":"cosine scoring normalized vectors $i"}""")
+        assert(r.statusCode() == 200, r.body())
+        System.nanoTime() - t0
+      }
+      assert(medianMs(rounds) < 30.0,
+        s"median /ask round trip ${medianMs(rounds)} ms; all: ${rounds.map(_ / 1000000)}")
+    }
   }
 
   test("validation: missing query is a 400, not a crash") {

@@ -4,7 +4,7 @@ import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,7 +44,7 @@ class HttpEmbedClientSpec extends AnyFunSuite {
     *  - /flaky   → 500 for the first request, then /ok behavior
     */
   private def startStub(dim: Int): (Int, AtomicInteger, java.util.Vector[Int], () => Unit) = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = AskServer.newHttpServer(new InetSocketAddress("127.0.0.1", 0))
     val requests = new AtomicInteger(0)
     val batchSizes = new java.util.Vector[Int]()
     val flakyFailed = new AtomicInteger(0)

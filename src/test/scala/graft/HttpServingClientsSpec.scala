@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{HttpGenerateClient, HttpRerankClient}
@@ -20,7 +20,7 @@ class HttpServingClientsSpec extends AnyFunSuite {
 
   // ---------------- rerank stub ----------------
   private def startRerankStub(): (Int, AtomicInteger, () => Unit) = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = AskServer.newHttpServer(new InetSocketAddress("127.0.0.1", 0))
     val requests = new AtomicInteger(0)
     server.createContext("/", (ex: HttpExchange) => {
       requests.incrementAndGet()
@@ -73,7 +73,7 @@ class HttpServingClientsSpec extends AnyFunSuite {
 
   // ---------------- generation stub ----------------
   private def startGenStub(tokens: Seq[String]): (Int, () => Unit) = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = AskServer.newHttpServer(new InetSocketAddress("127.0.0.1", 0))
     server.createContext("/", (ex: HttpExchange) => {
       if (ex.getRequestURI.getPath == "/fail") {
         ex.sendResponseHeaders(500, -1); ex.close()
