@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A JVM/codegen warmup action runs first so the
   * first measured query doesn't absorb session startup.
@@ -186,7 +188,7 @@ object Bench {
       try {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         -1.0 // a failed query must not report as a near-zero (fast) time
       }

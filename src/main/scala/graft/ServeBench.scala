@@ -108,9 +108,11 @@ object ServeBench {
     val gdir = java.nio.file.Files.createTempDirectory("serve_graph").toString
     // DEFAULT: the recall-gated production build (buildServing) — the
     // measured recipe wired in: sqrt-N codebook, head-seed TRAINED
-    // sqrt-C coarse quantizer probed at p=4 (PmcRecallProbe: = flat
-    // recall 0.98 at 69 vs 181 dots/row; head-order seeds are
-    // load-bearing — hash-random seeds collapse to 0.405), and the
+    // sqrt-C coarse quantizer probed at p=8 (PmcRecallProbe measured
+    // p=4 = flat recall 0.98 at 69 vs 181 dots/row on PMC, but on the
+    // sf0.1 documents p=4 gates at recall@10 0.895 and the build
+    // refuses; head-order seeds are load-bearing — hash-random seeds
+    // collapse to 0.405), and the
     // build REFUSES below recall 0.9 ON THE BENCH'S OWN QUERY
     // WORKLOAD — a ServeBench number can no longer come from a
     // low-recall store by construction. Edge bands stay off here (they
@@ -127,7 +129,7 @@ object ServeBench {
       } else operators.GraphIndex.buildServing(spark, index,
         Seq("doc_id", "chunk_idx"), "embedding", gdir,
         m = 16, nBuckets = 64, beamWidth = 32, hops = 3,
-        superProbes = 4,
+        superProbes = 8,
         recallFloor = 0.9, recallQueries = 20, recallK = 10,
         recallQueriesDf = Some(qWorkload))
     // `hot` serves from the in-JVM tier (GraphIndex.hot — zero Spark

@@ -220,10 +220,11 @@ object Embed {
       val raw = new Array[Double](dim)
       tf.forEach { (t, n) =>
         md.reset()
-        val hex = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .map(b => f"$b%02x").mkString
-        val bucket = Integer.parseInt(hex.substring(0, 4), 16) % dim
-        val sign = if (Integer.parseInt(hex.substring(2, 3), 16) % 2 == 0) 1.0 else -1.0
+        val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        // md5Bucket16/md5Sign read hex digits 0-3 and digit 2 of the
+        // digest; those are bytes 0-1 and the high nibble of byte 1
+        val bucket = ((d(0) & 0xff) << 8 | (d(1) & 0xff)) % dim
+        val sign = if (((d(1) >> 4) & 0xf) % 2 == 0) 1.0 else -1.0
         val dfT = dfMap.getOrDefault(t, 1L)
         raw(bucket) += sign * n * math.log(1.0 + nDocs.toDouble / dfT)
       }

@@ -224,9 +224,9 @@ object GraphIndex {
     * and each [[HotSharded]] executor shard run the IDENTICAL arrays
     * (and the identical [[walkArrays]] over them — the two tiers
     * cannot drift). Serializable: a shard ships to its executor once
-    * inside a persisted, deserialized RDD partition; `idToIdx` is
-    * rebuilt lazily per JVM rather than serialized (boxed maps ship
-    * badly; the arrays are the contract). */
+    * inside a persisted, deserialized RDD partition; `idToIdx`,
+    * `finite` and `maxDegree` are derived lazily per JVM rather than
+    * serialized (boxed maps ship badly; the arrays are the contract). */
   private[graft] final class GraphArrays(
       val ids: Array[Long],
       val vecs: Array[Array[Double]],
@@ -246,67 +246,129 @@ object GraphIndex {
       }
       idx0
     }
+    /** Every node vector finite — the walk may fold sparse queries
+      * over their nonzeros only ([[CosineKernel]]). */
+    @transient lazy val finite: Boolean = vecs.forall(CosineKernel.allFinite)
+    @transient lazy val maxDegree: Int =
+      adjOf.foldLeft(0)((m, a) => math.max(m, a.length))
+  }
+
+  /** A walk's visited set: node indices in insertion order with their
+    * sims, plus an open-addressing index over them — primitive
+    * storage, no boxing. `capacity` must bound the distinct adds. */
+  private final class Visited(capacity: Int) {
+    private val mask = Integer.highestOneBit(math.max(2 * capacity, 2) - 1) * 2 - 1
+    private val slots = Array.fill(mask + 1)(-1)
+    val idx = new Array[Int](capacity)
+    val sim = new Array[Double](capacity)
+    var size = 0
+    private def slotOf(i: Int): Int = {
+      var h = (i * 0x9E3779B9) & mask
+      while (slots(h) != -1 && slots(h) != i) h = (h + 1) & mask
+      h
+    }
+    def contains(i: Int): Boolean = slots(slotOf(i)) == i
+    /** Add node `i` with `s` unless already present. */
+    def add(i: Int, s: Double): Unit = {
+      val h = slotOf(i)
+      if (slots(h) != i) {
+        slots(h) = i; idx(size) = i; sim(size) = s; size += 1
+      }
+    }
+  }
+
+  /** Bounded top-`beam` of (node index, sim) pairs under the walk's
+    * (−sim, id) key — `java.lang.Double.compare` on −sim, then id asc;
+    * the same order as `sortBy { case (id, s) => (-s, id) }.take(beam)`,
+    * ties between equal keys kept in arrival order like the stable sort. */
+  private final class TopBeam(g: GraphArrays, beam: Int) {
+    val idx = new Array[Int](math.max(beam, 0))
+    val sim = new Array[Double](math.max(beam, 0))
+    var size = 0
+    private def before(s1: Double, i1: Int, s2: Double, i2: Int): Boolean = {
+      val c = java.lang.Double.compare(-s1, -s2)
+      c < 0 || (c == 0 && g.ids(i1) < g.ids(i2))
+    }
+    def offer(i: Int, s: Double): Unit = {
+      if (size < idx.length || (size > 0 && before(s, i, sim(size - 1), idx(size - 1)))) {
+        var p = math.min(size, idx.length - 1)
+        while (p > 0 && before(s, i, sim(p - 1), idx(p - 1))) {
+          idx(p) = idx(p - 1); sim(p) = sim(p - 1); p -= 1
+        }
+        idx(p) = i; sim(p) = s
+        if (size < idx.length) size += 1
+      }
+    }
   }
 
   /** THE beam walk over resident arrays — [[Ann.beamWalk]]'s in-JVM
     * twin, shared verbatim by [[Hot]] (driver) and [[HotSharded]]
     * (executors). Entry: the beam nearest of `entryIdxs` (sim desc, id
     * asc — the beamWalk ordering; ids are unique so the order is
-    * total); then `hops` rounds of top-beam frontier expansion, each
-    * visited node scored once with the ascending-fold cosine. Returns
-    * the full visited set, UNFILTERED (tombstone snapshots are a tier
-    * concern — [[Hot]] filters driver-side, [[HotSharded]] after the
-    * collect — so the walk itself stays a pure function of
-    * (arrays, entries, query)). */
+    * total; a repeated entry index takes a slot per occurrence, as
+    * `sortBy.take(beam)` does, and is visited once); then `hops` rounds
+    * of top-beam frontier expansion, each visited node scored once with
+    * the ascending-fold cosine. Returns the full visited set, UNFILTERED
+    * (tombstone snapshots are a tier concern — [[Hot]] filters
+    * driver-side, [[HotSharded]] after the collect — so the walk itself
+    * stays a pure function of (arrays, entries, query)).
+    *
+    * Cost: the dot folds only the query's nonzero dimensions when every
+    * node vector is finite (the [[CosineKernel]] sparse-query rule,
+    * bit-identical to the dense fold under that precondition; a graph
+    * holding a NaN or ±Inf component walks dense). The visited set is
+    * primitive and bounded by |entries| + hops·beam·maxDegree, and each
+    * hop picks its frontier by a bounded top-beam selection, not a sort. */
   private[graft] def walkArrays(g: GraphArrays, entryIdxs: Array[Int],
                                 q: Array[Double], beam: Int,
                                 hops: Int): Seq[(Long, Double)] = {
-    var qn = 0.0
-    var i = 0
-    while (i < q.length) { qn += q(i) * q(i); i += 1 }
-    val qnorm = math.sqrt(qn)
+    val v = walkVisited(g, entryIdxs, q, beam, hops)
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      Array.tabulate(v.size)(i => (g.ids(v.idx(i)), v.sim(i))))
+  }
+
+  /** [[walkArrays]] without the boxed result: the visited set itself. */
+  private def walkVisited(g: GraphArrays, entryIdxs: Array[Int],
+                          q: Array[Double], beam: Int, hops: Int): Visited = {
+    val qnorm = CosineKernel.norm(q)
+    val nz = CosineKernel.nonzeros(q)
+    val finite = g.finite
     def simOf(idx: Int): Double = {
       val v = g.vecs(idx)
       require(v.length == q.length,
         s"GraphIndex.walkArrays: dimension mismatch (${v.length} vs ${q.length})")
-      var dot = 0.0
-      var j = 0
-      while (j < v.length) { dot += q(j) * v(j); j += 1 }
-      if (qnorm == 0.0 || g.norms(idx) == 0.0) 0.0
-      else dot / (qnorm * g.norms(idx))
+      CosineKernel.cosine(CosineKernel.dot(q, nz, v, finite), qnorm, g.norms(idx))
     }
-    val visited = new java.util.HashMap[Long, Double]()
-    entryIdxs.map(ci => (g.ids(ci), ci, simOf(ci)))
-      .sortBy { case (id, _, s) => (-s, id) }
-      .take(beam)
-      .foreach { case (id, _, s) => visited.put(id, s) }
+    val b = math.max(beam, 0)
+    val bound = math.min(g.ids.length.toLong,
+      math.min(entryIdxs.length, b).toLong + math.max(hops, 0).toLong * b * g.maxDegree).toInt
+    val visited = new Visited(bound)
+    val entry = new TopBeam(g, b)
+    var i = 0
+    while (i < entryIdxs.length) { val ci = entryIdxs(i); entry.offer(ci, simOf(ci)); i += 1 }
+    i = 0
+    while (i < entry.size) { visited.add(entry.idx(i), entry.sim(i)); i += 1 }
     var hop = 0
     while (hop < hops) {
-      import scala.jdk.CollectionConverters._
-      val frontier = visited.entrySet().asScala.toSeq
-        .map(e => (e.getKey.longValue(), e.getValue.doubleValue()))
-        .sortBy { case (id, s) => (-s, id) }
-        .take(beam)
-      frontier.foreach { case (id, _) =>
-        val idx = g.idToIdx.get(id)
-        if (idx != null) {
-          val ns = g.adjOf(idx.intValue())
-          var m = 0
-          while (m < ns.length) {
-            val nIdx = ns(m)
-            val nId = g.ids(nIdx)
-            // re-scored ids recompute the same value (beamWalk's map
-            // overwrite) — skip the dot when already visited
-            if (!visited.containsKey(nId)) visited.put(nId, simOf(nIdx))
-            m += 1
-          }
+      val frontier = new TopBeam(g, b)
+      i = 0
+      while (i < visited.size) { frontier.offer(visited.idx(i), visited.sim(i)); i += 1 }
+      var f = 0
+      while (f < frontier.size) {
+        val ns = g.adjOf(frontier.idx(f))
+        var m = 0
+        while (m < ns.length) {
+          val nIdx = ns(m)
+          // re-scored nodes recompute the same value (beamWalk's map
+          // overwrite) — skip the dot when already visited
+          if (!visited.contains(nIdx)) visited.add(nIdx, simOf(nIdx))
+          m += 1
         }
+        f += 1
       }
       hop += 1
     }
-    import scala.jdk.CollectionConverters._
-    visited.entrySet().asScala.toSeq
-      .map(e => (e.getKey.longValue(), e.getValue.doubleValue()))
+    visited
   }
 
   /** The resident tiers' sidecar re-attach: [[Serving.attach]] minus
@@ -343,7 +405,11 @@ object GraphIndex {
     * The walk reproduces [[Ann.graphSearchResidentNormalized]]'s
     * visited set BIT-FOR-BIT (GraphIndexSpec pins equality): same
     * ascending-fold cosine, same (sim desc, id asc) entry/frontier
-    * ordering, same hop count. Like [[Warm]] it is an immutable
+    * ordering, same hop count. The fold runs over only the query's
+    * nonzero dimensions while every node vector is finite (the
+    * [[CosineKernel]] sparse-query rule — bit-identical to the dense
+    * fold under that precondition; a graph holding a NaN or ±Inf
+    * component folds dense). Like [[Warm]] it is an immutable
     * SNAPSHOT — inserts/deletes after [[hot]] are invisible until
     * re-hot. */
   final class Hot private[GraphIndex] (
@@ -381,12 +447,33 @@ object GraphIndex {
     def topKLocalRows(queryVec: Seq[Double],
                       k: Int): Option[Seq[(Any, Long, String, Double)]] =
       textMap.map { tm =>
-        walk(queryVec)
-          .flatMap { case (id, s) =>
-            Option(tm.get(Long.box(id))).map { case (d, ci, t) => (d, ci, t, s) }
+        // bounded top-k under hitOrdering — the rows of
+        // `.sorted(hitOrdering).take(k)`: the ordering is total over
+        // unique (doc_id, chunk_idx), and equal keys keep arrival order
+        val top = new Array[(Any, Long, String, Double)](math.max(k, 0))
+        var n = 0
+        val v = walkVisited(arrays, centIdxs, queryVec.toArray,
+          handle.beamWidth, handle.hops)
+        var i = 0
+        while (i < v.size) {
+          val id = nodeIds(v.idx(i))
+          val hit =
+            if (!tombs.isEmpty && tombs.contains(id)) null else tm.get(Long.box(id))
+          if (hit != null) {
+            val row = (hit._1, hit._2, hit._3, v.sim(i))
+            if (n < top.length ||
+                (n > 0 && Retrieval.hitOrdering.compare(row, top(n - 1)) < 0)) {
+              var p = math.min(n, top.length - 1)
+              while (p > 0 && Retrieval.hitOrdering.compare(row, top(p - 1)) < 0) {
+                top(p) = top(p - 1); p -= 1
+              }
+              top(p) = row
+              if (n < top.length) n += 1
+            }
           }
-          .sorted(Retrieval.hitOrdering)
-          .take(k)
+          i += 1
+        }
+        top.take(n).toSeq
       }
 
     /** One query's full visited set — the in-JVM twin of
@@ -553,11 +640,7 @@ object GraphIndex {
         vecs += v
       }
     }
-    val norms = vecs.map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }.toArray
+    val norms = vecs.map(CosineKernel.norm).toArray
     val edgePairs = spark.read.parquet(h.edgesDir)
       .select(col("src").cast("long"), col("dst").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -664,31 +747,22 @@ object GraphIndex {
 
     override def loadStamp: Option[String] = stamp
 
-    private val centNorms: Array[Double] = centVecs.map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
+    private val centNorms: Array[Double] = centVecs.map(CosineKernel.norm)
+    private val centFinite: Array[Boolean] = centVecs.map(CosineKernel.allFinite)
 
     /** Driver-side routing: the top-beam entry centroids (the walk's
       * entry rule, computed once against the resident codebook — same
       * ascending-fold cosine as [[walkArrays]], so the per-shard entry
       * sets union to EXACTLY the unsharded walk's entry set). */
     private def routeEntries(q: Array[Double]): Seq[(Long, Int)] = {
-      var qn = 0.0
-      var i = 0
-      while (i < q.length) { qn += q(i) * q(i); i += 1 }
-      val qnorm = math.sqrt(qn)
+      val qnorm = CosineKernel.norm(q)
+      val nz = CosineKernel.nonzeros(q)
       centIds.indices.map { ci =>
         val v = centVecs(ci)
         require(v.length == q.length,
           s"HotSharded.route: dimension mismatch (${v.length} vs ${q.length})")
-        var dot = 0.0
-        var j = 0
-        while (j < v.length) { dot += q(j) * v(j); j += 1 }
-        val s = if (qnorm == 0.0 || centNorms(ci) == 0.0) 0.0
-                else dot / (qnorm * centNorms(ci))
-        (ci, s)
+        (ci, CosineKernel.cosine(
+          CosineKernel.dot(q, nz, v, centFinite(ci)), qnorm, centNorms(ci)))
       }
         .sortBy { case (ci, s) => (-s, centIds(ci)) }
         .take(handle.beamWidth)
@@ -910,11 +984,7 @@ object GraphIndex {
         }
         if (ids.isEmpty) Iterator.empty
         else {
-          val norms = vecs.map { v =>
-            var s = 0.0; var i = 0
-            while (i < v.length) { s += v(i) * v(i); i += 1 }
-            math.sqrt(s)
-          }.toArray
+          val norms = vecs.map(CosineKernel.norm).toArray
           val adjBuf = Array.fill(ids.length)(
             scala.collection.mutable.ArrayBuffer.empty[Int])
           es.foreach { case (_, (s, d)) =>

@@ -265,6 +265,29 @@ class GraphIndexSpec extends AnyFunSuite {
     } finally { w.cool(); hotH.cool() }
   }
 
+  test("hot serving: a DENSE random query's full visited set equals the warm walk") {
+    // the demo queries are sparse hashed-BoW vectors, so the hot walk
+    // folds them over their nonzeros only; a Gaussian query has no zero
+    // component and pins the dense side of the same fold
+    val w = GraphIndex.warm(spark, handle)
+    val hotH = GraphIndex.hot(spark, handle)
+    try {
+      val rnd = new scala.util.Random(17L)
+      val qv = Seq.fill(graft.Schemas.EmbeddingDim)(rnd.nextGaussian())
+      assert(qv.forall(_ != 0.0))
+      val warmRows = w.search(spark, qv)
+        .select("doc_id", "chunk_idx", "sim")
+        .as[(String, Int, Double)].collect().toSeq.sorted
+      val hotRows = hotH.search(spark, qv)
+        .select("doc_id", "chunk_idx", "sim")
+        .as[(String, Int, Double)].collect().toSeq.sorted
+      assert(warmRows.nonEmpty)
+      assert(hotRows.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))) ==
+        warmRows.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))),
+        "hot visited set diverged from warm for a dense query")
+    } finally { w.cool(); hotH.cool() }
+  }
+
   test("sharded hot at nShards=1 is bit-for-bit the single-JVM hot walk") {
     val hotH = GraphIndex.hot(spark, handle)
     val sh = GraphIndex.hotSharded(spark, handle, nShards = 1)
