@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   * serves behind a 5-way semaphore, app/main.py:31,186). Each level
   * gets a fresh server (fresh cache — retrieval latency, not hit
   * latency), 64 distinct single-miss asks dispatched work-stealing
-  * across c client threads; reports per-request p50/p95/max plus
-  * wall-clock throughput, and one JSON line.
+  * across c client threads; reports per-request p50/p95/p99/max plus
+  * wall-clock throughput, and one JSON line. Percentiles are nearest
+  * rank, so with 64 asks a level's p99 is its slowest ask.
   */
 object ServeBench {
   private def pct(sorted: Seq[Double], p: Double): Double =
@@ -391,15 +392,15 @@ object ServeBench {
         val wall = (System.nanoTime() - t0) / 1e9
         import scala.jdk.CollectionConverters._
         val s = lat.asScala.toSeq.sorted
-        val (p50, p95, mx) = (pct(s, 0.50), pct(s, 0.95), s.last)
+        val (p50, p95, p99, mx) = (pct(s, 0.50), pct(s, 0.95), pct(s, 0.99), s.last)
         val thr = queries.length / wall
         println(f"SERVE http c=$c n=${s.length} p50=$p50%.3f p95=$p95%.3f " +
-          f"max=$mx%.3f s/req wall=$wall%.1f s throughput=$thr%.2f ask/s")
-        (c, p50, p95, mx, wall, thr)
+          f"p99=$p99%.3f max=$mx%.3f s/req wall=$wall%.1f s throughput=$thr%.2f ask/s")
+        (c, p50, p95, p99, mx, wall, thr)
       } finally srv.stop()
     }
-    val levelJson = levels.map { case (c, p50, p95, mx, wall, thr) =>
-      f""""c$c":{"p50":$p50%.3f,"p95":$p95%.3f,"max":$mx%.3f,"wall":$wall%.1f,"ask_per_sec":$thr%.2f}"""
+    val levelJson = levels.map { case (c, p50, p95, p99, mx, wall, thr) =>
+      f""""c$c":{"p50":$p50%.3f,"p95":$p95%.3f,"p99":$p99%.3f,"max":$mx%.3f,"wall":$wall%.1f,"ask_per_sec":$thr%.2f}"""
     }.mkString(",")
     println(s"""{"bench":"serve_http_concurrent","corpus":"$corpusName","tier":"$tierName","chunks":$nChunks,$levelJson}""")
     // the sizing rule a deploy should copy instead of the default 8:
@@ -412,15 +413,15 @@ object ServeBench {
     // override runs one level (nothing to compare), and a sweep whose
     // max sits on the last level never saw throughput fall, so
     // claiming "more slots reduce throughput" would be unsupported.
-    val knee = levels.maxBy(_._6)
+    val knee = levels.maxBy(_._7)
     if (levels.length > 1 && knee._1 != levels.last._1)
       println(f"SERVE sizing: throughput knee at c=${knee._1} " +
-        f"(${knee._6}%.2f ask/s) — set AskServer(concurrency ≈ ${knee._1}) " +
+        f"(${knee._7}%.2f ask/s) — set AskServer(concurrency ≈ ${knee._1}) " +
         "and let excess requests queue; more slots past the knee REDUCE " +
         "throughput (driver beam-walk contention, see SCALE.md c=16 table)")
     else if (levels.length > 1)
       println(f"SERVE sizing: throughput still rising at the widest level " +
-        f"measured (c=${knee._1}, ${knee._6}%.2f ask/s) — no knee observed; " +
+        f"measured (c=${knee._1}, ${knee._7}%.2f ask/s) — no knee observed; " +
         "extend the sweep before sizing the pool")
   }
 }

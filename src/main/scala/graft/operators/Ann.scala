@@ -559,21 +559,20 @@ object Ann {
     * restores ~balanced splits whose boundary passes through the data
     * cloud's center — the standard remedy — while staying fully
     * deterministic: the mean is one fixed aggregate, the plane rows are
-    * picked by id order, no RNG anywhere. One posexplode+avg pass over
-    * the corpus (map-side partial agg, dim-bounded shuffle) computes
-    * the mean; the planes themselves are n driver-side rows. */
+    * picked by id order, no RNG anywhere. One vector-mean pass over
+    * the corpus ([[VecMean]]: map-side partial sums, one dim-sized
+    * partial per partition shuffled) computes the mean; the planes
+    * themselves are n driver-side rows. */
   def centeredPlanes(index: DataFrame, idCol: String, vecCol: String,
                      n: Int): Seq[Seq[Double]] = {
     require(n >= 1, s"centeredPlanes: n=$n must be >= 1")
-    val mean = index
-      .select(posexplode(col(vecCol).cast("array<double>")).as(Seq("_dim", "_x")))
-      .groupBy("_dim").agg(avg("_x").as("_m"))
-      .orderBy("_dim")
-      .select("_m").collect().map(_.getDouble(0))
     val raw = index.orderBy(col(idCol)).limit(n)
       .select(col(vecCol).cast("array<double>")).collect()
       .map(_.getSeq[Double](0).toArray)
     require(raw.length == n, s"centeredPlanes: corpus has only ${raw.length} rows, need $n")
+    val mean = index
+      .agg(udaf(new VecMean(raw.head.length)).apply(col(vecCol).cast("array<double>")))
+      .head().getSeq[Double](0)
     raw.map(p => p.zip(mean).map { case (x, m) => x - m }.toSeq).toSeq
   }
 
@@ -640,12 +639,17 @@ object Ann {
       .select(col(idCol).as("centroid_id"), col(vecCol).as("centroid_vec"))
 
   /** Lloyd refinement of IVF centroids: `iters` rounds of assign →
-    * per-cell elementwise mean. The mean is computed by exploding
-    * dimensions and aggregating (map-side partial avg) — one shuffle of
-    * (cell, dim, sum) triples per round, never of raw vectors. Cells
-    * that lose all members drop out (their id disappears), mirroring
-    * standard k-means behavior. Deterministic given the inputs up to
-    * floating-point summation order — centroids are internal state, not
+    * per-cell elementwise mean. Each round is ONE `groupBy(cell_id)`
+    * with a vector-mean aggregate ([[VecMean]]): rows sum map-side in
+    * partition order, partials merge, the final divides by the count —
+    * the adds and the division Spark's `avg` makes per dimension, so
+    * the centroids equal a per-dimension `avg` bit-for-bit, without
+    * exploding a row per dimension. One shuffle of per-cell partial
+    * sums per round, never of raw vectors. Every vector must have
+    * `dim` components. Cells that lose all members drop out (their id
+    * disappears), mirroring standard k-means behavior. Deterministic
+    * given the inputs up to floating-point summation order (the order
+    * partials merge in) — centroids are internal state, not
     * oracle-compared output. */
   def kmeansRefine(index: DataFrame, idCol: String, vecCol: String,
                    initial: DataFrame, dim: Int, iters: Int = 2,
@@ -665,20 +669,49 @@ object Ann {
       if (sampleFrac >= 1.0) index
       else index.filter(
         pmod(xxhash64(col(idCol)), lit(1000000L)) < (sampleFrac * 1e6).toLong)
+    val mean = udaf(new VecMean(dim))
     var cents = initial
     for (_ <- 0 until iters) {
-      val assigned = assignCells(train, idCol, vecCol, cents, "centroid_id", "centroid_vec")
-      cents = assigned
-        .select(col("cell_id"),
-          posexplode(col(vecCol).cast("array<double>")).as(Seq("_dim", "_x")))
-        .groupBy("cell_id", "_dim").agg(avg("_x").as("_m"))
-        .groupBy("cell_id")
-        .agg(map_from_entries(collect_list(struct(col("_dim"), col("_m")))).as("_mm"))
-        .select(col("cell_id").as("centroid_id"),
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => coalesce(element_at(col("_mm"), j), lit(0.0))).as("centroid_vec"))
+      cents = assignCells(train, idCol, vecCol, cents, "centroid_id", "centroid_vec")
+        .groupBy(col("cell_id"))
+        .agg(mean(col(vecCol).cast("array<double>")).as("centroid_vec"))
+        .filter(col("centroid_vec").isNotNull)
+        .select(col("cell_id").as("centroid_id"), col("centroid_vec"))
     }
     cents
+  }
+
+  /** [[VecMean]]'s buffer: the running per-dimension sums and the row count. */
+  private[operators] final case class VecSum(sum: Array[Double], n: Long)
+
+  /** Elementwise mean of `dim`-component vectors. `reduce` adds each
+    * row to the sums in arrival order from 0.0 and `merge` adds a
+    * partial into the buffer, exactly the `Add`s of Spark's `Average`
+    * per dimension; `finish` divides by the count as `Average` does.
+    * Null vectors are skipped; a group of only nulls yields null. */
+  private[operators] final class VecMean(dim: Int)
+      extends org.apache.spark.sql.expressions.Aggregator[Array[Double], VecSum, Array[Double]] {
+    def zero: VecSum = VecSum(new Array[Double](dim), 0L)
+    def reduce(b: VecSum, a: Array[Double]): VecSum =
+      if (a == null) b
+      else {
+        require(a.length == dim,
+          s"VecMean: vector of ${a.length} components, expected dim=$dim")
+        var i = 0
+        while (i < dim) { b.sum(i) += a(i); i += 1 }
+        VecSum(b.sum, b.n + 1)
+      }
+    def merge(b1: VecSum, b2: VecSum): VecSum = {
+      var i = 0
+      while (i < dim) { b1.sum(i) += b2.sum(i); i += 1 }
+      VecSum(b1.sum, b1.n + b2.n)
+    }
+    def finish(b: VecSum): Array[Double] =
+      if (b.n == 0L) null else b.sum.map(_ / b.n.toDouble)
+    def bufferEncoder: org.apache.spark.sql.Encoder[VecSum] =
+      org.apache.spark.sql.Encoders.product[VecSum]
+    def outputEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
   }
 
   // ------------------------------------------------------------------ //
@@ -873,7 +906,11 @@ object Ann {
   /** The shared walk: entry at the nearest centroids, then `hops`
     * expand-the-beam rounds over whatever `lookup` returns for a
     * frontier (an in-memory filter, or a partition-pruned store read —
-    * the result contract is identical by construction). */
+    * the result contract is identical by construction). Each node is
+    * expanded at most once per walk: a re-expanded src yields the same
+    * (id, sim) pairs the visited map already holds, so a hop looks up
+    * only the frontier nodes not expanded before, and a hop with none
+    * issues no lookup. */
   private def beamWalk(spark: SparkSession,
                        centroids: DataFrame, cIdCol: String, cVecCol: String,
                        queryVec: Seq[Double], beamWidth: Int, hops: Int,
@@ -885,18 +922,21 @@ object Ann {
       .limit(beamWidth)
       .select(col(cIdCol).cast("long"), col("_sim"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val expanded = scala.collection.mutable.HashSet.empty[Long]
     for (_ <- 0 until hops) {
       val frontier = visited.toSeq.sortBy { case (id, s) => (-s, id) }
-        .take(beamWidth).map(_._1)
+        .take(beamWidth).map(_._1).filter(expanded.add)
       // no dropDuplicates before the collect (optimization r19): the
       // candidate set is beam·degree rows — KB-scale by contract — and
       // the `++` into the visited Map already deduplicates by id with
       // identical (deterministic) scores, so the distinct added a
       // full shuffle per hop for nothing. One hop = one stage now.
-      val cand = lookup(frontier)
-        .select(col("dst").cast("long"), cosine(col("dst_vec"), q).as("_sim"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1))
-      visited = visited ++ cand // re-scored ids recompute the same value
+      if (frontier.nonEmpty) {
+        val cand = lookup(frontier)
+          .select(col("dst").cast("long"), cosine(col("dst_vec"), q).as("_sim"))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1))
+        visited = visited ++ cand // re-scored ids recompute the same value
+      }
     }
     import spark.implicits._
     visited.toSeq.toDF("vec_id", "sim")
@@ -907,15 +947,19 @@ object Ann {
     * ref app/main.py:616-647 holds N open sessions). The driver keeps
     * per-query beam state, but each hop issues ONE edge lookup for the
     * UNION of all queries' frontiers — per-hop store reads do not scale
-    * with query count, only the (tiny) frontier-pair broadcast does.
-    * Scoring runs data-side: candidate edges join the broadcast
-    * (query_id, src) frontier pairs, then the broadcast query vectors,
-    * and the codegen cosine scores (query_id, dst) rows — the collect
-    * is scores only (≤ queries·beam·degree rows), never vectors.
-    * Each query's visited set is EXACTLY what [[graphSearch]] would
-    * produce alone (AnnSpec pins equality), because per-query frontier
-    * selection and dedup are keyed by query_id throughout.
-    * Returns (query_id, vec_id, sim) for every visited node. */
+    * with query count. The query table is collected to the driver once
+    * and scored data-side by [[graft.functions.QueryCosines]]: the
+    * entry scores the centroid set against every query, and a hop
+    * hands the expression the frontier map src → query indices, so
+    * each edge row's dst_vec is scored against exactly the queries
+    * whose frontier holds its src — no join copies a query vector onto
+    * a row, and the collect is scores only (≤ queries·beam·degree
+    * rows), never vectors. Each (query, src) is expanded at most once
+    * per walk. Each query's visited set is EXACTLY what [[graphSearch]]
+    * would produce alone (AnnSpec pins equality), because per-query
+    * frontier selection and dedup are keyed by query throughout.
+    * Query ids must be distinct. Returns (query_id, vec_id, sim) for
+    * every visited node. */
   def graphSearchBatch(spark: SparkSession, edges: DataFrame,
                        centroids: DataFrame, cIdCol: String, cVecCol: String,
                        queries: DataFrame, qIdCol: String, qVecCol: String,
@@ -951,19 +995,30 @@ object Ann {
       frontier => edgeIds.filter(col("src").isin(frontier.map(Long.box): _*))
         .join(vecs, "dst"))
 
-  /** [[graphSearchBatch]] over a [[writeGraphIndex]] store: one
-    * partition-pruned read per hop serves every query's frontier. */
+  /** [[graphSearchBatch]] over a [[writeGraphIndex]] store: one read of
+    * the store per walk; each hop's partition-pruned filter of it serves
+    * every query's frontier. */
   def graphSearchBatchPartitioned(spark: SparkSession, indexDir: String, nBuckets: Int,
                                   centroids: DataFrame, cIdCol: String, cVecCol: String,
                                   queries: DataFrame, qIdCol: String, qVecCol: String,
                                   beamWidth: Int, hops: Int): DataFrame =
     batchBeamWalk(spark, centroids, cIdCol, cVecCol,
-      queries, qIdCol, qVecCol, beamWidth, hops, { frontier =>
-        val buckets = frontier.map(id => Long.box(((id % nBuckets) + nBuckets) % nBuckets)).distinct
-        spark.read.parquet(indexDir)
-          .filter(col("src_bucket").isin(buckets: _*))
-          .filter(col("src").isin(frontier.map(Long.box): _*))
-      })
+      queries, qIdCol, qVecCol, beamWidth, hops, prunedHopRead(spark, indexDir, nBuckets))
+
+  /** A [[writeGraphIndex]] store's hop lookup: the store is read (listed,
+    * schema resolved) once per walk, at its first hop; each hop filters
+    * that read on the frontier's buckets (partition pruning) and then
+    * the exact src set. */
+  private def prunedHopRead(spark: SparkSession, indexDir: String,
+                            nBuckets: Int): Seq[Long] => DataFrame = {
+    lazy val store = spark.read.parquet(indexDir)
+    frontier => {
+      val buckets = frontier.map(id => Long.box(((id % nBuckets) + nBuckets) % nBuckets)).distinct
+      store
+        .filter(col("src_bucket").isin(buckets: _*))
+        .filter(col("src").isin(frontier.map(Long.box): _*))
+    }
+  }
 
   /** The shared multi-query walk behind [[graphSearchBatch]].
     * (package-visible so AnnSpec can count lookup invocations — the
@@ -975,48 +1030,56 @@ object Ann {
                             lookup: Seq[Long] => DataFrame): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(qIdCol).cast("long").as("query_id"),
-      col(qVecCol).cast("array<double>").as("_qv"))
-    val perQuery = Window.partitionBy("query_id").orderBy(desc("sim"), col("id"))
-    // entry: every query scores the (codebook-sized) centroid set in one
-    // crossJoin action; per-query top-beam via window
-    var visited: Map[Long, Map[Long, Double]] = centroids
-      .crossJoin(broadcast(q))
-      .select(col("query_id"), col(cIdCol).cast("long").as("id"),
-        cosine(col(cVecCol), col("_qv")).as("sim"))
-      .withColumn("_rn", row_number().over(perQuery))
-      .filter(col("_rn") <= beamWidth)
-      .select("query_id", "id", "sim")
+    import graft.functions.QueryCosines
+    // the workload is request-sized by contract: ONE collect puts the
+    // query table on the driver, and every scoring pass below ships it
+    // inside the expression
+    val qRows = queries.select(col(qIdCol).cast("long"),
+        col(qVecCol).cast("array<double>"))
       .collect()
-      .groupBy(_.getLong(0))
-      .map { case (qid, rows) =>
-        qid -> rows.map(r => r.getLong(1) -> r.getDouble(2)).toMap }
+    require(qRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+      "batchBeamWalk: null query id or vector")
+    val qids = qRows.map(_.getLong(0))
+    require(qids.distinct.length == qids.length,
+      "batchBeamWalk: query ids must be distinct")
+    val table = qRows.map(_.getSeq[Double](1).toArray)
+    val visited = Array.fill(qids.length)(scala.collection.mutable.HashMap.empty[Long, Double])
+    def fold(scored: DataFrame): Unit = scored
+      .select(col("id"), col("_s.qi"), col("_s.sim")).collect()
+      .foreach { r => visited(r.getInt(1))(r.getLong(0)) = r.getDouble(2) }
+    // entry: the (codebook-sized) centroid set scored against every
+    // query in one pass; per-query top-beam via window
+    fold(centroids
+      .select(col(cIdCol).cast("long").as("id"),
+        explode(QueryCosines.all(col(cVecCol), table)).as("_s"))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy("_s.qi").orderBy(desc("_s.sim"), col("id"))))
+      .filter(col("_rn") <= beamWidth))
+    val expanded = Array.fill(qids.length)(scala.collection.mutable.HashSet.empty[Long])
     for (_ <- 0 until hops) {
-      val frontierPairs = visited.toSeq.flatMap { case (qid, vs) =>
-        vs.toSeq.sortBy { case (id, s) => (-s, id) }
-          .take(beamWidth).map { case (id, _) => (qid, id) }
+      // src → the (ascending) queries whose frontier holds it, counting
+      // only (query, src) pairs this walk has not expanded yet
+      val bySrc = scala.collection.mutable.LinkedHashMap.empty[Long,
+        scala.collection.mutable.ArrayBuilder.ofInt]
+      for (qi <- qids.indices) {
+        val frontier = visited(qi).toSeq.sortBy { case (id, s) => (-s, id) }
+          .take(beamWidth).map(_._1).filter(expanded(qi).add)
+        frontier.foreach(src =>
+          bySrc.getOrElseUpdate(src, new scala.collection.mutable.ArrayBuilder.ofInt) += qi)
       }
-      val srcs = frontierPairs.map(_._2).distinct
-      val fDf = frontierPairs.toDF("query_id", "src")
       // no dropDuplicates before the collect (optimization r19): the
-      // per-query visited Map below deduplicates (query_id, id) with
-      // identical deterministic scores — the distinct was one extra
-      // shuffle per hop over a ≤ queries·beam·degree-row frame
-      val cand = lookup(srcs) // ONE read for ALL queries' frontiers
-        .join(broadcast(fDf), "src")
-        .join(broadcast(q), "query_id")
-        .select(col("query_id"), col("dst").cast("long").as("id"),
-          cosine(col("dst_vec"), col("_qv")).as("sim"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val byQid = cand.groupBy(_._1)
-      visited = visited.map { case (qid, vs) =>
-        // re-scored ids recompute the same value — map overwrite is safe
-        qid -> (vs ++ byQid.getOrElse(qid, Array.empty)
-          .map { case (_, id, s) => id -> s })
+      // per-query visited map deduplicates (query, id) with identical
+      // deterministic scores — the distinct was one extra shuffle per
+      // hop over a ≤ queries·beam·degree-row frame
+      if (bySrc.nonEmpty) {
+        val targets = bySrc.map { case (src, qs) => src -> qs.result() }.toMap
+        fold(lookup(bySrc.keys.toSeq) // ONE read for ALL queries' frontiers
+          .select(col("dst").cast("long").as("id"),
+            explode(QueryCosines.keyed(col("dst_vec"), col("src"), table, targets)).as("_s")))
       }
     }
-    visited.toSeq
-      .flatMap { case (qid, vs) => vs.toSeq.map { case (id, s) => (qid, id, s) } }
+    qids.indices
+      .flatMap(qi => visited(qi).toSeq.map { case (id, s) => (qids(qi), id, s) })
       .toDF("query_id", "vec_id", "sim")
   }
 
@@ -1089,18 +1152,15 @@ object Ann {
       .withColumn("src_bucket", pmod(col("src"), lit(nBuckets)))
       .write.mode("append").partitionBy("src_bucket").parquet(indexDir)
 
-  /** [[graphSearch]] over a [[writeGraphIndex]] store: each hop filters
-    * on the frontier's buckets (partition pruning at the file listing)
-    * then the exact src set. Same visited set as the in-memory walk. */
+  /** [[graphSearch]] over a [[writeGraphIndex]] store: one read of the
+    * store per walk, each hop filtered on the frontier's buckets
+    * (partition pruning at the file listing) then the exact src set.
+    * Same visited set as the in-memory walk. */
   def graphSearchPartitioned(spark: SparkSession, indexDir: String, nBuckets: Int,
                              centroids: DataFrame, cIdCol: String, cVecCol: String,
                              queryVec: Seq[Double], beamWidth: Int, hops: Int): DataFrame =
-    beamWalk(spark, centroids, cIdCol, cVecCol, queryVec, beamWidth, hops, { frontier =>
-      val buckets = frontier.map(id => Long.box(((id % nBuckets) + nBuckets) % nBuckets)).distinct
-      spark.read.parquet(indexDir)
-        .filter(col("src_bucket").isin(buckets: _*))
-        .filter(col("src").isin(frontier.map(Long.box): _*))
-    })
+    beamWalk(spark, centroids, cIdCol, cVecCol, queryVec, beamWidth, hops,
+      prunedHopRead(spark, indexDir, nBuckets))
 
   // ------------------------------------------------------------------ //
   // Index lifecycle: tombstone delete + compaction                     //

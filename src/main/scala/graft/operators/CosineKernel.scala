@@ -16,6 +16,14 @@ package graft.operators
   * term, not per dimension. 0·Inf and 0·NaN are NaN, so a stored vector
   * holding a NaN or ±Inf keeps the dense fold; callers decide that once
   * per stored vector ([[allFinite]]), never per query.
+  *
+  * NaN PAYLOADS. "Bit-for-bit" holds for every result except a NaN one.
+  * Where two different NaNs meet in one add (a NaN query component
+  * against a NaN or ±Inf stored component: Double.NaN is 0x7ff8…, 0·Inf
+  * the hardware default 0xfff8…), the JIT's operand order picks the
+  * surviving payload, in the dense fold as in the sparse one, so only
+  * NaN-ness is guaranteed. Ordering is unaffected: `Double.compare` and
+  * Spark order every NaN alike.
   */
 private[graft] object CosineKernel {
 

@@ -316,9 +316,12 @@ object GraphIndex {
     * Cost: the dot folds only the query's nonzero dimensions when every
     * node vector is finite (the [[CosineKernel]] sparse-query rule,
     * bit-identical to the dense fold under that precondition; a graph
-    * holding a NaN or ±Inf component walks dense). The visited set is
-    * primitive and bounded by |entries| + hops·beam·maxDegree, and each
-    * hop picks its frontier by a bounded top-beam selection, not a sort. */
+    * holding a NaN or ±Inf component walks dense). Bit-for-bit holds
+    * except for NaN payloads: where two different NaNs meet in one add
+    * only NaN-ness is guaranteed, and ordering is unaffected. The
+    * visited set is primitive and bounded by |entries| +
+    * hops·beam·maxDegree, and each hop picks its frontier by a bounded
+    * top-beam selection, not a sort. */
   private[graft] def walkArrays(g: GraphArrays, entryIdxs: Array[Int],
                                 q: Array[Double], beam: Int,
                                 hops: Int): Seq[(Long, Double)] = {
@@ -539,9 +542,14 @@ object GraphIndex {
     * adjacency int plus the transient collected pair (the peak, before
     * the buffers are compacted). An estimate, deliberately on the high
     * side: the guard's job is to refuse with a number, not to meter. */
-  def hotBytesEstimate(spark: SparkSession, h: Handle): Long = {
-    val nChunks = h.chunks(spark).count()
-    val nCents = h.centroids(spark).count()
+  def hotBytesEstimate(spark: SparkSession, h: Handle): Long =
+    hotBytesOf(h, h.chunks(spark), h.centroids(spark), spark.read.parquet(h.edgesDir))
+
+  /** [[hotBytesEstimate]] over already-read store components. */
+  private def hotBytesOf(h: Handle, chunks: DataFrame, cents: DataFrame,
+                         edges: DataFrame): Long = {
+    val nChunks = chunks.count()
+    val nCents = cents.count()
     // dim via headOption: an EMPTY chunks sidecar must surface as hot()'s
     // deliberate refusal story, not a bare NoSuchElementException from
     // head() — and the dim probe is the one row-data read here (one
@@ -550,10 +558,29 @@ object GraphIndex {
       throw new IllegalStateException(
         s"GraphIndex.hot: the chunks sidecar at '${h.dir}' is EMPTY — " +
           "nothing to serve; build the index before loading a hot tier")
-    val dim = h.chunks(spark).select(size(col(h.vecCol))).head().getInt(0)
-    val nEdges = spark.read.parquet(h.edgesDir).count()
+    val dim = chunks.select(size(col(h.vecCol))).head().getInt(0)
+    val nEdges = edges.count()
     val nNodes = nChunks + nCents // upper bound; overlap only shrinks it
     nNodes * (dim.toLong * 8 + 96) + nEdges * 48
+  }
+
+  /** Driver-footprint estimate of [[hot]]'s RESIDENT-TEXT map, from one
+    * aggregate over the chunk sidecar (octet lengths + row count —
+    * never the texts themselves): text and doc-id bytes plus a
+    * deliberately high-side 160 B/row for the map entry, tuple, and
+    * boxing. The same refuse-with-a-number role as
+    * [[hotBytesEstimate]], for the same reason: a corpus past the
+    * budget belongs on the attach join, not OOMing the driver. */
+  def hotTextBytesEstimate(spark: SparkSession, h: Handle): Long =
+    hotTextBytesOf(h.chunks(spark))
+
+  private def hotTextBytesOf(chunks: DataFrame): Long = {
+    val r = chunks.agg(
+      count(lit(1)).as("_n"),
+      coalesce(sum(octet_length(col("chunk_text"))), lit(0L)).as("_tb"),
+      coalesce(sum(octet_length(col("doc_id").cast("string"))), lit(0L)).as("_db"))
+      .head()
+    r.getLong(1) + r.getLong(2) + r.getLong(0) * 160L
   }
 
   /** Collect a built store's NORMALIZED layout into driver-JVM arrays
@@ -562,6 +589,14 @@ object GraphIndex {
     * never denormalized edge vectors). `cacheChunks` governs the
     * re-attach sidecar exactly as in [[warm]]: cache it for tiers
     * that fit it, leave it a pruned disk read at 100 TB.
+    *
+    * Each store component (chunks, centroids, edges) is read — listed,
+    * schema resolved — ONCE, and that one read serves the estimates,
+    * the counts, the collects and the persist. With `cacheChunks` the
+    * chunk sidecar is persisted before the node collect, so that
+    * collect fills the cache instead of a separate count pass. The
+    * staleness stamp ([[storeStamp]]) is taken before those reads, as
+    * each read lists its files when it is made.
     *
     * SIZE-GUARDED: the estimated layout ([[hotBytesEstimate]], from the
     * store's own row counts × dim — no data read) must fit
@@ -575,27 +610,20 @@ object GraphIndex {
     * into executor-pinned shards, queries fanned out as one job to the
     * shards their entry centroids name, per-shard RAM under this same
     * budget by construction. */
-  /** Driver-footprint estimate of [[hot]]'s RESIDENT-TEXT map, from one
-    * aggregate over the chunk sidecar (octet lengths + row count —
-    * never the texts themselves): text and doc-id bytes plus a
-    * deliberately high-side 160 B/row for the map entry, tuple, and
-    * boxing. The same refuse-with-a-number role as
-    * [[hotBytesEstimate]], for the same reason: a corpus past the
-    * budget belongs on the attach join, not OOMing the driver. */
-  def hotTextBytesEstimate(spark: SparkSession, h: Handle): Long = {
-    val r = h.chunks(spark).agg(
-      count(lit(1)).as("_n"),
-      coalesce(sum(octet_length(col("chunk_text"))), lit(0L)).as("_tb"),
-      coalesce(sum(octet_length(col("doc_id").cast("string"))), lit(0L)).as("_db"))
-      .head()
-    r.getLong(1) + r.getLong(2) + r.getLong(0) * 160L
-  }
-
   def hot(spark: SparkSession, h: Handle, cacheChunks: Boolean = true,
           budgetBytes: Long = DefaultHotBudgetBytes,
           residentText: Boolean = false,
           textBudgetBytes: Long = DefaultHotBudgetBytes): Hot = {
-    val est = hotBytesEstimate(spark, h)
+    // staleness stamp captured BEFORE any store read — spark.read.parquet
+    // lists the files when the DataFrame is made, so a mutation racing
+    // the load then moves the live stamp and the snapshot reads stale —
+    // the conservative direction (a spurious re-hot, never a
+    // silently-drifted tier)
+    val stamp = storeStamp(spark, h)
+    val chunks = h.chunks(spark)
+    val cents = h.centroids(spark)
+    val edges = spark.read.parquet(h.edgesDir)
+    val est = hotBytesOf(h, chunks, cents, edges)
     if (est > budgetBytes)
       throw new IllegalStateException(
         f"GraphIndex.hot: estimated driver layout $est%,d bytes " +
@@ -605,7 +633,7 @@ object GraphIndex {
           "shard it, or raise budgetBytes deliberately if the driver " +
           "really has the headroom.")
     if (residentText) {
-      val tEst = hotTextBytesEstimate(spark, h)
+      val tEst = hotTextBytesOf(chunks)
       if (tEst > textBudgetBytes)
         throw new IllegalStateException(
           f"GraphIndex.hot: resident-text map estimates $tEst%,d bytes " +
@@ -615,15 +643,13 @@ object GraphIndex {
             "(the attach join stays pruned + broadcast) or raise the " +
             "budget deliberately.")
     }
-    // staleness stamp captured BEFORE the collects: a mutation racing
-    // the load then moves the live stamp and the snapshot reads stale —
-    // the conservative direction (a spurious re-hot, never a
-    // silently-drifted tier)
-    val stamp = storeStamp(spark, h)
-    val nodeRows = h.chunks(spark)
+    val chunksDf =
+      if (cacheChunks) chunks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else chunks
+    val nodeRows = chunksDf
       .select(col("uid").cast("long"), col(h.vecCol).cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val centRows = h.centroids(spark).orderBy("centroid_id")
+    val centRows = cents.orderBy("centroid_id")
       .select(col("centroid_id").cast("long"),
         col("centroid_vec").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -641,7 +667,7 @@ object GraphIndex {
       }
     }
     val norms = vecs.map(CosineKernel.norm).toArray
-    val edgePairs = spark.read.parquet(h.edgesDir)
+    val edgePairs = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val adjBuf = Array.fill(ids.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
@@ -658,12 +684,6 @@ object GraphIndex {
     if (tombFs.exists(tombPath))
       spark.read.parquet(h.tombstonesDir).select(col("tomb_id").cast("long"))
         .collect().foreach(r => tombs.add(Long.box(r.getLong(0))))
-    val chunksDf =
-      if (cacheChunks) {
-        val c = h.chunks(spark).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.count(); c
-      } else h.chunks(spark)
     // the resident-text map (budget-checked above): serving-schema
     // columns only, types pinned to what the fused tail can order
     // (string/integral doc ids, non-null idx/text) — anything else
@@ -1201,26 +1221,53 @@ object GraphIndex {
             lshBands: Seq[Seq[Seq[Double]]] = Nil,
             autoBandAt: Long = DefaultAutoBandAt,
             autoHierAt: Long = DefaultAutoHierAt): Handle = {
+    requireTopology(nCentroids, m, nBuckets, beamWidth, hops)
+    val in = uidInput(index, keyCols, vecCol)
+    try buildUid(spark, in, vecCol, dir, nCentroids, m, nBuckets, beamWidth, hops,
+      nSupers, lshPlanes, superProbes, superVecs, lshBands, autoBandAt, autoHierAt)
+    finally in.rows.unpersist() // no-op under localCheckpoint; frees the persist path
+  }
+
+  private def requireTopology(nCentroids: Int, m: Int, nBuckets: Int,
+                              beamWidth: Int, hops: Int): Unit = {
     require(nCentroids == DeriveSqrtN || nCentroids >= 1,
       s"GraphIndex.build: nCentroids=$nCentroids must be >= 1 (or " +
         s"DeriveSqrtN to size-derive the codebook)")
     require(m >= 1 && nBuckets >= 1 && beamWidth >= 1 && hops >= 0,
       s"GraphIndex.build: m=$m nBuckets=$nBuckets " +
         s"beamWidth=$beamWidth hops=$hops must all be positive (hops >= 0)")
-    // build takes three actions over the input (key guard, centroid
-    // pick, sidecar write) — materialize the uid'd index ONCE so an
-    // expensive upstream (chunk → embed is the usual caller) doesn't
-    // re-run per action
-    val withUid = graft.Materialize(index.withColumn("uid", uidFor(keyCols)))
-    // duplicate natural keys (or a 2^-60 hash collision) would silently
-    // merge two chunks into one graph node — fail the one-time build
-    // loudly instead. One extra aggregation over data build already scans.
-    val Array(n, nDistinct) = withUid
-      .agg(count(lit(1)), countDistinct(col("uid"))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
+  }
+
+  /** The uid'd input of a build, materialized once, with the one guard
+    * aggregate over it: row count `n`, and `dim` (the widest vector; 0
+    * for an empty input). */
+  private final case class UidInput(rows: DataFrame, n: Long, dim: Int)
+
+  /** Materialize `index` + `uid` ONCE — a build takes several actions
+    * over the input (key guard, super seeding and training, centroid
+    * pick, sidecar write), and an expensive upstream (chunk → embed is
+    * the usual caller) must not re-run per action — and run the key
+    * guard: duplicate natural keys (or a 2^-60 hash collision) would
+    * silently merge two chunks into one graph node, so the build fails
+    * loudly instead. One aggregate gives n, the distinct uids and dim. */
+  private def uidInput(index: DataFrame, keyCols: Seq[String], vecCol: String): UidInput = {
+    val rows = graft.Materialize(index.withColumn("uid", uidFor(keyCols)))
+    val r = rows.agg(count(lit(1)), countDistinct(col("uid")), max(size(col(vecCol)))).head()
+    val (n, nDistinct) = (r.getLong(0), r.getLong(1))
     require(n == nDistinct,
       s"GraphIndex.build: ${n - nDistinct} duplicate uid(s) — keyCols " +
         s"${keyCols.mkString("(", ",", ")")} are not unique over the index")
+    UidInput(rows, n, if (r.isNullAt(2)) 0 else r.getInt(2))
+  }
+
+  /** [[build]] over an already-materialized, key-guarded input. */
+  private def buildUid(spark: SparkSession, in: UidInput, vecCol: String, dir: String,
+                       nCentroids: Int, m: Int, nBuckets: Int, beamWidth: Int,
+                       hops: Int, nSupers: Int, lshPlanes: Seq[Seq[Double]],
+                       superProbes: Int, superVecs: Seq[Seq[Double]],
+                       lshBands: Seq[Seq[Seq[Double]]],
+                       autoBandAt: Long, autoHierAt: Long): Handle = {
+    val n = in.n
     // |C| = ⌊√N⌋ derivation rides the guard aggregate's n (r19): the
     // callers that want the production codebook discipline previously
     // pre-counted the input themselves — one extra full pass over the
@@ -1231,23 +1278,25 @@ object GraphIndex {
       else nCentroids
     val effBands =
       if (lshPlanes.nonEmpty || lshBands.nonEmpty) lshBands
-      else deriveAutoBands(withUid, vecCol, n, autoBandAt)
+      else deriveAutoBands(in.rows, vecCol, n, autoBandAt)
     val effSupers =
       if (nSupers > 0 || superVecs.nonEmpty) nSupers
       else deriveAutoSupers(n, effCents, autoHierAt)
-    val h = buildFromUid(spark, withUid, vecCol, dir, effCents, m,
+    buildFromUid(spark, in.rows, vecCol, dir, effCents, m,
       nBuckets, beamWidth, hops, effSupers, lshPlanes, superProbes, superVecs,
-      effBands)
-    withUid.unpersist() // no-op under localCheckpoint; frees the persist path
-    h.copy(vecCol = vecCol)
+      effBands).copy(vecCol = vecCol)
   }
 
-  /** Mean recall@k of a built store's walk vs EXACT brute force. Exact
-    * ground truth is ONE batched pass: corpus × broadcast(queries)
-    * cosine + a per-query top-k window — nQueries·N dots, small next
-    * to the build the caller just paid; the approximate side is one
-    * batched walk over the store. Both sides break ties (sim desc, uid
-    * asc), and recall is set overlap over natural keys.
+  /** Mean recall@k of a built store's walk vs EXACT brute force. The
+    * probe workload is request-sized: ONE collect holds it on the
+    * driver. Exact ground truth is one map-side pass that scores every
+    * corpus row against all probes ([[graft.functions.QueryCosines]] —
+    * nQueries·N dots, small next to the build the caller just paid, and
+    * no probe vector copied onto a row) and explodes (probe, sim), then
+    * a per-probe top-k window; the approximate side is one batched walk
+    * over the store. Both sides break ties (sim desc, uid asc), and
+    * recall is set overlap over natural keys. Query ids must be
+    * distinct.
     *
     * Probe choice is what makes the number honest. Default probes are
     * the `nQueries` lowest-uid rows' own vectors (deterministic, no
@@ -1264,7 +1313,6 @@ object GraphIndex {
                     keyCols: Seq[String], vecCol: String,
                     nQueries: Int = 20, k: Int = 10,
                     queries: Option[DataFrame] = None): Double = {
-    import graft.functions.VectorFunctions.cosine
     require(nQueries >= 1 && k >= 1,
       s"measureRecall: nQueries=$nQueries k=$k must be >= 1")
     val withUid = index.withColumn("_muid", uidFor(keyCols))
@@ -1278,21 +1326,29 @@ object GraphIndex {
     }.getOrElse(withUid.orderBy("_muid").limit(nQueries)
       .select(col("_muid").as("query_id"),
         col(vecCol).cast("array<double>").as("_qv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("_sim"), col("_muid"))
+    val probes = qDf.collect()
+    require(probes.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+      "measureRecall: null query id or vector in the workload")
+    val qids = probes.map(_.get(0))
+    require(qids.distinct.length == qids.length,
+      "measureRecall: query ids must be distinct")
+    val table = probes.map(_.getSeq[Double](1).toArray)
     def keyOf(r: org.apache.spark.sql.Row): Seq[Any] =
       keyCols.indices.map(i => r.get(i + 1))
-    val exactBase = withUid.crossJoin(broadcast(qDf))
-      .withColumn("_sim", cosine(col(vecCol), col("_qv")))
-    val exact = (if (leaveSelfOut) exactBase.filter(col("_muid") =!= col("query_id"))
+    val exactBase = probeScores(withUid, keyCols, vecCol, table)
+    val exact = (if (leaveSelfOut) exactBase.filter(col("_muid") =!=
+                   element_at(typedLit(qids.map(_.asInstanceOf[Long])), col("_qi") + 1))
                  else exactBase)
-      .withColumn("_rn", row_number().over(w))
+      .withColumn("_rn", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy("_qi").orderBy(desc("_sim"), col("_muid"))))
       .filter(col("_rn") <= k)
-      .select(col("query_id") +: keyCols.map(col): _*)
-      .collect().groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(keyOf).toSet }
+      .select(col("_qi") +: keyCols.map(col): _*)
+      .collect().groupBy(_.getInt(0)).map { case (qi, rs) => qids(qi) -> rs.map(keyOf).toSet }
     val wg = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(desc("sim"), col("uid"))
-    val gotBase = serving.searchBatch(spark, qDf, "query_id", "_qv")
+    // the walk reads the probes back from the driver, not from qDf's lineage
+    val probeDf = spark.createDataFrame(java.util.Arrays.asList(probes: _*), qDf.schema)
+    val gotBase = serving.searchBatch(spark, probeDf, "query_id", "_qv")
     val got = (if (leaveSelfOut) gotBase.filter(col("uid") =!= col("query_id"))
                else gotBase)
       .withColumn("_rn", row_number().over(wg))
@@ -1317,6 +1373,17 @@ object GraphIndex {
         "refusing to report a recall over nothing")
     recalls.sum / recalls.length
   }
+
+  /** [[measureRecall]]'s exact side before its top-k: every row of
+    * `withUid` (which carries `_muid`) scored against every probe of
+    * `table` — (`_muid`, keyCols, `_qi` the probe index, `_sim`). */
+  private[graft] def probeScores(withUid: DataFrame, keyCols: Seq[String], vecCol: String,
+                                 table: Array[Array[Double]]): DataFrame =
+    withUid
+      .select(col("_muid") +: keyCols.map(col) :+
+        explode(graft.functions.QueryCosines.all(col(vecCol), table)).as("_s"): _*)
+      .select(col("_muid") +: keyCols.map(col) :+
+        col("_s.qi").as("_qi") :+ col("_s.sim").as("_sim"): _*)
 
   /** The PRODUCTION serving build — the measured-recipe defaults wired
     * in, behind a recall gate. Everything size-derives: |C| = ⌊√N⌋
@@ -1358,9 +1425,10 @@ object GraphIndex {
                    recallK: Int = 10,
                    recallQueriesDf: Option[DataFrame] = None,
                    autoBandAt: Long = DefaultAutoBandAt): (Handle, Double) = {
-    val mat = graft.Materialize(index.withColumn("_suid", uidFor(keyCols)))
+    requireTopology(DeriveSqrtN, m, nBuckets, beamWidth, hops)
+    val in = uidInput(index, keyCols, vecCol)
     try {
-      val n = mat.count()
+      val n = in.n
       require(n > 0, "buildServing: empty index")
       // lshBands < 0 (the default) SIZE-DERIVES the band count: 0 below
       // the measured crossover (banding costs ~1.8× while cells are
@@ -1374,7 +1442,6 @@ object GraphIndex {
         else 0
       val nCents = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong).toInt
       val nSupers = math.max(1, math.floor(math.sqrt(nCents.toDouble)).toInt)
-      val dim = mat.select(size(col(vecCol))).head().getInt(0)
       // super seeds: head rows in NATURAL-KEY order — measured to
       // matter enormously on sparse TF-IDF (PmcRecallProbe seed
       // diagnostics: head-order seeds train supers that route text
@@ -1383,29 +1450,29 @@ object GraphIndex {
       // is that seed-sensitive, and document-head rows are dense
       // topic-representative vectors where random mid-article chunks
       // are not)
-      val seeds = mat.orderBy(keyCols.map(col): _*).limit(nSupers)
-        .select(col("_suid").as("centroid_id"),
+      val seeds = in.rows.orderBy(keyCols.map(col): _*).limit(nSupers)
+        .select(col("uid").as("centroid_id"),
           col(vecCol).cast("array<double>").as("centroid_vec"))
-      val trainedSupers = Ann.kmeansRefine(mat, "_suid", vecCol, seeds, dim,
+      val trainedSupers = Ann.kmeansRefine(in.rows, "uid", vecCol, seeds, in.dim,
           iters = trainIters, sampleFrac = trainSampleFrac)
         .orderBy("centroid_id")
         .select(col("centroid_vec").cast("array<double>")).collect()
         .map(_.getSeq[Double](0)).toSeq
       val bands =
         if (effLshBands > 0 && lshOrthogonal)
-          Ann.orthogonalPlaneBands(mat, "_suid", vecCol, effLshBands, lshPlanesPerBand)
+          Ann.orthogonalPlaneBands(in.rows, "uid", vecCol, effLshBands, lshPlanesPerBand)
         else if (effLshBands > 0)
-          Ann.centeredPlaneBands(mat, "_suid", vecCol, effLshBands, lshPlanesPerBand)
+          Ann.centeredPlaneBands(in.rows, "uid", vecCol, effLshBands, lshPlanesPerBand)
         else Nil
       // the band decision was made HERE (size-derived or explicit) —
       // suppress build()'s own auto-derivation so an explicit
       // lshBands=0 stays genuinely unbanded
-      val h = build(spark, mat.drop("_suid"), keyCols, vecCol, dir,
+      val h = buildUid(spark, in, vecCol, dir,
         nCentroids = nCents, m = m, nBuckets = nBuckets,
-        beamWidth = beamWidth, hops = hops, nSupers = nSupers,
+        beamWidth = beamWidth, hops = hops, nSupers = nSupers, lshPlanes = Nil,
         superProbes = superProbes, superVecs = trainedSupers,
-        lshBands = bands, autoBandAt = Long.MaxValue)
-      val recall = measureRecall(spark, h, index, keyCols, vecCol,
+        lshBands = bands, autoBandAt = Long.MaxValue, autoHierAt = DefaultAutoHierAt)
+      val recall = measureRecall(spark, h, in.rows, keyCols, vecCol,
         recallQueries, recallK, recallQueriesDf)
       if (recall < recallFloor) {
         val p = new org.apache.hadoop.fs.Path(dir)
@@ -1419,7 +1486,7 @@ object GraphIndex {
             "train on a larger fraction, or lower the floor deliberately.")
       }
       (h, recall)
-    } finally mat.unpersist()
+    } finally in.rows.unpersist()
   }
 
   /** Re-open a built store from its own meta sidecar — a serving

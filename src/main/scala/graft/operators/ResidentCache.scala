@@ -15,7 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * aggregate — the measured residual after the r17 resident-text fuse).
   *
   * SEMANTICS ARE THE PINNED REFERENCE SEMANTICS, bit-for-bit the
-  * DataFrame ops (AskPipelineSpec pins the equivalence end to end):
+  * DataFrame ops except for NaN payloads (where two different NaNs
+  * meet in one add only NaN-ness is guaranteed, and ordering is
+  * unaffected — [[CosineKernel]]); AskPipelineSpec pins the
+  * equivalence end to end:
   *  - lookup: argmax cosine (float entries cast to double element-wise,
   *    ascending-fold dot — [[graft.functions.DotProduct]]'s arithmetic;
   *    folded over only the query's nonzero dimensions when the entry is

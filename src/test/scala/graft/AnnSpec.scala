@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Ann
+import graft.functions.QueryCosines
+import graft.functions.VectorFunctions.cosine
+import graft.operators.{Ann, GraphIndex}
 
 class AnnSpec extends AnyFunSuite {
   lazy val spark = SparkSessions.spark
@@ -772,5 +775,267 @@ class AnnSpec extends AnyFunSuite {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+  }
+
+  // ---------------------------------------------------------------- //
+  // The gated serving build's scoring and training passes against     //
+  // test-local copies of the formulas they replaced, compared on      //
+  // doubleToRawLongBits: the per-dimension posexplode/avg Lloyd round //
+  // and corpus mean against the one-pass vector-mean aggregate, the   //
+  // batched walk's broadcast-join scoring against the driver-held     //
+  // query table (partitioned and warm-normalized lookups, on queries  //
+  // whose frontiers repeat across hops), and measureRecall's          //
+  // crossJoin exact side against the probe-table pass.                //
+  // ---------------------------------------------------------------- //
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  // several input partitions, pinned, so partial sums really merge and
+  // both sides of each comparison read the same rows in the same order
+  private lazy val pinned =
+    embeddings.select("vec_id", "embedding").repartition(3).localCheckpoint()
+
+  // ---------------- the replaced formulas ---------------- //
+
+  /** kmeansRefine's Lloyd round before the vector-mean aggregate. */
+  private def refineByDims(index: DataFrame, initial: DataFrame, dim: Int,
+                           iters: Int): DataFrame = {
+    var cents = initial
+    for (_ <- 0 until iters) {
+      val assigned = Ann.assignCells(index, "vec_id", "embedding", cents,
+        "centroid_id", "centroid_vec")
+      cents = assigned
+        .select(col("cell_id"),
+          posexplode(col("embedding").cast("array<double>")).as(Seq("_dim", "_x")))
+        .groupBy("cell_id", "_dim").agg(avg("_x").as("_m"))
+        .groupBy("cell_id")
+        .agg(map_from_entries(collect_list(struct(col("_dim"), col("_m")))).as("_mm"))
+        .select(col("cell_id").as("centroid_id"),
+          transform(sequence(lit(0), lit(dim - 1)),
+            j => coalesce(element_at(col("_mm"), j), lit(0.0))).as("centroid_vec"))
+    }
+    cents
+  }
+
+  /** The batched walk before the query table: per hop, the union
+    * frontier's edges join the broadcast (query_id, src) pairs and then
+    * the broadcast query vectors; every frontier node is re-expanded.
+    * Returns the visited sims and the (query, src) pairs of each hop. */
+  private def joinWalk(centroids: DataFrame, queries: DataFrame, beamWidth: Int, hops: Int,
+                       lookup: Seq[Long] => DataFrame)
+      : (Map[(Long, Long), Double], Seq[Seq[(Long, Long)]]) = {
+    import org.apache.spark.sql.expressions.Window
+    val q = queries.select(col("vec_id").cast("long").as("query_id"),
+      col("embedding").cast("array<double>").as("_qv"))
+    val perQuery = Window.partitionBy("query_id").orderBy(desc("sim"), col("id"))
+    var visited: Map[Long, Map[Long, Double]] = centroids
+      .crossJoin(broadcast(q))
+      .select(col("query_id"), col("centroid_id").cast("long").as("id"),
+        cosine(col("centroid_vec"), col("_qv")).as("sim"))
+      .withColumn("_rn", row_number().over(perQuery))
+      .filter(col("_rn") <= beamWidth)
+      .select("query_id", "id", "sim")
+      .collect()
+      .groupBy(_.getLong(0))
+      .map { case (qid, rows) => qid -> rows.map(r => r.getLong(1) -> r.getDouble(2)).toMap }
+    val perHop = (0 until hops).map { _ =>
+      val frontierPairs = visited.toSeq.flatMap { case (qid, vs) =>
+        vs.toSeq.sortBy { case (id, s) => (-s, id) }
+          .take(beamWidth).map { case (id, _) => (qid, id) }
+      }
+      val fDf = frontierPairs.toDF("query_id", "src")
+      val cand = lookup(frontierPairs.map(_._2).distinct)
+        .join(broadcast(fDf), "src")
+        .join(broadcast(q), "query_id")
+        .select(col("query_id"), col("dst").cast("long").as("id"),
+          cosine(col("dst_vec"), col("_qv")).as("sim"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val byQid = cand.groupBy(_._1)
+      visited = visited.map { case (qid, vs) =>
+        qid -> (vs ++ byQid.getOrElse(qid, Array.empty).map { case (_, id, s) => id -> s })
+      }
+      frontierPairs
+    }
+    val sims = for ((qid, vs) <- visited; (id, s) <- vs) yield (qid, id) -> s
+    (sims, perHop)
+  }
+
+  private def visitedOf(df: DataFrame): Map[(Long, Long), Double] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+  private def assertSameBits[K](got: Map[K, Double], expect: Map[K, Double], what: String): Unit = {
+    assert(got.keySet == expect.keySet, s"$what: different key sets")
+    val diff = expect.collect { case (k, s) if bits(got(k)) != bits(s) => (k, got(k), s) }
+    assert(diff.isEmpty, s"$what: ${diff.size} values differ in raw bits, e.g. ${diff.take(3)}")
+  }
+
+  // ---------------- the parity checks ---------------- //
+
+  test("QueryCosines equals the cosine column bit-for-bit, zero-norm and non-finite rows included") {
+    val rows = Seq(
+      (1L, Seq(0.5f, -0.25f, 0.0f, 3.0f)),
+      (2L, Seq(0.0f, 0.0f, 0.0f, 0.0f)),
+      (3L, Seq(1e-30f, -0.0f, 7.5f, 1.0f)),
+      (4L, Seq(Float.NaN, 1.0f, 0.0f, 2.0f)),
+      (5L, Seq(Float.PositiveInfinity, 0.0f, 1.0f, 0.0f)))
+      .toDF("id", "v")
+    val table = Array(
+      Array(1.0, 0.0, 0.0, 2.0),
+      Array(0.0, 0.0, 0.0, 0.0),
+      Array(-0.0, 3.0, 1e-300, 0.5),
+      Array(0.25, -0.5, 0.75, -1.0))
+    val expect = table.indices.flatMap { qi =>
+      rows.select(col("id"), cosine(col("v"), lit(table(qi))).as("sim")).collect()
+        .map(r => (r.getLong(0), qi) -> r.getDouble(1))
+    }.toMap
+    def scored(c: org.apache.spark.sql.Column) =
+      rows.select(col("id"), explode(c).as("_s"))
+        .select(col("id"), col("_s.qi"), col("_s.sim")).collect()
+        .map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    // where a NaN row meets a query: NaN either way, whatever payload
+    def sameOrNaN(got: Map[(Long, Int), Double]) = {
+      assert(got.keySet == expect.keySet)
+      expect.foreach { case (k, s) =>
+        assert(bits(got(k)) == bits(s) || (got(k).isNaN && s.isNaN), s"$k: ${got(k)} vs $s")
+      }
+    }
+    sameOrNaN(scored(QueryCosines.all(col("v"), table)))
+    // keyed: only the named queries score a row, in the listed order
+    val targets = Map(1L -> Array(0, 2), 3L -> Array(1, 2, 3), 5L -> Array(3))
+    val keyed = scored(QueryCosines.keyed(col("v"), col("id"), table, targets))
+    assert(keyed.keySet == targets.toSeq.flatMap { case (id, qs) => qs.map(id -> _) }.toSet)
+    keyed.foreach { case (k, s) =>
+      assert(bits(s) == bits(expect(k)) || (s.isNaN && expect(k).isNaN), s"$k") }
+    // a dimension mismatch refuses, as the dot product does
+    val err = intercept[Exception] {
+      rows.select(explode(QueryCosines.all(col("v"), Array(Array(1.0, 2.0))))).collect()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("dimension mismatch")))
+  }
+
+  test("kmeansRefine and centeredPlanes: the vector-mean aggregate equals posexplode/avg bit-for-bit") {
+    val e = pinned
+    val init = Ann.headCentroids(e, "vec_id", "embedding", 8)
+    def vecs(df: DataFrame): Map[Any, Seq[Long]] =
+      df.select(col("centroid_id"), col("centroid_vec").cast("array<double>")).collect()
+        .map(r => r.get(0) -> r.getSeq[Double](1).map(bits)).toMap
+    for (iters <- Seq(1, 3)) {
+      val expect = vecs(refineByDims(e, init, Schemas.EmbeddingDim, iters))
+      val got = vecs(Ann.kmeansRefine(e, "vec_id", "embedding", init,
+        Schemas.EmbeddingDim, iters = iters))
+      assert(got.keySet == expect.keySet, s"iters=$iters: different cells")
+      got.foreach { case (c, v) =>
+        assert(v == expect(c), s"iters=$iters: centroid $c differs in raw bits") }
+    }
+    // centeredPlanes' corpus mean is the same aggregate with no grouping
+    val meanByDims = e
+      .select(posexplode(col("embedding").cast("array<double>")).as(Seq("_dim", "_x")))
+      .groupBy("_dim").agg(avg("_x").as("_m"))
+      .orderBy("_dim").select("_m").collect().map(_.getDouble(0))
+    val heads = e.orderBy("vec_id").limit(3)
+      .select(col("embedding").cast("array<double>")).collect().map(_.getSeq[Double](0))
+    assert(Ann.centeredPlanes(e, "vec_id", "embedding", 3).map(_.map(bits)) ==
+      heads.toSeq.map(_.zip(meanByDims).map { case (x, m) => bits(x - m) }),
+      "centeredPlanes differs in raw bits from the per-dimension avg mean")
+    // a vector of the wrong width refuses instead of training on it
+    intercept[Exception] {
+      Ann.kmeansRefine(e, "vec_id", "embedding", init, Schemas.EmbeddingDim + 1).collect()
+    }
+  }
+
+  test("batched walk: query-table scoring equals the join-based walk, partitioned and warm-normalized") {
+    val e = pinned
+    val cents = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
+    val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
+    val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
+      cents, "centroid_id", "centroid_vec", m = 4)
+    val idx = java.nio.file.Files.createTempDirectory("graft_walk_parity").toString + "/idx"
+    Ann.writeGraphIndex(edges, idx, nBuckets = 16)
+    val edgeIds = spark.read.parquet(idx).select("src", "dst").persist()
+    val vecs = e.select(col("vec_id").as("dst"), col("embedding").as("dst_vec")).persist()
+    val queries = e.filter(col("vec_id").isin(9L, 17L, 25L, 33L, 120L, 301L))
+    val (beam, hops) = (4, 5)
+    val partitioned: Seq[Long] => DataFrame = frontier =>
+      spark.read.parquet(idx)
+        .filter(col("src_bucket").isin(frontier.map(id => Long.box(((id % 16) + 16) % 16)).distinct: _*))
+        .filter(col("src").isin(frontier.map(Long.box): _*))
+    val normalized: Seq[Long] => DataFrame = frontier =>
+      edgeIds.filter(col("src").isin(frontier.map(Long.box): _*)).join(vecs, "dst")
+    val (expect, perHop) = joinWalk(cents, queries, beam, hops, partitioned)
+    // the fixture must exercise expand-once: some (query, src) pair sits
+    // in the frontier of more than one hop
+    val pairs = perHop.flatten
+    assert(pairs.distinct.length < pairs.length,
+      "no frontier repeats across hops — the fixture does not test expand-once")
+    assertSameBits(visitedOf(Ann.graphSearchBatchPartitioned(spark, idx, 16,
+      cents, "centroid_id", "centroid_vec", queries, "vec_id", "embedding", beam, hops)),
+      expect, "partitioned")
+    assertSameBits(visitedOf(Ann.graphSearchBatchResidentNormalized(spark, edgeIds, vecs,
+      cents, "centroid_id", "centroid_vec", queries, "vec_id", "embedding", beam, hops)),
+      expect, "warm-normalized")
+    val (expectNorm, _) = joinWalk(cents, queries, beam, hops, normalized)
+    assertSameBits(expectNorm, expect, "join walk, normalized vs partitioned lookup")
+    // every lookup the new walk issues is for srcs no earlier hop expanded
+    val asked = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+    Ann.batchBeamWalk(spark, cents, "centroid_id", "centroid_vec",
+      queries, "vec_id", "embedding", beam, hops,
+      { frontier => asked += frontier; partitioned(frontier) }).count()
+    val reExpanded = perHop.map(_.map(_._2).distinct.length).sum
+    assert(asked.length <= hops)
+    assert(asked.map(_.length).sum < reExpanded,
+      s"expand-once looked up ${asked.map(_.length).sum} srcs, the re-expanding walk $reExpanded")
+    edgeIds.unpersist(); vecs.unpersist()
+  }
+
+  test("measureRecall: the probe-table exact side equals the crossJoin exact side") {
+    val e = pinned
+    val dir = java.nio.file.Files.createTempDirectory("graft_recall_parity").toString
+    val h = GraphIndex.build(spark, e, Seq("vec_id"), "embedding", dir,
+      nCentroids = 8, m = 8, nBuckets = 8, beamWidth = 8, hops = 2)
+    val withUid = e.withColumn("_muid", GraphIndex.uidFor(Seq("vec_id")))
+    val probes = withUid.orderBy("_muid").limit(12)
+      .select(col("_muid").as("query_id"), col("embedding").cast("array<double>").as("_qv"))
+    val qRows = probes.collect()
+    val table = qRows.map(_.getSeq[Double](1).toArray)
+    // every (probe, row) score, on raw bits
+    val expect = withUid.crossJoin(broadcast(probes))
+      .select(col("query_id"), col("_muid"), cosine(col("embedding"), col("_qv")).as("_sim"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val got = GraphIndex.probeScores(withUid, Seq("vec_id"), "embedding", table)
+      .select("_qi", "_muid", "_sim").collect()
+      .map(r => (qRows(r.getInt(0)).getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assertSameBits(got, expect, "exact side")
+    // and the measured recall equals the crossJoin-side measurement's,
+    // default (leave-self-out) probes and a caller workload alike
+    def crossJoinRecall(qDf: DataFrame, leaveSelfOut: Boolean, k: Int): Double = {
+      import org.apache.spark.sql.expressions.Window
+      def topK(df: DataFrame, sim: String, id: String) = df
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy("query_id").orderBy(desc(sim), col(id))))
+        .filter(col("_rn") <= k).select("query_id", "vec_id").collect()
+        .groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(_.get(1)).toSet }
+      val exactBase = withUid.crossJoin(broadcast(qDf))
+        .withColumn("_sim", cosine(col("embedding"), col("_qv")))
+      val exact = topK(if (leaveSelfOut) exactBase.filter(col("_muid") =!= col("query_id"))
+        else exactBase, "_sim", "_muid")
+      val gotBase = h.searchBatch(spark, qDf, "query_id", "_qv")
+      val walked = topK(if (leaveSelfOut) gotBase.filter(col("uid") =!= col("query_id"))
+        else gotBase, "sim", "uid")
+      val rs = exact.toSeq.map { case (q, truth) =>
+        truth.intersect(walked.getOrElse(q, Set.empty)).size.toDouble /
+          math.max(1, math.min(k, truth.size))
+      }
+      rs.sum / rs.length
+    }
+    val rDefault = GraphIndex.measureRecall(spark, h, e, Seq("vec_id"), "embedding",
+      nQueries = 12, k = 5)
+    assert(bits(rDefault) == bits(crossJoinRecall(probes, leaveSelfOut = true, k = 5)))
+    val workload = e.filter(col("vec_id") % 50 === 7)
+      .select(col("vec_id").as("query_id"), col("embedding").cast("array<double>").as("_qv"))
+    val rWork = GraphIndex.measureRecall(spark, h, e, Seq("vec_id"), "embedding",
+      k = 5, queries = Some(workload))
+    assert(bits(rWork) == bits(crossJoinRecall(workload, leaveSelfOut = false, k = 5)))
   }
 }

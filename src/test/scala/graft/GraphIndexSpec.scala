@@ -497,6 +497,33 @@ class GraphIndexSpec extends AnyFunSuite {
     } finally { hot0.cool(); sh0.cool() }
   }
 
+  test("staleness: a chunk append landing while hot() loads leaves the snapshot stale") {
+    import scala.jdk.CollectionConverters._
+    val h = freshHandle()
+    val chunksDir = java.nio.file.Paths.get(h.chunksDir)
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.hooked.impl", classOf[ListingHookFileSystem].getName)
+    // right after hot() first lists chunks/ — whichever of its steps
+    // does that — a file lands there, as a racing insert's would
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    ListingHookFileSystem.afterChunksListing.set { () =>
+      val src = java.nio.file.Files.walk(chunksDir).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val dst = chunksDir.resolve(s"uid_bucket=${h.nBuckets}")
+      java.nio.file.Files.createDirectories(dst)
+      java.nio.file.Files.copy(src, dst.resolve(src.getFileName))
+      fired.set(true)
+    }
+    try {
+      val hot0 = GraphIndex.hot(spark, h.copy(dir = "hooked://" + h.dir))
+      try {
+        assert(fired.get, "the load must list chunks/ through the hooked scheme")
+        assert(hot0.isStale(spark),
+          "a mutation between the stamp and the reads must leave the snapshot stale")
+      } finally hot0.cool()
+    } finally ListingHookFileSystem.afterChunksListing.set(null)
+  }
+
   test("hot serving is a snapshot: deletes after hot() appear only on re-hot") {
     val h = freshHandle()
     val qv = Embed.embedQuery(spark, demoQueries.head).toSeq
@@ -1094,4 +1121,22 @@ class GraphIndexSpec extends AnyFunSuite {
     assert(GI.driftStatus(spark, h2) == ((0L, None)),
       "trackDrift=false must skip the per-insert sidecar round-trip")
   }
+}
+
+/** The local filesystem under a `hooked://` scheme, running a one-shot
+  * action right after it lists a directory named `chunks` — lets a spec
+  * land a store mutation at an exact point inside a load. */
+class ListingHookFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("hooked:///")
+
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val out = super.listStatus(f)
+    if (f.getName == "chunks")
+      Option(ListingHookFileSystem.afterChunksListing.getAndSet(null)).foreach(_.apply())
+    out
+  }
+}
+
+object ListingHookFileSystem {
+  val afterChunksListing = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
 }
