@@ -209,7 +209,7 @@ object PmcDemo {
     // moment delete() returns), then compact (physical removal + file
     // merge) and re-ask (post-delete answer is stable across the swap).
     locally {
-      val topDoc = operators.GraphIndex.topK(spark, h, qv.toSeq, 1,
+      val topDoc = h.topK(spark, qv.toSeq, 1,
         tieBreak = Seq("doc_id", "chunk_idx")).select("doc_id").head().getString(0)
       val keys = index.filter(col("doc_id") === topDoc).select("doc_id", "chunk_idx")
       val tDel = System.nanoTime()

@@ -60,7 +60,8 @@ object RecallSweep {
       edges.count()
       for (beam <- Seq(4, 8, 16, 32); hops <- Seq(2, 3, 4)) {
         val t0 = System.nanoTime()
-        val visited = Ann.graphSearchBatch(spark, edges,
+        // edges stay persisted across the whole (beam, hops) sweep
+        val visited = Ann.graphSearch(spark, Ann.edgeLookup(edges),
             cents, "centroid_id", "centroid_vec",
             queries, "vec_id", "embedding", beam, hops)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

@@ -109,18 +109,19 @@ object ServeBench {
     val gdir = java.nio.file.Files.createTempDirectory("serve_graph").toString
     // DEFAULT: the recall-gated production build (buildServing) — the
     // measured recipe wired in: sqrt-N codebook, head-seed TRAINED
-    // sqrt-C coarse quantizer probed at p=8 (PmcRecallProbe measured
-    // p=4 = flat recall 0.98 at 69 vs 181 dots/row on PMC, but on the
-    // sf0.1 documents p=4 gates at recall@10 0.895 and the build
-    // refuses; head-order seeds are load-bearing — hash-random seeds
-    // collapse to 0.405), and the
+    // sqrt-C coarse quantizer probed at p=8 (SCALE.md "Measured
+    // scaling curve", routing-quality table — the PMC recall probe, in
+    // commit be29786 — measured p=4 = flat recall 0.98 at 69 vs 181
+    // dots/row on PMC, but on the sf0.1 documents p=4 gates at
+    // recall@10 0.895 and the build refuses; head-order seeds are
+    // load-bearing — hash-random seeds collapse to 0.405), and the
     // build REFUSES below recall 0.9 ON THE BENCH'S OWN QUERY
     // WORKLOAD — a ServeBench number can no longer come from a
     // low-recall store by construction. Edge bands stay off here (they
     // are a BUILD-cost knob needing beam 64 — the serving-latency
     // numbers keep the beam-32 walk; the banded acceptance row lives
-    // in PmcRecallProbe). `ServeBench flat` keeps the old flat build
-    // for comparison.
+    // in that same SCALE.md table). `ServeBench flat` keeps the old
+    // flat build for comparison.
     val (h, recall) =
       if (args.contains("flat")) {
         val fh = operators.GraphIndex.build(spark, index, Seq("doc_id", "chunk_idx"),

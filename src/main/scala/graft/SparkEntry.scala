@@ -843,6 +843,15 @@ object SparkEntry {
     df.filter(col("vec_id") === id).select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0)
 
+  /** One query's visited (vec_id, sim) set at the single-query graph
+    * rows' beam 4 / 3 hops: [[Ann.graphSearch]] over a one-row query
+    * table. */
+  private def graphWalk(s: SparkSession, lookup: Seq[Long] => DataFrame,
+                        cents: DataFrame, queryVec: Seq[Double]): DataFrame =
+    Ann.graphSearch(s, lookup, cents, "centroid_id", "centroid_vec",
+      Ann.oneQuery(s, queryVec), "query_id", "vector", beamWidth = 4, hops = 3)
+      .drop("query_id")
+
   /** Cache table stand-in built from the embeddings table. */
   private def cacheTable(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "embeddings").filter(col("vec_id") > 0)
@@ -1518,8 +1527,7 @@ object SparkEntry {
       val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
       val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
         cents, "centroid_id", "centroid_vec", m = 4)
-      Ann.graphSearch(s, edges, cents, "centroid_id", "centroid_vec",
-          collectVec(e, 9), beamWidth = 4, hops = 3)
+      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 9)))
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
         .limit(10)
@@ -1528,10 +1536,11 @@ object SparkEntry {
     // The SAME graph build + walk at the PRODUCTION codebook discipline
     // |C| = ⌊√N⌋ — the configuration that survives sf1 where the
     // pinned-|C|=8 build OOMs (SCALE.md curve), and the recall-0.98
-    // point on the real corpus (PmcRecallProbe). Everything is derived
-    // from N on BOTH sides (Spark counts the table; DuckDB's scalar
-    // subquery replays it), so one oracle serves every SF. Query vec
-    // 201 is not a centroid at any SF (√N ≤ 141 even at sf1).
+    // point on the real corpus (SCALE.md "Graph-ANN recall at scale";
+    // the probe that measured it is in commit be29786). Everything is
+    // derived from N on BOTH sides (Spark counts the table; DuckDB's
+    // scalar subquery replays it), so one oracle serves every SF. Query
+    // vec 201 is not a centroid at any SF (√N ≤ 141 even at sf1).
     "q_ann_graph_scaled" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val nCents = math.floor(math.sqrt(e.count().toDouble)).toLong
@@ -1540,8 +1549,7 @@ object SparkEntry {
       val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
       val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
         cents, "centroid_id", "centroid_vec", m = 4)
-      Ann.graphSearch(s, edges, cents, "centroid_id", "centroid_vec",
-          collectVec(e, 201), beamWidth = 4, hops = 3)
+      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 201)))
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
         .limit(10)
@@ -1565,8 +1573,7 @@ object SparkEntry {
         cents, "centroid_id", "centroid_vec", nSupers.toInt)
       val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
         cents, "centroid_id", "centroid_vec", m = 4)
-      Ann.graphSearch(s, edges, cents, "centroid_id", "centroid_vec",
-          collectVec(e, 201), beamWidth = 4, hops = 3)
+      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 201)))
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
         .limit(10)
@@ -1592,8 +1599,7 @@ object SparkEntry {
       val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
       val edges = Ann.knnGraphLsh(assigned, "vec_id", "embedding",
         cents, "centroid_id", "centroid_vec", m = 4, planes)
-      Ann.graphSearch(s, edges, cents, "centroid_id", "centroid_vec",
-          collectVec(e, 201), beamWidth = 4, hops = 3)
+      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 201)))
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
         .limit(10)
@@ -1620,8 +1626,7 @@ object SparkEntry {
       val edges = Ann.knnGraphLshBanded(assigned, "vec_id", "embedding",
         cents, "centroid_id", "centroid_vec", m = 4,
         Seq(planesIn(0, 2), planesIn(2, 4)))
-      Ann.graphSearch(s, edges, cents, "centroid_id", "centroid_vec",
-          collectVec(e, 201), beamWidth = 4, hops = 3)
+      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 201)))
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
         .limit(10)
@@ -1629,7 +1634,7 @@ object SparkEntry {
 
     // WARM graph ANN serving: the same store-backed walk as
     // q_ann_graph_part, but the edge list is persisted once and every
-    // hop filters cached batches (Ann.graphSearchResident — the
+    // hop filters cached batches (Ann.normalizedLookup — the
     // GraphIndex.warm serving posture: the reference holds its HNSW in
     // RAM and never touches disk per /ask). Same oracle: the lookup
     // medium changes, the walk does not.
@@ -1649,9 +1654,7 @@ object SparkEntry {
       edgeIds.count(); vecs.count()
       // the walk runs eagerly (driver beam loop), so the returned
       // frame is a local collection — safe to release the cache here
-      val out = Ann.graphSearchResidentNormalized(s, edgeIds, vecs,
-          cents, "centroid_id", "centroid_vec",
-          collectVec(e, 9), beamWidth = 4, hops = 3)
+      val out = graphWalk(s, Ann.normalizedLookup(edgeIds, vecs), cents, collectVec(e, 9))
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
         .limit(10)
@@ -1671,7 +1674,7 @@ object SparkEntry {
       val cents = graphStores.cents(s, dir, 8)
       val idx = graphStores.knn8(s, dir)
       val queries = e.filter(col("vec_id").isin(9L, 17L, 25L))
-      val visited = Ann.graphSearchBatchPartitioned(s, idx, 16,
+      val visited = Ann.graphSearch(s, Ann.storeLookup(s, idx, 16),
         cents, "centroid_id", "centroid_vec",
         queries, "vec_id", "embedding", beamWidth = 4, hops = 3)
       val w = org.apache.spark.sql.expressions.Window
@@ -1694,8 +1697,7 @@ object SparkEntry {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val cents = graphStores.cents(s, dir, 8)
       val idx = graphStores.knn8(s, dir)
-      Ann.graphSearchPartitioned(s, idx, 16, cents, "centroid_id", "centroid_vec",
-          collectVec(e, 9), beamWidth = 4, hops = 3)
+      graphWalk(s, Ann.storeLookup(s, idx, 16), cents, collectVec(e, 9))
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
         .limit(10)
@@ -1727,8 +1729,7 @@ object SparkEntry {
       tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
       Ann.writeGraphTombstones(e.filter(col("vec_id") % 10 === 3).select("vec_id"),
         "vec_id", tomb, nBuckets = 16)
-      val visited = Ann.graphSearchPartitioned(s, idx, 16,
-        cents, "centroid_id", "centroid_vec", collectVec(e, 201), beamWidth = 4, hops = 3)
+      val visited = graphWalk(s, Ann.storeLookup(s, idx, 16), cents, collectVec(e, 201))
       Ann.filterTombstoned(s, visited, "vec_id", tomb, nBuckets = 16)
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
@@ -1757,8 +1758,7 @@ object SparkEntry {
       Ann.writeGraphTombstones(e.filter(col("vec_id") % 10 === 3).select("vec_id"),
         "vec_id", tomb, nBuckets = 16)
       Ann.compactGraphIndex(s, idx, 16, tomb, protectedIds = (0L until nCents))
-      val visited = Ann.graphSearchPartitioned(s, idx, 16,
-        cents, "centroid_id", "centroid_vec", collectVec(e, 201), beamWidth = 4, hops = 3)
+      val visited = graphWalk(s, Ann.storeLookup(s, idx, 16), cents, collectVec(e, 201))
       Ann.filterTombstoned(s, visited, "vec_id", tomb, nBuckets = 16)
         .select(col("vec_id"), stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("vec_id"))
@@ -2683,7 +2683,7 @@ object SparkEntry {
       val h = GraphIndex.build(s, embedded, Seq("doc_id", "chunk_idx"), "embedding",
         gdir, nCentroids = GraphIndex.DeriveSqrtN, m = 4, nBuckets = 16,
         beamWidth = 4, hops = 3)
-      GraphIndex.search(s, h, Embed.embedQuery(s, RagQueryText).toSeq)
+      h.search(s, Embed.embedQuery(s, RagQueryText).toSeq)
         .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
           stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("doc_id"), col("chunk_idx"))
@@ -2715,7 +2715,7 @@ object SparkEntry {
       val h = GraphIndex.build(s, embedded, Seq("doc_id", "chunk_idx"), "embedding",
         gdir, nCentroids = GraphIndex.DeriveSqrtN, m = 4, nBuckets = 16,
         beamWidth = 4, hops = 3, autoBandAt = 1L, autoHierAt = 1L)
-      GraphIndex.search(s, h, Embed.embedQuery(s, RagQueryText).toSeq)
+      h.search(s, Embed.embedQuery(s, RagQueryText).toSeq)
         .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
           stableRound(col("sim")).as("sim"))
         .orderBy(desc("sim"), col("doc_id"), col("chunk_idx"))

@@ -387,52 +387,68 @@ object Ann {
     * reach serving, and a failed in-place rebuild keeps the prior good
     * store. `queries` is (query_id, vector) and must be non-empty (an
     * empty workload would make the mean recall NaN and NaN < floor is
-    * false). Both the truth and probe sides are batched: one broadcast
-    * of the workload, per-query row_number windows, ties (sim desc,
-    * id asc) exactly like [[ivfSearch]]. Per-query recall divides by
-    * min(k, |truth|), so an index smaller than k measures honestly.
-    * Returns the measured recall — the build's acceptance evidence;
-    * record it. */
+    * false). Both sides score the driver-held workload in one pass
+    * ([[ivfGateTopK]]), ties (sim desc, id asc) exactly like
+    * [[ivfSearch]]. Per-query recall divides by min(k, |truth|), so an
+    * index smaller than k measures honestly. Returns the measured
+    * recall — the build's acceptance evidence; record it. */
   def writeIvfIndexGated(spark: SparkSession, assigned: DataFrame,
                          idCol: String, vecCol: String,
                          centroids: DataFrame, cIdCol: String, cVecCol: String,
                          indexDir: String, queries: DataFrame,
                          nprobe: Int, k: Int = 10,
                          recallFloor: Double = 0.9): Double = {
-    import org.apache.spark.sql.expressions.Window
     val qcols = queries.columns
     require(qcols.length == 2,
       s"writeIvfIndexGated: queries must be (query_id, vector), got ${qcols.toSeq}")
-    val qDf = queries.select(col(qcols(0)).as("_qid"),
-      col(qcols(1)).cast("array<double>").as("_qv"))
+    val qRows = queries.select(col(qcols(1)).cast("array<double>")).collect()
     // refuse the empty workload BEFORE anything is even staged — the
     // gate-bypass measureRecall refuses the same way
-    require(!qDf.isEmpty,
+    require(qRows.nonEmpty,
       "writeIvfIndexGated: the query workload produced zero probes — " +
         "refusing to build a store that would publish ungated")
+    require(qRows.forall(!_.isNullAt(0)), "writeIvfIndexGated: null query vector")
+    val table = qRows.map(_.getSeq[Double](0).toArray)
     gatedPublish(spark, indexDir, recallFloor,
       "Ann.writeIvfIndexGated", s"nprobe=$nprobe, k=$k") { staging =>
       writeIvfIndex(assigned, staging)
     } { staged =>
-      val w = Window.partitionBy("_qid").orderBy(desc("_sim"), col(idCol))
-      def topkOf(scored: DataFrame): Map[Any, Set[Any]] = scored
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
-        .select(col("_qid"), col(idCol))
-        .collect().groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(_.get(1)).toSet }
-      val exact = topkOf(assigned.crossJoin(broadcast(qDf))
-        .withColumn("_sim", cosine(col(vecCol), col("_qv"))))
-      // probe the STAGED store — the same files one rename later IS the
-      // published artifact, so what serving reads is what got gated
-      val wc = Window.partitionBy("_qid").orderBy(desc("_csim"), col(cIdCol))
-      val probeCells = centroids.crossJoin(broadcast(qDf))
-        .withColumn("_csim", cosine(col(cVecCol), col("_qv")))
-        .withColumn("_crn", row_number().over(wc)).filter(col("_crn") <= nprobe)
-        .select(col("_qid"), col("_qv"), col(cIdCol).as("cell_id"))
-      val got = topkOf(spark.read.parquet(staged)
-        .join(broadcast(probeCells), "cell_id")
-        .withColumn("_sim", cosine(col(vecCol), col("_qv"))))
+      val (exact, got) = ivfGateTopK(spark, assigned, idCol, vecCol,
+        centroids, cIdCol, cVecCol, staged, table, nprobe, k)
       meanRecall(exact, got, k, "writeIvfIndexGated")
     }
+  }
+
+  /** [[writeIvfIndexGated]]'s measurement, keyed by query index in
+    * `table`: each query's exact top-`k` ids over `assigned`, and its
+    * top-`k` over the `nprobe` cells it probes in the store at
+    * `storeDir` — only those cells' partitions are read, and a row is
+    * scored against exactly the queries probing its cell. */
+  private[graft] def ivfGateTopK(spark: SparkSession, assigned: DataFrame,
+                                 idCol: String, vecCol: String,
+                                 centroids: DataFrame, cIdCol: String, cVecCol: String,
+                                 storeDir: String, table: Array[Array[Double]],
+                                 nprobe: Int, k: Int)
+      : (Map[Any, Set[Any]], Map[Any, Set[Any]]) = {
+    import graft.functions.QueryCosines
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("_s.qi").orderBy(desc("_s.sim"), col(idCol))
+    def topkOf(scored: DataFrame): Map[Any, Set[Any]] = scored
+      .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
+      .select(col("_s.qi"), col(idCol))
+      .collect().groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(_.get(1)).toSet }
+    val exact = topkOf(assigned
+      .select(col(idCol), explode(QueryCosines.all(col(vecCol), table)).as("_s")))
+    // each query's nprobe nearest cells, as cell → the (ascending)
+    // queries probing it
+    val probing = nearestPerQuery(centroids, cIdCol, cVecCol, table, nprobe)
+      .select(col("id"), col("_s.qi")).collect()
+      .groupBy(_.getLong(0)).map { case (c, rs) => c -> rs.map(_.getInt(1)).sorted }
+    val got = topkOf(spark.read.parquet(storeDir)
+      .filter(col("cell_id").isin(probing.keys.toSeq.map(Long.box): _*))
+      .select(col(idCol),
+        explode(QueryCosines.keyed(col(vecCol), col("cell_id"), table, probing)).as("_s")))
+    (exact, got)
   }
 
   /** Scored candidates from a partitioned IVF store: rank centroids vs
@@ -854,182 +870,33 @@ object Ann {
     ids.join(vecs, "dst").select("src", "dst", "dst_vec")
   }
 
-  /** Greedy beam search over a [[knnGraph]]: enter at the `beamWidth`
-    * centroids nearest the query, then `hops` rounds of expand-the-beam
-    * (score every neighbor of the current top-`beamWidth` visited nodes,
-    * fold into the visited set). Returns ALL visited nodes scored —
-    * callers apply their own top-k. Like HNSW itself the walk is
-    * inherently sequential, so the loop runs on the driver; each hop's
-    * data-side work is a frontier-pruned edge lookup and every collect
-    * is beam·degree rows (KB-scale), never the index. */
-  def graphSearch(spark: SparkSession, edges: DataFrame,
+  /** THE Spark beam walk over a [[knnGraph]]: the queries walk it
+    * TOGETHER (the reference serves N concurrent ask() sessions against
+    * one HNSW, app/main.py:616-647); a single query is a one-row table
+    * ([[oneQuery]]). Each query enters at its `beamWidth` nearest
+    * centroids, then runs `hops` rounds of expand-the-beam (score every
+    * neighbor of its top-`beamWidth` visited nodes). Returns (query_id,
+    * vec_id, sim) for ALL visited nodes; callers apply their own top-k.
+    *
+    * `lookup` returns a frontier's (src, dst, dst_vec) edge rows —
+    * [[edgeLookup]], [[normalizedLookup]] or [[storeLookup]]; the result
+    * does not depend on the medium. Each hop issues ONE lookup for the
+    * union of all queries' frontiers, so per-hop reads do not scale with
+    * query count. The loop runs on the driver (the walk is sequential,
+    * like HNSW's); the query table is collected once and scored
+    * data-side by [[graft.functions.QueryCosines]] — a hop scores each
+    * edge row against exactly the queries whose frontier holds its src
+    * — so every collect is scores only (≤ queries·beam·degree rows).
+    * Frontiers and dedup are keyed by query, so a query's visited set
+    * does not depend on its batch-mates. Each (query, src) is expanded
+    * at most once per walk (a re-expansion yields pairs the visited set
+    * already holds); a hop with nothing new issues no lookup. Query ids
+    * must be distinct. */
+  def graphSearch(spark: SparkSession, lookup: Seq[Long] => DataFrame,
                   centroids: DataFrame, cIdCol: String, cVecCol: String,
-                  queryVec: Seq[Double], beamWidth: Int, hops: Int): DataFrame = {
-    val cached = edges.persist()
-    val out = graphSearchResident(spark, cached, centroids, cIdCol, cVecCol,
-      queryVec, beamWidth, hops)
-    cached.unpersist()
-    out
-  }
-
-  /** [[graphSearch]] over an edge DataFrame the CALLER keeps resident
-    * (persisted once, reused across many queries — the warm-serving
-    * path, [[GraphIndex.warm]]): no per-call persist/unpersist churn,
-    * and a hop's lookup filters cached batches (in-memory min/max
-    * stats skip non-frontier batches) instead of launching a parquet
-    * listing + scan job. Identical visited set to [[graphSearch]] by
-    * construction (same [[beamWalk]]). */
-  def graphSearchResident(spark: SparkSession, edges: DataFrame,
-                          centroids: DataFrame, cIdCol: String, cVecCol: String,
-                          queryVec: Seq[Double], beamWidth: Int, hops: Int): DataFrame =
-    beamWalk(spark, centroids, cIdCol, cVecCol, queryVec, beamWidth, hops,
-      frontier => edges.filter(col("src").isin(frontier.map(Long.box): _*)))
-
-  /** [[graphSearchResident]] over the NORMALIZED resident layout:
-    * `edgeIds` carries (src, dst) only and `vecs` ONE (dst, dst_vec)
-    * row per node. The DISK store denormalizes dst_vec so a pruned hop
-    * read needs no join; held resident that costs O(|E|·dim) RAM — m×
-    * the nodes themselves (1024-dim × m=16 on a 33k-chunk corpus:
-    * ~9 GB of cache vs ~300 MB normalized — the difference between a
-    * servable warm index and an OOM). The hop becomes an in-memory
-    * join of the frontier's edges against the cached node table, which
-    * reproduces exactly the denormalized rows — same visited set by
-    * construction. */
-  def graphSearchResidentNormalized(spark: SparkSession, edgeIds: DataFrame,
-                                    vecs: DataFrame,
-                                    centroids: DataFrame, cIdCol: String, cVecCol: String,
-                                    queryVec: Seq[Double], beamWidth: Int, hops: Int): DataFrame =
-    beamWalk(spark, centroids, cIdCol, cVecCol, queryVec, beamWidth, hops,
-      frontier => edgeIds.filter(col("src").isin(frontier.map(Long.box): _*))
-        .join(vecs, "dst"))
-
-  /** The shared walk: entry at the nearest centroids, then `hops`
-    * expand-the-beam rounds over whatever `lookup` returns for a
-    * frontier (an in-memory filter, or a partition-pruned store read —
-    * the result contract is identical by construction). Each node is
-    * expanded at most once per walk: a re-expanded src yields the same
-    * (id, sim) pairs the visited map already holds, so a hop looks up
-    * only the frontier nodes not expanded before, and a hop with none
-    * issues no lookup. */
-  private def beamWalk(spark: SparkSession,
-                       centroids: DataFrame, cIdCol: String, cVecCol: String,
-                       queryVec: Seq[Double], beamWidth: Int, hops: Int,
-                       lookup: Seq[Long] => DataFrame): DataFrame = {
-    val q = lit(queryVec.toArray)
-    var visited = centroids
-      .withColumn("_sim", cosine(col(cVecCol), q))
-      .orderBy(desc("_sim"), col(cIdCol))
-      .limit(beamWidth)
-      .select(col(cIdCol).cast("long"), col("_sim"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val expanded = scala.collection.mutable.HashSet.empty[Long]
-    for (_ <- 0 until hops) {
-      val frontier = visited.toSeq.sortBy { case (id, s) => (-s, id) }
-        .take(beamWidth).map(_._1).filter(expanded.add)
-      // no dropDuplicates before the collect (optimization r19): the
-      // candidate set is beam·degree rows — KB-scale by contract — and
-      // the `++` into the visited Map already deduplicates by id with
-      // identical (deterministic) scores, so the distinct added a
-      // full shuffle per hop for nothing. One hop = one stage now.
-      if (frontier.nonEmpty) {
-        val cand = lookup(frontier)
-          .select(col("dst").cast("long"), cosine(col("dst_vec"), q).as("_sim"))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1))
-        visited = visited ++ cand // re-scored ids recompute the same value
-      }
-    }
+                  queries: DataFrame, qIdCol: String, qVecCol: String,
+                  beamWidth: Int, hops: Int): DataFrame = {
     import spark.implicits._
-    visited.toSeq.toDF("vec_id", "sim")
-  }
-
-  /** BATCHED beam search — many queries walk the graph TOGETHER (the
-    * reference serves many concurrent ask() calls against one HNSW;
-    * ref app/main.py:616-647 holds N open sessions). The driver keeps
-    * per-query beam state, but each hop issues ONE edge lookup for the
-    * UNION of all queries' frontiers — per-hop store reads do not scale
-    * with query count. The query table is collected to the driver once
-    * and scored data-side by [[graft.functions.QueryCosines]]: the
-    * entry scores the centroid set against every query, and a hop
-    * hands the expression the frontier map src → query indices, so
-    * each edge row's dst_vec is scored against exactly the queries
-    * whose frontier holds its src — no join copies a query vector onto
-    * a row, and the collect is scores only (≤ queries·beam·degree
-    * rows), never vectors. Each (query, src) is expanded at most once
-    * per walk. Each query's visited set is EXACTLY what [[graphSearch]]
-    * would produce alone (AnnSpec pins equality), because per-query
-    * frontier selection and dedup are keyed by query throughout.
-    * Query ids must be distinct. Returns (query_id, vec_id, sim) for
-    * every visited node. */
-  def graphSearchBatch(spark: SparkSession, edges: DataFrame,
-                       centroids: DataFrame, cIdCol: String, cVecCol: String,
-                       queries: DataFrame, qIdCol: String, qVecCol: String,
-                       beamWidth: Int, hops: Int): DataFrame = {
-    val cached = edges.persist()
-    val out = graphSearchBatchResident(spark, cached, centroids, cIdCol, cVecCol,
-      queries, qIdCol, qVecCol, beamWidth, hops)
-    cached.unpersist()
-    out
-  }
-
-  /** [[graphSearchBatch]] over caller-resident edges — the batched
-    * twin of [[graphSearchResident]] (one in-memory lookup per hop for
-    * the union of all queries' frontiers). */
-  def graphSearchBatchResident(spark: SparkSession, edges: DataFrame,
-                               centroids: DataFrame, cIdCol: String, cVecCol: String,
-                               queries: DataFrame, qIdCol: String, qVecCol: String,
-                               beamWidth: Int, hops: Int): DataFrame =
-    batchBeamWalk(spark, centroids, cIdCol, cVecCol,
-      queries, qIdCol, qVecCol, beamWidth, hops,
-      frontier => edges.filter(col("src").isin(frontier.map(Long.box): _*)))
-
-  /** Batched twin of [[graphSearchResidentNormalized]] — same
-    * O(|V|·dim + |E|) resident footprint, one joined lookup per hop
-    * for the union of all queries' frontiers. */
-  def graphSearchBatchResidentNormalized(spark: SparkSession, edgeIds: DataFrame,
-                                         vecs: DataFrame,
-                                         centroids: DataFrame, cIdCol: String, cVecCol: String,
-                                         queries: DataFrame, qIdCol: String, qVecCol: String,
-                                         beamWidth: Int, hops: Int): DataFrame =
-    batchBeamWalk(spark, centroids, cIdCol, cVecCol,
-      queries, qIdCol, qVecCol, beamWidth, hops,
-      frontier => edgeIds.filter(col("src").isin(frontier.map(Long.box): _*))
-        .join(vecs, "dst"))
-
-  /** [[graphSearchBatch]] over a [[writeGraphIndex]] store: one read of
-    * the store per walk; each hop's partition-pruned filter of it serves
-    * every query's frontier. */
-  def graphSearchBatchPartitioned(spark: SparkSession, indexDir: String, nBuckets: Int,
-                                  centroids: DataFrame, cIdCol: String, cVecCol: String,
-                                  queries: DataFrame, qIdCol: String, qVecCol: String,
-                                  beamWidth: Int, hops: Int): DataFrame =
-    batchBeamWalk(spark, centroids, cIdCol, cVecCol,
-      queries, qIdCol, qVecCol, beamWidth, hops, prunedHopRead(spark, indexDir, nBuckets))
-
-  /** A [[writeGraphIndex]] store's hop lookup: the store is read (listed,
-    * schema resolved) once per walk, at its first hop; each hop filters
-    * that read on the frontier's buckets (partition pruning) and then
-    * the exact src set. */
-  private def prunedHopRead(spark: SparkSession, indexDir: String,
-                            nBuckets: Int): Seq[Long] => DataFrame = {
-    lazy val store = spark.read.parquet(indexDir)
-    frontier => {
-      val buckets = frontier.map(id => Long.box(((id % nBuckets) + nBuckets) % nBuckets)).distinct
-      store
-        .filter(col("src_bucket").isin(buckets: _*))
-        .filter(col("src").isin(frontier.map(Long.box): _*))
-    }
-  }
-
-  /** The shared multi-query walk behind [[graphSearchBatch]].
-    * (package-visible so AnnSpec can count lookup invocations — the
-    * reads-per-hop-don't-scale-with-queries claim is asserted there.) */
-  private[graft] def batchBeamWalk(spark: SparkSession,
-                            centroids: DataFrame, cIdCol: String, cVecCol: String,
-                            queries: DataFrame, qIdCol: String, qVecCol: String,
-                            beamWidth: Int, hops: Int,
-                            lookup: Seq[Long] => DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     import graft.functions.QueryCosines
     // the workload is request-sized by contract: ONE collect puts the
     // query table on the driver, and every scoring pass below ships it
@@ -1038,23 +905,16 @@ object Ann {
         col(qVecCol).cast("array<double>"))
       .collect()
     require(qRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
-      "batchBeamWalk: null query id or vector")
+      "Ann.graphSearch: null query id or vector")
     val qids = qRows.map(_.getLong(0))
     require(qids.distinct.length == qids.length,
-      "batchBeamWalk: query ids must be distinct")
+      "Ann.graphSearch: query ids must be distinct")
     val table = qRows.map(_.getSeq[Double](1).toArray)
     val visited = Array.fill(qids.length)(scala.collection.mutable.HashMap.empty[Long, Double])
     def fold(scored: DataFrame): Unit = scored
       .select(col("id"), col("_s.qi"), col("_s.sim")).collect()
       .foreach { r => visited(r.getInt(1))(r.getLong(0)) = r.getDouble(2) }
-    // entry: the (codebook-sized) centroid set scored against every
-    // query in one pass; per-query top-beam via window
-    fold(centroids
-      .select(col(cIdCol).cast("long").as("id"),
-        explode(QueryCosines.all(col(cVecCol), table)).as("_s"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy("_s.qi").orderBy(desc("_s.sim"), col("id"))))
-      .filter(col("_rn") <= beamWidth))
+    fold(nearestPerQuery(centroids, cIdCol, cVecCol, table, beamWidth))
     val expanded = Array.fill(qids.length)(scala.collection.mutable.HashSet.empty[Long])
     for (_ <- 0 until hops) {
       // src → the (ascending) queries whose frontier holds it, counting
@@ -1067,10 +927,8 @@ object Ann {
         frontier.foreach(src =>
           bySrc.getOrElseUpdate(src, new scala.collection.mutable.ArrayBuilder.ofInt) += qi)
       }
-      // no dropDuplicates before the collect (optimization r19): the
-      // per-query visited map deduplicates (query, id) with identical
-      // deterministic scores — the distinct was one extra shuffle per
-      // hop over a ≤ queries·beam·degree-row frame
+      // no dropDuplicates before the collect: the visited maps dedup
+      // (query, id) with identical deterministic scores
       if (bySrc.nonEmpty) {
         val targets = bySrc.map { case (src, qs) => src -> qs.result() }.toMap
         fold(lookup(bySrc.keys.toSeq) // ONE read for ALL queries' frontiers
@@ -1081,6 +939,59 @@ object Ann {
     qids.indices
       .flatMap(qi => visited(qi).toSeq.map { case (id, s) => (qids(qi), id, s) })
       .toDF("query_id", "vec_id", "sim")
+  }
+
+  /** Each query's `n` nearest rows of a (codebook-sized) centroid
+    * table, scored against the driver-held query `table` in one pass:
+    * (id, _s.qi, _s.sim, _rn), ties broken by id ascending. */
+  private def nearestPerQuery(centroids: DataFrame, cIdCol: String, cVecCol: String,
+                              table: Array[Array[Double]], n: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    centroids
+      .select(col(cIdCol).cast("long").as("id"),
+        explode(graft.functions.QueryCosines.all(col(cVecCol), table)).as("_s"))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy("_s.qi").orderBy(desc("_s.sim"), col("id"))))
+      .filter(col("_rn") <= n)
+  }
+
+  /** A single query as [[graphSearch]]'s workload: one (query_id = 0,
+    * vector) row. */
+  def oneQuery(spark: SparkSession, queryVec: Seq[Double]): DataFrame =
+    spark.createDataFrame(Seq((0L, queryVec))).toDF("query_id", "vector")
+
+  /** Hop lookup over an edge DataFrame: a filter on the frontier's
+    * srcs (over a persisted frame, cached-batch stats skip the rest). */
+  def edgeLookup(edges: DataFrame): Seq[Long] => DataFrame =
+    frontier => edges.filter(col("src").isin(frontier.map(Long.box): _*))
+
+  /** Hop lookup over the NORMALIZED resident layout of
+    * [[GraphIndex.Warm]]: `edgeIds` is (src, dst) and `vecs` ONE (dst,
+    * dst_vec) row per node, O(|V|·dim + |E|) instead of the store's
+    * denormalized O(|E|·dim). The frontier's edges join the node table,
+    * which reproduces exactly the denormalized rows. */
+  def normalizedLookup(edgeIds: DataFrame, vecs: DataFrame): Seq[Long] => DataFrame =
+    frontier => edgeLookup(edgeIds)(frontier).join(vecs, "dst")
+
+  /** Hop lookup over a [[writeGraphIndex]] store, one per walk: the
+    * store is read (listed, schema resolved) once, at the first hop;
+    * each hop filters that read on the frontier's buckets (partition
+    * pruning at the file listing) and then the exact src set. */
+  def storeLookup(spark: SparkSession, indexDir: String,
+                  nBuckets: Int): Seq[Long] => DataFrame = {
+    lazy val store = spark.read.parquet(indexDir)
+    frontier => {
+      val buckets = frontier.map(id => Long.box(((id % nBuckets) + nBuckets) % nBuckets)).distinct
+      edgeLookup(store.filter(col("src_bucket").isin(buckets: _*)))(frontier)
+    }
+  }
+
+  /** `walk` over `edges` persisted for its duration — an unpersisted
+    * [[knnGraph]] lineage would be recomputed at every hop. The walk's
+    * result is driver-local, so releasing the cache after it is safe. */
+  def persistedFor[T](edges: DataFrame)(walk: DataFrame => T): T = {
+    val cached = edges.persist()
+    try walk(cached) finally cached.unpersist()
   }
 
   /** Persist a [[knnGraph]] partitioned by `pmod(src, nBuckets)`: at
@@ -1152,16 +1063,6 @@ object Ann {
       .withColumn("src_bucket", pmod(col("src"), lit(nBuckets)))
       .write.mode("append").partitionBy("src_bucket").parquet(indexDir)
 
-  /** [[graphSearch]] over a [[writeGraphIndex]] store: one read of the
-    * store per walk, each hop filtered on the frontier's buckets
-    * (partition pruning at the file listing) then the exact src set.
-    * Same visited set as the in-memory walk. */
-  def graphSearchPartitioned(spark: SparkSession, indexDir: String, nBuckets: Int,
-                             centroids: DataFrame, cIdCol: String, cVecCol: String,
-                             queryVec: Seq[Double], beamWidth: Int, hops: Int): DataFrame =
-    beamWalk(spark, centroids, cIdCol, cVecCol, queryVec, beamWidth, hops,
-      prunedHopRead(spark, indexDir, nBuckets))
-
   // ------------------------------------------------------------------ //
   // Index lifecycle: tombstone delete + compaction                     //
   // ------------------------------------------------------------------ //
@@ -1197,9 +1098,8 @@ object Ann {
     val path = new org.apache.hadoop.fs.Path(tombDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return visited
-    // the walk's result is a driver-local collection (beamWalk), so
-    // this collect re-reads KBs, never the index; dedup happens driver-
-    // side (r19) — the .distinct() was a full shuffle over a KB frame
+    // the walk's result is driver-local ([[graphSearch]]): this collect
+    // re-reads KBs, never the index, and dedups without a shuffle
     val ids = visited.select(col(idCol).cast("long"))
       .collect().map(_.getLong(0)).distinct
     val buckets = ids.map(id => Long.box(((id % nBuckets) + nBuckets) % nBuckets)).distinct

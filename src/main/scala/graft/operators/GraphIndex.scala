@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * across runs and engines), pick entry centroids, build the k-NN graph
   * ([[Ann.knnGraph]]) and persist it src-bucketed
   * ([[Ann.writeGraphIndex]]) next to the uid-bucketed id→chunk sidecar
-  * and the centroid table. [[search]] is the query-time half: a
-  * partition-pruned beam walk ([[Ann.graphSearchPartitioned]]) whose
+  * and the centroid table. [[Handle.search]] is the query-time half: a
+  * beam walk ([[Ann.graphSearch]] over [[Ann.storeLookup]]) whose
   * per-hop reads touch only the frontier's buckets, then a
   * partition-pruned sidecar read for the visited set — ask latency
   * rides beam·degree, independent of index size, which is exactly why
@@ -63,8 +63,11 @@ object GraphIndex {
     /** Every node the beam walk visits, scored, re-joined to its chunk
       * row — shaped like the exact-retrieval candidate set (original
       * columns + `sim`), so downstream context assembly cannot tell
-      * which retriever ran. Callers apply their own top-k / rounding. */
-    def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame
+      * which retriever ran. Callers apply their own top-k / rounding.
+      * [[searchBatch]] over a one-row query table. */
+    def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame =
+      searchBatch(spark, Ann.oneQuery(spark, queryVec), "query_id", "vector")
+        .drop("query_id")
 
     /** Batched serving — many queries walk the store TOGETHER (the
       * reference holds N open ask sessions against one HNSW,
@@ -143,16 +146,9 @@ object GraphIndex {
     def chunks(spark: SparkSession): DataFrame =
       spark.read.parquet(chunksDir)
 
-    def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame = {
-      val visited = Ann.graphSearchPartitioned(spark, edgesDir, nBuckets,
-        centroids(spark), "centroid_id", "centroid_vec",
-        queryVec, beamWidth, hops)
-      attach(chunks(spark), visited)
-    }
-
     def searchBatch(spark: SparkSession, queries: DataFrame,
                     qIdCol: String, qVecCol: String): DataFrame = {
-      val visited = Ann.graphSearchBatchPartitioned(spark, edgesDir, nBuckets,
+      val visited = Ann.graphSearch(spark, Ann.storeLookup(spark, edgesDir, nBuckets),
         centroids(spark), "centroid_id", "centroid_vec",
         queries, qIdCol, qVecCol, beamWidth, hops)
       attach(chunks(spark), visited)
@@ -189,14 +185,9 @@ object GraphIndex {
   final case class Warm(handle: Handle, edges: DataFrame, vecs: DataFrame,
                         chunks: DataFrame, cents: DataFrame,
                         tombs: Option[DataFrame] = None) extends Serving {
-    def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame =
-      attach(chunks, Ann.graphSearchResidentNormalized(spark, edges, vecs,
-        cents, "centroid_id", "centroid_vec",
-        queryVec, handle.beamWidth, handle.hops))
-
     def searchBatch(spark: SparkSession, queries: DataFrame,
                     qIdCol: String, qVecCol: String): DataFrame =
-      attach(chunks, Ann.graphSearchBatchResidentNormalized(spark, edges, vecs,
+      attach(chunks, Ann.graphSearch(spark, Ann.normalizedLookup(edges, vecs),
         cents, "centroid_id", "centroid_vec",
         queries, qIdCol, qVecCol, handle.beamWidth, handle.hops))
 
@@ -301,17 +292,17 @@ object GraphIndex {
     }
   }
 
-  /** THE beam walk over resident arrays — [[Ann.beamWalk]]'s in-JVM
-    * twin, shared verbatim by [[Hot]] (driver) and [[HotSharded]]
-    * (executors). Entry: the beam nearest of `entryIdxs` (sim desc, id
-    * asc — the beamWalk ordering; ids are unique so the order is
-    * total; a repeated entry index takes a slot per occurrence, as
-    * `sortBy.take(beam)` does, and is visited once); then `hops` rounds
-    * of top-beam frontier expansion, each visited node scored once with
-    * the ascending-fold cosine. Returns the full visited set, UNFILTERED
-    * (tombstone snapshots are a tier concern — [[Hot]] filters
-    * driver-side, [[HotSharded]] after the collect — so the walk itself
-    * stays a pure function of (arrays, entries, query)).
+  /** THE beam walk over resident arrays — the in-JVM twin of one
+    * query's [[Ann.graphSearch]], shared verbatim by [[Hot]] (driver)
+    * and [[HotSharded]] (executors). Entry: the beam nearest of
+    * `entryIdxs` (sim desc, id asc — the Spark walk's ordering; ids are
+    * unique so the order is total; a repeated entry index takes a slot
+    * per occurrence, as `sortBy.take(beam)` does, and is visited once);
+    * then `hops` rounds of top-beam frontier expansion, each visited
+    * node scored once with the ascending-fold cosine. Returns the full
+    * visited set, UNFILTERED (tombstone snapshots are a tier concern —
+    * [[Hot]] filters driver-side, [[HotSharded]] after the collect — so
+    * the walk itself stays a pure function of (arrays, entries, query)).
     *
     * Cost: the dot folds only the query's nonzero dimensions when every
     * node vector is finite (the [[CosineKernel]] sparse-query rule,
@@ -362,8 +353,8 @@ object GraphIndex {
         var m = 0
         while (m < ns.length) {
           val nIdx = ns(m)
-          // re-scored nodes recompute the same value (beamWalk's map
-          // overwrite) — skip the dot when already visited
+          // re-scored nodes recompute the same value (the Spark walk's
+          // map overwrite) — skip the dot when already visited
           if (!visited.contains(nIdx)) visited.add(nIdx, simOf(nIdx))
           m += 1
         }
@@ -405,10 +396,11 @@ object GraphIndex {
     * process, corpus-scale state on the cluster, exactly the
     * reference's OpenSearch split).
     *
-    * The walk reproduces [[Ann.graphSearchResidentNormalized]]'s
-    * visited set BIT-FOR-BIT (GraphIndexSpec pins equality): same
-    * ascending-fold cosine, same (sim desc, id asc) entry/frontier
-    * ordering, same hop count. The fold runs over only the query's
+    * The walk reproduces the [[Warm]] tier's visited set
+    * ([[Ann.graphSearch]] over [[Ann.normalizedLookup]]) BIT-FOR-BIT
+    * (GraphIndexSpec pins equality): same ascending-fold cosine, same
+    * (sim desc, id asc) entry/frontier ordering, same hop count. The
+    * fold runs over only the query's
     * nonzero dimensions while every node vector is finite (the
     * [[CosineKernel]] sparse-query rule — bit-identical to the dense
     * fold under that precondition; a graph holding a NaN or ±Inf
@@ -479,8 +471,8 @@ object GraphIndex {
         top.take(n).toSeq
       }
 
-    /** One query's full visited set — the in-JVM twin of
-      * [[Ann.beamWalk]]; pure driver compute, zero Spark jobs. The
+    /** One query's full visited set — the in-JVM twin of one query's
+      * [[Ann.graphSearch]]; pure driver compute, zero Spark jobs. The
       * algorithm lives in [[GraphIndex.walkArrays]] (shared with the
       * [[HotSharded]] executor walk so the two tiers cannot drift). */
     private def walk(queryVec: Seq[Double]): Seq[(Long, Double)] =
@@ -498,7 +490,7 @@ object GraphIndex {
     private def attachIds(visited: DataFrame, ids: Seq[Long]): DataFrame =
       attachResident(chunksDf, handle.nBuckets, visited, ids)
 
-    def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame = {
+    override def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame = {
       import spark.implicits._
       val rows = walk(queryVec)
       attachIds(rows.toDF("uid", "sim"), rows.map(_._1))
@@ -828,7 +820,7 @@ object GraphIndex {
         .filterNot { case (_, id, _) => tombs.contains(id) }
     }
 
-    def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame = {
+    override def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame = {
       import spark.implicits._
       val rows = walkFanout(Array(queryVec.toArray))
         .map { case (_, id, s) => (id, s) }.toSeq
@@ -1083,7 +1075,7 @@ object GraphIndex {
     def resident(df: DataFrame): DataFrame = { val c = df.persist(level); c.count(); c }
     val tombPath = new org.apache.hadoop.fs.Path(h.tombstonesDir)
     val tombFs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // resident layout is NORMALIZED (see graphSearchResidentNormalized):
+    // resident layout is NORMALIZED (see Ann.normalizedLookup):
     // the store's denormalized dst_vec — right for pruned disk hops —
     // would cost O(|E|·dim) RAM. The node-vector table comes from the
     // CHUNK SIDECAR (one row per node by construction — a map-only
@@ -1443,13 +1435,14 @@ object GraphIndex {
       val nCents = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong).toInt
       val nSupers = math.max(1, math.floor(math.sqrt(nCents.toDouble)).toInt)
       // super seeds: head rows in NATURAL-KEY order — measured to
-      // matter enormously on sparse TF-IDF (PmcRecallProbe seed
-      // diagnostics: head-order seeds train supers that route text
-      // queries at 0.98, hash-random seeds collapse to 0.405 even
-      // trained on the full corpus; k-means on sparse high-dim spaces
-      // is that seed-sensitive, and document-head rows are dense
-      // topic-representative vectors where random mid-article chunks
-      // are not)
+      // matter enormously on sparse TF-IDF (the PMC recall probe's seed
+      // diagnostics, SCALE.md "Measured scaling curve" routing-quality
+      // table; the probe itself is in commit be29786): head-order seeds
+      // train supers that route text queries at 0.98, hash-random seeds
+      // collapse to 0.405 even trained on the full corpus; k-means on
+      // sparse high-dim spaces is that seed-sensitive, and document-head
+      // rows are dense topic-representative vectors where random
+      // mid-article chunks are not
       val seeds = in.rows.orderBy(keyCols.map(col): _*).limit(nSupers)
         .select(col("uid").as("centroid_id"),
           col(vecCol).cast("array<double>").as("centroid_vec"))
@@ -1570,24 +1563,6 @@ object GraphIndex {
     Ann.writeGraphIndex(edges, dir + "/edges", nBuckets)
     Handle(dir, nBuckets, beamWidth, hops, m)
   }
-
-  // object-method API predating [[Serving]] — thin delegates kept so
-  // call sites read the same whichever style they use
-  def search(spark: SparkSession, h: Handle, queryVec: Seq[Double]): DataFrame =
-    h.search(spark, queryVec)
-
-  def topK(spark: SparkSession, h: Handle, queryVec: Seq[Double], k: Int,
-           tieBreak: Seq[String]): DataFrame =
-    h.topK(spark, queryVec, k, tieBreak)
-
-  def searchBatch(spark: SparkSession, h: Handle, queries: DataFrame,
-                  qIdCol: String, qVecCol: String): DataFrame =
-    h.searchBatch(spark, queries, qIdCol, qVecCol)
-
-  def topKBatch(spark: SparkSession, h: Handle, queries: DataFrame,
-                qIdCol: String, qVecCol: String, k: Int,
-                tieBreak: Seq[String]): DataFrame =
-    h.topKBatch(spark, queries, qIdCol, qVecCol, k, tieBreak)
 
   /** Live incremental ingest (the reference's upload path: new docs
     * join the running index without a rebuild). New rows are uid'd and

@@ -269,7 +269,7 @@ object Pq {
       Ann.writeIvfIndex(assignedEncoded, staging)
     } { staged =>
       // exact truth: one batched pass (workload broadcast, per-query
-      // window — the writeIvfIndexGated shape)
+      // window)
       val w = Window.partitionBy("_qid").orderBy(desc("_sim"), col(idCol))
       val exact = assignedEncoded.crossJoin(broadcast(qDf))
         .withColumn("_sim", cosine(col(vecCol).cast("array<double>"), col("_qv")))

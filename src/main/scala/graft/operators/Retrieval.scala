@@ -548,10 +548,11 @@ object Retrieval {
     // bootstrap rebuilds it from every live sidecar; unreadable/absent
     // → full exact join), so a stored id can never bloom-miss; false
     // positives just pay the join they would have paid anyway. It is
-    // OPT-IN, and the round-14 crossover measurement (SCALE.md,
-    // Bm25SegmentProbe `bloom`) corrected the r13 sizing claim: on
-    // local storage the ids-only exact scan is ~flat and cheap
-    // (column-pruned parallel parquet), and at 2^22 bits the filter
+    // OPT-IN, and the round-14 crossover measurement (SCALE.md "idBloom
+    // crossover, measured"; the probe is in commit be29786) corrected
+    // the r13 sizing claim: on local storage the ids-only exact scan
+    // is ~flat and cheap (column-pruned parallel parquet), and at 2^22
+    // bits the filter
     // SATURATES near ~10^6 stored ids — one batch false positive
     // forces the sidecar join anyway, so past saturation the bloom
     // pays its fixed overhead on top of the join it meant to skip

@@ -524,8 +524,9 @@ object StreamingDedup {
     * writes (a) its node rows and (b) its new edge rows, both
     * batch-keyed partition overwrites for exactly-once replay. Edges
     * nest `src_bucket` partitions INSIDE each batch partition, so
-    * [[graft.operators.Ann.graphSearchPartitioned]] over `edgeDir`
-    * keeps its per-hop partition pruning through the batch layout.
+    * [[graft.operators.Ann.graphSearch]] over
+    * [[graft.operators.Ann.storeLookup]]`(edgeDir)` keeps its per-hop
+    * partition pruning through the batch layout.
     * Codebook drift is refused via the same `_codebook` sidecar as the
     * semantic loop (byte-equality on ids AND vectors).
     *

@@ -524,24 +524,47 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
-  test("graph ANN: bounded degree, navigable walk, recall@10 >= 0.7 vs brute force") {
+  /** The navigable-walk fixture: 8 head-row centroids, an m=8 graph,
+    * its bucketed store, and a non-centroid query (vec 9) the walk has
+    * to navigate to — centroid -> cell -> node. */
+  private final class Navigable {
     val e = embeddings.select("vec_id", "embedding")
     val cents = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
     val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
     val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
       cents, "centroid_id", "centroid_vec", m = 8)
+    val qv = vecOf(e, 9)
+    lazy val idx = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_knng").toString + "/idx"
+      Ann.writeGraphIndex(edges, dir, nBuckets = 16)
+      dir
+    }
+  }
+  private lazy val navigable = new Navigable
+
+  private def vecOf(e: DataFrame, id: Long): Seq[Double] =
+    e.filter(col("vec_id") === id)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+
+  /** One query's visited (vec_id, sim) rows: the one Spark walk over a
+    * one-row query table. */
+  private def walkOne(lookup: Seq[Long] => DataFrame, cents: DataFrame, qv: Seq[Double],
+                      beamWidth: Int, hops: Int): DataFrame =
+    Ann.graphSearch(spark, lookup, cents, "centroid_id", "centroid_vec",
+      Ann.oneQuery(spark, qv), "query_id", "vector", beamWidth, hops).drop("query_id")
+
+  test("graph ANN: bounded degree, navigable walk, recall@10 >= 0.7 vs brute force") {
+    val f = navigable
+    import f.{e, cents, edges, qv}
     // edge budget: <= |V|(2m+1) + |C|(|C|-1) rows (undirected in-cell
     // doubles the top-m lists; per-node in-degree is heuristic-bounded)
     val nV = e.count()
     assert(edges.count() <= nV * 17 + 56, "edge table exceeds the |V|(2m+1)+|C|^2 budget")
-    // a non-centroid query: the walk must navigate centroid -> cell -> node
-    val qv = e.filter(col("vec_id") === 9)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
     val exact = Ann.bruteForceTopK(e, "vec_id", "embedding", qv, 10)
       .select("vec_id").as[Long].collect().toSet
-    def walk() = Ann.graphSearch(spark, edges, cents, "centroid_id", "centroid_vec",
-        qv, beamWidth = 16, hops = 6)
+    def walk() = Ann.persistedFor(edges)(es =>
+        walkOne(Ann.edgeLookup(es), cents, qv, beamWidth = 16, hops = 6))
       .orderBy(desc("sim"), col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSeq
     val got = walk()
@@ -550,14 +573,11 @@ class AnnSpec extends AnyFunSuite {
     assert(recall >= 0.7, s"graph-ANN top-10 recall $recall < 0.7 vs brute force")
     assert(walk() == got, "graph walk is not deterministic")
     // the bucketed store is a physical-layout change only: same walk
-    val idx = java.nio.file.Files.createTempDirectory("graft_knng").toString + "/idx"
-    Ann.writeGraphIndex(edges, idx, nBuckets = 16)
-    val partWalk = Ann.graphSearchPartitioned(spark, idx, 16,
-        cents, "centroid_id", "centroid_vec", qv, beamWidth = 8, hops = 4)
+    val partWalk = walkOne(Ann.storeLookup(spark, f.idx, 16), cents, qv, beamWidth = 8, hops = 4)
       .orderBy(desc("sim"), col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSeq
-    val memWalk = Ann.graphSearch(spark, edges, cents, "centroid_id", "centroid_vec",
-        qv, beamWidth = 8, hops = 4)
+    val memWalk = Ann.persistedFor(edges)(es =>
+        walkOne(Ann.edgeLookup(es), cents, qv, beamWidth = 8, hops = 4))
       .orderBy(desc("sim"), col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSeq
     assert(partWalk == memWalk, "bucketed-store walk diverged from the in-memory walk")
@@ -567,23 +587,87 @@ class AnnSpec extends AnyFunSuite {
     val edgeIds = edges.select("src", "dst")
     val vecs = edges.select("dst", "dst_vec").dropDuplicates("dst")
     assert(vecs.count() < edges.count(), "one vector row per node, not per edge")
-    val normWalk = Ann.graphSearchResidentNormalized(spark, edgeIds, vecs,
-        cents, "centroid_id", "centroid_vec", qv, beamWidth = 8, hops = 4)
+    val normWalk = walkOne(Ann.normalizedLookup(edgeIds, vecs), cents, qv, beamWidth = 8, hops = 4)
       .orderBy(desc("sim"), col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSeq
     assert(normWalk == memWalk, "normalized resident walk diverged")
-    // batched twin: same per-query rows as the denormalized batch walk
+    // several queries: same per-query rows over either resident layout
     val qdf = e.filter(col("vec_id").isin(9L, 17L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val batchDenorm = Ann.graphSearchBatchResident(spark, edges,
-        cents, "centroid_id", "centroid_vec", qdf, "qid", "qv", 8, 4)
+    val batchDenorm = Ann.persistedFor(edges)(es => Ann.graphSearch(spark, Ann.edgeLookup(es),
+        cents, "centroid_id", "centroid_vec", qdf, "qid", "qv", 8, 4))
       .select("query_id", "vec_id", "sim")
       .as[(Long, Long, Double)].collect().toSeq.sorted
-    val batchNorm = Ann.graphSearchBatchResidentNormalized(spark, edgeIds, vecs,
+    val batchNorm = Ann.graphSearch(spark, Ann.normalizedLookup(edgeIds, vecs),
         cents, "centroid_id", "centroid_vec", qdf, "qid", "qv", 8, 4)
       .select("query_id", "vec_id", "sim")
       .as[(Long, Long, Double)].collect().toSeq.sorted
     assert(batchNorm == batchDenorm, "normalized batched walk diverged")
+  }
+
+  /** The single-query Spark walk [[Ann.graphSearch]] replaced, kept as
+    * the reference: entry by orderBy/limit over a literal-query cosine
+    * column, a driver-side expand-once frontier, and a visited map the
+    * hop's scores overwrite. `asked` records every lookup's frontier. */
+  private def soloWalk(centroids: DataFrame, queryVec: Seq[Double], beamWidth: Int, hops: Int,
+                       lookup: Seq[Long] => DataFrame,
+                       asked: scala.collection.mutable.Buffer[Seq[Long]] =
+                         scala.collection.mutable.Buffer.empty): Map[Long, Double] = {
+    val q = lit(queryVec.toArray)
+    var visited = centroids
+      .withColumn("_sim", cosine(col("centroid_vec"), q))
+      .orderBy(desc("_sim"), col("centroid_id"))
+      .limit(beamWidth)
+      .select(col("centroid_id").cast("long"), col("_sim"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val expanded = scala.collection.mutable.HashSet.empty[Long]
+    for (_ <- 0 until hops) {
+      val frontier = visited.toSeq.sortBy { case (id, s) => (-s, id) }
+        .take(beamWidth).map(_._1).filter(expanded.add)
+      if (frontier.nonEmpty) {
+        asked += frontier
+        val cand = lookup(frontier)
+          .select(col("dst").cast("long"), cosine(col("dst_vec"), q).as("_sim"))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1))
+        visited = visited ++ cand
+      }
+    }
+    visited
+  }
+
+  test("one walk: a one-row query table equals the single-query reference walk on raw bits") {
+    val f = navigable
+    import f.{cents, edges, qv}
+    val edgeIds = edges.select("src", "dst").persist()
+    val vecs = edges.select("dst", "dst_vec").dropDuplicates("dst").persist()
+    def recording(lookup: Seq[Long] => DataFrame,
+                  asked: scala.collection.mutable.Buffer[Seq[Long]]): Seq[Long] => DataFrame =
+      frontier => { asked += frontier; lookup(frontier) }
+    def check(what: String, lookup: Seq[Long] => DataFrame, centroids: DataFrame,
+              query: Seq[Double], beam: Int, hops: Int): Unit = {
+      val askedRef, askedGot = scala.collection.mutable.Buffer.empty[Seq[Long]]
+      val expect = soloWalk(centroids, query, beam, hops, lookup, askedRef)
+      val got = walkOne(recording(lookup, askedGot), centroids, query, beam, hops)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assertSameBits(got, expect, s"$what beam=$beam hops=$hops")
+      // the same srcs looked up in the same hops: each expanded once
+      assert(askedGot.map(_.toSet) == askedRef.map(_.toSet),
+        s"$what: lookups differ — got $askedGot, reference $askedRef")
+    }
+    Ann.persistedFor(edges) { es =>
+      for ((beam, hops) <- Seq((8, 4), (16, 6))) {
+        check("store", Ann.storeLookup(spark, f.idx, 16), cents, qv, beam, hops)
+        check("in-memory", Ann.edgeLookup(es), cents, qv, beam, hops)
+        check("normalized", Ann.normalizedLookup(edgeIds, vecs), cents, qv, beam, hops)
+      }
+      // a zero query ties every sim at 0.0, so the entry and every
+      // frontier fall to the id tie-break; the centroids arrive in
+      // descending id order, so arrival order cannot stand in for it
+      val zero = Seq.fill(qv.length)(0.0)
+      check("in-memory, all sims tied", Ann.edgeLookup(es),
+        cents.orderBy(desc("centroid_id")), zero, beam = 3, hops = 3)
+    }
+    edgeIds.unpersist(); vecs.unpersist()
   }
 
   test("graph ANN high-recall point: mean recall@10 >= 0.9 at m=16, beam=16, hops=3") {
@@ -603,9 +687,9 @@ class AnnSpec extends AnyFunSuite {
       cents, "centroid_id", "centroid_vec", m = 16)
     val qids = (0 until 10).map(i => 9L + i * (n / 10))
     val queries = e.filter(col("vec_id").isin(qids.map(Long.box): _*))
-    val visited = Ann.graphSearchBatch(spark, edges,
+    val visited = Ann.persistedFor(edges)(es => Ann.graphSearch(spark, Ann.edgeLookup(es),
         cents, "centroid_id", "centroid_vec",
-        queries, "vec_id", "embedding", beamWidth = 16, hops = 3)
+        queries, "vec_id", "embedding", beamWidth = 16, hops = 3))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
     val recalls = qids.map { qid =>
@@ -633,19 +717,17 @@ class AnnSpec extends AnyFunSuite {
     Ann.writeGraphIndex(edges, idx, nBuckets = 16)
     val qids = Seq(9L, 17L, 25L)
     val queries = e.filter(col("vec_id").isin(qids.map(Long.box): _*))
-    val batch = Ann.graphSearchBatchPartitioned(spark, idx, 16,
+    val batch = Ann.graphSearch(spark, Ann.storeLookup(spark, idx, 16),
         cents, "centroid_id", "centroid_vec",
         queries, "vec_id", "embedding", beamWidth = 4, hops = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
     assert(batch.keySet == qids.toSet, s"batch lost queries: ${batch.keySet}")
-    // every query's visited set (ids AND sims) is exactly the solo walk's
+    // every query's visited set (ids AND sims) is exactly the solo
+    // reference walk's
     for (qid <- qids) {
-      val qv = e.filter(col("vec_id") === qid)
-        .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-      val solo = Ann.graphSearchPartitioned(spark, idx, 16,
-          cents, "centroid_id", "centroid_vec", qv, beamWidth = 4, hops = 3)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+      val solo = soloWalk(cents, vecOf(e, qid), beamWidth = 4, hops = 3,
+        Ann.storeLookup(spark, idx, 16))
       val got = batch(qid).map(t => t._2 -> t._3).toMap
       assert(got == solo, s"batch walk for query $qid diverged from solo walk")
     }
@@ -653,10 +735,11 @@ class AnnSpec extends AnyFunSuite {
     // frontier — lookup count is `hops`, independent of query count
     def countLookups(qs: org.apache.spark.sql.DataFrame): Int = {
       var n = 0
-      Ann.batchBeamWalk(spark, cents, "centroid_id", "centroid_vec",
-        qs, "vec_id", "embedding", 4, 3,
+      Ann.graphSearch(spark,
         { frontier => n += 1
-          edges.filter(col("src").isin(frontier.map(Long.box): _*)) }).count()
+          edges.filter(col("src").isin(frontier.map(Long.box): _*)) },
+        cents, "centroid_id", "centroid_vec",
+        qs, "vec_id", "embedding", 4, 3).count()
       n
     }
     val one = countLookups(queries.limit(1))
@@ -686,8 +769,7 @@ class AnnSpec extends AnyFunSuite {
     // an inserted node is reachable by searching for its own vector
     val qv = e.filter(col("vec_id") === 450)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    val got = Ann.graphSearchPartitioned(spark, idx, 16,
-        cents, "centroid_id", "centroid_vec", qv, beamWidth = 8, hops = 4)
+    val got = walkOne(Ann.storeLookup(spark, idx, 16), cents, qv, beamWidth = 8, hops = 4)
       .orderBy(desc("sim"), col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got.contains(450L), s"inserted node 450 not found; got $got")
@@ -720,8 +802,7 @@ class AnnSpec extends AnyFunSuite {
       s"expected the repair down-link 0→2; store: ${kept.collect().toSeq}")
     assert(rep.select(col("dst_vec").cast("array<double>")).head()
       .getSeq[Double](0) == Seq(0.4, 1.0), "repair edge must carry x's vector")
-    val got = Ann.graphSearchPartitioned(spark, idx, 4,
-        cents, "centroid_id", "centroid_vec", Seq(0.4, 1.0), beamWidth = 2, hops = 2)
+    val got = walkOne(Ann.storeLookup(spark, idx, 4), cents, Seq(0.4, 1.0), beamWidth = 2, hops = 2)
       .select("vec_id").as[Long].collect().toSet
     assert(got.contains(2L), s"orphaned node 2 unreachable after compaction: $got")
   }
@@ -784,8 +865,9 @@ class AnnSpec extends AnyFunSuite {
   // and corpus mean against the one-pass vector-mean aggregate, the   //
   // batched walk's broadcast-join scoring against the driver-held     //
   // query table (partitioned and warm-normalized lookups, on queries  //
-  // whose frontiers repeat across hops), and measureRecall's          //
-  // crossJoin exact side against the probe-table pass.                //
+  // whose frontiers repeat across hops), measureRecall's crossJoin    //
+  // exact side against the probe-table pass, and the IVF gate's join  //
+  // measurement against its query-table measurement.                  //
   // ---------------------------------------------------------------- //
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
@@ -969,19 +1051,19 @@ class AnnSpec extends AnyFunSuite {
     val pairs = perHop.flatten
     assert(pairs.distinct.length < pairs.length,
       "no frontier repeats across hops — the fixture does not test expand-once")
-    assertSameBits(visitedOf(Ann.graphSearchBatchPartitioned(spark, idx, 16,
+    assertSameBits(visitedOf(Ann.graphSearch(spark, Ann.storeLookup(spark, idx, 16),
       cents, "centroid_id", "centroid_vec", queries, "vec_id", "embedding", beam, hops)),
       expect, "partitioned")
-    assertSameBits(visitedOf(Ann.graphSearchBatchResidentNormalized(spark, edgeIds, vecs,
+    assertSameBits(visitedOf(Ann.graphSearch(spark, Ann.normalizedLookup(edgeIds, vecs),
       cents, "centroid_id", "centroid_vec", queries, "vec_id", "embedding", beam, hops)),
       expect, "warm-normalized")
     val (expectNorm, _) = joinWalk(cents, queries, beam, hops, normalized)
     assertSameBits(expectNorm, expect, "join walk, normalized vs partitioned lookup")
     // every lookup the new walk issues is for srcs no earlier hop expanded
     val asked = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
-    Ann.batchBeamWalk(spark, cents, "centroid_id", "centroid_vec",
-      queries, "vec_id", "embedding", beam, hops,
-      { frontier => asked += frontier; partitioned(frontier) }).count()
+    Ann.graphSearch(spark, { frontier => asked += frontier; partitioned(frontier) },
+      cents, "centroid_id", "centroid_vec",
+      queries, "vec_id", "embedding", beam, hops).count()
     val reExpanded = perHop.map(_.map(_._2).distinct.length).sum
     assert(asked.length <= hops)
     assert(asked.map(_.length).sum < reExpanded,
@@ -1037,5 +1119,65 @@ class AnnSpec extends AnyFunSuite {
     val rWork = GraphIndex.measureRecall(spark, h, e, Seq("vec_id"), "embedding",
       k = 5, queries = Some(workload))
     assert(bits(rWork) == bits(crossJoinRecall(workload, leaveSelfOut = false, k = 5)))
+  }
+
+  /** writeIvfIndexGated's measurement before the query table: the exact
+    * side a crossJoin of the broadcast workload, the probe side a
+    * broadcast (query, cell) join carrying each query vector onto every
+    * candidate row. Per-query top-k id sets, keyed by query id. */
+  private def ivfGateByJoins(assigned: DataFrame, cents: DataFrame, store: String,
+                             qDf: DataFrame, nprobe: Int, k: Int)
+      : (Map[Any, Set[Any]], Map[Any, Set[Any]]) = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("_qid").orderBy(desc("_sim"), col("vec_id"))
+    def topkOf(scored: DataFrame): Map[Any, Set[Any]] = scored
+      .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
+      .select(col("_qid"), col("vec_id"))
+      .collect().groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(_.get(1)).toSet }
+    val exact = topkOf(assigned.crossJoin(broadcast(qDf))
+      .withColumn("_sim", cosine(col("embedding"), col("_qv"))))
+    val wc = Window.partitionBy("_qid").orderBy(desc("_csim"), col("centroid_id"))
+    val probeCells = cents.crossJoin(broadcast(qDf))
+      .withColumn("_csim", cosine(col("centroid_vec"), col("_qv")))
+      .withColumn("_crn", row_number().over(wc)).filter(col("_crn") <= nprobe)
+      .select(col("_qid"), col("_qv"), col("centroid_id").as("cell_id"))
+    val got = topkOf(spark.read.parquet(store)
+      .join(broadcast(probeCells), "cell_id")
+      .withColumn("_sim", cosine(col("embedding"), col("_qv"))))
+    (exact, got)
+  }
+
+  test("IVF gate: query-table scoring equals the join-based measurement on raw bits") {
+    val e = pinned
+    val cents = Ann.headCentroids(e, "vec_id", "embedding", 8)
+    val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_parity").toString
+    Ann.writeIvfIndex(assigned, s"$dir/store")
+    val workload = e.filter(col("vec_id") % 40 === 9)
+      .select(col("vec_id").as("_qid"), col("embedding").cast("array<double>").as("_qv"))
+    val qRows = workload.collect()
+    val table = qRows.map(_.getSeq[Double](1).toArray)
+    val k = 10
+    def byQid(m: Map[Any, Set[Any]]): Map[Any, Set[Any]] =
+      m.map { case (qi, ids) => qRows(qi.asInstanceOf[Int]).get(0) -> ids }
+    val recalls = for (nprobe <- Seq(1, 2, 8)) yield {
+      val (expExact, expGot) = ivfGateByJoins(assigned, cents, s"$dir/store", workload, nprobe, k)
+      val (exact, got) = Ann.ivfGateTopK(spark, assigned, "vec_id", "embedding",
+        cents, "centroid_id", "centroid_vec", s"$dir/store", table, nprobe, k)
+      assert(byQid(exact) == expExact, s"nprobe=$nprobe: exact top-k sets differ")
+      assert(byQid(got) == expGot, s"nprobe=$nprobe: probed top-k sets differ")
+      val perQuery = expExact.toSeq.map { case (q, truth) =>
+        truth.intersect(expGot.getOrElse(q, Set.empty)).size.toDouble /
+          math.max(1, math.min(k, truth.size))
+      }
+      val expRecall = perQuery.sum / perQuery.length
+      val recall = Ann.writeIvfIndexGated(spark, assigned, "vec_id", "embedding",
+        cents, "centroid_id", "centroid_vec", s"$dir/gated$nprobe", workload,
+        nprobe, k, recallFloor = 0.0)
+      assert(bits(recall) == bits(expRecall), s"nprobe=$nprobe: recall $recall vs $expRecall")
+      recall
+    }
+    assert(recalls.head < 1.0 && recalls.last == 1.0,
+      s"the fixture must probe both a lossy and an exhaustive width: $recalls")
   }
 }

@@ -47,7 +47,7 @@ class GraphIndexSpec extends AnyFunSuite {
       val exact = Similarity.topK(embedded, "embedding", qv, 3,
           tieBreak = Seq("doc_id", "chunk_idx"))
         .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
-      val viaGraph = GraphIndex.topK(spark, handle, qv, 3,
+      val viaGraph = handle.topK(spark, qv, 3,
           tieBreak = Seq("doc_id", "chunk_idx"))
         .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
       assert(viaGraph == exact, s"graph retrieval diverged from exact for '$q'")
@@ -88,12 +88,12 @@ class GraphIndexSpec extends AnyFunSuite {
     val qdf = demoQueries.zipWithIndex
       .map { case (q, i) => (i.toLong, Embed.embedQuery(spark, q).toSeq) }
       .toDF("query_id", "qvec")
-    val batched = GraphIndex.topKBatch(spark, handle, qdf, "query_id", "qvec",
+    val batched = handle.topKBatch(spark, qdf, "query_id", "qvec",
         3, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("query_id", "rank", "doc_id", "chunk_idx")
       .as[(Long, Int, String, Int)].collect().toSeq.sorted
     val solo = demoQueries.zipWithIndex.flatMap { case (q, i) =>
-      GraphIndex.topK(spark, handle, Embed.embedQuery(spark, q).toSeq, 3,
+      handle.topK(spark, Embed.embedQuery(spark, q).toSeq, 3,
           tieBreak = Seq("doc_id", "chunk_idx"))
         .withColumn("rank", org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window
@@ -128,10 +128,10 @@ class GraphIndexSpec extends AnyFunSuite {
     // self-match once the doc is in the index
     val qText = upload.orderBy("chunk_idx").select("chunk_text").head().getString(0)
     val qv = Embed.embedQuery(spark, qText).toSeq
-    val before = GI.topK(spark, h, qv, 1, tieBreak = Seq("doc_id", "chunk_idx"))
+    val before = h.topK(spark, qv, 1, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("doc_id").as[String].collect()
     assert(!before.contains(held))
-    val oldTop = GI.topK(spark, h, Embed.embedQuery(spark, demoQueries.head).toSeq,
+    val oldTop = h.topK(spark, Embed.embedQuery(spark, demoQueries.head).toSeq,
         3, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
     val nEdges = GI.insert(spark, h, upload, Seq("doc_id", "chunk_idx"), "embedding")
@@ -139,12 +139,12 @@ class GraphIndexSpec extends AnyFunSuite {
     // edge-budget sanity: appended rows ≤ |B|·(2m+1) (top-m + reverses + up-link)
     val b = upload.count()
     assert(nEdges <= b * (2 * h.m + 1))
-    val after = GI.topK(spark, h, qv, 1, tieBreak = Seq("doc_id", "chunk_idx"))
+    val after = h.topK(spark, qv, 1, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("doc_id", "sim").as[(String, Double)].collect()
     assert(after.head._1 == held && after.head._2 > 0.99,
       s"uploaded doc not retrieved: $after")
     // results for unrelated existing queries are unchanged
-    val oldTopAfter = GI.topK(spark, h, Embed.embedQuery(spark, demoQueries.head).toSeq,
+    val oldTopAfter = h.topK(spark, Embed.embedQuery(spark, demoQueries.head).toSeq,
         3, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
     assert(oldTopAfter == oldTop)
@@ -157,7 +157,7 @@ class GraphIndexSpec extends AnyFunSuite {
       // re-attach must be identical row for row
       demoQueries.foreach { q =>
         val qv = Embed.embedQuery(spark, q).toSeq
-        val cold = GraphIndex.search(spark, handle, qv)
+        val cold = handle.search(spark, qv)
           .select("doc_id", "chunk_idx", "sim")
           .as[(String, Int, Double)].collect().toSeq.sorted
         val warmRows = w.search(spark, qv)
@@ -169,7 +169,7 @@ class GraphIndexSpec extends AnyFunSuite {
       val qdf = demoQueries.zipWithIndex
         .map { case (q, i) => (i.toLong, Embed.embedQuery(spark, q).toSeq) }
         .toDF("query_id", "qvec")
-      val coldBatch = GraphIndex.topKBatch(spark, handle, qdf, "query_id", "qvec",
+      val coldBatch = handle.topKBatch(spark, qdf, "query_id", "qvec",
           3, tieBreak = Seq("doc_id", "chunk_idx"))
         .select("query_id", "rank", "doc_id", "chunk_idx")
         .as[(Long, Int, String, Int)].collect().toSeq.sorted
@@ -192,7 +192,7 @@ class GraphIndexSpec extends AnyFunSuite {
     val w = GraphIndex.warm(spark, handle, cacheChunks = false)
     try {
       val qv = Embed.embedQuery(spark, demoQueries.head).toSeq
-      val cold = GraphIndex.topK(spark, handle, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
+      val cold = handle.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
         .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
       val viaWarm = w.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
         .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
@@ -825,13 +825,13 @@ class GraphIndexSpec extends AnyFunSuite {
 
   test("handle re-opened cold serves the same results (ingest/serve split)") {
     val qv = Embed.embedQuery(spark, demoQueries.head).toSeq
-    val warm = GraphIndex.topK(spark, handle, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
+    val warm = handle.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
     // a serving process re-opens from the PATH alone: every layout
     // constant (bucket modulus above all) travels in the meta sidecar
     val cold = GraphIndex.open(spark, handle.dir)
     assert(cold == handle, "open() must reconstruct the builder's handle exactly")
-    val viaCold = GraphIndex.topK(spark, cold, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
+    val viaCold = cold.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
     assert(viaCold == warm)
   }

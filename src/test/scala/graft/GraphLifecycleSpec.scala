@@ -51,7 +51,7 @@ class GraphLifecycleSpec extends AnyFunSuite {
     def checkServingSafe(label: String): Unit = {
       val live = liveChunks()
       queries.foreach { qv =>
-        val got = GraphIndex.search(spark, h, qv)
+        val got = h.search(spark, qv)
           .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
         got.foreach { k =>
           assert(!deleted.contains(k), s"$label: deleted chunk $k surfaced")

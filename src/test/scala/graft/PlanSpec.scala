@@ -217,7 +217,7 @@ class PlanSpec extends AnyFunSuite {
       cents, "centroid_id", "centroid_vec", m = 4)
     val idx = java.nio.file.Files.createTempDirectory("graft_knng_plan").toString + "/idx"
     Ann.writeGraphIndex(edges, idx, nBuckets = 16)
-    // the exact read shape graphSearchPartitioned issues for one hop
+    // the exact read shape Ann.storeLookup issues for one hop
     val frontier = Seq(0L, 3L, 5L)
     val buckets = frontier.map(id => Long.box(id % 16)).distinct
     val hop = spark.read.parquet(idx)
@@ -240,7 +240,7 @@ class PlanSpec extends AnyFunSuite {
       nCentroids = 8, m = 4, nBuckets = 16, beamWidth = 4, hops = 2)
     val qv = e.filter(col("vec_id") === 9)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    val res = GraphIndex.search(spark, h, qv)
+    val res = h.search(spark, qv)
     val p = plan(res)
     // the per-query chunk fetch must be a partition-pruned read (without
     // it, every ask re-scans the corpus-sized sidecar) + a broadcast

@@ -616,8 +616,9 @@ class StreamingDedupSpec extends AnyFunSuite {
       .filter(col("src") === 4L).select("dst").as[Long].collect().toSet
     assert(e4.contains(1L) || e4.contains(3L), s"node 4 edges: $e4")
     // the store is searchable end-to-end with per-hop bucket pruning
-    val got = Ann.graphSearchPartitioned(spark, s"$root/edges", 4,
-        semCents, "cid", "cvec", onCircle(6), beamWidth = 2, hops = 2)
+    val got = Ann.graphSearch(spark, Ann.storeLookup(spark, s"$root/edges", 4),
+        semCents, "cid", "cvec", Ann.oneQuery(spark, onCircle(6)), "query_id", "vector",
+        beamWidth = 2, hops = 2)
       .orderBy(desc("sim"), col("vec_id")).limit(3)
       .select("vec_id").as[Long].collect().toSeq
     assert(got.contains(4L), s"search missed the streamed near-neighbor: $got")
