@@ -2486,7 +2486,7 @@ object SparkEntry {
 
     // The probeMargin DERIVED from the corpus's own argmax-gap
     // distribution instead of guessed (SemanticDedup.deriveProbeMargin
-    // — one codegen map-only NearestCellGap pass + one exact
+    // — one codegen map-only NearestCells top-2 pass + one exact
     // percentile): boundaryFrac = 0.25 probes "the boundary quartile".
     // The margin is stable-rounded to 6dp on BOTH engines (the repo's
     // float convention) and the oracle replays the WHOLE derivation —
@@ -4142,7 +4142,7 @@ object SparkEntry {
       // c2s routes each centroid to its nearest super, v2s routes each
       // vector, and the final argmax runs only over the centroids
       // sharing the vector's super — all with the flat oracle's
-      // (sim DESC, id) tie-break, so it mirrors NearestCentroidHier's
+      // (sim DESC, id) tie-break, so it mirrors NearestCells' two-level
       // lowest-index semantics exactly. Walk replay unchanged.
       "q_ann_graph_hier" -> annGraphOracleWhere("", "",
         centPred = scaledCentPred, queryId = 201,
@@ -5464,8 +5464,8 @@ object SparkEntry {
     // the two-level assignment replay (GraphIndex.DefaultAutoHierAt /
     // explicit hier): sup = head-⌊√|C|⌋ centroids in cid order (the
     // codebook-index order hierRouting takes them in), c2s routes each
-    // centroid to its nearest super (ties → lowest sid, the strict->
-    // first-wins), v2s routes each vector to its TOP-2 supers (the
+    // centroid to its nearest super (ties → lowest sid, the scorer's
+    // index tie-break), v2s routes each vector to its TOP-2 supers (the
     // build's superProbes default; ties → lowest sid), and the argmax
     // candidate set is flat below the gate / the probed supers'
     // members at/above it (always mode: hier only)

@@ -4,13 +4,16 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Dump ONE SparkEntry query + its oracle entry for a targeted
-  * `tools/check.py` run: `runMain graft.VerifyOne <name> [sfDir] [outDir]`.
-  * Dev tool for single-query correctness iteration without the full
-  * ~96-query Verify sweep (the [[TimeOne]] of the correctness gate). */
+/** Dump named SparkEntry queries + their oracle entries for a targeted
+  * `tools/check.py` run:
+  * `runMain graft.VerifyOne <name>[,<name>...] [sfDir] [outDir]`.
+  * Every named query runs in one JVM, and `outDir/oracle_sql.json`
+  * holds the oracle entry of each. Dev tool for correctness iteration
+  * without the full ~96-query Verify sweep (the [[TimeOne]] of the
+  * correctness gate). */
 object VerifyOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 2) args(2) else "/tmp/verify_one"
     val spark = SparkSession.builder()
@@ -23,8 +26,19 @@ object VerifyOne {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries(name)(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    // a query that throws is reported and skipped; tools/check.py then
+    // fails it as unreadable output
+    val failed = names.filterNot { name =>
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        true
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[verify-one] $name failed: $e")
+          false
+      }
+    }
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -34,9 +48,10 @@ object VerifyOne {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val sql = SparkEntry.oracleSql.get(name)
-      .map(v => s"${q(name)}: ${q(v)}").getOrElse("")
+    val sql = names.flatMap(name => SparkEntry.oracleSql.get(name)
+      .map(v => s"${q(name)}: ${q(v)}")).mkString(", ")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), s"{$sql}")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,37 +1,78 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import graft.operators.CosineKernel
 
-/** TOP-`cellProbes` nearest-centroid assignment — the multi-probe form
-  * of [[NearestCentroid]]/[[NearestCentroidHier]] that recovers the
-  * cell-boundary blind spot of cell-confined pair stages (SemDeDup's
-  * published recipe scores pairs within ONE coarse cell only; measured
-  * on the real PMC corpus that confinement finds just 89/200 planted
-  * cross-cell near-dup pairs — SCALE.md "Confined-pair recall" — and
-  * the loss is entirely the cell boundary, not the hier routing or the
-  * banding). Assigning the PROBE side of a pair join to its top-p
-  * cells (FAISS's nprobe discipline, applied at the cell level) lets a
-  * boundary-straddling pair meet in the runner-up cell.
+/** Nearest-centroid cell assignment against a driver-held codebook, as
+  * one codegen'd map-side expression — the only one: the primary cell
+  * (`Ann.assignCells`, `Ann.assignCellsHier`), the multi-probe cell
+  * list (`Ann.assignCellsMulti`) and the argmax gap
+  * (`Ann.assignCellGaps`) are all projections of its output.
   *
-  * Returns array<int> of the top-`cellProbes` codebook indices in
-  * probe order (sim DESC, index ASC — the oracle's window order), so
-  * element 0 is EXACTLY the flat/hier primary assignment: cosine
-  * semantics are [[NearestCentroid]]'s bit-for-bit (zero-norm → 0.0,
-  * ascending-fold dots, lowest index on ties) and, when `superBook`
-  * is non-empty, the candidate set is the probed supers' members —
-  * identical routing to [[NearestCentroidHier]] (same driver-side
-  * centroid→super precomputation rides in via `membersOf`). An empty
-  * `superBook` scans the whole codebook (the flat path). A SQL oracle
-  * replays every probe list with one windowed rank (rn <= p).
+  * OUTPUT. array<struct<idx:int, sim:double>>: the top-`cellProbes`
+  * codebook indices with their cosines, in (sim DESC, index ASC) order
+  * — the oracle's window order, so element 0 is the argmax with the
+  * lowest index on ties, and a SQL oracle replays every list with one
+  * windowed rank (rn <= p). Runner-ups are trimmed by `probeMargin`.
   *
-  * Like its siblings this is one codegen'd map-side projection: zero
-  * shuffle, zero join; per-row work is |S| + p_super·|C|/|S| (hier)
-  * or |C| (flat) dots regardless of cellProbes — the top-p heap is
-  * maintained in the same scan that the argmax already pays. */
+  * ARITHMETIC. [[CosineKernel]]'s: ascending-fold norms and dots,
+  * zero-norm → 0.0, the row as the sparse operand (its nonzeros are
+  * folded, bit-for-bit the dense fold, against every codebook entry
+  * that is finite; an entry holding a NaN or ±Inf folds dense). Each
+  * entry's norm and finiteness are computed once per codebook.
+  *
+  * WHY A REFERENCE OBJECT. The codebook rides along as a deserialized
+  * reference object — the executor-local equivalent of a broadcast — so
+  * assignment is a pure projection: zero shuffle, zero join. The
+  * round-1 crossJoin + row_number form shuffled |index| × |codebook|
+  * scored rows through an Exchange; `array_min` over an array of
+  * (−sim, id) structs falls back to interpreted struct ordering and
+  * re-evaluates the literal-array cosine tree per element (measured
+  * ~3 s for 5k rows × 8 centroids at sf0.1, vs milliseconds for this
+  * loop); and a when-chain fold is exponential in codebook size.
+  *
+  * TWO-LEVEL ROUTING. With |C| = ⌊√N⌋ a flat scan is N^1.5 dots
+  * corpus-wide (3·10^13 at N = 10^9). A non-empty `superBook` scores
+  * the row against the |S| supers first, keeps the top-`superProbes`
+  * (FAISS's nprobe: measured on the real PMC corpus, one probe loses
+  * the rows whose true centroid hides under the runner-up super), and
+  * takes the top-p over only the probed supers' members (`membersOf`,
+  * routed on the driver with this same arithmetic by `Ann.hierRouting`):
+  * N·(|S| + p·|C|/|S|) dots, ≈ 2·N^1.25 at |S| = ⌊√|C|⌋ and p = 1.
+  * Approximate by design (a row whose true nearest centroid lives under
+  * an unprobed super takes its in-probe best), but deterministic: the
+  * oracle replays it with two windowed ranks.
+  *
+  * MULTI-PROBE AND THE MARGIN. Cell-confined pair stages lose exactly
+  * the pairs that straddle a cell boundary (SemDeDup's recipe on the
+  * real PMC corpus finds 89/200 planted cross-cell near-dups — SCALE.md
+  * "Confined-pair recall"); probing the runner-up cells lets them meet.
+  * The top-p is kept in the scan the argmax already pays, so per-row
+  * cost does not grow with `cellProbes`. But unbounded top-p probing
+  * is p×-bounded only on the exploded side, not on the pair term when
+  * runner-up choices concentrate on hub cells (measured on PMC:
+  * unbounded p = 2 cost 28× the confined build). The margin keeps a
+  * runner-up only while its sim is within `probeMargin` of the
+  * primary's, confining probing to boundary vectors — the only ones
+  * whose pairs the single-cell build can lose. +Infinity = pure top-p;
+  * 0.0 = primary only, plus exact ties.
+  *
+  * THE GAP. sim₀ − sim₁ of the top-2 (no margin) is how close a row
+  * sits to a cell boundary — the margin is a threshold on it, so its
+  * quantiles derive a margin (`SemanticDedup.deriveProbeMargin`). A
+  * single candidate (|C| = 1, or a lone-member probed super) has no
+  * runner-up: its gap is +Infinity, as such a row is never a boundary
+  * row.
+  *
+  * NON-FINITE INPUT. A NaN sim never enters a top-p, at either level;
+  * a row left with no candidate is refused (IllegalArgumentException),
+  * as is a row whose width differs from the codebook's. A codebook or
+  * super book whose vectors differ in width is refused when the
+  * expression is built. */
 case class NearestCells(child: Expression,
                         codebook: Array[Array[Double]],
                         superBook: Array[Array[Double]],
@@ -41,17 +82,13 @@ case class NearestCells(child: Expression,
                         probeMargin: Double = Double.PositiveInfinity)
     extends UnaryExpression {
 
-  require(codebook.nonEmpty, "empty codebook")
-  require(superBook.isEmpty || membersOf.length == superBook.length,
-    "membersOf must have one member list per super-centroid")
-  require(superProbes >= 1, "superProbes must be >= 1")
-  require(cellProbes >= 1, "cellProbes must be >= 1")
-  require(probeMargin >= 0.0, "probeMargin must be >= 0")
+  NearestCells.validate(codebook, superBook, membersOf, superProbes, cellProbes,
+    probeMargin, prettyName)
 
-  @transient private lazy val cnorms: Array[Double] = NearestCentroid.norms(codebook)
-  @transient private lazy val snorms: Array[Double] = NearestCentroid.norms(superBook)
+  @transient private lazy val scorer = new NearestCells.Scorer(codebook, superBook,
+    membersOf, superProbes, cellProbes, probeMargin, prettyName)
 
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def dataType: DataType = ArrayType(NearestCells.ElemType, containsNull = false)
 
   override def prettyName: String = "graft_nearest_cells"
 
@@ -73,90 +110,115 @@ case class NearestCells(child: Expression,
 
   /** Entry point for generated code. */
   def evalArray(input: ArrayData): ArrayData = {
-    val n = input.numElements()
-    val v = new Array[Double](n)
+    val v = new Array[Double](input.numElements())
     var i = 0
-    var vn = 0.0
-    while (i < n) { v(i) = input.getDouble(i); vn += v(i) * v(i); i += 1 }
-    val vnorm = math.sqrt(vn)
-    def simTo(cent: Array[Double], cnorm: Double): Double = {
-      if (cent.length != n) throw new IllegalArgumentException(
-        s"graft_nearest_cells: dimension mismatch (${cent.length} vs $n)")
-      var dot = 0.0
-      var j = 0
-      while (j < n) { dot += v(j) * cent(j); j += 1 }
-      if (vnorm == 0.0 || cnorm == 0.0) 0.0 else dot / (vnorm * cnorm)
+    while (i < v.length) { v(i) = input.getDouble(i); i += 1 }
+    val top = scorer.top(v)
+    val out = new Array[Any](top.size)
+    i = 0
+    while (i < top.size) {
+      out(i) = new GenericInternalRow(Array[Any](top.idx(i), top.sim(i)))
+      i += 1
     }
-    // the top-p maintenance shared by both levels: insertion sort into
-    // fixed arrays ordered (sim DESC, index ASC). Candidates may arrive
-    // in any index order (hier member lists are per-super), so equal
-    // sims compare indices explicitly.
-    def insertTop(p: Int, topIdx: Array[Int], topSim: Array[Double],
-                  filled0: Int, c: Int, sim: Double): Int = {
-      var filled = filled0
-      var pos = filled
-      while (pos > 0 && (sim > topSim(pos - 1) ||
-        (sim == topSim(pos - 1) && c < topIdx(pos - 1)))) pos -= 1
-      if (pos < p) {
-        val last = math.min(filled, p - 1)
-        var t = last
-        while (t > pos) { topIdx(t) = topIdx(t - 1); topSim(t) = topSim(t - 1); t -= 1 }
-        topIdx(pos) = c; topSim(pos) = sim
-        if (filled < p) filled += 1
-      }
-      filled
-    }
-    // candidate centroid scan: the whole codebook (flat), or the probed
-    // supers' members (NearestCentroidHier's routing, identical
-    // selection order at the super level)
-    val p = math.min(cellProbes, codebook.length)
-    val topIdx = new Array[Int](p)
-    val topSim = new Array[Double](p)
-    var filled = 0
-    if (superBook.isEmpty) {
-      var c = 0
-      while (c < codebook.length) {
-        filled = insertTop(p, topIdx, topSim, filled, c, simTo(codebook(c), cnorms(c)))
-        c += 1
-      }
-    } else {
-      val ps = math.min(superProbes, superBook.length)
-      val sTopIdx = new Array[Int](ps)
-      val sTopSim = new Array[Double](ps)
-      var sFilled = 0
-      var k = 0
-      while (k < superBook.length) {
-        sFilled = insertTop(ps, sTopIdx, sTopSim, sFilled, k, simTo(superBook(k), snorms(k)))
-        k += 1
-      }
-      var pi = 0
-      while (pi < sFilled) {
-        val members = membersOf(sTopIdx(pi))
-        var m = 0
-        while (m < members.length) {
-          val c = members(m)
-          filled = insertTop(p, topIdx, topSim, filled, c, simTo(codebook(c), cnorms(c)))
-          m += 1
-        }
-        pi += 1
-      }
-      require(filled > 0,
-        "graft_nearest_cells: probed supers have no member centroids")
-    }
-    // the probe MARGIN: runner-up cells are emitted only while their
-    // sim sits within `probeMargin` of the primary's. Unbounded top-p
-    // probing is p×-bounded on the EXPLODED side but NOT on the pair
-    // term when runner-up choices concentrate on hub cells (measured
-    // on the real PMC corpus: unbounded p=2 cost 28× the confined
-    // build); the margin confines probing to BOUNDARY vectors — the
-    // only ones whose pairs the single-cell build can lose — which is
-    // where both the recall and the cost live. Infinity = pure top-p;
-    // 0.0 = primary only (plus exact ties).
-    var keep = 1
-    while (keep < filled && topSim(keep) >= topSim(0) - probeMargin) keep += 1
-    new GenericArrayData(topIdx.take(keep).map(Int.box).toArray[Any])
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object NearestCells {
+  val ElemType: StructType = StructType(Seq(
+    StructField("idx", IntegerType, nullable = false),
+    StructField("sim", DoubleType, nullable = false)))
+
+  private def validate(codebook: Array[Array[Double]], superBook: Array[Array[Double]],
+                       membersOf: Array[Array[Int]], superProbes: Int,
+                       cellProbes: Int, probeMargin: Double, name: String): Unit = {
+    require(codebook.nonEmpty, s"$name: empty codebook")
+    require(superBook.isEmpty || membersOf.length == superBook.length,
+      s"$name: membersOf must have one member list per super-centroid")
+    require(superProbes >= 1, s"$name: superProbes must be >= 1")
+    require(cellProbes >= 1, s"$name: cellProbes must be >= 1")
+    require(probeMargin >= 0.0, s"$name: probeMargin must be >= 0")
+    val width = codebook(0).length
+    require(codebook.forall(_.length == width) && superBook.forall(_.length == width),
+      s"$name: codebook vectors differ in width")
+  }
+
+  /** A codebook with each entry's norm and finiteness, computed once. */
+  private final class Book(val vecs: Array[Array[Double]]) {
+    val norms: Array[Double] = vecs.map(CosineKernel.norm)
+    val finite: Array[Boolean] = vecs.map(CosineKernel.allFinite)
+    def sim(q: Array[Double], nz: Array[Int], qn: Double, c: Int): Double =
+      CosineKernel.cosine(CosineKernel.dot(q, nz, vecs(c), finite(c)), qn, norms(c))
+  }
+
+  /** A bounded top-p of (index, sim), ordered (sim DESC, index ASC)
+    * whatever order candidates arrive in; a NaN sim never enters. */
+  private[graft] final class Top(p: Int) {
+    val idx = new Array[Int](p)
+    val sim = new Array[Double](p)
+    var size = 0
+
+    def offer(c: Int, s: Double): Unit = if (!java.lang.Double.isNaN(s)) {
+      var pos = size
+      while (pos > 0 && (s > sim(pos - 1) || (s == sim(pos - 1) && c < idx(pos - 1)))) pos -= 1
+      if (pos < p) {
+        var t = math.min(size, p - 1)
+        while (t > pos) { idx(t) = idx(t - 1); sim(t) = sim(t - 1); t -= 1 }
+        idx(pos) = c
+        sim(pos) = s
+        if (size < p) size += 1
+      }
+    }
+  }
+
+  /** The scan behind [[NearestCells]], Spark-free: `Ann.hierRouting`
+    * routes each centroid to its super through one of these too. */
+  private[graft] final class Scorer(codebook: Array[Array[Double]],
+                                    superBook: Array[Array[Double]],
+                                    membersOf: Array[Array[Int]],
+                                    superProbes: Int, cellProbes: Int,
+                                    probeMargin: Double, name: String) {
+    validate(codebook, superBook, membersOf, superProbes, cellProbes, probeMargin, name)
+
+    private val width = codebook(0).length
+    private val cells = new Book(codebook)
+    private val supers = new Book(superBook)
+
+    /** The row's top cells after the margin trim; refuses a row of the
+      * wrong width and a row left with no candidate. */
+    def top(q: Array[Double]): Top = {
+      if (q.length != width) throw new IllegalArgumentException(
+        s"$name: dimension mismatch ($width vs ${q.length})")
+      val nz = CosineKernel.nonzeros(q)
+      val qn = CosineKernel.norm(q)
+      val top = new Top(math.min(cellProbes, codebook.length))
+      if (superBook.isEmpty) {
+        var c = 0
+        while (c < codebook.length) { top.offer(c, cells.sim(q, nz, qn, c)); c += 1 }
+      } else {
+        val probed = new Top(math.min(superProbes, superBook.length))
+        var k = 0
+        while (k < superBook.length) { probed.offer(k, supers.sim(q, nz, qn, k)); k += 1 }
+        k = 0
+        while (k < probed.size) {
+          val members = membersOf(probed.idx(k))
+          var m = 0
+          while (m < members.length) {
+            top.offer(members(m), cells.sim(q, nz, qn, members(m)))
+            m += 1
+          }
+          k += 1
+        }
+      }
+      if (top.size == 0) throw new IllegalArgumentException(
+        s"$name: no candidate cell has a non-NaN cosine to this row")
+      var keep = 1
+      while (keep < top.size && top.sim(keep) >= top.sim(0) - probeMargin) keep += 1
+      top.size = keep
+      top
+    }
+  }
 }

@@ -13,7 +13,7 @@ import graft.operators.CosineKernel
   * codegen'd map-side expression: returns array<struct<qi, sim>> — one
   * element per scored query, `qi` its index in `queries`, in ascending
   * `qi` order. The table rides along as a deserialized reference object
-  * (the [[NearestCentroid]] pattern), so scoring a row against many
+  * (the [[NearestCells]] pattern), so scoring a row against many
   * queries is a projection: no broadcast join that copies each query
   * vector onto every candidate row, no crossJoin.
   *

@@ -75,30 +75,16 @@ object Ann {
     * centroid id). Centroids are small by contract (the coarse-quantizer
     * codebook — at most thousands of rows); collecting them folds the whole
     * argmax into ONE codegen'd map-side projection
-    * ([[graft.functions.NearestCentroid]]) with zero shuffle. The round-1
-    * crossJoin + row_number window form shuffled |index| × |centroids|
-    * scored rows through an Exchange on id — at 100 TB × 1024 cells that
-    * is 1024× the index through the shuffle for an argmax that every
-    * executor can compute locally. */
+    * ([[graft.functions.NearestCells]], one probe) with zero shuffle. The
+    * round-1 crossJoin + row_number window form shuffled |index| ×
+    * |centroids| scored rows through an Exchange on id — at 100 TB × 1024
+    * cells that is 1024× the index through the shuffle for an argmax that
+    * every executor can compute locally. Output: input columns + cell_id
+    * + cell_sim. */
   def assignCells(index: DataFrame, idCol: String, vecCol: String,
                   centroids: DataFrame, cIdCol: String, cVecCol: String): DataFrame = {
-    // sorted by centroid id, so the expression's lowest-index tie-break
-    // IS the lowest-centroid-id tie-break (matches the oracle's ordering)
-    val cents = centroids.orderBy(col(cIdCol))
-      .select(col(cIdCol), col(cVecCol).cast("array<double>"))
-      .collect()
-      .map(r => (r.get(0), r.getSeq[Double](1).toArray))
-    require(cents.nonEmpty, "assignCells: empty centroid set")
-    import org.apache.spark.sql.GraftColumnBridge._
-    val best = column(graft.functions.NearestCentroid(
-      expression(col(vecCol).cast("array<double>")), cents.map(_._2)))
-    index
-      .withColumn("_best", best)
-      // idx → original centroid id via a literal array lookup (1-based)
-      .withColumn("cell_id",
-        element_at(array(cents.toIndexedSeq.map(c => lit(c._1)): _*), col("_best.idx") + 1))
-      .withColumn("cell_sim", col("_best.sim"))
-      .drop("_best")
+    val cents = collectCentroids(centroids, cIdCol, cVecCol, "assignCells")
+    primaryCell(index, vecCol, cents, flatRouting, superProbes = 1)
   }
 
   /** TWO-LEVEL [[assignCells]] — the coarse-quantizer routing that
@@ -112,12 +98,10 @@ object Ann {
     * are already √N-confined. Assignment is approximate (a row whose
     * true nearest centroid lives under a different super takes its
     * in-super best — IVF's nprobe=1 trade) but deterministic at both
-    * levels ([[graft.functions.NearestCentroidHier]]: zero-norm → 0.0,
-    * strict-> lowest-index ties, driver-precomputed centroid→super
-    * routing with identical arithmetic), so a SQL oracle replays every
-    * cell id with two windowed argmaxes. Still one codegen'd map-side
-    * projection: zero shuffle, zero join. Same output contract as
-    * [[assignCells]]: (input columns) + cell_id + cell_sim.
+    * levels ([[graft.functions.NearestCells]] over a super book, with
+    * the centroid→super routing precomputed by [[hierRouting]] in the
+    * same arithmetic), so a SQL oracle replays every cell id with two
+    * windowed argmaxes. Same output contract as [[assignCells]].
     *
     * `superProbes` is FAISS's nprobe at the routing level: argmax over
     * the union of the top-p supers' members — N·(|S| + p·|C|/|S|)
@@ -134,23 +118,18 @@ object Ann {
                       nSupers: Int, superProbes: Int = 1,
                       superVecs: Seq[Seq[Double]] = Nil): DataFrame = {
     val cents = collectCentroids(centroids, cIdCol, cVecCol, "assignCellsHier")
-    val codebook = cents.map(_._2)
-    val (superBook, membersOf) =
-      hierRouting(codebook, nSupers, superVecs, "assignCellsHier")
-    import org.apache.spark.sql.GraftColumnBridge._
-    val best = column(graft.functions.NearestCentroidHier(
-      expression(col(vecCol).cast("array<double>")),
-      codebook, superBook, membersOf, superProbes))
-    index
-      .withColumn("_best", best)
-      .withColumn("cell_id",
-        element_at(array(cents.toIndexedSeq.map(c => lit(c._1)): _*), col("_best.idx") + 1))
-      .withColumn("cell_sim", col("_best.sim"))
-      .drop("_best")
+    primaryCell(index, vecCol, cents,
+      hierRouting(cents.map(_._2), nSupers, superVecs, "assignCellsHier"), superProbes)
   }
+
+  private[graft] type Routing = (Array[Array[Double]], Array[Array[Int]])
+
+  private val flatRouting: Routing = (Array.empty[Array[Double]], Array.empty[Array[Int]])
 
   private def collectCentroids(centroids: DataFrame, cIdCol: String,
                                cVecCol: String, what: String): Array[(Any, Array[Double])] = {
+    // sorted by centroid id, so the scorer's lowest-index tie-break IS
+    // the lowest-centroid-id tie-break (matches the oracle's ordering)
     val cents = centroids.orderBy(col(cIdCol))
       .select(col(cIdCol), col(cVecCol).cast("array<double>"))
       .collect()
@@ -159,17 +138,39 @@ object Ann {
     cents
   }
 
-  /** The driver-side half of the two-level assignment, shared by
-    * [[assignCellsHier]] and [[assignCellsMulti]]: pick the super book
-    * (trained `superVecs`, or the head-of-codebook sample), route each
-    * centroid to its nearest super with the expression's exact cosine
-    * semantics (|C|·|S| dots, once), and prune memberless supers
-    * (trained books can have them — standard k-means cell death;
-    * head-of-codebook books can't, every data-row super routes
-    * itself). Returns the LIVE (superBook, membersOf) pair. */
-  private def hierRouting(codebook: Array[Array[Double]], nSupers: Int,
-                          superVecs: Seq[Seq[Double]], what: String)
-      : (Array[Array[Double]], Array[Array[Int]]) = {
+  /** The top-`cellProbes` cells of each row, as
+    * array<struct<idx, sim>> ([[graft.functions.NearestCells]]). */
+  private def nearestCells(vecCol: String, cents: Array[(Any, Array[Double])],
+                           routing: Routing, superProbes: Int, cellProbes: Int,
+                           probeMargin: Double = Double.PositiveInfinity) = {
+    import org.apache.spark.sql.GraftColumnBridge._
+    column(graft.functions.NearestCells(expression(col(vecCol).cast("array<double>")),
+      cents.map(_._2), routing._1, routing._2, superProbes, cellProbes, probeMargin))
+  }
+
+  /** Codebook index → centroid id, for a 1-based `element_at`. */
+  private def idLut(cents: Array[(Any, Array[Double])]) =
+    array(cents.toIndexedSeq.map(c => lit(c._1)): _*)
+
+  /** [[assignCells]] and [[assignCellsHier]]: the one-probe head. */
+  private def primaryCell(index: DataFrame, vecCol: String,
+                          cents: Array[(Any, Array[Double])], routing: Routing,
+                          superProbes: Int): DataFrame =
+    index
+      .withColumn("_cell", nearestCells(vecCol, cents, routing, superProbes, 1).getItem(0))
+      .withColumn("cell_id", element_at(idLut(cents), col("_cell.idx") + 1))
+      .withColumn("cell_sim", col("_cell.sim"))
+      .drop("_cell")
+
+  /** The driver-side half of the two-level assignment: pick the super
+    * book (trained `superVecs`, or the head-of-codebook sample), route
+    * each centroid to its nearest super through the expression's own
+    * scorer (|C|·|S| dots, once), and prune memberless supers (trained
+    * books can have them — standard k-means cell death; head-of-codebook
+    * books can't, every data-row super routes itself). Returns the LIVE
+    * (superBook, membersOf) pair. */
+  private[graft] def hierRouting(codebook: Array[Array[Double]], nSupers: Int,
+                                superVecs: Seq[Seq[Double]], what: String): Routing = {
     val nS = math.min(math.max(nSupers, 1), codebook.length)
     // superVecs, when given, is a TRAINED super book (e.g. a few
     // kmeansRefine rounds over the corpus) — head-of-codebook supers
@@ -179,33 +180,26 @@ object Ann {
     val superBook =
       if (superVecs.nonEmpty) superVecs.map(_.toArray).toArray
       else codebook.take(nS)
-    val cnorms = graft.functions.NearestCentroid.norms(codebook)
-    val snorms = graft.functions.NearestCentroid.norms(superBook)
+    val router = new graft.functions.NearestCells.Scorer(superBook,
+      Array.empty, Array.empty, 1, 1, Double.PositiveInfinity, what)
     val membersOf = Array.fill(superBook.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    codebook.indices.foreach { c =>
-      var bestIdx = 0
-      var bestSim = Double.NegativeInfinity
-      var k = 0
-      while (k < superBook.length) {
-        val a = codebook(c)
-        val b = superBook(k)
-        require(a.length == b.length,
-          s"$what: dimension mismatch (${a.length} vs ${b.length})")
-        var dot = 0.0
-        var j = 0
-        while (j < a.length) { dot += a(j) * b(j); j += 1 }
-        val sim =
-          if (cnorms(c) == 0.0 || snorms(k) == 0.0) 0.0
-          else dot / (cnorms(c) * snorms(k))
-        if (sim > bestSim) { bestSim = sim; bestIdx = k }
-        k += 1
-      }
-      membersOf(bestIdx) += c
-    }
+    codebook.indices.foreach(c => membersOf(router.top(codebook(c)).idx(0)) += c)
     val live = superBook.zip(membersOf).filter(_._2.nonEmpty)
     require(live.nonEmpty, s"$what: every super lost its members")
     (live.map(_._1), live.map(_._2.toArray))
   }
+
+  /** Flat routing, or two-level when `nSupers` > 0 — the gate of
+    * [[assignCellsMulti]] and [[assignCellGaps]]: `superVecs` alone is
+    * inert, matching [[SemanticDedup]]'s flat/hier gate and the
+    * `_recipe` canonicalization (which folds superVecs to Nil at
+    * nSupers = 0, asserting it affects no cell id). Without this gate a
+    * probe batch carrying superVecs against a flat store would pass the
+    * recipe guard yet assign under multi-super routing — silently
+    * different primaries than the stored flat assignment. */
+  private def gatedRouting(codebook: Array[Array[Double]], nSupers: Int,
+                           superVecs: Seq[Seq[Double]], what: String): Routing =
+    if (nSupers > 0) hierRouting(codebook, nSupers, superVecs, what) else flatRouting
 
   /** MULTI-PROBE cell assignment — [[assignCells]]/[[assignCellsHier]]
     * generalized to the top-`cellProbes` cells per row
@@ -215,12 +209,9 @@ object Ann {
     * Output contract: input columns + `cell_ids` (array of centroid
     * ids in probe order — sim desc, centroid id asc) + `cell_id` (its
     * head, which equals the flat/hier primary assignment bit-for-bit).
-    * Still one codegen'd map-side projection: zero shuffle, zero join;
-    * the extra probes reuse the dots the argmax already computes, so
-    * per-row cost is unchanged by `cellProbes`. `probeMargin` trims
+    * Per-row cost is unchanged by `cellProbes`; `probeMargin` trims
     * runner-up probes to those within the margin of the primary's sim
-    * (see [[graft.functions.NearestCells]] — the cost lever that
-    * confines probing to boundary vectors). */
+    * — the cost lever that confines probing to boundary vectors. */
   def assignCellsMulti(index: DataFrame, idCol: String, vecCol: String,
                        centroids: DataFrame, cIdCol: String, cVecCol: String,
                        cellProbes: Int, nSupers: Int = 0, superProbes: Int = 1,
@@ -228,55 +219,39 @@ object Ann {
                        probeMargin: Double = Double.PositiveInfinity): DataFrame = {
     require(cellProbes >= 1, s"assignCellsMulti: cellProbes=$cellProbes must be >= 1")
     val cents = collectCentroids(centroids, cIdCol, cVecCol, "assignCellsMulti")
-    val codebook = cents.map(_._2)
-    // Hier routing is gated on nSupers > 0 ONLY — superVecs alone must
-    // be inert, matching SemanticDedup.assign's flat/hier gate and the
-    // `_recipe` canonicalization (which folds superVecs to Nil at
-    // nSupers = 0, asserting it affects no cell id). Before this gate a
-    // cellProbes>1 probe batch carrying superVecs against a flat store
-    // passed the recipe guard yet assigned under multi-super routing —
-    // silently different primaries than the stored flat assignment.
-    val (superBook, membersOf) =
-      if (nSupers > 0)
-        hierRouting(codebook, nSupers, superVecs, "assignCellsMulti")
-      else (Array.empty[Array[Double]], Array.empty[Array[Int]])
-    import org.apache.spark.sql.GraftColumnBridge._
-    val probes = column(graft.functions.NearestCells(
-      expression(col(vecCol).cast("array<double>")),
-      codebook, superBook, membersOf, superProbes, cellProbes, probeMargin))
-    val idLut = array(cents.toIndexedSeq.map(c => lit(c._1)): _*)
+    val routing = gatedRouting(cents.map(_._2), nSupers, superVecs, "assignCellsMulti")
+    val lut = idLut(cents)
     index
-      .withColumn("_probes", probes)
+      .withColumn("_probes",
+        nearestCells(vecCol, cents, routing, superProbes, cellProbes, probeMargin))
       .withColumn("cell_ids",
-        transform(col("_probes"), i => element_at(idLut, i + 1)))
+        transform(col("_probes"), p => element_at(lut, p.getField("idx") + 1)))
       .withColumn("cell_id", element_at(col("cell_ids"), 1))
       .drop("_probes")
   }
 
   /** Attach the ARGMAX-GAP column (`cell_gap` = cosine(primary cell) −
-    * cosine(runner-up cell), [[graft.functions.NearestCellGap]]) — the
-    * per-row boundary-closeness number whose DISTRIBUTION derives a
-    * principled `probeMargin` ([[SemanticDedup.deriveProbeMargin]]):
-    * [[NearestCells]]' margin emits a runner-up probe iff
-    * cell_gap <= margin, so the margin that probes "the boundary
-    * decile" is exactly the 0.1-quantile of this column. Same hier
-    * routing gate as [[assignCellsMulti]] (nSupers > 0 only; superVecs
-    * inert without it); one codegen'd map-side projection, zero
-    * shuffle. */
+    * cosine(runner-up cell), +Infinity with a single candidate; see
+    * [[graft.functions.NearestCells]]) — the per-row boundary-closeness
+    * number whose DISTRIBUTION derives a principled `probeMargin`
+    * ([[SemanticDedup.deriveProbeMargin]]): the margin emits a runner-up
+    * probe iff cell_gap <= margin, so the margin that probes "the
+    * boundary decile" is exactly the 0.1-quantile of this column. Same
+    * routing gate as [[assignCellsMulti]]; one codegen'd map-side
+    * projection, zero shuffle. */
   def assignCellGaps(index: DataFrame, idCol: String, vecCol: String,
                      centroids: DataFrame, cIdCol: String, cVecCol: String,
                      nSupers: Int = 0, superProbes: Int = 1,
                      superVecs: Seq[Seq[Double]] = Nil): DataFrame = {
     val cents = collectCentroids(centroids, cIdCol, cVecCol, "assignCellGaps")
-    val codebook = cents.map(_._2)
-    val (superBook, membersOf) =
-      if (nSupers > 0)
-        hierRouting(codebook, nSupers, superVecs, "assignCellGaps")
-      else (Array.empty[Array[Double]], Array.empty[Array[Int]])
-    import org.apache.spark.sql.GraftColumnBridge._
-    index.withColumn("cell_gap", column(graft.functions.NearestCellGap(
-      expression(col(vecCol).cast("array<double>")),
-      codebook, superBook, membersOf, superProbes)))
+    val routing = gatedRouting(cents.map(_._2), nSupers, superVecs, "assignCellGaps")
+    val top2 = col("_top2")
+    index
+      .withColumn("_top2", nearestCells(vecCol, cents, routing, superProbes, 2))
+      .withColumn("cell_gap",
+        when(size(top2) >= 2, top2(0)("sim") - top2(1)("sim"))
+          .when(size(top2) === 1, lit(Double.PositiveInfinity)))
+      .drop("_top2")
   }
 
   /** IVF search: rank centroids vs the query, keep the nprobe nearest
@@ -398,17 +373,7 @@ object Ann {
                          indexDir: String, queries: DataFrame,
                          nprobe: Int, k: Int = 10,
                          recallFloor: Double = 0.9): Double = {
-    val qcols = queries.columns
-    require(qcols.length == 2,
-      s"writeIvfIndexGated: queries must be (query_id, vector), got ${qcols.toSeq}")
-    val qRows = queries.select(col(qcols(1)).cast("array<double>")).collect()
-    // refuse the empty workload BEFORE anything is even staged — the
-    // gate-bypass measureRecall refuses the same way
-    require(qRows.nonEmpty,
-      "writeIvfIndexGated: the query workload produced zero probes — " +
-        "refusing to build a store that would publish ungated")
-    require(qRows.forall(!_.isNullAt(0)), "writeIvfIndexGated: null query vector")
-    val table = qRows.map(_.getSeq[Double](0).toArray)
+    val table = gateQueryTable(queries, "writeIvfIndexGated")
     gatedPublish(spark, indexDir, recallFloor,
       "Ann.writeIvfIndexGated", s"nprobe=$nprobe, k=$k") { staging =>
       writeIvfIndex(assigned, staging)
@@ -419,11 +384,52 @@ object Ann {
     }
   }
 
+  /** A gate's (query_id, vector) workload as the driver-held query
+    * table, in row order — refused when it is not two columns, is
+    * empty (BEFORE anything is staged: an empty workload would publish
+    * ungated, and the gate-bypass measureRecall refuses the same way)
+    * or holds a null vector. */
+  private[operators] def gateQueryTable(queries: DataFrame, what: String): Array[Array[Double]] = {
+    val qcols = queries.columns
+    require(qcols.length == 2,
+      s"$what: queries must be (query_id, vector), got ${qcols.toSeq}")
+    val qRows = queries.select(col(qcols(1)).cast("array<double>")).collect()
+    require(qRows.nonEmpty,
+      s"$what: the query workload produced zero probes — " +
+        "refusing to build a store that would publish ungated")
+    require(qRows.forall(!_.isNullAt(0)), s"$what: null query vector")
+    qRows.map(_.getSeq[Double](0).toArray)
+  }
+
+  /** Rank (`_s.sim` desc, `idCol` asc) within each query `_s.qi` of a
+    * (`idCol`, `_s` = struct<qi, sim>) score frame and keep the top `k`:
+    * (`_qi`, `idCol`, `_sim`) rows. */
+  private def topKPerQuery(scored: DataFrame, idCol: String, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("_s.qi").orderBy(desc("_s.sim"), col(idCol))
+    scored.withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
+      .select(col("_s.qi").as("_qi"), col(idCol), col("_s.sim").as("_sim"))
+  }
+
+  /** Each query's exact top-`k` over `index`, keyed by query index in
+    * `table`: every row scored against every query in one projection
+    * ([[graft.functions.QueryCosines.all]]). The exact side of both IVF
+    * gates. */
+  private[graft] def exactTopK(index: DataFrame, idCol: String, vecCol: String,
+                               table: Array[Array[Double]], k: Int): DataFrame =
+    topKPerQuery(index.select(col(idCol),
+      explode(graft.functions.QueryCosines.all(col(vecCol), table)).as("_s")), idCol, k)
+
+  /** query index → its id set, from a [[topKPerQuery]] frame. */
+  private[operators] def idSets(topK: DataFrame, idCol: String): Map[Any, Set[Any]] =
+    topK.select(col("_qi"), col(idCol))
+      .collect().groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(_.get(1)).toSet }
+
   /** [[writeIvfIndexGated]]'s measurement, keyed by query index in
-    * `table`: each query's exact top-`k` ids over `assigned`, and its
-    * top-`k` over the `nprobe` cells it probes in the store at
-    * `storeDir` — only those cells' partitions are read, and a row is
-    * scored against exactly the queries probing its cell. */
+    * `table`: each query's exact top-`k` ids over `assigned`
+    * ([[exactTopK]]), and its top-`k` over the `nprobe` cells it probes
+    * in the store at `storeDir` — only those cells' partitions are read,
+    * and a row is scored against exactly the queries probing its cell. */
   private[graft] def ivfGateTopK(spark: SparkSession, assigned: DataFrame,
                                  idCol: String, vecCol: String,
                                  centroids: DataFrame, cIdCol: String, cVecCol: String,
@@ -431,23 +437,17 @@ object Ann {
                                  nprobe: Int, k: Int)
       : (Map[Any, Set[Any]], Map[Any, Set[Any]]) = {
     import graft.functions.QueryCosines
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_s.qi").orderBy(desc("_s.sim"), col(idCol))
-    def topkOf(scored: DataFrame): Map[Any, Set[Any]] = scored
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
-      .select(col("_s.qi"), col(idCol))
-      .collect().groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(_.get(1)).toSet }
-    val exact = topkOf(assigned
-      .select(col(idCol), explode(QueryCosines.all(col(vecCol), table)).as("_s")))
+    val exact = idSets(exactTopK(assigned, idCol, vecCol, table, k), idCol)
     // each query's nprobe nearest cells, as cell → the (ascending)
     // queries probing it
     val probing = nearestPerQuery(centroids, cIdCol, cVecCol, table, nprobe)
       .select(col("id"), col("_s.qi")).collect()
       .groupBy(_.getLong(0)).map { case (c, rs) => c -> rs.map(_.getInt(1)).sorted }
-    val got = topkOf(spark.read.parquet(storeDir)
+    val got = idSets(topKPerQuery(spark.read.parquet(storeDir)
       .filter(col("cell_id").isin(probing.keys.toSeq.map(Long.box): _*))
       .select(col(idCol),
-        explode(QueryCosines.keyed(col(vecCol), col("cell_id"), table, probing)).as("_s")))
+        explode(QueryCosines.keyed(col(vecCol), col("cell_id"), table, probing)).as("_s")),
+      idCol, k), idCol)
     (exact, got)
   }
 

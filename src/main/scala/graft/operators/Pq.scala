@@ -252,41 +252,23 @@ object Pq {
                            indexDir: String, queries: DataFrame,
                            nprobe: Int, candidates: Int = 100, k: Int = 10,
                            recallFloor: Double = 0.9): Double = {
-    import graft.functions.VectorFunctions.cosine
-    import org.apache.spark.sql.expressions.Window
-    val qcols = queries.columns
-    require(qcols.length == 2,
-      s"writeIvfPqIndexGated: queries must be (query_id, vector), got ${qcols.toSeq}")
-    val qDf = queries.select(col(qcols(0)).as("_qid"),
-      col(qcols(1)).cast("array<double>").as("_qv"))
-    val workload = qDf.collect()
-      .map(r => (r.get(0), r.getSeq[Double](1).toArray))
-    require(workload.nonEmpty,
-      "writeIvfPqIndexGated: the query workload produced zero probes — " +
-        "refusing to build a store that would publish ungated")
+    val table = Ann.gateQueryTable(queries, "writeIvfPqIndexGated")
     Ann.gatedPublish(spark, indexDir, recallFloor, "Pq.writeIvfPqIndexGated",
       s"nprobe=$nprobe, candidates=$candidates, k=$k, m=${cb.m}") { staging =>
       Ann.writeIvfIndex(assignedEncoded, staging)
     } { staged =>
-      // exact truth: one batched pass (workload broadcast, per-query
-      // window)
-      val w = Window.partitionBy("_qid").orderBy(desc("_sim"), col(idCol))
-      val exact = assignedEncoded.crossJoin(broadcast(qDf))
-        .withColumn("_sim", cosine(col(vecCol).cast("array<double>"), col("_qv")))
-        .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("_rn") <= k)
-        .select(col("_qid"), col(idCol))
-        .collect().groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(_.get(1)).toSet }
+      // exact truth: every row scored against the driver-held workload
+      // in one projection, keyed by query index
+      val exact = Ann.idSets(Ann.exactTopK(assignedEncoded, idCol, vecCol, table, k), idCol)
       // probe the STAGED store per query — the ADC + re-rank path a
       // serving consumer runs, partition pruning included
-      val got = workload.map { case (qid, qv) =>
-        qid -> ivfPqSearchPartitioned(spark, staged, idCol, vecCol, cb,
-            centroids, cIdCol, cVecCol, qv, topK = k,
+      val got: Map[Any, Set[Any]] = table.indices.map { qi =>
+        (qi: Any) -> ivfPqSearchPartitioned(spark, staged, idCol, vecCol, cb,
+            centroids, cIdCol, cVecCol, table(qi), topK = k,
             nprobe = nprobe, candidates = candidates)
           .select(col(idCol)).collect().map(_.get(0)).toSet
       }.toMap
-      Ann.meanRecall(exact, got.asInstanceOf[Map[Any, Set[Any]]], k,
-        "writeIvfPqIndexGated")
+      Ann.meanRecall(exact, got, k, "writeIvfPqIndexGated")
     }
   }
 

@@ -14,11 +14,11 @@ import graft.functions.VectorFunctions.{cosine, cosineGiven, l2Norm}
   * the √N codebook — [[Ann.assignCellsHier]] and
   * [[Ann.knnGraphLshBanded]]'s banding — wired in here because a 100 TB
   * pipeline hits semantic dedup on every ingest):
-  *  - assignment defaults to [[Ann.assignCells]] (one codegen'd
-  *    map-only argmax, zero shuffle, PlanSpec-pinned), which is N·|C|
+  *  - assignment is [[Ann.assignCellsMulti]] (one codegen'd map-only
+  *    `NearestCells` scan, zero shuffle), flat by default: N·|C|
   *    dots — fine for fixed small codebooks but N^1.5 at the production
-  *    |C| = ⌊√N⌋. Passing `nSupers` > 0 routes through
-  *    [[Ann.assignCellsHier]] instead: |S| + p·|C|/|S| dots per row
+  *    |C| = ⌊√N⌋. Passing `nSupers` > 0 routes it two-level, as
+  *    [[Ann.assignCellsHier]] does: |S| + p·|C|/|S| dots per row
   *    (~2·N^0.25 at |S| = ⌊√|C|⌋), still map-only, still deterministic
   *    at both levels so a SQL oracle replays every cell id;
   *  - the pairwise stage is an equi-join on `cell_id` (hash join, never
@@ -84,32 +84,22 @@ import graft.functions.VectorFunctions.{cosine, cosineGiven, l2Norm}
   */
 object SemanticDedup {
 
-  /** Flat or two-level cell assignment, normalized to
-    * (_id, _vec, cell_id) — `nSupers` > 0 selects
-    * [[Ann.assignCellsHier]] (see the object Scaladoc). At
-    * `cellProbes` > 1 the multi-probe assignment rides along as a
-    * `cell_ids` array (probe order; head = the primary cell, identical
-    * to the single-probe assignment bit-for-bit). */
+  /** Flat or two-level cell assignment ([[Ann.assignCellsMulti]]; `nSupers`
+    * > 0 selects two-level routing, see the object Scaladoc), normalized
+    * to (_id, _vec, cell_id). At `cellProbes` > 1 the multi-probe
+    * assignment rides along as a `cell_ids` array (probe order; head =
+    * the primary cell, identical to the single-probe assignment
+    * bit-for-bit). */
   private def assign(vecs: DataFrame, idCol: String, vecCol: String,
                      centroids: DataFrame, cIdCol: String, cVecCol: String,
                      nSupers: Int, superProbes: Int,
                      superVecs: Seq[Seq[Double]],
                      cellProbes: Int = 1,
                      probeMargin: Double = Double.PositiveInfinity): DataFrame = {
-    if (cellProbes > 1)
-      Ann.assignCellsMulti(vecs, idCol, vecCol, centroids, cIdCol, cVecCol,
-          cellProbes, nSupers, superProbes, superVecs, probeMargin)
-        .select(col(idCol).as("_id"), col(vecCol).as("_vec"),
-          col("cell_id"), col("cell_ids"))
-    else {
-      val a =
-        if (nSupers > 0)
-          Ann.assignCellsHier(vecs, idCol, vecCol, centroids, cIdCol, cVecCol,
-            nSupers, superProbes, superVecs)
-        else
-          Ann.assignCells(vecs, idCol, vecCol, centroids, cIdCol, cVecCol)
-      a.select(col(idCol).as("_id"), col(vecCol).as("_vec"), col("cell_id"))
-    }
+    val a = Ann.assignCellsMulti(vecs, idCol, vecCol, centroids, cIdCol, cVecCol,
+        cellProbes, nSupers, superProbes, superVecs, probeMargin)
+      .select(col(idCol).as("_id"), col(vecCol).as("_vec"), col("cell_id"), col("cell_ids"))
+    if (cellProbes > 1) a else a.drop("cell_ids")
   }
 
   /** Derive `probeMargin` from the corpus's OWN argmax-gap

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.CosineKernel
 
 /** The LFU semantic cache as a keyed streaming state operator (SURVEY.md
   * §2.H S-4) — the `flatMapGroupsWithState` form of the batch
@@ -40,13 +41,15 @@ object LfuCacheState {
                           entry_id: Long, response: String, freq: Long)
 
   /** Left-fold cosine with the reference's zero-norm guard — same
-    * arithmetic as VectorFunctions.cosine (app/main.py:59-64). */
-  private[streaming] def cosine(a: Seq[Double], b: Seq[Double]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-    val (sa, sb) = (math.sqrt(na), math.sqrt(nb))
-    if (sa == 0.0 || sb == 0.0) 0.0 else dot / (sa * sb)
+    * arithmetic as VectorFunctions.cosine (app/main.py:59-64), through
+    * [[CosineKernel]]'s dense fold. A dimension mismatch is refused, as
+    * the dot product refuses it, instead of scoring the common prefix. */
+  private[graft] def cosine(a: Seq[Double], b: Seq[Double]): Double = {
+    if (a.length != b.length) throw new IllegalArgumentException(
+      s"lfuCache: dimension mismatch (${a.length} vs ${b.length})")
+    val (x, y) = (a.toArray, b.toArray)
+    CosineKernel.cosine(CosineKernel.dot(x, Array.emptyIntArray, y, vFinite = false),
+      CosineKernel.norm(x), CosineKernel.norm(y))
   }
 
   /** One op against one state — the pure transition function. */

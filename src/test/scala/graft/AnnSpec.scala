@@ -1180,4 +1180,40 @@ class AnnSpec extends AnyFunSuite {
     assert(recalls.head < 1.0 && recalls.last == 1.0,
       s"the fixture must probe both a lossy and an exhaustive width: $recalls")
   }
+
+  test("assign* of each kind equal the old nearest-centroid scans on raw bits") {
+    val e = pinned
+    val cents = Ann.headCentroids(e, "vec_id", "embedding", 22)
+    val cRows = cents.orderBy("centroid_id")
+      .select(col("centroid_id"), col("centroid_vec").cast("array<double>")).collect()
+    val cids = cRows.map(_.get(0))
+    val codebook = cRows.map(_.getSeq[Double](1).toArray)
+    val vecs = e.select(col("vec_id"), col("embedding").cast("array<double>")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    val (superBook, membersOf) = OldNearest.routing(codebook, 4, Nil)
+    def rows(df: DataFrame, cols: String*) =
+      df.select("vec_id", cols: _*).collect().map(r => (vecs(r.getLong(0)), r))
+    for ((v, r) <- rows(Ann.assignCells(e, "vec_id", "embedding",
+        cents, "centroid_id", "centroid_vec"), "cell_id", "cell_sim")) {
+      val (i, sim) = OldNearest.centroid(v, codebook)
+      assert(r.get(1) == cids(i) && bits(r.getDouble(2)) == bits(sim))
+    }
+    for ((v, r) <- rows(Ann.assignCellsHier(e, "vec_id", "embedding",
+        cents, "centroid_id", "centroid_vec", nSupers = 4, superProbes = 2), "cell_id", "cell_sim")) {
+      val (i, sim) = OldNearest.hier(v, codebook, superBook, membersOf, 2)
+      assert(r.get(1) == cids(i) && bits(r.getDouble(2)) == bits(sim))
+    }
+    var runnerUps = 0
+    for ((v, r) <- rows(Ann.assignCellsMulti(e, "vec_id", "embedding",
+        cents, "centroid_id", "centroid_vec", cellProbes = 3, nSupers = 4, superProbes = 2,
+        probeMargin = 0.05), "cell_ids", "cell_id")) {
+      val old = OldNearest.cells(v, codebook, superBook, membersOf, 2, 3, 0.05).map(cids(_)).toSeq
+      assert(r.getSeq[Any](1) == old && r.get(2) == old.head)
+      runnerUps += old.length - 1
+    }
+    assert(runnerUps > 0, "the margin must keep some runner-up probes")
+    for ((v, r) <- rows(Ann.assignCellGaps(e, "vec_id", "embedding",
+        cents, "centroid_id", "centroid_vec"), "cell_gap"))
+      assert(bits(r.getDouble(1)) == bits(OldNearest.gap(v, codebook, Array.empty, Array.empty, 1)))
+  }
 }

@@ -113,4 +113,40 @@ class PqSpec extends AnyFunSuite {
     assert(!new java.io.File(dir + "__gate_staging").exists(),
       "refused build must clean its staging dir")
   }
+
+  test("gated IVF-PQ exact side: the query-table top-k equals the crossJoin formula on raw bits") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.VectorFunctions.cosine
+    val k = 10
+    val workload = index.filter(col("vec_id") % 50 === 7)
+      .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+    val qRows = workload.collect()
+    val table = qRows.map(_.getSeq[Double](1).toArray)
+    // the exact side the gate used to run: every query vector copied
+    // onto every row, one window per query id
+    val qDf = workload.select(col("qid").as("_qid"), col("qvec").cast("array<double>").as("_qv"))
+    val w = Window.partitionBy("_qid").orderBy(desc("_sim"), col("vec_id"))
+    val old = index.crossJoin(broadcast(qDf))
+      .withColumn("_sim", cosine(col("vec").cast("array<double>"), col("_qv")))
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") <= k)
+      .select(col("_qid"), col("vec_id"), col("_sim")).collect()
+      .map(r => (r.get(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSet
+    val now = Ann.exactTopK(index, "vec_id", "vec", table, k)
+      .select(col("_qi"), col("vec_id"), col("_sim")).collect()
+      .map(r => (qRows(r.getInt(0)).get(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSet
+    assert(old.size == table.length * k)
+    assert(now == old)
+    // a null query vector is refused before anything is staged
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_nullq").toString + "/s"
+    val withNull = workload.union(
+      Seq((-1L, null.asInstanceOf[Seq[Double]])).toDF("qid", "qvec"))
+    val err = intercept[IllegalArgumentException](
+      Pq.writeIvfPqIndexGated(spark, index, "vec_id", "vec", cb,
+        index.limit(4).select(col("vec_id").as("cid"), col("vec").as("cvec")),
+        "cid", "cvec", dir, withNull, nprobe = 1))
+    assert(err.getMessage.contains("null query vector"))
+    assert(!new java.io.File(dir).exists())
+  }
 }

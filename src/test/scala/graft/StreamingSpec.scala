@@ -408,4 +408,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(out(1L) == ("a b c", 3L))
     assert(out(2L) == ("hello world", 2L))
   }
+
+  test("streaming LFU cache refuses a dimension mismatch instead of scoring the common prefix") {
+    import graft.streaming.LfuCacheState
+    import graft.streaming.LfuCacheState.CacheOp
+    // the second op's first two components equal the cached entry, so a
+    // prefix fold scores 1.0 and calls it a hit
+    val ops = Seq(CacheOp("c", 1, Seq(1.0, 0.0), "r1"), CacheOp("c", 2, Seq(1.0, 0.0, 5.0), "r2"))
+    val err = intercept[Exception](LfuCacheState.lfuCache(ops.toDS(), 0.9, 4).collect())
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(e => String.valueOf(e.getMessage).contains("dimension mismatch")), err)
+    // equal widths: the old interleaved fold, bit for bit
+    def oldCosine(a: Seq[Double], b: Seq[Double]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+      val (sa, sb) = (math.sqrt(na), math.sqrt(nb))
+      if (sa == 0.0 || sb == 0.0) 0.0 else dot / (sa * sb)
+    }
+    val rnd = new scala.util.Random(7)
+    val vs = Seq.fill(20)(Seq.fill(9)(if (rnd.nextBoolean()) rnd.nextGaussian() else 0.0)) :+
+      Seq.fill(9)(0.0)
+    for (a <- vs; b <- vs) assert(java.lang.Double.doubleToRawLongBits(LfuCacheState.cosine(a, b)) ==
+      java.lang.Double.doubleToRawLongBits(oldCosine(a, b)))
+  }
 }
