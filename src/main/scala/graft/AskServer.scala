@@ -555,7 +555,7 @@ final class AskServer(spark: SparkSession, index: DataFrame,
 }
 
 /** Demo main: serve the sf0.001 corpus through the full pipeline
-  * (chunk → embed → warm graph index → HTTP), self-smoke two asks
+  * (chunk → embed → hot graph index → HTTP), self-smoke two asks
   * (miss then hit) against the live socket, print them, and exit —
   * CI-safe, loopback-only. `runMain graft.AskServer [--keep-alive]`
   * leaves the server up for manual poking. */
@@ -591,7 +591,8 @@ object AskServer {
     val gdir = java.nio.file.Files.createTempDirectory("askserver_graph").toString
     val h = operators.GraphIndex.build(spark, index, Seq("doc_id", "chunk_idx"),
       "embedding", gdir, nCentroids = 8, m = 8, nBuckets = 16, beamWidth = 8, hops = 3)
-    val srv = new AskServer(spark, index, graph = Some(operators.GraphIndex.warm(spark, h)))
+    val hot = operators.GraphIndex.hot(spark, h)
+    val srv = new AskServer(spark, index, graph = Some(hot))
     val port = srv.start()
     println(s"ASK SERVER listening on http://127.0.0.1:$port/ask")
     val http = java.net.http.HttpClient.newHttpClient()
@@ -606,6 +607,6 @@ object AskServer {
     println("ASK2: " + post("/ask", q).take(200))
     if (args.contains("--keep-alive")) {
       println("serving until killed"); Thread.currentThread().join()
-    } else { srv.stop(); spark.stop() }
+    } else { srv.stop(); hot.cool(); spark.stop() }
   }
 }

@@ -59,35 +59,14 @@ object PmcDemo {
       s"answerMatchesExact=${resG.answer == res.answer}")
     println("GRAPH ANSWER: " + resG.answer.take(300))
 
-    // WARM GRAPH ASK — the reference's steady state: HNSW resident in
-    // RAM, no disk access per /ask. warm() loads the store once (the
-    // serving-process startup cost); after that each hop filters cached
-    // batches instead of launching a parquet listing+scan job — the
-    // per-hop job overhead that made the cold walk lose to the exact
-    // scan at this corpus size.
-    val tW = System.nanoTime()
-    val wh = operators.GraphIndex.warm(spark, h)
-    println(f"GRAPH WARM (store load) in ${(System.nanoTime() - tW) / 1e9}%.1f s")
-    val tWA = System.nanoTime()
-    val (resW, _) = operators.AskPipeline.ask(spark, index, emptyCache, query,
-      queryVec = Some(qv), graph = Some(wh))
-    println(f"WARM GRAPH ASK fromCache=${resW.fromCache} in ${(System.nanoTime() - tWA) / 1e9}%.1f s " +
-      s"answerMatchesExact=${resW.answer == res.answer}")
-    // second warm ask on a fresh query vector: steady-state serving
-    // latency with codegen/caches hot
-    val tWA2 = System.nanoTime()
-    val (resW2, _) = operators.AskPipeline.ask(spark, index, emptyCache,
-      "role of leptin in appetite", queryVec = Some(operators.Embed.embedQueryTfIdf(
-        spark, "role of leptin in appetite", dfreq, nDocs2, dim = 1024)),
-      graph = Some(wh))
-    println(f"WARM GRAPH ASK2 fromCache=${resW2.fromCache} in ${(System.nanoTime() - tWA2) / 1e9}%.1f s")
-
-    // HOT (in-JVM) GRAPH ASK — round 15, the reference's architecture
-    // taken literally: the HNSW-analog is walked BY THE SERVING PROCESS
-    // (driver primitive arrays, zero Spark jobs per hop; visited sets
-    // bit-identical to the warm walk — GraphIndexSpec); per-ask Spark
-    // work is only the pruned sidecar re-attach + the pipeline's
-    // scalar tail. Same store, same answers.
+    // HOT (in-JVM) GRAPH ASK — the reference's steady state (HNSW
+    // resident in RAM, no disk access per /ask) taken literally: the
+    // HNSW-analog is walked BY THE SERVING PROCESS (driver primitive
+    // arrays, zero Spark jobs per hop; visited sets bit-identical to
+    // the cold walk — GraphIndexSpec); per-ask Spark work is only the
+    // pruned sidecar re-attach + the pipeline's scalar tail. hot()
+    // loads the store once (the serving-process startup cost). Same
+    // store, same answers.
     val tHot = System.nanoTime()
     val hotH = operators.GraphIndex.hot(spark, h)
     println(f"GRAPH HOT (array load) in ${(System.nanoTime() - tHot) / 1e9}%.1f s")
@@ -128,7 +107,7 @@ object PmcDemo {
 
     // LIVE WS SERVING LOOP — the reference's README demo (ws/ask,
     // app/main.py:650-735; README "What is Ghrelin?") driven end-to-end
-    // by a real JDK WebSocket client against the warm index: multi-turn
+    // by a real JDK WebSocket client against the hot index: multi-turn
     // asks on one chat, per-token frames, the evolving LFU cache
     // (capacity pinned to 2 so the demo also EXERCISES eviction: the
     // 3rd distinct query evicts the least-frequently-used entry, and
@@ -201,7 +180,7 @@ object PmcDemo {
           s"historyTurns=${rn.path("n_history_turns").asInt(-1)}")
       } finally srv.stop()
     }
-    wh.cool()
+    hotH.cool()
 
     // INDEX LIFECYCLE on the live store — the reference's delete-by-_id
     // plus OpenSearch's segment merge: erase the answer's top source

@@ -3,28 +3,32 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Serve-only latency benchmark for the warm graph index on the
+/** Serve-only latency benchmark for the resident graph index on the
   * reference's real corpus — the number the reference actually
   * publishes (`< 3.5 s` end-to-end ask, README.md:3,181) is a SERVING
   * latency, while the engine's bench rows for the graph family are
   * build-dominated (they construct the store inside the query so the
   * oracle can replay it). This main separates the two:
   *
-  *   ingest + build + warm ONCE (reported, not benchmarked), then
+  *   ingest + build + load ONCE (reported, not benchmarked), then
   *   measure the ask latency distribution over 64 in-domain queries
   *   at batch sizes 1 / 8 / 32 against a fresh (empty) cache per ask —
   *   retrieval latency, never cache-hit latency.
   *
   * Query vectors are pre-embedded outside the timers (the reference's
   * embed call is an external service; PmcDemo times it the same way),
-  * so the measured span is: cache probe → warm beam walk → sidecar
+  * so the measured span is: cache probe → resident beam walk → sidecar
   * re-attach → context assembly → prompt → generation stub.
+  *
+  * Tiers: the in-JVM `hot` tier by default (GraphIndex.hot); `text`
+  * adds its resident chunk-text map; `sharded [shards=K]` serves from
+  * the executor-pinned shards (GraphIndex.hotSharded, default K=4).
   *
   * Prints per-mode p50/p95/max and one machine-readable JSON line.
   * Run: `sbt "runMain graft.ServeBench"` (read-only on /root/reference).
   *
   * `runMain graft.ServeBench http` measures the LIVE serving surface
-  * instead: an [[AskServer]] over the same warm index, hit by real
+  * instead: an [[AskServer]] over the same resident index, hit by real
   * loopback HTTP clients at concurrency 1 / 4 / 8 / 16 (the reference
   * serves behind a 5-way semaphore, app/main.py:31,186). Each level
   * gets a fresh server (fresh cache — retrieval latency, not hit
@@ -134,7 +138,7 @@ object ServeBench {
         superProbes = 8,
         recallFloor = 0.9, recallQueries = 20, recallK = 10,
         recallQueriesDf = Some(qWorkload))
-    // `hot` serves from the in-JVM tier (GraphIndex.hot — zero Spark
+    // the default tier is the in-JVM one (GraphIndex.hot — zero Spark
     // jobs per hop; the per-ask Spark work left is the pruned sidecar
     // re-attach), the round-15 answer to the measured c≈8 knee whose
     // root cause was per-hop job scheduling, not data work.
@@ -150,23 +154,14 @@ object ServeBench {
     val tierName =
       if (args.contains("sharded")) s"sharded$nShards"
       else if (args.contains("text")) "hotText"
-      else if (args.contains("hot")) "hot"
-      else "warm"
+      else "hot"
     val wh: operators.GraphIndex.Serving =
       if (args.contains("sharded")) operators.GraphIndex.hotSharded(spark, h, nShards)
-      else if (args.contains("text")) operators.GraphIndex.hot(spark, h, residentText = true)
-      else if (args.contains("hot")) operators.GraphIndex.hot(spark, h)
-      else operators.GraphIndex.warm(spark, h)
-    println(f"SETUP chunks=$nChunks ingest+build+warm=${(System.nanoTime() - t0) / 1e9}%.1f s " +
+      else operators.GraphIndex.hot(spark, h, residentText = args.contains("text"))
+    println(f"SETUP chunks=$nChunks ingest+build+load=${(System.nanoTime() - t0) / 1e9}%.1f s " +
       f"build=${if (args.contains("flat")) "flat" else "servingGated"} " +
       f"tier=$tierName recall=$recall%.3f")
 
-    def coolServing(): Unit = wh match {
-      case w: operators.GraphIndex.Warm => w.cool()
-      case hh: operators.GraphIndex.Hot => hh.cool()
-      case sh: operators.GraphIndex.HotSharded => sh.cool()
-      case _ => ()
-    }
     val emptyCache = Seq.empty[(Long, Seq[Float], String, Int)]
       .toDF("entry_id", "embedding", "response", "freq")
 
@@ -181,7 +176,7 @@ object ServeBench {
     // opposite regime: per-ask dispatch overhead with no second JVM to
     // scale to — see SCALE.md r17).
     if (args.contains("retrieve")) {
-      coolServing() // tier-per-row below; the default tier is not used
+      wh.cool() // tier-per-row below; the default tier is not used
       // per-shard budget behavior at each K (the sf1 scale row reads
       // these against DefaultHotBudgetBytes — a refusal would name the
       // worst shard; these lines show the headroom)
@@ -191,18 +186,18 @@ object ServeBench {
           f"total=${e.sum / (1L << 20)}%,d MiB " +
           f"budget=${operators.GraphIndex.DefaultHotBudgetBytes / (1L << 20)}%,d MiB/shard")
       }
-      val tiers: Seq[(String, () => operators.GraphIndex.Serving, () => Unit)] =
+      val tiers: Seq[(String, () => operators.GraphIndex.Serving)] =
         Seq(
-          ("hot", () => operators.GraphIndex.hot(spark, h), () => ()),
-          ("sharded2", () => operators.GraphIndex.hotSharded(spark, h, 2), () => ()),
-          ("sharded4", () => operators.GraphIndex.hotSharded(spark, h, 4), () => ()),
-          ("sharded8", () => operators.GraphIndex.hotSharded(spark, h, 8), () => ()))
+          ("hot", () => operators.GraphIndex.hot(spark, h)),
+          ("sharded2", () => operators.GraphIndex.hotSharded(spark, h, 2)),
+          ("sharded4", () => operators.GraphIndex.hotSharded(spark, h, 4)),
+          ("sharded8", () => operators.GraphIndex.hotSharded(spark, h, 8)))
       val qdf = qWorkload.withColumnRenamed("qv", "qvec")
       // quality column: per-query top-3 overlap vs the UNSHARDED hot
       // tier — the measured price of the cross-shard clique confinement
       // on the real corpus (1.0 = the sharding changed no answer)
       var hotTop: Map[Long, Set[(String, Int)]] = Map.empty
-      val rows = tiers.map { case (name, mk, _) =>
+      val rows = tiers.map { case (name, mk) =>
         val tier = mk()
         def top(): Map[Long, Set[(String, Int)]] =
           tier.topKBatch(spark, qdf, "query_id", "qvec", 3,
@@ -226,12 +221,7 @@ object ServeBench {
         val thr = queries.length / best
         println(f"RETRIEVE $name%-9s 64-query batch min=$best%.3f s " +
           f"throughput=$thr%.2f ask/s top3_vs_hot=$vsHot%.3f")
-        tier match {
-          case t: operators.GraphIndex.Hot => t.cool()
-          case t: operators.GraphIndex.HotSharded => t.cool()
-          case t: operators.GraphIndex.Warm => t.cool()
-          case _ => ()
-        }
+        tier.cool()
         f""""$name":{"batch64_s":$best%.3f,"ask_per_sec":$thr%.2f,"top3_vs_hot":$vsHot%.3f}"""
       }
       println(s"""{"bench":"serve_retrieve_batch","corpus":"$corpusName","chunks":$nChunks,${rows.mkString(",")}}""")
@@ -241,7 +231,7 @@ object ServeBench {
     if (args.contains("http")) {
       httpConcurrencyBench(spark, index, wh, dfreq, nDocs, queries, nChunks,
         args, tierName, corpusName)
-      coolServing(); spark.stop(); return
+      wh.cool(); spark.stop(); return
     }
 
     // warmup: JIT + codegen + cached-batch touch, outside every timer
@@ -313,7 +303,7 @@ object ServeBench {
       f""""batch32":{"n":${b32.length},"p50":$b32p50%.3f,"p95":$b32p95%.3f,"max":$b32max%.3f},""" +
       f""""batch64":{"n":${b64.length},"p50":$b64p50%.3f,"p95":$b64p95%.3f,"max":$b64max%.3f},""" +
       f""""per_ask_p50":{"solo":$s50%.3f,"batch8":${b8p50 / 8}%.3f,"batch32":${b32p50 / 32}%.3f,"batch64":${b64p50 / 64}%.3f}}""")
-    coolServing()
+    wh.cool()
     spark.stop()
   }
 

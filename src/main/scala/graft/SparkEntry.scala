@@ -113,7 +113,7 @@ object SparkEntry {
     * _batch / _part each built the SAME 8-centroid store under a
     * different tmp name, and the delete/compact lifecycle pair both
     * built the same √N store. The pristine stores now build once per
-    * JVM per sfDir; read-only probes (warm layout, batched walk,
+    * JVM per sfDir; read-only probes (normalized layout, batched walk,
     * partition-pruned walk, mark-delete — tombstones live in a
     * SEPARATE sidecar dir, so the probe store stays pristine) read
     * them in place, and compaction (the one physical mutation) copies
@@ -146,7 +146,7 @@ object SparkEntry {
     }
 
     /** Pristine 8-centroid store (nBuckets=16, m=4) — the
-      * warm/batch/part probes' shared layout. */
+      * normalized/batch/part probes' shared layout. */
     def knn8(s: SparkSession, dir: String): String = {
       val idx = tmp("graft_knng8" + safe(dir))
       buildOnce(s, dir, "8|" + dir, idx, 8L)
@@ -1632,22 +1632,21 @@ object SparkEntry {
         .limit(10)
     }),
 
-    // WARM graph ANN serving: the same store-backed walk as
-    // q_ann_graph_part, but the edge list is persisted once and every
-    // hop filters cached batches (Ann.normalizedLookup — the
-    // GraphIndex.warm serving posture: the reference holds its HNSW in
-    // RAM and never touches disk per /ask). Same oracle: the lookup
-    // medium changes, the walk does not.
+    // Graph ANN over a persisted NORMALIZED layout: the same walk as
+    // q_ann_graph_part, but the edge ids and one vector row per node
+    // are persisted once and every hop filters cached batches
+    // (Ann.normalizedLookup). Same oracle: the lookup medium changes,
+    // the walk does not.
     "q_ann_graph_warm" -> ((s, dir) => {
       // shared pristine 8-centroid store ([[graphStores]] — built once
-      // per JVM): this row measures the WARM-layout normalization +
-      // resident walk, the serving path
+      // per JVM): this row measures the layout normalization + the walk
+      // over cached batches
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val cents = graphStores.cents(s, dir, 8)
       val idx = graphStores.knn8(s, dir)
-      // the NORMALIZED resident layout GraphIndex.warm serves from:
-      // (src,dst) ids + one vector row per node — O(|V|·dim + |E|) RAM
-      // instead of the store's denormalized O(|E|·dim)
+      // the NORMALIZED layout: (src,dst) ids + one vector row per node
+      // — O(|V|·dim + |E|) RAM instead of the store's denormalized
+      // O(|E|·dim)
       val raw = s.read.parquet(idx)
       val edgeIds = raw.select("src", "dst").persist()
       val vecs = raw.select("dst", "dst_vec").dropDuplicates("dst").persist()
@@ -4258,8 +4257,9 @@ object SparkEntry {
       // physical layout, never the walk
       "q_ann_graph_part" -> annGraphOracle,
 
-      // identical result contract again: warm serving changes the hop
-      // lookup medium (cached batches vs parquet reads), never the walk
+      // identical result contract again: the normalized layout changes
+      // the hop lookup medium (cached batches vs parquet reads), never
+      // the walk
       "q_ann_graph_warm" -> annGraphOracle,
 
       // Fixed-codebook PQ search: ADC top-100 candidates, exact cosine

@@ -890,26 +890,17 @@ object Ann {
     * Frontiers and dedup are keyed by query, so a query's visited set
     * does not depend on its batch-mates. Each (query, src) is expanded
     * at most once per walk (a re-expansion yields pairs the visited set
-    * already holds); a hop with nothing new issues no lookup. Query ids
-    * must be distinct. */
+    * already holds); a hop with nothing new issues no lookup. The query
+    * table is read by [[queryTable]]. */
   def graphSearch(spark: SparkSession, lookup: Seq[Long] => DataFrame,
                   centroids: DataFrame, cIdCol: String, cVecCol: String,
                   queries: DataFrame, qIdCol: String, qVecCol: String,
                   beamWidth: Int, hops: Int): DataFrame = {
     import spark.implicits._
     import graft.functions.QueryCosines
-    // the workload is request-sized by contract: ONE collect puts the
-    // query table on the driver, and every scoring pass below ships it
-    // inside the expression
-    val qRows = queries.select(col(qIdCol).cast("long"),
-        col(qVecCol).cast("array<double>"))
-      .collect()
-    require(qRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
-      "Ann.graphSearch: null query id or vector")
-    val qids = qRows.map(_.getLong(0))
-    require(qids.distinct.length == qids.length,
-      "Ann.graphSearch: query ids must be distinct")
-    val table = qRows.map(_.getSeq[Double](1).toArray)
+    // every scoring pass below ships the driver-held table inside the
+    // expression
+    val (qids, table) = queryTable(queries, qIdCol, qVecCol)
     val visited = Array.fill(qids.length)(scala.collection.mutable.HashMap.empty[Long, Double])
     def fold(scored: DataFrame): Unit = scored
       .select(col("id"), col("_s.qi"), col("_s.sim")).collect()
@@ -941,6 +932,24 @@ object Ann {
       .toDF("query_id", "vec_id", "sim")
   }
 
+  /** The one read of a walk's query table, shared by every walk — the
+    * Spark walk, the resident tiers' `searchBatch` and
+    * `GraphIndex.measureRecall`. The workload is request-sized by
+    * contract, so ONE collect puts it on the driver. A null id or
+    * vector refuses, and so does a repeated id: two rows under one id
+    * would be walked apart and merged under it, ranking the same chunk
+    * twice. Returns the ids and vectors by position. */
+  private[graft] def queryTable(queries: DataFrame, qIdCol: String,
+                                qVecCol: String): (Array[Long], Array[Array[Double]]) = {
+    val rows = queries.select(col(qIdCol).cast("long"), col(qVecCol).cast("array<double>"))
+      .collect()
+    require(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+      "query table: null query id or vector")
+    val ids = rows.map(_.getLong(0))
+    require(ids.distinct.length == ids.length, "query table: query ids must be distinct")
+    (ids, rows.map(_.getSeq[Double](1).toArray))
+  }
+
   /** Each query's `n` nearest rows of a (codebook-sized) centroid
     * table, scored against the driver-held query `table` in one pass:
     * (id, _s.qi, _s.sim, _rn), ties broken by id ascending. */
@@ -965,11 +974,11 @@ object Ann {
   def edgeLookup(edges: DataFrame): Seq[Long] => DataFrame =
     frontier => edges.filter(col("src").isin(frontier.map(Long.box): _*))
 
-  /** Hop lookup over the NORMALIZED resident layout of
-    * [[GraphIndex.Warm]]: `edgeIds` is (src, dst) and `vecs` ONE (dst,
-    * dst_vec) row per node, O(|V|·dim + |E|) instead of the store's
-    * denormalized O(|E|·dim). The frontier's edges join the node table,
-    * which reproduces exactly the denormalized rows. */
+  /** Hop lookup over a NORMALIZED layout: `edgeIds` is (src, dst) and
+    * `vecs` ONE (dst, dst_vec) row per node, O(|V|·dim + |E|) instead
+    * of the store's denormalized O(|E|·dim). The frontier's edges join
+    * the node table, which reproduces exactly the denormalized rows.
+    * Serves q_ann_graph_warm and AnnSpec's lookup-parity cases. */
   def normalizedLookup(edgeIds: DataFrame, vecs: DataFrame): Seq[Long] => DataFrame =
     frontier => edgeLookup(edgeIds)(frontier).join(vecs, "dst")
 

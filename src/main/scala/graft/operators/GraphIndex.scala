@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * pass the clash probe before either's sidecar row lands), and
   * compact/rebuild stage-and-overwrite whole bucket dirs — an append
   * interleaved with the overwrite would be silently dropped. Readers
-  * (cold handles, warm/hot snapshots) are unaffected; serialize the
+  * (cold handles, hot/sharded snapshots) are unaffected; serialize the
   * WRITERS (one ingestion driver per store — the streaming loop's
   * shape, [[graft.streaming.StreamingDedup]]).
   */
@@ -38,12 +38,14 @@ object GraphIndex {
 
   /** Anything the ask pipeline can retrieve against: the cold
     * store-backed [[Handle]] (every hop is a partition-pruned parquet
-    * read) or the RAM-resident [[Warm]] (the reference's actual serving
-    * posture — app/main.py loads its HNSW once at startup and serves
-    * every /ask from memory). Both produce identical rows for the same
-    * store by construction (the walk and re-attach are shared; only the
-    * lookup medium differs), so `AskPipeline.ask(graph = …)` accepts
-    * either. */
+    * read — the oracle-gated reference walk), or a resident tier —
+    * [[Hot]] (the graph in the serving JVM, the reference's actual
+    * posture: app/main.py loads its HNSW once at startup and serves
+    * every /ask from memory) or [[HotSharded]] (the graph pinned in
+    * executor shards, past the driver budget). Every tier produces the
+    * cold walk's rows for the same store (GraphIndexSpec pins Hot to
+    * the Handle on raw bits, and HotSharded at one shard to Hot), so
+    * `AskPipeline.ask(graph = …)` accepts any of them. */
   sealed trait Serving {
     def handle: Handle
 
@@ -71,10 +73,11 @@ object GraphIndex {
 
     /** Batched serving — many queries walk the store TOGETHER (the
       * reference holds N open ask sessions against one HNSW,
-      * app/main.py:616-647). One edge lookup per hop serves the union
-      * of every query's frontier and ONE pruned sidecar read
-      * re-attaches all visited sets; returns (query_id, chunk columns,
-      * sim). */
+      * app/main.py:616-647), and ONE pruned sidecar read re-attaches
+      * all visited sets; returns (query_id, chunk columns, sim). The
+      * query table is request-sized and read once through
+      * [[Ann.queryTable]]: a null id or vector, or a repeated id,
+      * refuses on every tier. */
     def searchBatch(spark: SparkSession, queries: DataFrame,
                     qIdCol: String, qVecCol: String): DataFrame
 
@@ -99,39 +102,36 @@ object GraphIndex {
         .drop("uid", "cell_id")
     }
 
-    /** Tombstone filter for a walk's visited set — [[GraphIndex.delete]]
-      * marks live here until [[GraphIndex.compact]] applies them
-      * physically. Marked nodes still ROUTE the walk (the HNSW
-      * mark-delete discipline — unlinking mid-serve could strand graph
-      * regions); this is the serve-time gate that keeps them out of
-      * results. Cold reads the (bucket-pruned) mark store per query;
-      * [[Warm]] snapshots it at warm time. */
-    protected def dropTombstoned(spark: SparkSession, visited: DataFrame): DataFrame
+    /** Release what this tier holds resident (a no-op on the cold
+      * [[Handle]], which holds nothing). */
+    def cool(): Unit = ()
+  }
 
-    /** Shared sidecar re-attach: the visited set is KB-scale
-      * (beam·degree·hops rows per query), so prune the sidecar to its
-      * uid buckets (partition pruning at the file listing cold;
-      * cached-batch stats skip warm — without this the re-attach is a
-      * full corpus scan per query, undoing the walk's whole point),
-      * then broadcast-join so nothing shuffles. */
-    protected def attach(chunks: DataFrame, visited0: DataFrame): DataFrame = {
-      val visited = dropTombstoned(chunks.sparkSession, visited0)
-      val ids = visited.select("vec_id").distinct().collect().map(_.getLong(0))
-      val nb = handle.nBuckets
-      val buckets = ids.map(id => Long.box(((id % nb) + nb) % nb)).distinct
-      chunks.filter(col("uid_bucket").isin(buckets: _*))
-        .join(broadcast(visited.withColumnRenamed("vec_id", "uid")), "uid")
-        .drop("uid_bucket")
-    }
+  /** Sidecar re-attach of a visited set (`uid`, `sim`, maybe
+    * `query_id`): the set is KB-scale (beam·degree·hops rows per
+    * query), so prune the sidecar to its uid buckets (partition pruning
+    * at the file listing; cached-batch stats skip on a persisted
+    * sidecar — without this the re-attach is a full corpus scan per
+    * query, undoing the walk's whole point), then broadcast-join so
+    * nothing shuffles. */
+  private def attach(chunks: DataFrame, nBuckets: Int,
+                     visited: DataFrame, ids: Seq[Long]): DataFrame = {
+    val buckets = ids.map(id =>
+      Long.box(((id % nBuckets) + nBuckets) % nBuckets)).distinct
+    chunks.filter(col("uid_bucket").isin(buckets: _*))
+      .join(broadcast(visited), "uid")
+      .drop("uid_bucket")
   }
 
   /** A built store: everything needed to search lives under `dir`
     * (`edges/` src-bucketed, `chunks/` uid-bucketed id→row sidecar with
     * the cell assignment, `centroids/`), so a handle is just the
     * location + layout/build constants — serving processes re-open it
-    * without re-reading the corpus. Search here is the COLD path:
-    * every hop launches a partition-pruned parquet read. [[warm]] it
-    * for resident serving. */
+    * without re-reading the corpus. Search here is the COLD path and
+    * the reference every resident tier is pinned to: the one Spark
+    * beam walk ([[Ann.graphSearch]] over [[Ann.storeLookup]]), every
+    * hop a partition-pruned parquet read, marks read live per query.
+    * [[hot]] or [[hotSharded]] it for resident serving. */
   final case class Handle(dir: String, nBuckets: Int,
                           beamWidth: Int = 8, hops: Int = 3, m: Int = 4,
                           vecCol: String = "embedding")
@@ -148,64 +148,18 @@ object GraphIndex {
 
     def searchBatch(spark: SparkSession, queries: DataFrame,
                     qIdCol: String, qVecCol: String): DataFrame = {
-      val visited = Ann.graphSearch(spark, Ann.storeLookup(spark, edgesDir, nBuckets),
-        centroids(spark), "centroid_id", "centroid_vec",
-        queries, qIdCol, qVecCol, beamWidth, hops)
-      attach(chunks(spark), visited)
-    }
-
-    protected def dropTombstoned(spark: SparkSession, visited: DataFrame): DataFrame =
-      Ann.filterTombstoned(spark, visited, "vec_id", tombstonesDir, nBuckets)
-  }
-
-  /** A RAM-resident serving handle — the reference's steady state: its
-    * HNSW lives in process memory and every /ask is served without
-    * touching disk (app/main.py:262-283 loads the index once at
-    * startup). [[GraphIndex.warm]] reads each store component ONCE,
-    * persists it, and materializes the cache eagerly so the first ask
-    * doesn't pay the load; after that a hop's lookup filters cached
-    * batches (in-memory min/max stats skip non-frontier batches)
-    * instead of launching a parquet listing + scan job per hop — the
-    * per-query job overhead that made the cold walk lose to an exact
-    * scan at demo scale. The resident copy is NORMALIZED — (src, dst)
-    * id pairs plus ONE vector row per node — so RAM is
-    * O(|V|·dim + |E|), not the store's denormalized O(|E|·dim) (m×
-    * larger; at 1024-dim × m=16 the difference between ~300 MB and an
-    * ~9 GB cache for a 33k-chunk corpus), and MEMORY_AND_DISK spills
-    * gracefully if a 100 TB corpus's graph still exceeds cluster RAM.
-    * The chunk sidecar (text + vectors — corpus-scale) is cached only
-    * when `warm(cacheChunks = true)`: right for serving tiers that fit
-    * it, while `cacheChunks = false` keeps the one per-query sidecar
-    * access a partition-pruned disk read (the 100 TB posture).
-    *
-    * A Warm is an immutable SNAPSHOT: rows [[GraphIndex.insert]]ed
-    * after warming are invisible to it until the caller re-warms
-    * (cold [[Handle]] reads see appends immediately) — the same
-    * refresh discipline as any serving replica behind a live index. */
-  final case class Warm(handle: Handle, edges: DataFrame, vecs: DataFrame,
-                        chunks: DataFrame, cents: DataFrame,
-                        tombs: Option[DataFrame] = None) extends Serving {
-    def searchBatch(spark: SparkSession, queries: DataFrame,
-                    qIdCol: String, qVecCol: String): DataFrame =
-      attach(chunks, Ann.graphSearch(spark, Ann.normalizedLookup(edges, vecs),
-        cents, "centroid_id", "centroid_vec",
-        queries, qIdCol, qVecCol, handle.beamWidth, handle.hops))
-
-    protected def dropTombstoned(spark: SparkSession, visited: DataFrame): DataFrame =
-      tombs match {
-        // snapshot discipline, like every other Warm component: deletes
-        // marked after warming are invisible until re-warm. No broadcast
-        // hint: the planner sees the cached frame's true size, and a
-        // mark set grown past the threshold should shuffle, not OOM.
-        case Some(t) => visited.join(
-          t.select(col("tomb_id").as("vec_id")), Seq("vec_id"), "left_anti")
-        case None => visited
-      }
-
-    /** Release the cached store (a no-op on never-cached components). */
-    def cool(): Unit = {
-      edges.unpersist(); vecs.unpersist(); cents.unpersist(); chunks.unpersist()
-      tombs.foreach(_.unpersist())
+      // [[delete]] marks live in the mark store until [[compact]]
+      // applies them physically: marked nodes still ROUTE the walk (the
+      // HNSW mark-delete discipline — unlinking mid-serve could strand
+      // graph regions), and this bucket-pruned read keeps them out of
+      // the results
+      val visited = Ann.filterTombstoned(spark,
+        Ann.graphSearch(spark, Ann.storeLookup(spark, edgesDir, nBuckets),
+          centroids(spark), "centroid_id", "centroid_vec",
+          queries, qIdCol, qVecCol, beamWidth, hops),
+        "vec_id", tombstonesDir, nBuckets)
+      val ids = visited.select("vec_id").distinct().collect().map(_.getLong(0))
+      attach(chunks(spark), nBuckets, visited.withColumnRenamed("vec_id", "uid"), ids.toSeq)
     }
   }
 
@@ -300,9 +254,9 @@ object GraphIndex {
     * per occurrence, as `sortBy.take(beam)` does, and is visited once);
     * then `hops` rounds of top-beam frontier expansion, each visited
     * node scored once with the ascending-fold cosine. Returns the full
-    * visited set, UNFILTERED (tombstone snapshots are a tier concern —
-    * [[Hot]] filters driver-side, [[HotSharded]] after the collect — so
-    * the walk itself stays a pure function of (arrays, entries, query)).
+    * visited set, UNFILTERED (the tombstone snapshot is a tier concern,
+    * applied once in [[Resident]]'s search, so the walk itself stays a
+    * pure function of (arrays, entries, query)).
     *
     * Cost: the dot folds only the query's nonzero dimensions when every
     * node vector is finite (the [[CosineKernel]] sparse-query rule,
@@ -365,48 +319,71 @@ object GraphIndex {
     visited
   }
 
-  /** The resident tiers' sidecar re-attach: [[Serving.attach]] minus
-    * its distinct().collect() job — the visited ids are already in the
-    * driver JVM, so the bucket list comes straight off them. Same
-    * pruned filter + broadcast join, same output columns. */
-  private def attachResident(chunksDf: DataFrame, nBuckets: Int,
-                             visited: DataFrame, ids: Seq[Long]): DataFrame = {
-    val buckets = ids.map(id =>
-      Long.box(((id % nBuckets) + nBuckets) % nBuckets)).distinct
-    chunksDf.filter(col("uid_bucket").isin(buckets: _*))
-      .join(broadcast(visited), "uid")
-      .drop("uid_bucket")
+  /** The resident tiers' one search path. A tier supplies only its
+    * walk ([[walkAll]] — in this JVM for [[Hot]], fanned out over
+    * executor shards for [[HotSharded]]); the query-table read, the
+    * snapshot's tombstone filter and the sidecar re-attach are shared,
+    * so the tiers differ in where the graph lives and nothing else.
+    * The visited ids are already in the driver JVM, so the re-attach's
+    * bucket list comes straight off them — no distinct().collect() job,
+    * unlike the cold [[Handle]]. Each tier is an immutable SNAPSHOT:
+    * inserts/deletes after the load are invisible until it is re-made
+    * ([[Serving.isStale]] says when). */
+  private[graft] sealed trait Resident extends Serving {
+    /** The chunk sidecar, persisted at load; released by [[cool]]. */
+    protected def chunksDf: DataFrame
+    /** The tombstone marks at load time ([[tombSnapshot]]). */
+    protected def tombs: java.util.HashSet[java.lang.Long]
+
+    /** Every query's full visited set, (query position, uid, sim),
+      * before the tombstone filter. */
+    protected def walkAll(qVecs: Array[Array[Double]]): Seq[(Int, Long, Double)]
+
+    private def live(rows: Seq[(Int, Long, Double)]): Seq[(Int, Long, Double)] =
+      if (tombs.isEmpty) rows else rows.filterNot(r => tombs.contains(r._2))
+
+    override def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame = {
+      import spark.implicits._
+      val rows = live(walkAll(Array(queryVec.toArray))).map(r => (r._2, r._3))
+      attach(chunksDf, handle.nBuckets, rows.toDF("uid", "sim"), rows.map(_._1))
+    }
+
+    def searchBatch(spark: SparkSession, queries: DataFrame,
+                    qIdCol: String, qVecCol: String): DataFrame = {
+      import spark.implicits._
+      val (ids, vecs) = Ann.queryTable(queries, qIdCol, qVecCol)
+      val all = live(walkAll(vecs)).map(r => (ids(r._1), r._2, r._3))
+      attach(chunksDf, handle.nBuckets, all.toDF("query_id", "uid", "sim"), all.map(_._2))
+    }
+
+    override def cool(): Unit = { chunksDf.unpersist(); () }
   }
 
-  /** The IN-PROCESS serving tier — [[Warm]] taken to its conclusion:
-    * the reference's HNSW is a plain in-memory graph walked by the
-    * serving PROCESS (app/main.py:262-283 — no cluster in the hot
-    * path), and this is that posture on the driver JVM. [[Warm]] keeps
-    * the store resident in EXECUTOR caches but still schedules one
-    * Spark job per hop (frontier filter + join + collect) — measured
-    * as the entire c≈8 admission knee in SCALE.md: per-job driver
-    * scheduling, not data work, dominates a ~1 ms walk into ~1.2 s of
-    * wall-clock. Hot collects the SAME normalized layout
-    * (O(|V|·dim + |E|) — the node vectors and id pairs, never the
-    * denormalized edge vectors, never the chunk text) into primitive
-    * arrays once at warm-up and walks them with zero jobs per hop; the
-    * only Spark work left per ask is the sidecar re-attach (a pruned,
-    * broadcast join — the chunk TEXT stays distributed, which is what
-    * keeps this honest at 100 TB: index-scale state in the serving
-    * process, corpus-scale state on the cluster, exactly the
-    * reference's OpenSearch split).
+  /** The IN-PROCESS serving tier: the reference's HNSW is a plain
+    * in-memory graph walked by the serving PROCESS (app/main.py:262-283
+    * — no cluster in the hot path), and this is that posture on the
+    * driver JVM. A Spark walk schedules jobs per hop (the frontier
+    * read + scoring + collect), and SCALE.md measured that per-job
+    * driver scheduling, not data work, as the c≈8 admission knee: a
+    * ~1 ms walk took ~1.2 s of wall-clock. Hot collects
+    * the store's NORMALIZED layout (O(|V|·dim + |E|) — the node vectors
+    * and id pairs, never the denormalized edge vectors, never the chunk
+    * text) into primitive arrays once at load and walks them with zero
+    * jobs per hop; the only Spark work left per ask is the sidecar
+    * re-attach (a pruned, broadcast join — the chunk TEXT stays
+    * distributed, which is what keeps this honest at 100 TB:
+    * index-scale state in the serving process, corpus-scale state on
+    * the cluster, exactly the reference's OpenSearch split).
     *
-    * The walk reproduces the [[Warm]] tier's visited set
-    * ([[Ann.graphSearch]] over [[Ann.normalizedLookup]]) BIT-FOR-BIT
-    * (GraphIndexSpec pins equality): same ascending-fold cosine, same
-    * (sim desc, id asc) entry/frontier ordering, same hop count. The
-    * fold runs over only the query's
-    * nonzero dimensions while every node vector is finite (the
-    * [[CosineKernel]] sparse-query rule — bit-identical to the dense
-    * fold under that precondition; a graph holding a NaN or ±Inf
-    * component folds dense). Like [[Warm]] it is an immutable
-    * SNAPSHOT — inserts/deletes after [[hot]] are invisible until
-    * re-hot. */
+    * The walk reproduces the cold [[Handle]]'s visited set
+    * ([[Ann.graphSearch]] over [[Ann.storeLookup]]) BIT-FOR-BIT
+    * (GraphIndexSpec pins equality on raw bits): same ascending-fold
+    * cosine, same (sim desc, id asc) entry/frontier ordering, same hop
+    * count. The fold runs over only the query's nonzero dimensions
+    * while every node vector is finite (the [[CosineKernel]]
+    * sparse-query rule — bit-identical to the dense fold under that
+    * precondition; a graph holding a NaN or ±Inf component folds
+    * dense). */
   final class Hot private[GraphIndex] (
       val handle: Handle,
       nodeIds: Array[Long],
@@ -414,12 +391,12 @@ object GraphIndex {
       nodeNorms: Array[Double],
       adj: Array[Array[Int]],
       centIdxs: Array[Int],
-      tombs: java.util.HashSet[java.lang.Long],
+      protected val tombs: java.util.HashSet[java.lang.Long],
       idToIdx: java.util.HashMap[java.lang.Long, Integer],
-      chunksDf: DataFrame, chunksCached: Boolean,
+      protected val chunksDf: DataFrame,
       textMap: Option[java.util.HashMap[java.lang.Long, (Any, Long, String)]] = None,
       stamp: Option[String] = None)
-      extends Serving {
+      extends Resident {
 
     override def loadStamp: Option[String] = stamp
 
@@ -471,53 +448,14 @@ object GraphIndex {
         top.take(n).toSeq
       }
 
-    /** One query's full visited set — the in-JVM twin of one query's
-      * [[Ann.graphSearch]]; pure driver compute, zero Spark jobs. The
-      * algorithm lives in [[GraphIndex.walkArrays]] (shared with the
-      * [[HotSharded]] executor walk so the two tiers cannot drift). */
-    private def walk(queryVec: Seq[Double]): Seq[(Long, Double)] =
-      walkArrays(arrays, centIdxs, queryVec.toArray,
-        handle.beamWidth, handle.hops)
-        // the tombstone gate, applied here instead of dropTombstoned
-        // (same snapshot semantics as Warm's anti-join)
-        .filterNot { case (id, _) => tombs.contains(id) }
-
-    /** [[Serving.attach]] minus its distinct().collect() job: the walk's
-      * visited ids are already in this JVM, so the bucket list comes
-      * straight off them — one fewer driver-scheduled job per ask (the
-      * entire point of this tier is per-ask job count). Same pruned
-      * filter + broadcast join, same output columns. */
-    private def attachIds(visited: DataFrame, ids: Seq[Long]): DataFrame =
-      attachResident(chunksDf, handle.nBuckets, visited, ids)
-
-    override def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame = {
-      import spark.implicits._
-      val rows = walk(queryVec)
-      attachIds(rows.toDF("uid", "sim"), rows.map(_._1))
-    }
-
-    def searchBatch(spark: SparkSession, queries: DataFrame,
-                    qIdCol: String, qVecCol: String): DataFrame = {
-      import spark.implicits._
-      // the workload is request-sized by contract (the reference holds
-      // N open sessions, not a corpus of queries) — collect it and walk
-      // each in-JVM; one attach serves every query's visited set
-      val qs = queries.select(col(qIdCol).cast("long"),
-          col(qVecCol).cast("array<double>"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-      val all = qs.toSeq.flatMap { case (qid, qv) =>
-        walk(qv).map { case (id, s) => (qid, id, s) }
+    /** Each query walked in this JVM by [[walkArrays]] (shared with the
+      * [[HotSharded]] executor walk so the two tiers cannot drift);
+      * pure driver compute, zero Spark jobs. */
+    protected def walkAll(qVecs: Array[Array[Double]]): Seq[(Int, Long, Double)] =
+      qVecs.indices.flatMap { qi =>
+        walkArrays(arrays, centIdxs, qVecs(qi), handle.beamWidth, handle.hops)
+          .map { case (id, s) => (qi, id, s) }
       }
-      attachIds(all.toDF("query_id", "uid", "sim"), all.map(_._2))
-    }
-
-    // the walk already filtered the snapshot's marks
-    protected def dropTombstoned(spark: SparkSession, visited: DataFrame): DataFrame =
-      visited
-
-    /** Release the cached chunk sidecar (driver arrays go with the
-      * object; a no-op when `cacheChunks = false`). */
-    def cool(): Unit = if (chunksCached) { chunksDf.unpersist(); () }
   }
 
   /** Default driver-RAM budget for [[hot]]: 8 GiB of estimated layout.
@@ -578,15 +516,14 @@ object GraphIndex {
   /** Collect a built store's NORMALIZED layout into driver-JVM arrays
     * for [[Hot]] serving (index-scale only: node ids + vectors +
     * adjacency + centroid list + mark snapshot — never chunk text,
-    * never denormalized edge vectors). `cacheChunks` governs the
-    * re-attach sidecar exactly as in [[warm]]: cache it for tiers
-    * that fit it, leave it a pruned disk read at 100 TB.
+    * never denormalized edge vectors); the re-attach sidecar is
+    * persisted alongside.
     *
     * Each store component (chunks, centroids, edges) is read — listed,
     * schema resolved — ONCE, and that one read serves the estimates,
-    * the counts, the collects and the persist. With `cacheChunks` the
-    * chunk sidecar is persisted before the node collect, so that
-    * collect fills the cache instead of a separate count pass. The
+    * the counts, the collects and the persist. The chunk sidecar is
+    * persisted before the node collect, so that collect fills the
+    * cache instead of a separate count pass. The
     * staleness stamp ([[storeStamp]]) is taken before those reads, as
     * each read lists its files when it is made.
     *
@@ -594,15 +531,15 @@ object GraphIndex {
     * store's own row counts × dim — no data read) must fit
     * `budgetBytes` or hot() REFUSES with the numbers, before any
     * collect — the [[Ann.gatedPublish]] discipline applied to driver
-    * RAM. An index past the budget belongs on the [[warm]] tier (or a
-    * sharded hot tier); an OOM mid-startup is never the answer.
+    * RAM. An index past the budget belongs on the sharded tier; an
+    * OOM mid-startup is never the answer.
     *
     * Past both this budget and the single-JVM ~11 ask/s knee, the
     * SHARDED tier is [[hotSharded]]: nodes partitioned by cell group
     * into executor-pinned shards, queries fanned out as one job to the
     * shards their entry centroids name, per-shard RAM under this same
     * budget by construction. */
-  def hot(spark: SparkSession, h: Handle, cacheChunks: Boolean = true,
+  def hot(spark: SparkSession, h: Handle,
           budgetBytes: Long = DefaultHotBudgetBytes,
           residentText: Boolean = false,
           textBudgetBytes: Long = DefaultHotBudgetBytes): Hot = {
@@ -621,9 +558,9 @@ object GraphIndex {
         f"GraphIndex.hot: estimated driver layout $est%,d bytes " +
           f"(~${est / (1L << 20)}%,d MiB) exceeds the budget $budgetBytes%,d " +
           f"(~${budgetBytes / (1L << 20)}%,d MiB) — refusing before any " +
-          "collect. Serve this store from warm() (executor-resident), " +
-          "shard it, or raise budgetBytes deliberately if the driver " +
-          "really has the headroom.")
+          "collect. Serve this store from hotSharded (per-shard budget), " +
+          "or raise budgetBytes deliberately if the driver really has " +
+          "the headroom.")
     if (residentText) {
       val tEst = hotTextBytesOf(chunks)
       if (tEst > textBudgetBytes)
@@ -635,9 +572,7 @@ object GraphIndex {
             "(the attach join stays pruned + broadcast) or raise the " +
             "budget deliberately.")
     }
-    val chunksDf =
-      if (cacheChunks) chunks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else chunks
+    val chunksDf = chunks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodeRows = chunksDf
       .select(col("uid").cast("long"), col(h.vecCol).cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -646,8 +581,9 @@ object GraphIndex {
         col("centroid_vec").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     // node universe = chunk rows ∪ centroid rows (compacted-away
-    // structural marks keep routing, as in warm's vecs union; chunk
-    // version wins on overlap — values identical by construction)
+    // structural marks keep routing, as they do in the cold walk's
+    // denormalized edges; chunk version wins on overlap — values
+    // identical by construction)
     val seen = new java.util.HashMap[java.lang.Long, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
     val vecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
@@ -670,12 +606,7 @@ object GraphIndex {
       if (si != null && di != null) adjBuf(si.intValue()) += di.intValue()
     }
     val centIdxs = centRows.map { case (id, _) => seen.get(Long.box(id)).intValue() }
-    val tombPath = new org.apache.hadoop.fs.Path(h.tombstonesDir)
-    val tombFs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombs = new java.util.HashSet[java.lang.Long]()
-    if (tombFs.exists(tombPath))
-      spark.read.parquet(h.tombstonesDir).select(col("tomb_id").cast("long"))
-        .collect().foreach(r => tombs.add(Long.box(r.getLong(0))))
+    val tombs = tombSnapshot(spark, h)
     // the resident-text map (budget-checked above): serving-schema
     // columns only, types pinned to what the fused tail can order
     // (string/integral doc ids, non-null idx/text) — anything else
@@ -707,7 +638,20 @@ object GraphIndex {
         Some(tm)
       }
     new Hot(h, ids.toArray, vecs.toArray, norms, adjBuf.map(_.toArray),
-      centIdxs, tombs, seen, chunksDf, cacheChunks, textMap, Some(stamp))
+      centIdxs, tombs, seen, chunksDf, textMap, Some(stamp))
+  }
+
+  /** The store's tombstone marks as a driver-side set — the snapshot
+    * [[hot]] and [[hotSharded]] filter their walks by (empty when
+    * nothing was ever deleted). */
+  private def tombSnapshot(spark: SparkSession, h: Handle): java.util.HashSet[java.lang.Long] = {
+    val tombPath = new org.apache.hadoop.fs.Path(h.tombstonesDir)
+    val tombFs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tombs = new java.util.HashSet[java.lang.Long]()
+    if (tombFs.exists(tombPath))
+      spark.read.parquet(h.tombstonesDir).select(col("tomb_id").cast("long"))
+        .collect().foreach(r => tombs.add(Long.box(r.getLong(0))))
+    tombs
   }
 
   /** The SHARDED executor-resident hot tier — [[Hot]]'s answer to both
@@ -753,9 +697,9 @@ object GraphIndex {
       centIds: Array[Long],
       centVecs: Array[Array[Double]],
       centShards: Array[Int],
-      tombs: java.util.HashSet[java.lang.Long],
-      chunksDf: DataFrame, chunksCached: Boolean,
-      stamp: Option[String] = None) extends Serving {
+      protected val tombs: java.util.HashSet[java.lang.Long],
+      protected val chunksDf: DataFrame,
+      stamp: Option[String] = None) extends Resident {
 
     override def loadStamp: Option[String] = stamp
 
@@ -794,16 +738,15 @@ object GraphIndex {
     }
 
     /** One fan-out job over the routed shards for a whole query batch:
-      * emits (query position, uid, sim) — tombstone filtering happens
-      * after the collect (snapshot semantics, like [[Hot]]). */
-    private def walkFanout(qVecs: Array[Array[Double]]): Array[(Int, Long, Double)] = {
+      * emits (query position, uid, sim). */
+    protected def walkAll(qVecs: Array[Array[Double]]): Seq[(Int, Long, Double)] = {
       val perShard: Map[Int, Seq[(Int, Array[Long])]] =
         qVecs.indices.flatMap { qi =>
           routeEntries(qVecs(qi)).groupBy(_._2).map {
             case (sid, es) => (sid, (qi, es.map(_._1).toArray))
           }
         }.groupBy(_._1).map { case (sid, xs) => (sid, xs.map(_._2)) }
-      if (perShard.isEmpty) return Array.empty
+      if (perShard.isEmpty) return Nil
       val touched = perShard.keySet
       val beam = handle.beamWidth
       val hops = handle.hops
@@ -816,41 +759,11 @@ object GraphIndex {
           walkArrays(g, idxs, qVecs(qi), beam, hops)
             .map { case (id, s) => (qi, id, s) }
         }
-      }.collect()
-        .filterNot { case (_, id, _) => tombs.contains(id) }
+      }.collect().toSeq
     }
 
-    override def search(spark: SparkSession, queryVec: Seq[Double]): DataFrame = {
-      import spark.implicits._
-      val rows = walkFanout(Array(queryVec.toArray))
-        .map { case (_, id, s) => (id, s) }.toSeq
-      attachResident(chunksDf, handle.nBuckets, rows.toDF("uid", "sim"),
-        rows.map(_._1))
-    }
-
-    def searchBatch(spark: SparkSession, queries: DataFrame,
-                    qIdCol: String, qVecCol: String): DataFrame = {
-      import spark.implicits._
-      // request-sized by contract (the reference holds N open sessions,
-      // not a corpus of queries) — collect, route, fan out as ONE job
-      val qs = queries.select(col(qIdCol).cast("long"),
-          col(qVecCol).cast("array<double>"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      val all = walkFanout(qs.map(_._2))
-        .map { case (qi, id, s) => (qs(qi)._1, id, s) }.toSeq
-      attachResident(chunksDf, handle.nBuckets,
-        all.toDF("query_id", "uid", "sim"), all.map(_._2))
-    }
-
-    // the walk fan-out already filtered the snapshot's marks
-    protected def dropTombstoned(spark: SparkSession, visited: DataFrame): DataFrame =
-      visited
-
-    /** Release the pinned shards (and the cached chunk sidecar). */
-    def cool(): Unit = {
-      shardRdd.unpersist()
-      if (chunksCached) { chunksDf.unpersist(); () }
-    }
+    /** Release the pinned shards and the cached chunk sidecar. */
+    override def cool(): Unit = { shardRdd.unpersist(); super.cool() }
   }
 
   /** Per-shard [[hotBytesEstimate]] for [[hotSharded]]'s budget guard:
@@ -943,7 +856,6 @@ object GraphIndex {
     * under the floor releases the tier and throws, the
     * [[buildServing]] gatedPublish discipline applied to serving. */
   def hotSharded(spark: SparkSession, h: Handle, nShards: Int,
-                 cacheChunks: Boolean = true,
                  budgetBytes: Long = DefaultHotBudgetBytes,
                  recallFloor: Double = 0.0,
                  recallKeyCols: Seq[String] = Nil,
@@ -966,7 +878,7 @@ object GraphIndex {
           f"resident — over the per-shard budget $budgetBytes%,d " +
           f"(~${budgetBytes / (1L << 20)}%,d MiB). Refusing before any " +
           "build work. Raise nShards (halves the worst shard roughly " +
-          "2×), serve from warm(), or raise budgetBytes deliberately.")
+          "2×), or raise budgetBytes deliberately.")
     if (crossDropped > 0)
       System.err.println(s"[graph] hotSharded($nShards): dropped " +
         s"$crossDropped cross-shard centroid-clique edge(s) — mid-walk " +
@@ -1027,20 +939,11 @@ object GraphIndex {
         s"GraphIndex.hotSharded: centroid $id has no node placement — " +
           "the store's centroid sidecar and node set disagree"))
     }
-    val tombPath = new org.apache.hadoop.fs.Path(h.tombstonesDir)
-    val tombFs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombs = new java.util.HashSet[java.lang.Long]()
-    if (tombFs.exists(tombPath))
-      spark.read.parquet(h.tombstonesDir).select(col("tomb_id").cast("long"))
-        .collect().foreach(r => tombs.add(Long.box(r.getLong(0))))
-    val chunksDf =
-      if (cacheChunks) {
-        val c = h.chunks(spark).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.count(); c
-      } else h.chunks(spark)
+    val chunksDf = h.chunks(spark).persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    chunksDf.count()
     val tier = new HotSharded(h, nShards, shardRdd, centRows.map(_._1),
-      centRows.map(_._2), centShards, tombs, chunksDf, cacheChunks,
+      centRows.map(_._2), centShards, tombSnapshot(spark, h), chunksDf,
       Some(stamp))
     // the r17 posture gap: cross-shard drops only WARNED while every
     // published store REFUSES below a floor (gatedPublish). With a
@@ -1059,39 +962,11 @@ object GraphIndex {
             f"over the sharded walk is below the floor $recallFloor%.2f " +
             f"($nShards shards, $crossDropped cross-shard edge(s) dropped) " +
             "— the tier was released, not served. Lower nShards, serve " +
-            "from hot()/warm(), or lower the floor deliberately.")
+            "from hot(), or lower the floor deliberately.")
       }
     }
     tier
     } finally release()
-  }
-
-  /** Load a built store into executor memory for resident serving (the
-    * per-process startup step; see [[Warm]] for the cost model and the
-    * `cacheChunks` scale trade-off). */
-  def warm(spark: SparkSession, h: Handle, cacheChunks: Boolean = true,
-           level: org.apache.spark.storage.StorageLevel =
-             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): Warm = {
-    def resident(df: DataFrame): DataFrame = { val c = df.persist(level); c.count(); c }
-    val tombPath = new org.apache.hadoop.fs.Path(h.tombstonesDir)
-    val tombFs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // resident layout is NORMALIZED (see Ann.normalizedLookup):
-    // the store's denormalized dst_vec — right for pruned disk hops —
-    // would cost O(|E|·dim) RAM. The node-vector table comes from the
-    // CHUNK SIDECAR (one row per node by construction — a map-only
-    // projection, never a dedup shuffle of the m×-wider edge table),
-    // plus the centroid rows so compacted-away structural marks keep
-    // routing identically to the cold path.
-    Warm(h, resident(spark.read.parquet(h.edgesDir).select("src", "dst")),
-      resident(h.chunks(spark)
-        .select(col("uid").as("dst"), col(h.vecCol).as("dst_vec"))
-        .unionByName(h.centroids(spark)
-          .select(col("centroid_id").as("dst"), col("centroid_vec").as("dst_vec")))
-        .dropDuplicates("dst")),
-      if (cacheChunks) resident(h.chunks(spark)) else h.chunks(spark),
-      resident(h.centroids(spark)),
-      if (tombFs.exists(tombPath)) Some(resident(spark.read.parquet(h.tombstonesDir)))
-      else None)
   }
 
   /** Stable 60-bit row id from the natural key columns: the first 15
@@ -1318,18 +1193,12 @@ object GraphIndex {
     }.getOrElse(withUid.orderBy("_muid").limit(nQueries)
       .select(col("_muid").as("query_id"),
         col(vecCol).cast("array<double>").as("_qv")))
-    val probes = qDf.collect()
-    require(probes.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
-      "measureRecall: null query id or vector in the workload")
-    val qids = probes.map(_.get(0))
-    require(qids.distinct.length == qids.length,
-      "measureRecall: query ids must be distinct")
-    val table = probes.map(_.getSeq[Double](1).toArray)
+    val (qids, table) = Ann.queryTable(qDf, "query_id", "_qv")
     def keyOf(r: org.apache.spark.sql.Row): Seq[Any] =
       keyCols.indices.map(i => r.get(i + 1))
     val exactBase = probeScores(withUid, keyCols, vecCol, table)
     val exact = (if (leaveSelfOut) exactBase.filter(col("_muid") =!=
-                   element_at(typedLit(qids.map(_.asInstanceOf[Long])), col("_qi") + 1))
+                   element_at(typedLit(qids), col("_qi") + 1))
                  else exactBase)
       .withColumn("_rn", row_number().over(org.apache.spark.sql.expressions.Window
         .partitionBy("_qi").orderBy(desc("_sim"), col("_muid"))))
@@ -1339,14 +1208,15 @@ object GraphIndex {
     val wg = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(desc("sim"), col("uid"))
     // the walk reads the probes back from the driver, not from qDf's lineage
-    val probeDf = spark.createDataFrame(java.util.Arrays.asList(probes: _*), qDf.schema)
+    val probeDf = spark.createDataFrame(qids.toSeq.zip(table.toSeq.map(_.toSeq)))
+      .toDF("query_id", "_qv")
     val gotBase = serving.searchBatch(spark, probeDf, "query_id", "_qv")
     val got = (if (leaveSelfOut) gotBase.filter(col("uid") =!= col("query_id"))
                else gotBase)
       .withColumn("_rn", row_number().over(wg))
       .filter(col("_rn") <= k)
       .select(col("query_id") +: keyCols.map(col): _*)
-      .collect().groupBy(_.get(0)).map { case (q, rs) => q -> rs.map(keyOf).toSet }
+      .collect().groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(keyOf).toSet }
     // per-query normalization is min(k, |truth|), not k: an index with
     // fewer than k rows whose walk returns the exact answer measures
     // 1.0, not |index|/k — the same honesty fix as Ann.meanRecall (a
@@ -1850,8 +1720,8 @@ object GraphIndex {
     * reference's delete-by-`_id` — OpenSearch likewise only MARKS until
     * a segment merge). Append-only ([[Ann.writeGraphTombstones]]): the
     * marked nodes keep routing walks but stop appearing in results the
-    * moment this returns (cold handles see marks immediately; a [[Warm]]
-    * is a snapshot — re-warm to see them). Physical removal happens at
+    * moment this returns (cold handles see marks immediately; a [[Hot]]
+    * is a snapshot — re-hot to see them). Physical removal happens at
     * the next [[compact]]. Re-ingesting a deleted document is an
     * [[insert]] under a NEW natural key (the reference's doc ids carry
     * an upload timestamp — O-3 — so re-uploads never reuse a uid);
@@ -1909,7 +1779,7 @@ object GraphIndex {
     *    (usually empty → the gate becomes a free no-op).
     *
     * Serving correctness across the swap follows the store's existing
-    * single-writer discipline; a [[Warm]] opened before compaction
+    * single-writer discipline; a [[Hot]] loaded before compaction
     * keeps serving its snapshot unaffected. Deleted docs may free beam
     * slots, so post-compact walks can only see MORE live candidates
     * than the marked walk did — never fewer. */

@@ -581,8 +581,8 @@ class AnnSpec extends AnyFunSuite {
       .orderBy(desc("sim"), col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSeq
     assert(partWalk == memWalk, "bucketed-store walk diverged from the in-memory walk")
-    // the NORMALIZED resident layout (edge ids + one vec row per node —
-    // the O(|V|·dim + |E|) warm-serving footprint) reproduces the same
+    // the NORMALIZED layout (edge ids + one vec row per node — the
+    // O(|V|·dim + |E|) footprint q_ann_graph_warm walks) reproduces the same
     // walk: the hop join reconstructs exactly the denormalized rows
     val edgeIds = edges.select("src", "dst")
     val vecs = edges.select("dst", "dst_vec").dropDuplicates("dst")

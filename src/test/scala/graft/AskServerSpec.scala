@@ -64,6 +64,39 @@ class AskServerSpec extends AnyFunSuite {
     try f(srv) finally { srv.stop(); hot.cool() }
   }
 
+  /** Spark jobs started from an ask's scheduler pool (`graft-ask-N`)
+    * while `body` runs. The listener bus delivers a listener's events
+    * in order, so once a fence job submitted after `body` has ended,
+    * every job start from `body` has been counted. */
+  private def askPoolJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val fence = "graft-fence-" + java.util.UUID.randomUUID()
+    val asked = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fenceJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.scheduler.pool", "").startsWith("graft-ask-")))
+          asked.incrementAndGet()
+        if (props.exists(_.getProperty("graft.fence") == fence)) fenceJob.set(e.jobId)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceJob.get) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.fence", fence)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.fence", null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the fence job's end")
+      asked.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   private def medianMs(nanos: Seq[Long]): Double = {
     val s = nanos.sorted
     (s((s.length - 1) / 2) + s(s.length / 2)) / 2e6
@@ -500,6 +533,29 @@ class AskServerSpec extends AnyFunSuite {
       }
       assert(medianMs(rounds) < 30.0,
         s"median /ask round trip ${medianMs(rounds)} ms; all: ${rounds.map(_ / 1000000)}")
+    }
+  }
+
+  test("resident /ask misses run zero Spark jobs; the DataFrame medium's miss runs some") {
+    withResidentServer { srv =>
+      val jobs = askPoolJobs {
+        (0 until 20).foreach { i =>
+          val r = post(srv.port, "/ask",
+            s"""{"chat_id":"zj","query":"broadcast planner probe$i variant${i}x"}""")
+          assert(r.statusCode() == 200, r.body())
+          assert(!mapper.readTree(r.body()).path("from_cache").asBoolean(true),
+            s"ask $i must miss: ${r.body()}")
+        }
+      }
+      assert(jobs == 0, s"$jobs Spark job(s) ran from the resident ask path")
+    }
+    // positive control: the listener does see an ask's jobs
+    withServer { port =>
+      val jobs = askPoolJobs {
+        val r = post(port, "/ask", """{"chat_id":"zj","query":"broadcast hash join planner"}""")
+        assert(!mapper.readTree(r.body()).path("from_cache").asBoolean(true), r.body())
+      }
+      assert(jobs > 0, "the DataFrame-medium miss must count its Spark jobs")
     }
   }
 

@@ -150,142 +150,89 @@ class GraphIndexSpec extends AnyFunSuite {
     assert(oldTopAfter == oldTop)
   }
 
-  test("warm serving: resident store equals cold store on search, batch, and ask") {
-    val w = GraphIndex.warm(spark, handle)
-    try {
-      // solo: full visited set + sims, not just top-k — the walk and
-      // re-attach must be identical row for row
-      demoQueries.foreach { q =>
-        val qv = Embed.embedQuery(spark, q).toSeq
-        val cold = handle.search(spark, qv)
-          .select("doc_id", "chunk_idx", "sim")
-          .as[(String, Int, Double)].collect().toSeq.sorted
-        val warmRows = w.search(spark, qv)
-          .select("doc_id", "chunk_idx", "sim")
-          .as[(String, Int, Double)].collect().toSeq.sorted
-        assert(warmRows == cold, s"warm visited set diverged for '$q'")
-      }
-      // batched: same per-query rows as the cold batch path
-      val qdf = demoQueries.zipWithIndex
-        .map { case (q, i) => (i.toLong, Embed.embedQuery(spark, q).toSeq) }
-        .toDF("query_id", "qvec")
-      val coldBatch = handle.topKBatch(spark, qdf, "query_id", "qvec",
-          3, tieBreak = Seq("doc_id", "chunk_idx"))
-        .select("query_id", "rank", "doc_id", "chunk_idx")
-        .as[(Long, Int, String, Int)].collect().toSeq.sorted
-      val warmBatch = w.topKBatch(spark, qdf, "query_id", "qvec",
-          3, tieBreak = Seq("doc_id", "chunk_idx"))
-        .select("query_id", "rank", "doc_id", "chunk_idx")
-        .as[(Long, Int, String, Int)].collect().toSeq.sorted
-      assert(warmBatch == coldBatch)
-      // the ask pipeline accepts a Warm wherever a Handle goes
-      val q = demoQueries.head
-      val coldPrompt = Retrieval.askGraph(spark, handle, q, topK = 3)
-        .select("prompt").head().getString(0)
-      val warmPrompt = Retrieval.askGraph(spark, w, q, topK = 3)
-        .select("prompt").head().getString(0)
-      assert(warmPrompt == coldPrompt)
-    } finally w.cool()
-  }
-
-  test("warm with cacheChunks=false (100 TB posture: sidecar stays on disk) still matches") {
-    val w = GraphIndex.warm(spark, handle, cacheChunks = false)
-    try {
-      val qv = Embed.embedQuery(spark, demoQueries.head).toSeq
-      val cold = handle.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
-        .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
-      val viaWarm = w.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
-        .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
-      assert(viaWarm == cold)
-      assert(w.chunks.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "cacheChunks=false must not cache the corpus-scale sidecar")
-      assert(w.edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-        "the hop hot path must be resident")
-    } finally w.cool()
-  }
-
-  test("warm resident layout is normalized: edge ids + one vector row per node") {
-    val w = GraphIndex.warm(spark, handle)
-    try {
-      assert(w.edges.columns.toSeq == Seq("src", "dst"),
-        "the resident edge cache must not carry vectors (O(|E|·dim) RAM)")
-      assert(w.vecs.count() < w.edges.count(), "expected one vector row per node")
-      assert(w.vecs.select("dst").distinct().count() == w.vecs.count())
-    } finally w.cool()
-  }
-
-  test("cool() releases the cached store") {
-    val w = GraphIndex.warm(spark, handle)
-    assert(w.edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    w.cool()
-    assert(w.edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(w.vecs.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(w.chunks.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(w.cents.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-  }
-
   // -------------------- the in-JVM Hot serving tier -------------------- //
 
-  test("hot serving: in-JVM walk equals the warm Spark walk on FULL visited sets") {
-    val w = GraphIndex.warm(spark, handle)
+  /** (doc_id, chunk_idx, raw sim bits) of a tier's full visited set. */
+  private def visitedBits(tier: GraphIndex.Serving, qv: Seq[Double]): Seq[(String, Int, Long)] =
+    tier.search(spark, qv)
+      .select("doc_id", "chunk_idx", "sim")
+      .as[(String, Int, Double)].collect().toSeq
+      .map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))).sorted
+
+  test("hot serving: in-JVM walk equals the cold Spark walk on FULL visited sets") {
     val hotH = GraphIndex.hot(spark, handle)
     try {
-      // full visited set + exact sims — the walk must be bitwise the
-      // same beam expansion, not just the same top-k
+      // full visited set + exact sims on raw bits — the walk must be the
+      // same beam expansion as the oracle-gated store walk, and the
+      // re-attach the same rows, not just the same top-k
       demoQueries.foreach { q =>
         val qv = Embed.embedQuery(spark, q).toSeq
-        val warmRows = w.search(spark, qv)
-          .select("doc_id", "chunk_idx", "sim")
-          .as[(String, Int, Double)].collect().toSeq.sorted
-        val hotRows = hotH.search(spark, qv)
-          .select("doc_id", "chunk_idx", "sim")
-          .as[(String, Int, Double)].collect().toSeq.sorted
-        assert(hotRows == warmRows, s"hot visited set diverged for '$q'")
+        val cold = visitedBits(handle, qv)
+        assert(cold.nonEmpty)
+        assert(visitedBits(hotH, qv) == cold, s"hot visited set diverged for '$q'")
       }
       // batch path: same per-query rows
       val qdf = demoQueries.zipWithIndex
         .map { case (q, i) => (i.toLong, Embed.embedQuery(spark, q).toSeq) }
         .toDF("query_id", "qvec")
-      val warmBatch = w.topKBatch(spark, qdf, "query_id", "qvec",
-          3, tieBreak = Seq("doc_id", "chunk_idx"))
-        .select("query_id", "rank", "doc_id", "chunk_idx")
-        .as[(Long, Int, String, Int)].collect().toSeq.sorted
-      val hotBatch = hotH.topKBatch(spark, qdf, "query_id", "qvec",
-          3, tieBreak = Seq("doc_id", "chunk_idx"))
-        .select("query_id", "rank", "doc_id", "chunk_idx")
-        .as[(Long, Int, String, Int)].collect().toSeq.sorted
-      assert(hotBatch == warmBatch)
+      def batchOf(tier: GraphIndex.Serving) =
+        tier.topKBatch(spark, qdf, "query_id", "qvec",
+            3, tieBreak = Seq("doc_id", "chunk_idx"))
+          .select("query_id", "rank", "doc_id", "chunk_idx", "sim")
+          .as[(Long, Int, String, Int, Double)].collect().toSeq
+          .map(r => (r._1, r._2, r._3, r._4, java.lang.Double.doubleToRawLongBits(r._5))).sorted
+      assert(batchOf(hotH) == batchOf(handle))
       // the ask pipeline accepts a Hot wherever a Serving goes
       val q = demoQueries.head
-      val warmPrompt = Retrieval.askGraph(spark, w, q, topK = 3)
+      val coldPrompt = Retrieval.askGraph(spark, handle, q, topK = 3)
         .select("prompt").head().getString(0)
       val hotPrompt = Retrieval.askGraph(spark, hotH, q, topK = 3)
         .select("prompt").head().getString(0)
-      assert(hotPrompt == warmPrompt)
-    } finally { w.cool(); hotH.cool() }
+      assert(hotPrompt == coldPrompt)
+    } finally hotH.cool()
   }
 
-  test("hot serving: a DENSE random query's full visited set equals the warm walk") {
+  test("hot serving: a DENSE random query's full visited set equals the cold walk") {
     // the demo queries are sparse hashed-BoW vectors, so the hot walk
     // folds them over their nonzeros only; a Gaussian query has no zero
     // component and pins the dense side of the same fold
-    val w = GraphIndex.warm(spark, handle)
     val hotH = GraphIndex.hot(spark, handle)
     try {
       val rnd = new scala.util.Random(17L)
       val qv = Seq.fill(graft.Schemas.EmbeddingDim)(rnd.nextGaussian())
       assert(qv.forall(_ != 0.0))
-      val warmRows = w.search(spark, qv)
-        .select("doc_id", "chunk_idx", "sim")
-        .as[(String, Int, Double)].collect().toSeq.sorted
-      val hotRows = hotH.search(spark, qv)
-        .select("doc_id", "chunk_idx", "sim")
-        .as[(String, Int, Double)].collect().toSeq.sorted
-      assert(warmRows.nonEmpty)
-      assert(hotRows.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))) ==
-        warmRows.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))),
-        "hot visited set diverged from warm for a dense query")
-    } finally { w.cool(); hotH.cool() }
+      val cold = visitedBits(handle, qv)
+      assert(cold.nonEmpty)
+      assert(visitedBits(hotH, qv) == cold,
+        "hot visited set diverged from the cold walk for a dense query")
+    } finally hotH.cool()
+  }
+
+  test("every tier and measureRecall refuse a duplicate-id or null-vector query table alike") {
+    // two rows under one id would walk apart and merge under that id
+    // (topKBatch ranking a chunk twice); a null vector has no walk
+    val qv = Embed.embedQuery(spark, demoQueries.head).toSeq
+    val qv2 = Embed.embedQuery(spark, demoQueries(1)).toSeq
+    val dupIds = Seq((7L, qv), (7L, qv2)).toDF("query_id", "qvec")
+    val nullVec = Seq((1L, Some(qv)), (2L, None: Option[Seq[Double]])).toDF("query_id", "qvec")
+    val hotH = GraphIndex.hot(spark, handle)
+    val sh = GraphIndex.hotSharded(spark, handle, nShards = 2)
+    try {
+      Seq(dupIds -> "distinct", nullVec -> "null").foreach { case (table, what) =>
+        val refusals = Seq[(String, () => Any)](
+          "cold" -> (() => handle.searchBatch(spark, table, "query_id", "qvec")),
+          "hot" -> (() => hotH.searchBatch(spark, table, "query_id", "qvec")),
+          "sharded" -> (() => sh.searchBatch(spark, table, "query_id", "qvec")),
+          "measureRecall" -> (() => GraphIndex.measureRecall(spark, handle, embedded,
+            Seq("doc_id", "chunk_idx"), "embedding", queries = Some(table))))
+          .map { case (tier, run) =>
+            val e = intercept[IllegalArgumentException](run())
+            assert(e.getMessage.contains(what), s"$tier: ${e.getMessage}")
+            tier -> e.getMessage
+          }
+        assert(refusals.map(_._2).distinct.length == 1, s"refusals differ: $refusals")
+      }
+    } finally { hotH.cool(); sh.cool() }
   }
 
   test("sharded hot at nShards=1 is bit-for-bit the single-JVM hot walk") {
@@ -674,24 +621,6 @@ class GraphIndexSpec extends AnyFunSuite {
     assert(GraphIndex.delete(spark, h, keys, Seq("doc_id", "chunk_idx")) == 1)
   }
 
-  test("warm serving is a snapshot: deletes after warming appear only on re-warm") {
-    val h = freshHandle()
-    val qv = Embed.embedQuery(spark, demoQueries.head).toSeq
-    val w = GraphIndex.warm(spark, h)
-    try {
-      val victim = topIds(w, qv, 1).head
-      GraphIndex.delete(spark, h,
-        Seq(victim).toDF("doc_id", "chunk_idx"), Seq("doc_id", "chunk_idx"))
-      assert(topIds(w, qv, 1).head == victim,
-        "a Warm must keep serving its snapshot")
-      assert(!topIds(h, qv, 3).contains(victim),
-        "cold handles must see marks immediately")
-      val w2 = GraphIndex.warm(spark, h)
-      try assert(!topIds(w2, qv, 3).contains(victim), "re-warm missed the mark")
-      finally w2.cool()
-    } finally w.cool()
-  }
-
   test("rebuild after inserts equals a fresh build over the same rows; subsumes compaction") {
     import operators.{GraphIndex => GI}
     val docIds = embedded.select("doc_id").distinct().orderBy("doc_id")
@@ -825,7 +754,7 @@ class GraphIndexSpec extends AnyFunSuite {
 
   test("handle re-opened cold serves the same results (ingest/serve split)") {
     val qv = Embed.embedQuery(spark, demoQueries.head).toSeq
-    val warm = handle.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
+    val built = handle.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
     // a serving process re-opens from the PATH alone: every layout
     // constant (bucket modulus above all) travels in the meta sidecar
@@ -833,7 +762,7 @@ class GraphIndexSpec extends AnyFunSuite {
     assert(cold == handle, "open() must reconstruct the builder's handle exactly")
     val viaCold = cold.topK(spark, qv, 3, tieBreak = Seq("doc_id", "chunk_idx"))
       .select("doc_id", "chunk_idx").as[(String, Int)].collect().toSeq
-    assert(viaCold == warm)
+    assert(viaCold == built)
   }
 
   // -------------------- recall-gated serving build -------------------- //
