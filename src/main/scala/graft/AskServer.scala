@@ -1,9 +1,11 @@
 package graft
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
+import java.io.{BufferedInputStream, BufferedOutputStream, Closeable, IOException, InputStream, OutputStream}
+import java.net.{InetAddress, ServerSocket, Socket}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{AskPipeline, Embed, GraphIndex}
@@ -21,13 +23,14 @@ import graft.operators.{AskPipeline, Embed, GraphIndex}
   *    per answer token as the relay emits it, then `{"done": true,
   *    "from_cache": b}` — the per-token egress shape a WebSocket
   *    client consumes;
-  *  - `WS /ws/ask` ([[wsStart]]; the reference's LITERAL WebSocket
-  *    endpoint, app/main.py:650) on its own loopback port: a minimal
-  *    RFC 6455 server (handshake + text/close/ping frames) speaking
-  *    the same per-token line protocol as `/ask/stream`, one ask per
-  *    received message, connection held open for the next ask —
-  *    sharing THIS server's cache and conversation memory. With a
-  *    `generateStream` hook (e.g.
+  *  - `GET /ws/ask` (the reference's LITERAL WebSocket endpoint,
+  *    app/main.py:650), upgraded on the same port as the HTTP
+  *    endpoints, as the reference serves both from one app port: a
+  *    minimal RFC 6455 server (handshake + text/close/ping frames)
+  *    speaking the same per-token line protocol as `/ask/stream`, one
+  *    ask per received message, connection held open for the next
+  *    ask — sharing THIS server's cache and conversation memory. With
+  *    a `generateStream` hook (e.g.
   *    [[operators.HttpGenerateClient.generateStream]]) miss-path
   *    tokens relay LIVE as the model emits them — the hook runs at
   *    the pipeline's LLM call site, so the client reads deltas before
@@ -45,39 +48,47 @@ import graft.operators.{AskPipeline, Embed, GraphIndex}
   *    use, deliberately not replicating the reference's
   *    uninitialized-store crash.
   *
+  * TRANSPORT: one loopback listener, one acceptor thread, and one
+  * daemon thread per connection, which parses its own HTTP/1.1
+  * requests (keep-alive by default, `Connection: close` honoured) and
+  * serves each on the thread that read it — no hand-off to a pool, no
+  * selector. Every reply is written in one write: status line,
+  * headers and body together. Connections are capped at
+  * [[AskServer.MaxConnections]] (503 over the cap) and an idle one is
+  * closed after a timeout, so a local client bug cannot pin threads
+  * and sockets until stop(). `/ask` replies carry a W3C
+  * `Server-Timing` header: `ask` is the ask round, `srv` runs from the
+  * parsed request head to the reply write.
+  *
   * Concurrency is the reference's (FastAPI async + a semaphore,
-  * app/main.py:31,186): `concurrency` pool threads serve requests in
-  * parallel, and the single lock guards ONLY the serving-state
-  * snapshot and the effect merge — the distributed retrieval, the LLM
-  * call, and every token write to the client socket run UNLOCKED, so
-  * a slow model or a stalled stream consumer never blocks other asks.
+  * app/main.py:31,186): `concurrency` permits of one fair semaphore,
+  * taken around every ask round on every transport — /ask,
+  * /ask/stream and /ws/ask queue on the same permits — and the single
+  * lock guards ONLY the serving-state snapshot and the effect merge —
+  * the distributed retrieval, the LLM call, and every token write to
+  * the client socket run UNLOCKED, so a slow model or a stalled stream
+  * consumer never blocks other asks.
   *
-  * SIZING `concurrency` (do not copy the default 8 blindly): the pool
-  * is ADMISSION CONTROL, exactly the reference's 5-way semaphore.
-  * Measured on the PMC corpus (SCALE.md c=16 table), ask throughput
-  * rises to a knee around 4-8 concurrent walks and FALLS past it —
-  * concurrent driver-side beam walks contend on the one DAG-scheduler
-  * event loop, so extra slots add coordination cost, not work. Set
-  * slots ≈ the knee ServeBench measures on YOUR corpus/box (it prints
-  * a "SERVE sizing" recommendation line) and let excess requests
-  * queue in the JDK server's unbounded accept queue: at c=16 offered
-  * load, 4 slots + 12 queued beat 16 slots on every metric. Those knee
-  * figures (and SCALE.md's live-HTTP tables) were measured while
-  * every kept-alive response still paid the 40 ms stall described
-  * next: their latencies carry 40 ms that is not compute and their
-  * per-client throughput is understated, so re-measure before sizing
-  * from them.
+  * SIZING `concurrency` (do not copy the default 8 blindly): the
+  * permits are ADMISSION CONTROL, exactly the reference's 5-way
+  * semaphore. Measured on the PMC corpus (SCALE.md c=16 table), ask
+  * throughput rises to a knee around 4-8 concurrent walks and FALLS
+  * past it — concurrent driver-side beam walks contend on the one
+  * DAG-scheduler event loop, so extra slots add coordination cost, not
+  * work. Set slots ≈ the knee ServeBench measures on YOUR corpus/box
+  * (it prints a "SERVE sizing" recommendation line) and let excess
+  * requests wait for a permit: at c=16 offered load, 4 slots + 12
+  * waiting beat 16 slots on every metric. Those knee figures (and
+  * SCALE.md's early live-HTTP tables) were measured while every
+  * kept-alive response still paid a 40 ms delayed-ACK stall: their
+  * latencies carry 40 ms that is not compute and their per-client
+  * throughput is understated, so re-measure before sizing from them.
   *
-  * TCP_NODELAY on every socket this server writes: the JDK HttpServer
-  * leaves Nagle's algorithm on and sends a response's headers and body
-  * as separate segments, so on a kept-alive connection the body waits
-  * for the client's delayed ACK of the headers — 40 ms minimum on
-  * Linux, far more than a resident-tier ask computes. The HTTP
-  * endpoints get it from [[AskServer.newHttpServer]] through the JDK's
-  * `sun.net.httpserver.nodelay` property, which is JVM-WIDE: it holds
-  * for every JDK HttpServer in the process, so every one in graft is
-  * created through that factory. The WS listener sets it on each
-  * accepted socket.
+  * TCP_NODELAY on every accepted socket: a one-write reply needs no
+  * coalescing, and the streaming transports flush one small write per
+  * token, each of which Nagle's algorithm would hold until the
+  * client's delayed ACK of the one before — 40 ms minimum on Linux,
+  * far more than a resident-tier ask computes.
   *
   * Cache semantics under interleaving are CONCURRENT-ARRIVAL, exactly
   * [[AskPipeline.askBatch]]'s: each ask probes the snapshot current at
@@ -86,7 +97,7 @@ import graft.operators.{AskPipeline, Embed, GraphIndex}
   * insert — the same race the reference's Redis clients run). A failed
   * generation (empty LLM answer) updates NOTHING — no cache insert, no
   * memory turn — and answers the reference's error string
-  * (app/main.py:541-548). JDK HttpServer — no new dependency, no
+  * (app/main.py:541-548). JDK sockets only — no new dependency, no
   * default exposure (bind 127.0.0.1, ephemeral port unless given).
   */
 final class AskServer(spark: SparkSession, index: DataFrame,
@@ -106,6 +117,7 @@ final class AskServer(spark: SparkSession, index: DataFrame,
   require(Set("off", "log", "refuse").contains(staleCheck),
     s"AskServer: staleCheck='$staleCheck' must be off|log|refuse")
   import spark.implicits._
+  import AskServer._
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val lock = new Object
@@ -121,24 +133,192 @@ final class AskServer(spark: SparkSession, index: DataFrame,
     if (residentCache) Some(new operators.ResidentLfuCache(capacity)) else None
   private val memory = scala.collection.mutable.Map.empty[String, Vector[(String, String)]]
 
-  private val server = AskServer.newHttpServer(new InetSocketAddress("127.0.0.1", bindPort))
-  server.createContext("/ask", (ex: HttpExchange) => safely(ex)(handleAsk))
-  server.createContext("/ask/stream", (ex: HttpExchange) => safely(ex)(handleStream))
-  // the pool must be shut down with the server or its non-daemon
-  // threads outlive main and the JVM never exits
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
-  server.setExecutor(pool)
+  // admission control: fair, so a waiting ask is served in arrival order
+  private val permits = new java.util.concurrent.Semaphore(concurrency, true)
+  private val listener = new ServerSocket(bindPort, 0, InetAddress.getByName("127.0.0.1"))
+  // open connections, tracked so stop() can close them: a connection's
+  // thread blocks in socket reads between requests (reads are not
+  // interruptible), so closing the socket is the only way to end it
+  private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
+  private var acceptor: Option[Thread] = None
 
-  def start(): Int = { server.start(); server.getAddress.getPort }
-  def stop(): Unit = {
-    server.stop(0); pool.shutdown()
-    wsSocket.foreach { s => try s.close() catch { case _: Exception => () } }
-    // unblock every WS handler thread parked in a socket read (the
-    // threads are daemons, but open sockets would leak until exit)
-    wsConns.forEach { c => try c.close() catch { case _: Exception => () } }
-    wsConns.clear()
+  /** Start accepting (idempotent); returns the port. */
+  def start(): Int = synchronized {
+    if (acceptor.isEmpty) acceptor = Some(daemon(s"ask-server-$port-acceptor")(acceptLoop()))
+    port
   }
-  def port: Int = server.getAddress.getPort
+  def stop(): Unit = {
+    closeQuietly(listener)
+    conns.forEach(c => closeQuietly(c))
+    conns.clear()
+  }
+  def port: Int = listener.getLocalPort
+
+  private def acceptLoop(): Unit =
+    try while (true) {
+      val conn = listener.accept()
+      if (conns.size >= MaxConnections) {
+        try conn.getOutputStream.write(
+          "HTTP/1.1 503 Service Unavailable\r\nContent-Length: 0\r\nConnection: close\r\n\r\n"
+            .getBytes(ISO_8859_1))
+        catch { case _: IOException => () }
+        closeQuietly(conn)
+      } else {
+        conn.setTcpNoDelay(true)
+        conn.setSoTimeout(HttpIdleTimeoutMs)
+        conns.add(conn)
+        if (listener.isClosed) closeQuietly(conn) // stop() ran during this accept
+        daemon(s"ask-server-$port-conn-${conn.getPort}") {
+          try serve(conn)
+          catch { case NonFatal(_) => () } // peer gone, idle timeout, or stop()
+          finally { conns.remove(conn); closeQuietly(conn) }
+        }
+      }
+    } catch { case _: IOException => () } // stop() closed the listener
+
+  // ---------------------------------------------------------------- //
+  // HTTP/1.1, one connection per thread                              //
+  // ---------------------------------------------------------------- //
+
+  /** Serve requests on one connection until it closes. */
+  private def serve(conn: Socket): Unit = {
+    val in = new BufferedInputStream(conn.getInputStream)
+    val out = conn.getOutputStream
+    var open = true
+    while (open) readHead(in) match {
+      case None => open = false
+      case Some(raw) =>
+        val t0 = System.nanoTime()
+        open = parseHead(raw) match {
+          case Some(h) => route(h, conn, in, out, t0)
+          case None => reply(out, 400, errorJson("malformed request head"), close = true); false
+        }
+    }
+  }
+
+  /** Bytes up to and including the blank line ending a request head;
+    * None at a clean end of stream before the next request. Never
+    * reads past the terminator: what follows is body or frame data. */
+  private def readHead(in: InputStream): Option[Array[Byte]] = {
+    val buf = new java.io.ByteArrayOutputStream(512)
+    var last4 = 0
+    var c = in.read()
+    // blank lines before a request line are ignored (RFC 9112 §2.2)
+    while (c == '\r' || c == '\n') c = in.read()
+    if (c < 0) return None
+    while (c >= 0) {
+      buf.write(c)
+      last4 = (last4 << 8) | c
+      if (last4 == 0x0d0a0d0a) return Some(buf.toByteArray)
+      if (buf.size() > MaxHeadBytes) throw new IOException("request head too large")
+      c = in.read()
+    }
+    throw new java.io.EOFException("peer closed inside a request head")
+  }
+
+  private def parseHead(raw: Array[Byte]): Option[Head] = {
+    val lines = new String(raw, ISO_8859_1).split("\r\n")
+    val headers = scala.collection.mutable.Map.empty[String, String]
+    var ok = true
+    lines.iterator.drop(1).foreach { l =>
+      val colon = l.indexOf(':')
+      if (colon <= 0) ok = false
+      else {
+        val name = l.substring(0, colon).trim.toLowerCase(java.util.Locale.ROOT)
+        val value = l.substring(colon + 1).trim
+        headers(name) = headers.get(name).fold(value)(_ + ", " + value)
+      }
+    }
+    lines.head.split(' ') match {
+      case Array(method, target, version) if ok && version.startsWith("HTTP/1.") =>
+        val q = target.indexOf('?')
+        Some(Head(method, if (q >= 0) target.substring(0, q) else target, version, headers.toMap))
+      case _ => None
+    }
+  }
+
+  /** Answer one request; true iff the connection stays open for the next. */
+  private def route(h: Head, conn: Socket, in: InputStream, out: OutputStream, t0: Long): Boolean = {
+    val close = h.hasToken("connection", "close") ||
+      (h.version == "HTTP/1.0" && !h.hasToken("connection", "keep-alive"))
+    val chunked = h.header("transfer-encoding").isDefined
+    val length = h.header("content-length") match {
+      case None => 0L
+      case Some(v) => v.toLongOption.filter(_ >= 0).getOrElse(-1L)
+    }
+    // a body left unread would be parsed as the next request head
+    val unread = chunked || length != 0
+    def refuse(code: Int, msg: String): Boolean = {
+      reply(out, code, errorJson(msg), close = close || unread)
+      if (unread) drainUnread(conn, in)
+      !(close || unread)
+    }
+    h.path match {
+      case "/ws/ask" =>
+        val key = h.header("sec-websocket-key")
+        if (h.method == "GET" && h.hasToken("upgrade", "websocket") && key.isDefined && !unread) {
+          conn.setSoTimeout(WsIdleTimeoutMs)
+          wsServe(key.get, in, out)
+        } else reply(out, 400, errorJson("/ws/ask needs a WebSocket upgrade"), close = true)
+        false
+      case "/ask" | "/ask/stream" =>
+        if (h.method != "POST") refuse(400, "POST only")
+        else if (chunked) refuse(411, "a Content-Length body is required")
+        else if (length < 0) refuse(400, "bad Content-Length")
+        else if (length > MaxBodyBytes) refuse(413, s"body over $MaxBodyBytes bytes")
+        else {
+          if (h.hasToken("expect", "100-continue")) {
+            out.write("HTTP/1.1 100 Continue\r\n\r\n".getBytes(ISO_8859_1)); out.flush()
+          }
+          val body = in.readNBytes(length.toInt)
+          if (body.length < length) throw new java.io.EOFException("peer closed inside a body")
+          try {
+            if (h.path == "/ask") handleAsk(body, out, close, t0)
+            else handleStream(body, out, close)
+          } catch {
+            case e: IllegalArgumentException =>
+              reply(out, 400, errorJson(e.getMessage), close)
+            case NonFatal(e) =>
+              reply(out, 500, errorJson(String.valueOf(e.getMessage)), close)
+          }
+          !close
+        }
+      case other => refuse(404, s"no such endpoint: $other")
+    }
+  }
+
+  /** Half-close, then discard what the peer still sends of a refused
+    * request's body (bounded in bytes and time): closing a socket with
+    * unread input resets the connection, which can destroy the reply
+    * before the peer reads it. */
+  private def drainUnread(conn: Socket, in: InputStream): Unit =
+    try {
+      conn.shutdownOutput()
+      conn.setSoTimeout(DrainTimeoutMs)
+      val buf = new Array[Byte](8192)
+      var left = MaxBodyBytes.toLong
+      var r = in.read(buf)
+      while (r > 0 && left > 0) { left -= r; r = in.read(buf) }
+    } catch { case _: IOException => () }
+
+  /** One reply in one write: status line, headers, body. */
+  private def reply(out: OutputStream, code: Int, body: String, close: Boolean,
+                    timing: Option[String] = None): Unit = {
+    val bytes = body.getBytes(UTF_8)
+    val head = new java.lang.StringBuilder(192)
+      .append("HTTP/1.1 ").append(code).append(' ').append(reason(code))
+      .append("\r\nContent-Type: application/json\r\nContent-Length: ").append(bytes.length)
+      .append("\r\n")
+    timing.foreach(t => head.append("Server-Timing: ").append(t).append("\r\n"))
+    if (close) head.append("Connection: close\r\n")
+    val hb = head.append("\r\n").toString.getBytes(ISO_8859_1)
+    val all = java.util.Arrays.copyOf(hb, hb.length + bytes.length)
+    System.arraycopy(bytes, 0, all, hb.length, bytes.length)
+    out.write(all)
+    out.flush()
+  }
+
+  private def errorJson(msg: String): String = s"""{"error":${quote(msg)}}"""
 
   // ---------------------------------------------------------------- //
   // WS /ws/ask — the reference's literal WebSocket transport         //
@@ -150,108 +330,17 @@ final class AskServer(spark: SparkSession, index: DataFrame,
   // of askOnce applies unchanged, and token frames are written with  //
   // no lock held. JDK has no WS server, so the handshake + framing   //
   // live here (~100 lines); the spec drives it with the JDK's real   //
-  // WS *client*. Loopback-only, like the HTTP socket.                //
+  // WS *client*. Loopback-only, like the HTTP endpoints.             //
   // ---------------------------------------------------------------- //
 
-  /** Cap on concurrent WS connections — each pins a thread, so an
-    * unbounded accept loop would let a local client bug accumulate
-    * threads+sockets until stop(). Over the cap, accepts are refused
-    * with a pre-handshake 503. */
-  private val MaxWsConnections = 64
-  /** Read timeout on accepted WS sockets — generous (the protocol keeps
-    * connections open between asks) but finite, so a peer that wedges
-    * without closing releases its handler thread. An idle timeout
-    * surfaces as SocketTimeoutException in the frame read and tears the
-    * connection down through wsHandle's finally. */
-  private val WsIdleTimeoutMs = 10 * 60 * 1000
-
-  private var wsSocket: Option[java.net.ServerSocket] = None
-  // accepted WS connections, tracked so stop() can close them: a
-  // connection's handler thread blocks in socket reads between asks
-  // (reads are not interruptible), so closing the socket is the only
-  // way to unblock it at shutdown
-  private val wsConns =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.net.Socket]()
-
-  /** Start the WS listener (idempotent); returns its port. */
-  def wsStart(): Int = synchronized {
-    wsSocket match {
-      case Some(s) => s.getLocalPort
-      case None =>
-        val ss = new java.net.ServerSocket(0, 16,
-          java.net.InetAddress.getByName("127.0.0.1"))
-        wsSocket = Some(ss)
-        val acceptor = new Thread(() => {
-          try while (!ss.isClosed) {
-            val conn = ss.accept()
-            // each connection pins a dedicated thread, so idle/stuck
-            // clients are a resource, not just a socket: cap concurrent
-            // connections (refuse loudly over the cap — the reference's
-            // semaphore discipline, app/main.py:31) and put a generous
-            // read timeout on the socket so a wedged peer releases its
-            // thread instead of leaking it until stop()
-            if (wsConns.size >= MaxWsConnections) {
-              try {
-                conn.getOutputStream.write(
-                  ("HTTP/1.1 503 Service Unavailable\r\nConnection: close\r\n\r\n")
-                    .getBytes(StandardCharsets.UTF_8))
-                conn.getOutputStream.flush()
-              } catch { case _: Exception => () }
-              try conn.close() catch { case _: Exception => () }
-            } else {
-              // token frames are small writes, flushed one by one: with
-              // Nagle on, each waits for the client's delayed ACK
-              conn.setTcpNoDelay(true)
-              conn.setSoTimeout(WsIdleTimeoutMs)
-              wsConns.add(conn)
-              // each connection gets its OWN daemon thread: a WS handler
-              // blocks between asks for the connection's whole lifetime,
-              // so parking it on the shared HTTP pool would let a few
-              // idle WS clients starve every /ask and /ask/stream request
-              val t = new Thread(() => try wsHandle(conn) finally {
-                wsConns.remove(conn)
-                try conn.close() catch { case _: Exception => () }
-              }, s"ws-ask-conn-${conn.getPort}")
-              t.setDaemon(true)
-              t.start()
-            }
-          } catch { case _: Exception => () } // closed socket ends the loop
-        }, "ws-ask-acceptor")
-        acceptor.setDaemon(true)
-        acceptor.start()
-        ss.getLocalPort
-    }
-  }
-
-  private def wsHandle(conn: java.net.Socket): Unit = {
-    val in = new java.io.BufferedInputStream(conn.getInputStream)
-    val out = new java.io.BufferedOutputStream(conn.getOutputStream)
-    // --- handshake: HTTP GET + Upgrade → 101 with the RFC 6455 accept
-    val head = new StringBuilder
-    def headDone = head.length >= 4 && head.substring(head.length - 4) == "\r\n\r\n"
-    var c = in.read()
-    while (c != -1 && !headDone) {
-      head.append(c.toChar)
-      // never read past the terminator — the next byte is frame data
-      if (!headDone) c = in.read()
-    }
-    val lines = head.toString.split("\r\n")
-    val key = lines.collectFirst {
-      case l if l.toLowerCase.startsWith("sec-websocket-key:") => l.split(":", 2)(1).trim
-    }
-    val ok = lines.headOption.exists(_.startsWith("GET /ws/ask")) &&
-      lines.exists(_.toLowerCase.replace(" ", "").startsWith("upgrade:websocket")) &&
-      key.isDefined
-    if (!ok) {
-      out.write("HTTP/1.1 400 Bad Request\r\nConnection: close\r\n\r\n".getBytes(StandardCharsets.UTF_8))
-      out.flush(); return
-    }
+  private def wsServe(key: String, in: InputStream, rawOut: OutputStream): Unit = {
+    val out = new BufferedOutputStream(rawOut)
     val accept = java.util.Base64.getEncoder.encodeToString(
       java.security.MessageDigest.getInstance("SHA-1").digest(
-        (key.get + "258EAFA5-E914-47DA-95CA-C5AB0DC85B11").getBytes(StandardCharsets.UTF_8)))
+        (key + "258EAFA5-E914-47DA-95CA-C5AB0DC85B11").getBytes(UTF_8)))
     out.write(("HTTP/1.1 101 Switching Protocols\r\nUpgrade: websocket\r\n" +
       s"Connection: Upgrade\r\nSec-WebSocket-Accept: $accept\r\n\r\n")
-      .getBytes(StandardCharsets.UTF_8))
+      .getBytes(UTF_8))
     out.flush()
     // --- frame loop: one ask per client text message, until close
     def sendFrame(opcode: Int, payload: Array[Byte]): Unit = out.synchronized {
@@ -265,7 +354,7 @@ final class AskServer(spark: SparkSession, index: DataFrame,
       }
       out.write(payload); out.flush()
     }
-    def sendText(s: String): Unit = sendFrame(0x1, s.getBytes(StandardCharsets.UTF_8))
+    def sendText(s: String): Unit = sendFrame(0x1, s.getBytes(UTF_8))
     def readExact(n: Int): Array[Byte] = {
       val buf = new Array[Byte](n); var off = 0
       while (off < n) {
@@ -283,7 +372,7 @@ final class AskServer(spark: SparkSession, index: DataFrame,
     var assembling = false
     def handleMessage(payload: Array[Byte]): Unit =
       try {
-        val root = mapper.readTree(new String(payload, StandardCharsets.UTF_8))
+        val root = mapper.readTree(new String(payload, UTF_8))
         val query = root.path("query").asText("")
         require(query.trim.nonEmpty, "missing required field: query")
         val r = AskReq(root.path("chat_id").asText("default"), query,
@@ -346,24 +435,14 @@ final class AskServer(spark: SparkSession, index: DataFrame,
     }
   }
 
-  private def safely(ex: HttpExchange)(f: HttpExchange => Unit): Unit =
-    try f(ex)
-    catch {
-      case e: IllegalArgumentException => respond(ex, 400,
-        s"""{"error":${quote(e.getMessage)}}""")
-      case scala.util.control.NonFatal(e) => respond(ex, 500,
-        s"""{"error":${quote(String.valueOf(e.getMessage))}}""")
-    }
 
   private def quote(s: String): String = mapper.writeValueAsString(s)
 
   private case class AskReq(chatId: String, query: String, topK: Int)
 
-  private def parseReq(ex: HttpExchange): AskReq = {
-    require(ex.getRequestMethod == "POST", "POST only")
-    val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    val root = try mapper.readTree(body)
-      catch { case scala.util.control.NonFatal(_) =>
+  private def parseReq(body: Array[Byte]): AskReq = {
+    val root = try mapper.readTree(new String(body, UTF_8))
+      catch { case NonFatal(_) =>
         throw new IllegalArgumentException("request body is not JSON") }
     val query = root.path("query").asText("")
     require(query.trim.nonEmpty, "missing required field: query")
@@ -408,10 +487,13 @@ final class AskServer(spark: SparkSession, index: DataFrame,
 
   private def askOnce(r: AskReq, onToken: Option[String => Unit] = None)
       : (String, Boolean, Int, Boolean, Boolean) = {
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-      s"graft-ask-${poolSeq.getAndIncrement() % concurrency}")
-    try askOnceInPool(r, onToken)
-    finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+    permits.acquire()
+    try {
+      spark.sparkContext.setLocalProperty("spark.scheduler.pool",
+        s"graft-ask-${poolSeq.getAndIncrement() % concurrency}")
+      try askOnceInPool(r, onToken)
+      finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+    } finally permits.release()
   }
 
   private def askOnceInPool(r: AskReq, onToken: Option[String => Unit])
@@ -498,30 +580,41 @@ final class AskServer(spark: SparkSession, index: DataFrame,
       case _ => None
     }
 
-  private def handleAsk(ex: HttpExchange): Unit = {
-    val r = parseReq(ex)
+  private def handleAsk(body: Array[Byte], out: OutputStream, close: Boolean, t0: Long): Unit = {
+    val r = parseReq(body)
     staleGate() match {
-      case Some(msg) => respond(ex, 503, s"""{"error":${quote(msg)}}""")
+      case Some(msg) => reply(out, 503, errorJson(msg), close)
       case None =>
+        val a0 = System.nanoTime()
         val (answer, fromCache, nTurns, _, _) = askOnce(r)
-        respond(ex, 200,
-          s"""{"query":${quote(r.query)},"answer":${quote(answer)},""" +
-            s""""from_cache":$fromCache,"n_history_turns":$nTurns}""")
+        val a1 = System.nanoTime()
+        val json = s"""{"query":${quote(r.query)},"answer":${quote(answer)},""" +
+          s""""from_cache":$fromCache,"n_history_turns":$nTurns}"""
+        reply(out, 200, json, close,
+          timing = Some(s"ask;dur=${durMs(a1 - a0)}, srv;dur=${durMs(System.nanoTime() - t0)}"))
     }
   }
 
-  private def handleStream(ex: HttpExchange): Unit = {
-    val r = parseReq(ex) // validation errors become a 400 BEFORE headers
-    ex.getResponseHeaders.add("Content-Type", "application/x-ndjson")
-    ex.sendResponseHeaders(200, 0) // chunked
-    val out = ex.getResponseBody
+  private def handleStream(body: Array[Byte], rawOut: OutputStream, close: Boolean): Unit = {
+    val r = parseReq(body) // validation errors become a 400 BEFORE headers
+    // buffered: the head goes out in one write with the first chunk
+    val out = new BufferedOutputStream(rawOut)
+    out.write(("HTTP/1.1 200 OK\r\nContent-Type: application/x-ndjson\r\n" +
+      "Transfer-Encoding: chunked\r\n" + (if (close) "Connection: close\r\n" else "") + "\r\n")
+      .getBytes(ISO_8859_1))
+    def line(json: String): Unit = {
+      val bytes = (json + "\n").getBytes(UTF_8)
+      out.write((Integer.toHexString(bytes.length) + "\r\n").getBytes(ISO_8859_1))
+      out.write(bytes)
+      out.write(Crlf)
+    }
     // headers are gone: any later failure must stay ON this stream as
-    // an {"error":...} line + close — routing through safely()'s
-    // respond() would call sendResponseHeaders twice, and the client
-    // would hang on a truncated stream with no done/error line
+    // an {"error":...} line + the last chunk — a second status line
+    // would corrupt the stream, and the client would hang on a
+    // truncated stream with no done/error line
     try {
       def emit(tok: String): Unit = {
-        out.write((s"""{"token":${quote(tok)}}""" + "\n").getBytes(StandardCharsets.UTF_8))
+        line(s"""{"token":${quote(tok)}}""")
         out.flush() // one chunk per token — the WS relay cadence
       }
       // with a generateStream hook, miss-path tokens relay LIVE from the
@@ -530,27 +623,19 @@ final class AskServer(spark: SparkSession, index: DataFrame,
       val (answer, fromCache, _, streamedLive, failed) = askOnce(r, onToken = Some(emit))
       // a failed generation that somehow emitted deltas (blank-only
       // stream) must still be visible as a failure on this transport
-      if (failed && streamedLive)
-        out.write((s"""{"error":${quote(answer)}}""" + "\n").getBytes(StandardCharsets.UTF_8))
-      else if (!streamedLive)
-        answer.split("(?<= )").filter(_.nonEmpty).foreach(emit)
-      out.write((s"""{"done":true,"from_cache":$fromCache}""" + "\n")
-        .getBytes(StandardCharsets.UTF_8))
+      if (failed && streamedLive) line(errorJson(answer))
+      else if (!streamedLive) answer.split("(?<= )").filter(_.nonEmpty).foreach(emit)
+      line(s"""{"done":true,"from_cache":$fromCache}""")
     } catch {
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         // best-effort: the socket itself may be what failed
-        try out.write((s"""{"error":${quote(String.valueOf(e.getMessage))}}""" + "\n")
-          .getBytes(StandardCharsets.UTF_8))
-        catch { case scala.util.control.NonFatal(_) => () }
-    } finally out.close()
-  }
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.add("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
-    ex.close()
+        try line(errorJson(String.valueOf(e.getMessage)))
+        catch { case NonFatal(_) => () }
+    }
+    // the last chunk; a socket that failed above fails here and the
+    // connection closes
+    out.write("0\r\n\r\n".getBytes(ISO_8859_1))
+    out.flush()
   }
 }
 
@@ -560,19 +645,56 @@ final class AskServer(spark: SparkSession, index: DataFrame,
   * CI-safe, loopback-only. `runMain graft.AskServer [--keep-alive]`
   * leaves the server up for manual poking. */
 object AskServer {
-  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+  /** Cap on open connections, HTTP and WS alike — each pins a thread,
+    * so an unbounded accept loop would let a local client bug
+    * accumulate threads and sockets until stop(). Over the cap, a
+    * connection is refused with a 503 before its request is read. */
+  private[graft] val MaxConnections = 64
+  /** Read timeout on an HTTP connection (the JDK server's default idle
+    * interval): a kept-alive connection idle this long is closed. */
+  private val HttpIdleTimeoutMs = 30 * 1000
+  /** Read timeout on an upgraded WS connection — generous (the protocol
+    * keeps connections open between asks) but finite, so a peer that
+    * wedges without closing releases its thread. */
+  private val WsIdleTimeoutMs = 10 * 60 * 1000
+  private val MaxHeadBytes = 64 * 1024
+  private val MaxBodyBytes = 1 << 20
+  private val DrainTimeoutMs = 2000
+  private val Crlf = "\r\n".getBytes(ISO_8859_1)
 
-  /** Create a JDK HttpServer whose accepted sockets have TCP_NODELAY set
-    * (see the [[AskServer]] class comment for the stall it removes).
-    * The JDK reads `sun.net.httpserver.nodelay` once per JVM, when the
-    * first HttpServer is created, so every HttpServer in graft, test
-    * stubs included, is created here; a value the JVM was started with
-    * wins. */
-  private[graft] def newHttpServer(addr: InetSocketAddress): HttpServer = {
-    if (System.getProperty(NoDelayProperty) == null)
-      System.setProperty(NoDelayProperty, "true")
-    HttpServer.create(addr, 0)
+  /** A parsed request head; header names are lower-cased, repeats
+    * joined with ", ". */
+  private final case class Head(method: String, path: String, version: String,
+                                headers: Map[String, String]) {
+    def header(name: String): Option[String] = headers.get(name)
+    def hasToken(name: String, token: String): Boolean =
+      header(name).exists(_.split(',').exists(_.trim.equalsIgnoreCase(token)))
   }
+
+  private def reason(code: Int): String = code match {
+    case 200 => "OK"
+    case 400 => "Bad Request"
+    case 404 => "Not Found"
+    case 411 => "Length Required"
+    case 413 => "Content Too Large"
+    case 500 => "Internal Server Error"
+    case 503 => "Service Unavailable"
+    case _ => "Status"
+  }
+
+  /** A Server-Timing duration: milliseconds, three decimals. */
+  private def durMs(nanos: Long): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(nanos / 1e6))
+
+  private def daemon(name: String)(body: => Unit): Thread = {
+    val t = new Thread(() => body, name)
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+
+  private def closeQuietly(c: Closeable): Unit =
+    try c.close() catch { case _: IOException => () }
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

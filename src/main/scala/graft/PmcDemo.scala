@@ -121,7 +121,7 @@ object PmcDemo {
           operators.Embed.embedQueryTfIdf(spark, q, dfreq, nDocs2, dim = 1024)),
         dim = 1024, capacity = 2)
       srv.start()
-      val wsPort = srv.wsStart()
+      val wsPort = srv.port
       try {
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         val msgs = new java.util.concurrent.LinkedBlockingQueue[String]()

@@ -1,9 +1,10 @@
 package graft.operators
 
 /** The ascending-fold cosine arithmetic of the driver-resident serving
-  * tiers, in one place: [[ResidentLfuCache]]'s scan and
-  * [[GraphIndex.walkArrays]] (hence [[GraphIndex.Hot]] and every
-  * [[GraphIndex.HotSharded]] shard) both score with it.
+  * tiers, in one place: [[GraphIndex.walkArrays]] (hence
+  * [[GraphIndex.Hot]] and every [[GraphIndex.HotSharded]] shard) scores
+  * with it, and [[ResidentLfuCache]]'s dim-major scan performs the same
+  * adds per entry, in the same order, over its columns.
   *
   * SPARSE-QUERY FOLD. `dot` folds q(i)·v(i) over ascending i from +0.0.
   * Where q(i) is ±0.0 and v(i) is finite the term is ±0.0, and adding

@@ -23,10 +23,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    ascending-fold dot — [[graft.functions.DotProduct]]'s arithmetic;
   *    folded over only the query's nonzero dimensions when the entry is
   *    finite, which is the same fold bit-for-bit — [[CosineKernel]]),
-  *    hit iff best ≥ threshold INCLUSIVE, sim ties → HIGHEST entry_id
-  *    (the reference's newest-first Redis list scan; Spark-double
-  *    ordering via [[Retrieval.cmpSparkDouble]] so even NaN/-0.0 edge
-  *    inputs order like `desc("sim")`);
+  *    hit iff best ≥ threshold INCLUSIVE, sim ties → HIGHEST entry_id,
+  *    then the earliest arrival (the reference's newest-first Redis
+  *    list scan; Spark-double ordering via [[Retrieval.cmpSparkDouble]]
+  *    so even NaN/-0.0 edge inputs order like `desc("sim")`);
   *  - touch: freq += 1 on the id, silently a no-op if the entry was
   *    concurrently evicted ([[CacheLfu.touchById]]'s when-filter);
   *  - insert: entry_id = max(existing, 0) + 1 allocated at APPLY time;
@@ -38,26 +38,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[graft.AskServer]]'s snapshot-probe-then-merge over the DataFrame
   * medium (a probe sees some consistent state; effects merge
   * atomically, Touch on an evicted id no-ops). The monitor serialises
-  * every scan. A scan costs one sparse fold per entry: each entry's
+  * every scan. A scan streams one contiguous float column per query
+  * nonzero over every slot (the dim-major layout below): each entry's
   * norm and finiteness are fixed at insert/load, and the query's
   * nonzero list and norm are built before the monitor is taken. On a
   * full 1,000-entry cache at dim 1024 with 8-word TF-IDF queries a
-  * lookup measured 0.23 ms p50 and 0.31 ms p99 (perfbench ask-miss,
-  * traced, 4 vCPUs; 1.69 / 3.25 ms with the dense per-entry fold), so
-  * the monitor is held for about as long as the walk takes and a
-  * lock-free snapshot would buy little.
+  * lookup measured 0.03 ms p50 and 0.06 ms p99 (perfbench ask-miss,
+  * traced, seed 9, 4 vCPUs; 0.31 / 0.45 ms with the row-major
+  * per-entry fold it replaced), so the monitor is held for about a
+  * tenth of the walk's time and a lock-free snapshot would buy little.
   */
 final class ResidentLfuCache(val capacity: Int = graft.Schemas.CacheCapacity) {
   require(capacity >= 1, s"ResidentLfuCache: capacity=$capacity must be >= 1")
 
-  // norm and finiteness are per-entry constants: computed once here,
-  // with the scan's own fold, instead of once per lookup
-  private final class Entry(val id: Long, val vec: Array[Float],
-                            val response: String, var freq: Int) {
-    val norm: Double = CosineKernel.norm(vec)
-    val finite: Boolean = CosineKernel.allFinite(vec)
-  }
-  private val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
+  // DIM-MAJOR SLOTS. cols(i)(s) is dimension i of the entry in slot s,
+  // so a lookup streams one contiguous column per query nonzero instead
+  // of touching every entry's row. Slots 0 until n are live. An insert
+  // at capacity overwrites the eviction victim's slot, so slot order is
+  // not arrival order: seqs(s) keeps arrival order for every rule that
+  // read it (scan-order ties between equal ids, the first-match touch,
+  // toDF's row order). All entries share one dimension, fixed by the
+  // first entry stored. Norm and finiteness are per-entry constants,
+  // computed once at store time with the scan's own fold.
+  private var dim = 0
+  private var cols = Array.empty[Array[Float]]
+  private var slots = 0 // allocated length of every per-slot array
+  private var n = 0
+  private var ids = Array.empty[Long]
+  private var freqs = Array.empty[Int]
+  private var responses = Array.empty[String]
+  private var seqs = Array.empty[Long]
+  private var norms = Array.empty[Double]
+  private var finite = Array.empty[Boolean]
+  private var nextSeq = 0L
+  // the per-slot dot accumulators, reused by every scan under the monitor
+  private var acc = Array.empty[Double]
 
   /** One query's per-lookup constants, built outside the monitor. */
   private final class Query(val q: Array[Double]) {
@@ -65,49 +80,133 @@ final class ResidentLfuCache(val capacity: Int = graft.Schemas.CacheCapacity) {
     val norm: Double = CosineKernel.norm(q)
   }
 
-  private def cosineOf(e: Entry, qq: Query): Double = {
-    require(e.vec.length == qq.q.length,
-      s"ResidentLfuCache: dimension mismatch (${e.vec.length} vs ${qq.q.length})")
-    CosineKernel.cosine(CosineKernel.dot(qq.q, qq.nz, e.vec, e.finite), e.norm, qq.norm)
+  /** Grow every per-slot array to hold `need` slots: by doubling, up to
+    * capacity (an over-capacity [[load]] grows past it until trimmed). */
+  private def ensureSlots(need: Int): Unit =
+    if (need > slots) {
+      val doubled = math.max(need, math.max(8, slots * 2))
+      resize(if (need <= capacity) math.min(capacity, doubled) else doubled)
+    }
+
+  private def resize(m: Int): Unit = {
+    cols = cols.map(java.util.Arrays.copyOf(_, m))
+    ids = java.util.Arrays.copyOf(ids, m)
+    freqs = java.util.Arrays.copyOf(freqs, m)
+    responses = java.util.Arrays.copyOf(responses, m)
+    seqs = java.util.Arrays.copyOf(seqs, m)
+    norms = java.util.Arrays.copyOf(norms, m)
+    finite = java.util.Arrays.copyOf(finite, m)
+    acc = new Array[Double](m)
+    slots = m
+  }
+
+  private def checkDim(len: Int): Unit =
+    if (n == 0 && len != dim) {
+      dim = len
+      cols = Array.fill(dim)(new Array[Float](slots))
+    } else require(len == dim, s"ResidentLfuCache: dimension mismatch ($dim vs $len)")
+
+  /** Store an entry in slot `s` (s < n overwrites, s == n appends). */
+  private def put(s: Int, id: Long, vec: Array[Float], response: String, freq: Int): Unit = {
+    checkDim(vec.length)
+    if (s == n) { ensureSlots(n + 1); n += 1 }
+    var i = 0
+    while (i < dim) { cols(i)(s) = vec(i); i += 1 }
+    ids(s) = id; freqs(s) = freq; responses(s) = response
+    seqs(s) = nextSeq; nextSeq += 1
+    norms(s) = CosineKernel.norm(vec)
+    finite(s) = CosineKernel.allFinite(vec)
+  }
+
+  /** Drop slot `s` by moving the last live slot into it. */
+  private def removeSlot(s: Int): Unit = {
+    val last = n - 1
+    var i = 0
+    while (i < dim) { cols(i)(s) = cols(i)(last); i += 1 }
+    ids(s) = ids(last); freqs(s) = freqs(last); responses(s) = responses(last)
+    seqs(s) = seqs(last); norms(s) = norms(last); finite(s) = finite(last)
+    responses(last) = null
+    n = last
+  }
+
+  /** Arrival order between two live slots. */
+  private def earlier(a: Int, b: Int): Boolean = seqs(a) < seqs(b)
+
+  /** Fill acc(0 until n) with every live slot's cosine to the query. */
+  private def scan(qq: Query): Unit = if (n > 0) {
+    require(dim == qq.q.length,
+      s"ResidentLfuCache: dimension mismatch ($dim vs ${qq.q.length})")
+    // per slot, acc(s) takes the adds of CosineKernel.dot's sparse fold
+    // in the same order (nonzeros ascending, from +0.0), so every sim is
+    // that fold bit-for-bit; a non-finite entry is refolded dense below
+    val a = acc
+    java.util.Arrays.fill(a, 0, n, 0.0)
+    var k = 0
+    while (k < qq.nz.length) {
+      val i = qq.nz(k)
+      val col = cols(i)
+      val qi = qq.q(i)
+      var s = 0
+      while (s < n) { a(s) += col(s).toDouble * qi; s += 1 }
+      k += 1
+    }
+    var s = 0
+    while (s < n) {
+      if (!finite(s)) {
+        var d = 0.0
+        var i = 0
+        while (i < dim) { d += cols(i)(s).toDouble * qq.q(i); i += 1 }
+        a(s) = d
+      }
+      a(s) = CosineKernel.cosine(a(s), norms(s), qq.norm)
+      s += 1
+    }
   }
 
   private def lookupUnsynced(qq: Query, threshold: Double): Option[(Long, String)] = {
-    var best: Entry = null
+    if (n == 0) return None
+    scan(qq)
+    var best = -1
     var bestSim = 0.0
-    var i = 0
-    while (i < entries.length) {
-      val e = entries(i)
-      val s = cosineOf(e, qq)
-      if (best == null || Retrieval.cmpSparkDouble(s, bestSim) > 0 ||
-          (Retrieval.cmpSparkDouble(s, bestSim) == 0 && e.id > best.id)) {
-        best = e; bestSim = s
+    var s = 0
+    while (s < n) {
+      val sim = acc(s)
+      val c = if (best < 0) 1 else Retrieval.cmpSparkDouble(sim, bestSim)
+      if (c > 0 || (c == 0 && (ids(s) > ids(best) ||
+          (ids(s) == ids(best) && earlier(s, best))))) {
+        best = s; bestSim = sim
       }
-      i += 1
+      s += 1
     }
     // threshold test on the SPARK double ordering, same as the argmax
     // above: Similarity.cacheLookup's `sim >= threshold` filter is
     // Spark's nan-safe compare (NaN > any double), so a NaN cosine
     // from a degenerate stored vector must hit on BOTH media — plain
     // Java `>=` would miss here while the DataFrame medium hits
-    if (best != null && Retrieval.cmpSparkDouble(bestSim, threshold) >= 0)
-      Some((best.id, best.response))
+    if (Retrieval.cmpSparkDouble(bestSim, threshold) >= 0)
+      Some((ids(best), responses(best)))
     else None
   }
 
-  /** Index of the LFU eviction victim: minimum freq, ties → HIGHEST
-    * entry_id (the reference's newest-first Redis list scan keeping
-    * the first strict minimum — [[CacheLfu.evictionVictim]]). */
-  private def victimIndex(): Int = {
+  /** Slot of the LFU eviction victim: minimum freq, ties → HIGHEST
+    * entry_id, then the earliest arrival (the reference's newest-first
+    * Redis list scan keeping the first strict minimum —
+    * [[CacheLfu.evictionVictim]]). */
+  private def victimSlot(): Int = {
     var victim = 0
-    var i = 1
-    while (i < entries.length) {
-      val e = entries(i)
-      val v = entries(victim)
-      if (e.freq < v.freq || (e.freq == v.freq && e.id > v.id)) victim = i
-      i += 1
+    var s = 1
+    while (s < n) {
+      if (freqs(s) < freqs(victim) || (freqs(s) == freqs(victim) &&
+          (ids(s) > ids(victim) || (ids(s) == ids(victim) && earlier(s, victim)))))
+        victim = s
+      s += 1
     }
     victim
   }
+
+  /** Insert one arrival: at capacity it takes the victim's slot. */
+  private def insert(id: Long, vec: Array[Float], answer: String): Unit =
+    put(if (n >= capacity) victimSlot() else n, id, vec, answer, 1)
 
   /** Snapshot max entry id with the DataFrame medium's
     * `coalesce(max(entry_id), 0)` semantics: 0 substitutes ONLY for an
@@ -115,7 +214,7 @@ final class ResidentLfuCache(val capacity: Int = graft.Schemas.CacheCapacity) {
     * id is negative (externally-constructed caches; pipeline ids are
     * always ≥ 1). */
   private def maxIdUnsynced: Long =
-    if (entries.isEmpty) 0L else entries.iterator.map(_.id).max
+    if (n == 0) 0L else ids.iterator.take(n).max
 
   /** [[Similarity.cacheLookup]]'s argmax, zero Spark jobs: Some((id,
     * response)) iff the best cosine ≥ threshold (inclusive). */
@@ -145,8 +244,7 @@ final class ResidentLfuCache(val capacity: Int = graft.Schemas.CacheCapacity) {
     * as [[applyEffect]]'s insert. */
   private[operators] def insertAssigned(id: Long, vec: Array[Float],
                                         answer: String): Unit = synchronized {
-    if (entries.length >= capacity) entries.remove(victimIndex())
-    entries += new Entry(id, vec, answer, 1)
+    insert(id, vec, answer)
   }
 
   /** Merge one ask's [[AskPipeline.CacheEffect]] — the
@@ -155,19 +253,34 @@ final class ResidentLfuCache(val capacity: Int = graft.Schemas.CacheCapacity) {
     effect match {
       case AskPipeline.NoEffect => ()
       case AskPipeline.TouchEffect(id) =>
-        entries.find(_.id == id).foreach(e => e.freq += 1)
+        // the earliest arrival holding the id, as a front-to-back find
+        var hit = -1
+        var s = 0
+        while (s < n) {
+          if (ids(s) == id && (hit < 0 || earlier(s, hit))) hit = s
+          s += 1
+        }
+        if (hit >= 0) freqs(hit) += 1
       case AskPipeline.InsertEffect(vec, answer) =>
-        val nextId = maxIdUnsynced + 1
-        if (entries.length >= capacity) entries.remove(victimIndex())
-        entries += new Entry(nextId, vec.toArray, answer, 1)
+        insert(maxIdUnsynced + 1, vec.toArray, answer)
     }
   }
 
-  def size: Int = synchronized(entries.length)
+  def size: Int = synchronized(n)
+
+  /** (entry_id, cosine to `queryVec`) of every entry in arrival order —
+    * the scores the lookup's argmax ranks. */
+  private[graft] def sims(queryVec: Array[Double]): IndexedSeq[(Long, Double)] = {
+    val qq = new Query(queryVec)
+    synchronized {
+      scan(qq)
+      (0 until n).sortBy(seqs(_)).map(s => (ids(s), acc(s)))
+    }
+  }
 
   private[operators] def load(id: Long, vec: Array[Float],
                               response: String, freq: Int): Unit = synchronized {
-    entries += new Entry(id, vec, response, freq)
+    put(n, id, vec, response, freq)
   }
 
   /** Drain an over-capacity load back to capacity by REPEATED
@@ -177,15 +290,17 @@ final class ResidentLfuCache(val capacity: Int = graft.Schemas.CacheCapacity) {
     * evicts exactly one per arrival and so can never drain a cache
     * that was loaded over capacity. */
   private[operators] def trimToCapacity(): Unit = synchronized {
-    while (entries.length > capacity) entries.remove(victimIndex())
+    while (n > capacity) removeSlot(victimSlot())
+    if (slots > capacity) resize(capacity)
   }
 
   /** Export as the exact cache table (entry_id, embedding, response,
-    * freq) — the spec-equivalence bridge and the interop path back to
-    * the DataFrame medium. */
+    * freq) in arrival order — the spec-equivalence bridge and the
+    * interop path back to the DataFrame medium. */
   def toDF(spark: SparkSession): DataFrame = synchronized {
     import spark.implicits._
-    entries.toSeq.map(e => (e.id, e.vec.toSeq, e.response, e.freq))
+    (0 until n).sortBy(seqs(_))
+      .map(s => (ids(s), Seq.tabulate(dim)(cols(_)(s)), responses(s), freqs(s)))
       .toDF("entry_id", "embedding", "response", "freq")
   }
 }

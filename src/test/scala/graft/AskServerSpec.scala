@@ -284,7 +284,7 @@ class AskServerSpec extends AnyFunSuite {
   test("WS fragmented text message (FIN=0 + continuation) is assembled and answered") {
     val srv = new AskServer(spark, index)
     srv.start()
-    val wsPort = srv.wsStart()
+    val wsPort = srv.port
     try {
       val sock = new java.net.Socket("127.0.0.1", wsPort)
       val out = new java.io.BufferedOutputStream(sock.getOutputStream)
@@ -425,7 +425,7 @@ class AskServerSpec extends AnyFunSuite {
   test("WS /ws/ask: real JDK WebSocket client — handshake, token relay, shared cache") {
     val srv = new AskServer(spark, index)
     srv.start()
-    val wsPort = srv.wsStart()
+    val wsPort = srv.port
     try {
       val ws = new WsClient(wsPort, "w0")
       // first ask: miss — token frames then done(from_cache=false)
@@ -450,7 +450,7 @@ class AskServerSpec extends AnyFunSuite {
     // answer is several token frames, and with Nagle on the socket each
     // frame after the first waited for the client's delayed ACK (40 ms)
     withResidentServer { rs =>
-      val ws = new WsClient(rs.wsStart(), "w1")
+      val ws = new WsClient(rs.port, "w1")
       val rounds = (0 until 24).map { i =>
         val t0 = System.nanoTime()
         val got = ws.ask(s"shuffle files fetched by reducers $i")
@@ -473,7 +473,7 @@ class AskServerSpec extends AnyFunSuite {
     // keeps hitting through all of it
     val srv = new AskServer(spark, index, capacity = 2)
     srv.start()
-    val wsPort = srv.wsStart()
+    val wsPort = srv.port
     try {
       val ws = new WsClient(wsPort, "demo")
       def fromCache(q: String): Boolean =
@@ -556,6 +556,161 @@ class AskServerSpec extends AnyFunSuite {
         assert(!mapper.readTree(r.body()).path("from_cache").asBoolean(true), r.body())
       }
       assert(jobs > 0, "the DataFrame-medium miss must count its Spark jobs")
+    }
+  }
+
+  /** Read one raw HTTP/1.1 reply: (status, lower-cased headers, body). */
+  private def readReply(in: java.io.InputStream): (Int, Map[String, String], String) = {
+    val head = new StringBuilder
+    while (head.length < 4 || head.substring(head.length - 4) != "\r\n\r\n") {
+      val c = in.read()
+      assert(c >= 0, s"connection closed inside a reply head: $head")
+      head.append(c.toChar)
+    }
+    val lines = head.toString.split("\r\n")
+    val headers = lines.tail.map { l =>
+      val i = l.indexOf(':')
+      l.take(i).trim.toLowerCase -> l.drop(i + 1).trim
+    }.toMap
+    val len = headers.get("content-length").map(_.toInt).getOrElse(0)
+    (lines.head.split(' ')(1).toInt, headers,
+      new String(in.readNBytes(len), java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  private def liveThreads(prefix: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(prefix)).map(_.getName)
+  }
+
+  /** Wait up to 5 s for every thread named `prefix…` to end. */
+  private def awaitThreads(prefix: String, clue: String): Unit = {
+    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+    while (liveThreads(prefix).nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(liveThreads(prefix).isEmpty, s"$clue: ${liveThreads(prefix)}")
+  }
+
+  test("admission control: with concurrency = 1, an HTTP ask and a WS ask never overlap") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import java.util.concurrent.TimeUnit.SECONDS
+    implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    val entered = new java.util.concurrent.Semaphore(0)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val srv = new AskServer(spark, index, concurrency = 1, generate = Some { _ =>
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), (a, b) => math.max(a, b))
+      entered.release()
+      try { gate.await(60, SECONDS); "gated answer" } finally inFlight.decrementAndGet()
+    })
+    val port = srv.start()
+    try {
+      val httpAsk = Future(post(port, "/ask", """{"chat_id":"ac0","query":"broadcast join tables"}"""))
+      assert(entered.tryAcquire(60, SECONDS), "the HTTP ask never reached generate")
+      val ws = new WsClient(port, "ac1")
+      val wsAsk = Future(ws.ask("shuffle file map task reducers"))
+      assert(!entered.tryAcquire(5, SECONDS),
+        "the WS ask reached generate while the HTTP ask held the only permit")
+      gate.countDown()
+      val r = Await.result(httpAsk, 60.seconds)
+      assert(r.statusCode() == 200, r.body())
+      assert(mapper.readTree(r.body()).path("answer").asText() == "gated answer")
+      val w = Await.result(wsAsk, 60.seconds)
+      assert(mapper.readTree(w.last).path("done").asBoolean(false), w)
+      assert(entered.tryAcquire(60, SECONDS), "the WS ask never reached generate")
+      assert(maxInFlight.get == 1, s"${maxInFlight.get} asks ran generate at once")
+      ws.close()
+    } finally { gate.countDown(); srv.stop() }
+  }
+
+  test("HTTP/1.1 edge cases: close, 100-continue, 404/400/413/411, an h2c offer, the connection cap, stop()") {
+    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+    val srv = new AskServer(spark, index, generate = Some(_ => "stub answer"))
+    val port = srv.start()
+    def open(): java.net.Socket = {
+      val s = new java.net.Socket("127.0.0.1", port)
+      s.setSoTimeout(60000)
+      s
+    }
+    def send(s: java.net.Socket, head: String, body: Array[Byte] = Array.emptyByteArray): Unit = {
+      s.getOutputStream.write(head.getBytes(ISO_8859_1) ++ body)
+      s.getOutputStream.flush()
+    }
+    def postHead(extra: String, length: Long): String =
+      "POST /ask HTTP/1.1\r\nHost: x\r\nContent-Type: application/json\r\n" +
+        s"${extra}Content-Length: $length\r\n\r\n"
+    val askBody = """{"chat_id":"h0","query":"broadcast join tables"}""".getBytes(UTF_8)
+    try {
+      // Connection: close is honoured: the reply says so, then EOF
+      val c1 = open()
+      send(c1, postHead("Connection: close\r\n", askBody.length), askBody)
+      val (code1, h1, body1) = readReply(c1.getInputStream)
+      assert(code1 == 200, body1)
+      assert(h1.get("connection").contains("close"), h1)
+      assert(c1.getInputStream.read() == -1, "the socket must close after a Connection: close reply")
+      c1.close()
+      // Expect: 100-continue gets the interim 100 before the body is
+      // sent; the kept-alive socket then serves 404 and 400 in turn
+      val c2 = open()
+      send(c2, postHead("Expect: 100-continue\r\n", askBody.length))
+      assert(readReply(c2.getInputStream)._1 == 100)
+      send(c2, "", askBody)
+      val (code2, _, body2) = readReply(c2.getInputStream)
+      assert(code2 == 200 && mapper.readTree(body2).path("answer").asText() == "stub answer", body2)
+      send(c2, "GET /nowhere HTTP/1.1\r\nHost: x\r\n\r\n")
+      assert(readReply(c2.getInputStream)._1 == 404)
+      send(c2, "GET /ask HTTP/1.1\r\nHost: x\r\n\r\n")
+      val (code4, _, body4) = readReply(c2.getInputStream)
+      assert(code4 == 400 && body4.contains("POST only"), body4)
+      c2.close()
+      // a body over 1 MiB is refused before it is read
+      val c3 = open()
+      send(c3, postHead("", (1 << 20) + 1))
+      assert(readReply(c3.getInputStream)._1 == 413)
+      c3.close()
+      // a chunked request body has no length to read to
+      val c4 = open()
+      send(c4, "POST /ask HTTP/1.1\r\nHost: x\r\nTransfer-Encoding: chunked\r\n\r\n" +
+        Integer.toHexString(askBody.length) + "\r\n", askBody ++ "\r\n0\r\n\r\n".getBytes(ISO_8859_1))
+      assert(readReply(c4.getInputStream)._1 == 411)
+      c4.close()
+      // the cap counts open connections: wait for the closed ones' threads
+      awaitThreads(s"ask-server-$port-conn-", "closed connections must release their threads")
+      val held = (1 to AskServer.MaxConnections).map(_ => open())
+      val over = open()
+      assert(readReply(over.getInputStream)._1 == 503, "a connection over the cap gets 503")
+      over.close()
+      send(held.head, postHead("", askBody.length), askBody)
+      assert(readReply(held.head.getInputStream)._1 == 200, "a connection under the cap is served")
+      held.foreach(_.close())
+      awaitThreads(s"ask-server-$port-conn-", "closed connections must release their threads")
+      // a default client offers an h2c upgrade and is answered as HTTP/1.1
+      val h2c = HttpClient.newHttpClient()
+      val r = h2c.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/ask"))
+        .header("Content-Type", "application/json")
+        .POST(HttpRequest.BodyPublishers.ofByteArray(askBody)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      assert(r.version() == HttpClient.Version.HTTP_1_1)
+      // stop() ends the acceptor and every connection thread, idle or not
+      // (the h2c client's kept-alive connection and one raw socket)
+      val idle = open()
+      srv.stop()
+      awaitThreads(s"ask-server-$port-", "stop() must end every server thread")
+      idle.close()
+    } finally srv.stop()
+  }
+
+  test("/ask replies carry Server-Timing: ask and srv durations, ask <= srv") {
+    withResidentServer { srv =>
+      val r = post(srv.port, "/ask", """{"chat_id":"st","query":"cosine scoring normalized vectors"}""")
+      assert(r.statusCode() == 200, r.body())
+      val st = r.headers().firstValue("server-timing").orElse("")
+      val durs = """(\w+);dur=([0-9.]+)""".r.findAllMatchIn(st)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      assert(durs.keySet == Set("ask", "srv"), st)
+      assert(durs("ask") <= durs("srv"), st)
     }
   }
 

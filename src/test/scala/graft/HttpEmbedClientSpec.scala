@@ -44,7 +44,7 @@ class HttpEmbedClientSpec extends AnyFunSuite {
     *  - /flaky   → 500 for the first request, then /ok behavior
     */
   private def startStub(dim: Int): (Int, AtomicInteger, java.util.Vector[Int], () => Unit) = {
-    val server = AskServer.newHttpServer(new InetSocketAddress("127.0.0.1", 0))
+    val server = StubHttpServer.create(new InetSocketAddress("127.0.0.1", 0))
     val requests = new AtomicInteger(0)
     val batchSizes = new java.util.Vector[Int]()
     val flakyFailed = new AtomicInteger(0)

@@ -20,7 +20,7 @@ class HttpServingClientsSpec extends AnyFunSuite {
 
   // ---------------- rerank stub ----------------
   private def startRerankStub(): (Int, AtomicInteger, () => Unit) = {
-    val server = AskServer.newHttpServer(new InetSocketAddress("127.0.0.1", 0))
+    val server = StubHttpServer.create(new InetSocketAddress("127.0.0.1", 0))
     val requests = new AtomicInteger(0)
     server.createContext("/", (ex: HttpExchange) => {
       requests.incrementAndGet()
@@ -73,7 +73,7 @@ class HttpServingClientsSpec extends AnyFunSuite {
 
   // ---------------- generation stub ----------------
   private def startGenStub(tokens: Seq[String]): (Int, () => Unit) = {
-    val server = AskServer.newHttpServer(new InetSocketAddress("127.0.0.1", 0))
+    val server = StubHttpServer.create(new InetSocketAddress("127.0.0.1", 0))
     server.createContext("/", (ex: HttpExchange) => {
       if (ex.getRequestURI.getPath == "/fail") {
         ex.sendResponseHeaders(500, -1); ex.close()
