@@ -697,12 +697,7 @@ object AskServer {
     try c.close() catch { case _: IOException => () }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     import org.apache.spark.sql.functions.col
     val docs = sources.TableLoader.load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id").cast("string").as("doc_id"), col("text"))

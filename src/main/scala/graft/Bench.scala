@@ -34,8 +34,9 @@ import scala.util.control.NonFatal
   * refreshes the baseline manually from a run it trusts.
   *
   * Artifacts:
-  *  - stdout: the one-line JSON contract, values rounded to ms so the
-  *    line stays inside the driver's capture window;
+  *  - stdout: the one-line JSON contract ([[summaryLine]]) — total,
+  *    calibration and failures, no per-query times, so it stays under
+  *    1 KB and whole inside the driver's 2,000-char capture window;
   *  - BENCH_FULL.json (repo cwd, committed per round): the complete
   *    per-query record — min, per-pass times, steady spread — plus the
   *    regression diff. The gate is >1.6× on min-of-3: identical-code
@@ -76,6 +77,21 @@ object Bench {
   private val SubSecondCutoff = 1.0
   private val ExtraTrials = 2
 
+  private def r3(v: Double) = math.round(v * 1000).toDouble / 1000
+
+  /** The stdout contract: ONE line, ending the output, that the driver's
+    * 2,000-char tail capture holds whole. It carries the run's total
+    * and health; per-query times live in the full artifact it names. */
+  def summaryLine(total: Double, runs: Int, policy: String, spreadP90: Double,
+                  wallS: Double, calibJvm: Double, calibSpark: Double,
+                  failed: Seq[String], fullArtifact: String, baseline: String,
+                  sf: String): String =
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
+      s""""runs":$runs,"policy":"$policy","steady_spread_p90":${r3(spreadP90)},"bench_wall_s":${r3(wallS)},""" +
+      s""""calibration":{"jvm_scalar_s":${r3(calibJvm)},"spark_agg_s":${r3(calibSpark)}},""" +
+      s""""failed":[${failed.map("\"" + _ + "\"").mkString(",")}],""" +
+      s""""full_artifact":"$fullArtifact","baseline":"$baseline","sf":"$sf"}"""
+
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - wall0) / 1e9
@@ -86,22 +102,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     val baselineFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_BASELINE.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Interleaving defeats the default 100-entry generated-class cache:
-      // ~100 queries' plans evict each other between passes, so every
-      // trial repays codegen compile + fresh JIT and the min-of-passes is
-      // uniformly inflated ~1.6-2x (first interleaved run measured 89.2 s
-      // vs the 67.6 s baseline with flat per-pass times; back-to-back
-      // trials had warm passes 2-3). Size the cache to hold every query's
-      // stages so passes 2-3 reuse compiled classes like steady state.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt, "spark.log.level" -> "WARN")
 
     // builder-owned baseline for the regression diff; falls back to the
     // working-tree full artifact only if no baseline has been committed
@@ -178,21 +179,13 @@ object Bench {
     val calibJvm = (1 to 3).map(_ => jvmCalib()).min
     val calibSpark = (1 to 3).map(_ => sparkCalib()).min
 
-    // The action is a noop-format write, NOT count(): count() lets
-    // Catalyst prune every projection it doesn't need, so map-heavy
-    // queries would be measured as little more than a parquet row count.
-    // The noop sink evaluates every output column and discards the rows.
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case NonFatal(e) =>
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      try GraftSession.noopSeconds(fn(spark, sfDir))
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         -1.0 // a failed query must not report as a near-zero (fast) time
       }
-    }
     // WARMUP PASS (untimed, discarded): every query runs once before any
     // measurement, so pass 1 no longer pays per-query codegen compile +
     // cold JIT. Round 8's last red mark (q_chunk 1.78x) was adjudicated
@@ -246,7 +239,6 @@ object Bench {
       (if (runExtras) "+subsec-min-of-" + (passesRun + ExtraTrials) else "") +
       "+budget-" + math.round(budgetS) + "s"
 
-    def r3(v: Double) = math.round(v * 1000).toDouble / 1000
     // failed queries (-1 sentinel) must not subtract from the total — a
     // broken query would otherwise make the run look FASTER
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -298,15 +290,8 @@ object Bench {
     Files.writeString(tmp, fullJson)
     Files.move(tmp, Paths.get(outFile), StandardCopyOption.REPLACE_EXISTING)
 
-    // one-line stdout contract (driver tail capture): ms precision keeps
-    // ~100 queries inside the capture window; the full record is the file
-    val qsLine = results.map { case (k, v, _, _) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsLine,""" +
-      s""""runs":$passesRun,"policy":"$policy","steady_spread_p90":${r3(p90)},"bench_wall_s":${r3(elapsedS)},""" +
-      s""""calibration":{"jvm_scalar_s":${r3(calibJvm)},"spark_agg_s":${r3(calibSpark)}},""" +
-      s""""failed":[${failedQs.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""full_artifact":"$outFile","baseline":"$baselineSrc","sf":"$sfDir"}""")
+    println(summaryLine(total, passesRun, policy, p90, elapsedS, calibJvm, calibSpark,
+      failedQs, outFile, baselineSrc, sfDir))
     spark.stop()
     // any broken query fails the run loudly — the artifact is already on
     // disk and stdout printed, so the driver still gets full data

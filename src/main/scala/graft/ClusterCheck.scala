@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CROSS-JVM check for the sharded hot tier — `local-cluster[2,4,2048]`
@@ -49,8 +48,6 @@ object ClusterCheck {
     "java.base/java.util.concurrent.atomic",
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar")
-  val AddOpens: String =
-    AddOpensPackages.map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
 
   def main(args: Array[String]): Unit = {
     // The standalone Worker's executor launcher infers the Scala
@@ -70,31 +67,12 @@ object ClusterCheck {
       pb.environment().put("SPARK_SCALA_VERSION", "2.13")
       sys.exit(pb.start().waitFor())
     }
-    // executors are separate JVMs: they need the app classes (sbt's
-    // forked-JVM classpath) and the same JDK-17 module opens the
-    // driver gets from build.sbt
-    val addOpens = AddOpens
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
-      .appName("graft-cluster-check")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.localCluster(2, 4, 2048,
+      "spark.app.name" -> "graft-cluster-check", "spark.log.level" -> "WARN")
     import spark.implicits._
 
     try {
-      // wait for both executor JVMs (ids "0","1"; "driver" excluded) —
-      // registration is async and a task scheduled before it would just
-      // run on one executor, weakening the placement claim
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      def nExecs: Int = spark.sparkContext.statusTracker.getExecutorInfos.length - 1
-      while (nExecs < 2 && System.nanoTime() < deadline) Thread.sleep(200)
-      require(nExecs >= 2, s"CLUSTERCHECK: only $nExecs executor(s) registered")
-      println(s"CLUSTERCHECK executors=$nExecs (real JVMs)")
+      println(s"CLUSTERCHECK executors=${GraftSession.executors(spark)} (real JVMs)")
 
       val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id").cast("string").as("doc_id"), col("text"))

@@ -11,10 +11,10 @@ import graft.functions.{DotProduct, HashedBow, SimHash, WordShingles}
   * expressions for SQL use, so `spark.sql("SELECT graft_dot(a, b)")`
   * (and the cosine built on it) work from pure SQL sessions.
   *
-  * Wire up with:
+  * Every graft entry point's session has it ([[GraftSession]]); a
+  * foreign session wires it up with:
   * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)            // programmatic
+  *   builder.withExtensions(new GraftExtensions)       // programmatic
   *   // or: --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   */

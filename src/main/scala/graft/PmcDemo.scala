@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end demo on the reference's real corpus: scan the 3,027 PMC
@@ -9,12 +8,7 @@ import org.apache.spark.sql.functions._
   * through the full ask pipeline. Read-only on /root/reference. */
 object PmcDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     val t0 = System.nanoTime()
 
     val docs = sources.CorpusSource.scanWithCharsetFallback(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ann
@@ -20,14 +19,7 @@ object RecallSweep {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val nQ = if (args.length > 1) args(1).toInt else 10
     val nCents = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     import spark.implicits._
 
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tooling: time a list of SparkEntry queries across several SF
-  * dirs in ONE JVM (consistent codegen/JIT state — TimeOne per point
-  * would pay a fresh warmup per measurement) and print the scaling
+  * dirs in ONE JVM (consistent codegen/JIT state — a fresh JVM per
+  * point would pay a fresh warmup per measurement) and print the scaling
   * curve as a markdown table.
   *
   * MEASUREMENT DISCIPLINE (r17): pass-major INTERLEAVED, the Bench
@@ -33,22 +31,11 @@ object ScaleCurve {
     val dirs = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val outJson = if (args.length > 2) Some(args(2)) else None
     val passes = if (args.length > 3) args(3).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     def runOnce(name: String, dir: String): Double = {
       val fn = SparkEntry.queries(name)
-      val t = try {
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+      val t = try GraftSession.noopSeconds(fn(spark, dir))
+      catch { case e: Throwable =>
         System.err.println(s"[scalecurve] $name @ $dir FAILED: ${e.getMessage}")
         -1.0
       }

@@ -33,9 +33,10 @@ import org.apache.spark.sql.functions._
   * serves behind a 5-way semaphore, app/main.py:31,186). Each level
   * gets a fresh server (fresh cache — retrieval latency, not hit
   * latency), 64 distinct single-miss asks dispatched work-stealing
-  * across c client threads; reports per-request p50/p95/p99/max plus
-  * wall-clock throughput, and one JSON line. Percentiles are nearest
-  * rank, so with 64 asks a level's p99 is its slowest ask.
+  * across c client threads; reports per-request p50/p95/p99/max in
+  * milliseconds plus wall-clock throughput, and one JSON line.
+  * Percentiles are nearest rank, so with 64 asks a level's p99 is its
+  * slowest ask.
   */
 object ServeBench {
   private def pct(sorted: Seq[Double], p: Double): Double =
@@ -50,30 +51,13 @@ object ServeBench {
     // shuffle — it measures process-boundary overhead and proves the
     // shipping path, not multi-machine scaling (see ClusterCheck).
     val clustered = args.contains("cluster")
-    val builder = SparkSession.builder()
-      .master(if (clustered) "local-cluster[2,8,4096]" else "local[32]")
-      .config("spark.sql.shuffle.partitions", if (clustered) "16" else "32")
-      .config("spark.ui.enabled", "false")
-      // serving sessions run FAIR so AskServer's per-request pools give
-      // each in-flight ask a fair core share (FIFO convoys them)
-      .config("spark.scheduler.mode", "FAIR")
-    if (clustered) {
-      require(System.getenv("SPARK_SCALA_VERSION") != null,
-        "ServeBench cluster: run as SPARK_SCALA_VERSION=2.13 sbt \"runMain " +
-          "graft.ServeBench cluster ...\" — the standalone Worker's executor " +
-          "launcher needs the env load-spark-env.sh would export")
-      builder
-        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.extraJavaOptions", ClusterCheck.AddOpens)
-    }
-    val spark = builder.getOrCreate()
-    if (clustered) {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      def n = spark.sparkContext.statusTracker.getExecutorInfos.length - 1
-      while (n < 2 && System.nanoTime() < deadline) Thread.sleep(200)
-      println(s"CLUSTER executors=$n (real JVMs)")
-    }
-    spark.sparkContext.setLogLevel("ERROR")
+    // serving sessions run FAIR so AskServer's per-request pools give
+    // each in-flight ask a fair core share (FIFO convoys them)
+    val fair = "spark.scheduler.mode" -> "FAIR"
+    val spark =
+      if (clustered) GraftSession.localCluster(2, 8, 4096, fair)
+      else GraftSession.local(32, fair)
+    if (clustered) println(s"CLUSTER executors=${GraftSession.executors(spark)} (real JVMs)")
     import spark.implicits._
 
     val t0 = System.nanoTime()
@@ -311,7 +295,7 @@ object ServeBench {
     * latency + wall-clock throughput. Fresh server (fresh cache) per
     * level; the 64 queries are distinct, so every measured ask is a
     * full retrieval miss. */
-  private def httpConcurrencyBench(spark: org.apache.spark.sql.SparkSession,
+  private def httpConcurrencyBench(spark: SparkSession,
                                    index: org.apache.spark.sql.DataFrame,
                                    wh: operators.GraphIndex.Serving,
                                    dfreq: org.apache.spark.sql.DataFrame,
@@ -374,7 +358,7 @@ object ServeBench {
             while (i < queries.length) {
               val t = System.nanoTime()
               ask(port, queries(i))
-              lat.add((System.nanoTime() - t) / 1e9)
+              lat.add((System.nanoTime() - t) / 1e6)
               i = next.getAndIncrement()
             }
           })
@@ -386,12 +370,12 @@ object ServeBench {
         val (p50, p95, p99, mx) = (pct(s, 0.50), pct(s, 0.95), pct(s, 0.99), s.last)
         val thr = queries.length / wall
         println(f"SERVE http c=$c n=${s.length} p50=$p50%.3f p95=$p95%.3f " +
-          f"p99=$p99%.3f max=$mx%.3f s/req wall=$wall%.1f s throughput=$thr%.2f ask/s")
+          f"p99=$p99%.3f max=$mx%.3f ms/req wall=$wall%.3f s throughput=$thr%.2f ask/s")
         (c, p50, p95, p99, mx, wall, thr)
       } finally srv.stop()
     }
     val levelJson = levels.map { case (c, p50, p95, p99, mx, wall, thr) =>
-      f""""c$c":{"p50":$p50%.3f,"p95":$p95%.3f,"p99":$p99%.3f,"max":$mx%.3f,"wall":$wall%.1f,"ask_per_sec":$thr%.2f}"""
+      f""""c$c":{"p50_ms":$p50%.3f,"p95_ms":$p95%.3f,"p99_ms":$p99%.3f,"max_ms":$mx%.3f,"wall_s":$wall%.3f,"ask_per_sec":$thr%.2f}"""
     }.mkString(",")
     println(s"""{"bench":"serve_http_concurrent","corpus":"$corpusName","tier":"$tierName","chunks":$nChunks,$levelJson}""")
     // the sizing rule a deploy should copy instead of the default 8:

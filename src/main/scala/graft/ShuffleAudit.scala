@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 
 /** Measures the ACTUAL shuffle traffic of a DataFrame action — the
@@ -12,45 +9,17 @@ import org.apache.spark.sql.DataFrame
   * fingerprints, never text" become executable bounds instead of
   * Scaladoc prose (ShuffleAuditSpec).
   *
-  * Implementation: a SparkListener sums task-level shuffle metrics for
-  * the duration of one noop-sink execution. Listener events are posted
-  * asynchronously, so totals are polled until stable. Intended for
-  * tests/audits on an otherwise-idle session (concurrent actions would
-  * pollute the counts); not a production metrics pipeline.
+  * Implementation: [[JobTrace]] sums task-level shuffle metrics over
+  * one noop-sink execution. Intended for tests/audits on an
+  * otherwise-idle session (concurrent actions would pollute the
+  * counts); not a production metrics pipeline.
   */
 object ShuffleAudit {
 
   case class Shuffle(readBytes: Long, writeBytes: Long, recordsRead: Long)
 
   def of(df: DataFrame): Shuffle = {
-    val sc = df.sparkSession.sparkContext
-    val read = new AtomicLong
-    val write = new AtomicLong
-    val recs = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          recs.addAndGet(m.shuffleReadMetrics.recordsRead)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      df.write.format("noop").mode("overwrite").save()
-      // the listener bus is async: poll until the totals stop moving
-      var prev = (-1L, -1L)
-      var cur = (read.get, write.get)
-      var spins = 0
-      while (prev != cur && spins < 100) {
-        Thread.sleep(50)
-        prev = cur
-        cur = (read.get, write.get)
-        spins += 1
-      }
-      Shuffle(read.get, write.get, recs.get)
-    } finally sc.removeSparkListener(listener)
+    val (_, t) = JobTrace.of(df.sparkSession.sparkContext)(GraftSession.noopSeconds(df))
+    Shuffle(t.shuffleReadBytes, t.shuffleWriteBytes, t.shuffleRecordsRead)
   }
 }

@@ -23,10 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object SkewProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
 
     // hot key 0 owns 90% of the fact side; the rest spreads over 999 keys
     val big = spark.range(10000000L).select(

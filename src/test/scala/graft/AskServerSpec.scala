@@ -65,37 +65,9 @@ class AskServerSpec extends AnyFunSuite {
   }
 
   /** Spark jobs started from an ask's scheduler pool (`graft-ask-N`)
-    * while `body` runs. The listener bus delivers a listener's events
-    * in order, so once a fence job submitted after `body` has ended,
-    * every job start from `body` has been counted. */
-  private def askPoolJobs(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val fence = "graft-fence-" + java.util.UUID.randomUUID()
-    val asked = new java.util.concurrent.atomic.AtomicInteger(0)
-    val fenceJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.scheduler.pool", "").startsWith("graft-ask-")))
-          asked.incrementAndGet()
-        if (props.exists(_.getProperty("graft.fence") == fence)) fenceJob.set(e.jobId)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == fenceJob.get) fenced.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("graft.fence", fence)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.fence", null)
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener bus never delivered the fence job's end")
-      asked.get
-    } finally sc.removeSparkListener(listener)
-  }
+    * while `body` runs; [[JobTrace]]'s fence makes the count complete. */
+  private def askPoolJobs(body: => Unit): Int =
+    JobTrace.of(spark.sparkContext)(body)._2.jobs.count(_.pool.startsWith("graft-ask-"))
 
   private def medianMs(nanos: Seq[Long]): Double = {
     val s = nanos.sorted

@@ -1,0 +1,56 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The seams of the Verify and Bench mains: what the driver grades and
+  * what it parses. */
+class EntryPointsSpec extends AnyFunSuite {
+  lazy val spark = SparkSessions.spark
+  private val mapper = new ObjectMapper()
+
+  test("Verify.dump: a query that throws leaves no output, never an older run's parquet") {
+    val out = Files.createTempDirectory("graft_verify").toString
+    spark.range(5).toDF("stale").coalesce(1).write.parquet(s"$out/q_throws")
+    assert(Files.exists(Paths.get(s"$out/q_throws")))
+    val failed = Verify.dump(spark, "/unused", out, Seq(
+      "q_throws" -> ((_, _) => throw new IllegalStateException("boom")),
+      "q_ok" -> ((s, _) => s.range(3).toDF("id"))))
+    assert(failed == Seq("q_throws"))
+    assert(!Files.exists(Paths.get(s"$out/q_throws")),
+      "check.py would grade the previous run's parquet as this run's answer")
+    assert(spark.read.parquet(s"$out/q_ok").count() == 3)
+  }
+
+  test("Verify.writeOracleSql: control characters survive a JSON round trip") {
+    val out = Files.createTempDirectory("graft_oracle").toString
+    val sql = Seq(
+      "q_tab" -> "SELECT 1\tAS a",
+      "q_cr" -> "SELECT 2\r\nAS \"b\\c\"",
+      "q_ctl" -> "SELECT '\u0001' AS c")
+    Verify.writeOracleSql(out, sql)
+    val back = mapper.readTree(Paths.get(out, "oracle_sql.json").toFile)
+    assert(back.size() == sql.size)
+    sql.foreach { case (name, q) => assert(back.path(name).asText() == q, name) }
+  }
+
+  test("Bench's stdout line stays under 1 KB and parses, whatever the query count") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size > 100)
+    val total = 123.456 * names.size
+    val line = Bench.summaryLine(total, runs = 3,
+      policy = "warmup+min-of-3-interleaved+subsec-min-of-5+budget-600s",
+      spreadP90 = 0.25, wallS = 987.654, calibJvm = 1.234, calibSpark = 2.345,
+      failed = Nil, fullArtifact = "BENCH_FULL.json", baseline = "BENCH_BASELINE.json",
+      sf = "testdata/sf0.1")
+    assert(line.length <= 1024, s"${line.length} chars")
+    assert(!line.contains('\n'))
+    val n = mapper.readTree(line)
+    assert(n.path("metric").asText() == "total")
+    assert(math.abs(n.path("value").asDouble() - total) < 1e-3)
+    assert(n.path("full_artifact").asText() == "BENCH_FULL.json")
+    assert(names.forall(q => !line.contains(q)), "per-query times belong in the full artifact")
+  }
+}
