@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Serve-only latency benchmark for the resident graph index on the
-  * reference's real corpus — the number the reference actually
-  * publishes (`< 3.5 s` end-to-end ask, README.md:3,181) is a SERVING
-  * latency, while the engine's bench rows for the graph family are
-  * build-dominated (they construct the store inside the query so the
-  * oracle can replay it). This main separates the two:
+/** Serve-only latency benchmark for the resident graph index on a
+  * testdata corpus (`corpus=<dir>`, default /root/testdata/sf0.1) — the
+  * number the reference actually publishes (`< 3.5 s` end-to-end ask,
+  * README.md:3,181) is a SERVING latency, while the engine's bench rows
+  * for the graph family are build-dominated (they construct the store
+  * inside the query so the oracle can replay it). This main separates
+  * the two:
   *
   *   ingest + build + load ONCE (reported, not benchmarked), then
   *   measure the ask latency distribution over 64 in-domain queries
@@ -16,8 +17,7 @@ import org.apache.spark.sql.functions._
   *   retrieval latency, never cache-hit latency.
   *
   * Query vectors are pre-embedded outside the timers (the reference's
-  * embed call is an external service; PmcDemo times it the same way),
-  * so the measured span is: cache probe → resident beam walk → sidecar
+  * embed call is an external service), so the measured span is: cache probe → resident beam walk → sidecar
   * re-attach → context assembly → prompt → generation stub.
   *
   * Tiers: the in-JVM `hot` tier by default (GraphIndex.hot); `text`
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * the executor-pinned shards (GraphIndex.hotSharded, default K=4).
   *
   * Prints per-mode p50/p95/max and one machine-readable JSON line.
-  * Run: `sbt "runMain graft.ServeBench"` (read-only on /root/reference).
+  * Run: `sbt "runMain graft.ServeBench [corpus=<dir>]"`.
   *
   * `runMain graft.ServeBench http` measures the LIVE serving surface
   * instead: an [[AskServer]] over the same resident index, hit by real
@@ -61,18 +61,14 @@ object ServeBench {
     import spark.implicits._
 
     val t0 = System.nanoTime()
-    // `corpus=<dir>` serves a testdata-shaped documents.parquet instead
-    // of the PMC text corpus — the sf1 scale row (r17 verdict item 7)
-    // runs the SAME pipeline over /tmp/graft_sf1 (~3× the PMC chunk
-    // count, past both size-derived build gates)
+    // `corpus=<dir>` serves another testdata-shaped documents.parquet —
+    // the sf1 scale row (r17 verdict item 7) runs the SAME pipeline over
+    // /tmp/graft_sf1, past both size-derived build gates
     val corpusDir = args.collectFirst { case a if a.startsWith("corpus=") => a.drop(7) }
-    val corpusName = corpusDir.map(d => d.split('/').last).getOrElse("PMC")
-    val docs = corpusDir match {
-      case Some(d) => spark.read.parquet(s"$d/documents.parquet")
-        .select(col("doc_id").cast("string").as("doc_id"), col("text"))
-      case None => sources.CorpusSource.scanWithCharsetFallback(
-        spark, "/root/reference/PMC", "PMC*.txt").toDF()
-    }
+      .getOrElse("/root/testdata/sf0.1")
+    val corpusName = corpusDir.split('/').last
+    val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
+      .select(col("doc_id").cast("string").as("doc_id"), col("text"))
     val chunks = operators.Ingest.chunk(
         docs.filter(operators.Ingest.nonBlank(col("text"))), "text", Schemas.ChunkSize)
       .select(col("doc_id"), col("chunk_idx"), col("chunk_text"))

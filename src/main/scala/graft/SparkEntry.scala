@@ -1,16 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions._
 import graft.operators._
+import graft.queries._
 
-/** Driver contract — one `queries` entry (+ DuckDB oracle SQL where
-  * expressible) per implemented operator from SURVEY.md §2 and the
-  * north-star pipeline surface.
+/** Driver contract — one [[Q]] per implemented operator from SURVEY.md
+  * §2 and the north-star pipeline surface: the Spark query beside the
+  * DuckDB SQL that replays it, declared in one domain file each under
+  * `graft.queries`.
   *
   * Conventions for hash-stable oracle comparison (SURVEY §5, §7.5):
   *  - every query ends in a total ORDER BY over output columns;
@@ -27,5574 +25,21 @@ import graft.operators._
   */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.sources.TableLoader.load(spark, dir, name)
-
-  /** Small single-file tables arrive as ONE input split, serializing any
-    * compute-heavy per-row work; spread them across the cores first —
-    * but ONLY when the scan is actually under-split. The guard makes
-    * the 100 TB posture code-enforced rather than caller-discipline: a
-    * cluster input that already yields ≥ parallelism splits passes
-    * through untouched (no Exchange — PlanSpec pins this), so calling
-    * the helper on a petabyte table can never trigger a full-corpus
-    * shuffle. Used only by expression-heavy text/vector queries. */
-  private[graft] def widen(spark: SparkSession, df: DataFrame): DataFrame = {
-    val parallelism = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= parallelism) df
-    else df.repartition(parallelism)
-  }
-
-  private def wide(spark: SparkSession, dir: String, name: String): DataFrame =
-    widen(spark, t(spark, dir, name))
-
-  /** Per-JVM memoized pristine BM25 stores for the lifecycle quartet
-    * (q_bm25_index / segments / delete / compact). Round-17 verdict
-    * item 1: each of the four queries paid its own full store build
-    * inside the benched body, so an interleaved bench re-ran the SAME
-    * corpus build up to 16× per run (~10 s/pass). A real deployment
-    * builds the store once and serves/mutates it many times — that is
-    * the shape these queries now measure: the pristine build runs ONCE
-    * per JVM per sfDir (the bench's warmup pass pays it), probes read
-    * it in place, and the MUTATING lifecycle queries (delete/compact)
-    * copy it to a private working dir first (the ~1 MB local copy is
-    * milliseconds; the measured body keeps the tombstone write, the
-    * staged compaction rewrite, the sidecar guard, and the probe).
-    * First use in each JVM rebuilds unconditionally, so a stale store
-    * left in tmp by a previous process can never serve. Results are
-    * byte-identical to the per-query-build form — the oracle pins it. */
-  private object bm25Stores {
-    private val mono = scala.collection.mutable.Set[String]()
-    private val seg = scala.collection.mutable.Set[String]()
-    private def tmp(name: String): String =
-      new java.io.File(System.getProperty("java.io.tmpdir"), name).getAbsolutePath
-    def monoStore(s: SparkSession, dir: String): String = synchronized {
-      val idx = tmp("graft_bm25" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!mono.contains(dir)) {
-        Retrieval.writeBm25Index(wide(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", idx, nBuckets = 32)
-        mono += dir
-      }
-      idx
-    }
-    def segStore(s: SparkSession, dir: String): String = synchronized {
-      val idx = tmp("graft_bm25seg" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!seg.contains(dir)) {
-        val p = new org.apache.hadoop.fs.Path(idx)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        val docs = wide(s, dir, "documents").select("doc_id", "text")
-        Retrieval.appendBm25Segment(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", idx, "s0001", nBuckets = 32)
-        Retrieval.appendBm25Segment(docs.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", idx, "s0002", nBuckets = 32)
-        seg += dir
-      }
-      idx
-    }
-    /** Fresh private copy of the pristine store for a mutating query:
-      * delete-then-copy so no file from a previous mutation survives. */
-    def copyOf(s: SparkSession, dir: String, suffix: String): String =
-      copyStore(s, monoStore(s, dir),
-        tmp("graft_bm25" + suffix + dir.replaceAll("[^A-Za-z0-9]", "_")))
-  }
-
-  private def copyStore(s: SparkSession, src: String, dst: String): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(src)
-    val dstP = new org.apache.hadoop.fs.Path(dst)
-    val fs = dstP.getFileSystem(conf)
-    fs.delete(dstP, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, srcP, fs, dstP, false, conf)
-    dst
-  }
-
-  /** Per-JVM memoized pristine knn-graph stores — [[bm25Stores]]'
-    * policy applied to the graph family, where the interleaved bench
-    * re-ran IDENTICAL builds even more often: q_ann_graph_warm /
-    * _batch / _part each built the SAME 8-centroid store under a
-    * different tmp name, and the delete/compact lifecycle pair both
-    * built the same √N store. The pristine stores now build once per
-    * JVM per sfDir; read-only probes (normalized layout, batched walk,
-    * partition-pruned walk, mark-delete — tombstones live in a
-    * SEPARATE sidecar dir, so the probe store stays pristine) read
-    * them in place, and compaction (the one physical mutation) copies
-    * first. Outputs unchanged — every query stays hash-green against
-    * its DuckDB oracle, which replays the same deterministic build. */
-  private object graphStores {
-    private val built = scala.collection.mutable.Set[String]()
-    private def tmp(name: String): String =
-      new java.io.File(System.getProperty("java.io.tmpdir"), name).getAbsolutePath
-    private def safe(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
-
-    /** The (vec_id < k) centroid frame over the embeddings table. */
-    def cents(s: SparkSession, dir: String, k: Long): DataFrame =
-      t(s, dir, "embeddings").select("vec_id", "embedding")
-        .filter(col("vec_id") < k)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-
-    private def buildOnce(s: SparkSession, dir: String, key: String,
-                          idx: String, nCents: Long): Unit = synchronized {
-      if (!built.contains(key)) {
-        val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-        val c = cents(s, dir, nCents)
-        val assigned = Ann.assignCells(e, "vec_id", "embedding",
-          c, "centroid_id", "centroid_vec")
-        val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
-          c, "centroid_id", "centroid_vec", m = 4)
-        Ann.writeGraphIndex(edges, idx, nBuckets = 16)
-        built += key
-      }
-    }
-
-    /** Pristine 8-centroid store (nBuckets=16, m=4) — the
-      * normalized/batch/part probes' shared layout. */
-    def knn8(s: SparkSession, dir: String): String = {
-      val idx = tmp("graft_knng8" + safe(dir))
-      buildOnce(s, dir, "8|" + dir, idx, 8L)
-      idx
-    }
-
-    /** Pristine √N-centroid store (the production codebook discipline)
-      * + its centroid count — the delete/compact lifecycle base. */
-    def knnSqrt(s: SparkSession, dir: String): (String, Long) = {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val nCents = math.max(1L, math.floor(math.sqrt(e.count().toDouble)).toLong)
-      val idx = tmp("graft_knngsqrt" + safe(dir))
-      buildOnce(s, dir, "sqrt|" + dir, idx, nCents)
-      (idx, nCents)
-    }
-
-    /** Fresh private copy for a physically-mutating query (compaction). */
-    def copyOf(s: SparkSession, srcIdx: String, dir: String, suffix: String): String =
-      copyStore(s, srcIdx, tmp("graft_knng" + suffix + safe(dir)))
-  }
-
-  /** events.parquet has shipped as TIMESTAMP(NANOS)→BIGINT-nanos,
-    * TIMESTAMP_NTZ, and plain TIMESTAMP across driver rounds;
-    * TableLoader folds all three to TimestampType at µs precision. */
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.TableLoader.loadEvents(spark, dir)
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The full reference ask-pipeline (§3.1): chunk → embed → top-k →
     * context assembly → prompt. */
   def entry(spark: SparkSession): DataFrame =
     Retrieval.ask(spark,
-      t(spark, "/root/testdata/sf0.001", "documents"),
+      graft.sources.TableLoader.load(spark, "/root/testdata/sf0.001", "documents"),
       query = "fast table scan merge join", topK = 3)
 
-  // ---------------------------------------------------------------- //
-  // Shared SQL fragments for the DuckDB oracles                      //
-  // ---------------------------------------------------------------- //
-
-  /** DuckDB: tokens of cleaned text (mirror of TextFunctions.tokens,
-    * INCLUDING the blank-text guard: Spark's tokens() returns an empty
-    * array for whitespace-only text, but string_split_regex('') would
-    * return [''] — one phantom token). */
-  private def dTokens(texpr: String) =
-    s"(CASE WHEN trim(replace($texpr, chr(10), ' ')) = '' THEN CAST([] AS VARCHAR[]) " +
-      s"ELSE string_split_regex(trim(replace($texpr, chr(10), ' ')), '\\s+') END)"
-
-  /** DuckDB: dot product of two float lists in Double, left fold order. */
-  private def dDot(a: String, b: String, dim: Int = Schemas.EmbeddingDim) =
-    s"list_sum(list_transform(range(1, ${dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
-  private def dNorm(a: String, dim: Int = Schemas.EmbeddingDim) =
-    s"sqrt(${dDot(a, a, dim)})"
-
-  /** DuckDB: cosine with the reference's zero-norm guard. */
-  private def dCosine(a: String, b: String, dim: Int = Schemas.EmbeddingDim) =
-    s"(CASE WHEN ${dNorm(a, dim)} = 0 OR ${dNorm(b, dim)} = 0 THEN 0.0 " +
-      s"ELSE ${dDot(a, b, dim)} / (${dNorm(a, dim)} * ${dNorm(b, dim)}) END)"
-
-  // ---------------------------------------------------------------- //
-  // Queries                                                          //
-  // ---------------------------------------------------------------- //
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ pipelineQueries
-
-  def oracleSql: Map[String, String] = coreOracles ++ pipelineOracles
-
-  private def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // O-7/O-8: clean + 32-word chunking of the documents corpus.
-    "q_chunk" -> ((s, dir) => {
-      Ingest.chunk(wide(s, dir, "documents").select("doc_id", "text"), "text", 32)
-        .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"), col("chunk_text"))
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // Text analysis: token counts (whitespace + BPE-ish subword regex).
-    "q_token_stats" -> ((s, dir) => {
-      wide(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-          TextAnalysis.subwordCount(col("text")).cast("long").as("n_subwords"))
-        .orderBy("doc_id")
-    }),
-
-    // BPE ENCODE with a fixed merge list (training is spec-gated — the
-    // iterative merge selection isn't SQL-replayable — but encoding a
-    // FIXED rank list is: DuckDB replace() has exactly mergeOnce's
-    // left-to-right non-overlapping scan, and chr(2)/chr(3) symbol
-    // brackets make cross-symbol matches impossible).
-    "q_bpe_encode" -> ((s, dir) => {
-      val enc = graft.operators.Bpe.withBpeTokens(
-        wide(s, dir, "documents").select("doc_id", "text"), "text", "bpe", FixedBpeMerges)
-      enc.select(col("doc_id"),
-          size(col("bpe")).cast("long").as("n_tok"),
-          get(col("bpe"), lit(0)).as("head_tok"))
-        .orderBy("doc_id")
-    }),
-
-    // F-1/O-11/O-18: exact top-10 cosine retrieval for one query vector.
-    "q_cosine_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val qv = collectVec(e, 0)
-      e.select(col("vec_id"), cosine(col("embedding"), lit(qv.toArray)).as("_raw"))
-        .select(col("vec_id"), stableRound(col("_raw")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // O-11 batch shape: 5 query vectors × all index rows, top-3 each.
-    "q_knn_batch" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      Similarity.knnJoin(queries, "query_id", "qvec", e.select("vec_id", "embedding"), "vec_id", "embedding", 3)
-        .select(col("query_id"), col("rank").cast("long").as("rank"), col("vec_id"),
-          stableRound(col("sim")).as("sim"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // F-2: L2 normalization with the reference's 1e-9 epsilon.
-    "q_l2_normalize" -> ((s, dir) => {
-      withL2Normalized(t(s, dir, "embeddings"), "embedding", "nvec")
-        .select(
-          col("vec_id"),
-          stableRound(l2Norm(col("embedding"))).as("norm"),
-          stableRound(element_at(col("nvec"), 1)).as("first_elem"))
-        .orderBy("vec_id")
-    }),
-
-    // JL dimensionality reduction: 64→16 deterministic Rademacher
-    // projection (md5-sign matrix — engine-portable, no RNG). First 4
-    // output components pin the matrix and the dot fold.
-    "q_dim_reduce" -> ((s, dir) => {
-      val planes = graft.functions.VectorFunctions.rademacherPlanes(
-        Schemas.EmbeddingDim, 16)
-      graft.functions.VectorFunctions.withRandomProjection(
-          t(s, dir, "embeddings").select("vec_id", "embedding"), "embedding", "proj", planes)
-        .select(col("vec_id"),
-          stableRound(element_at(col("proj"), 1)).as("p0"),
-          stableRound(element_at(col("proj"), 2)).as("p1"),
-          stableRound(element_at(col("proj"), 3)).as("p2"),
-          stableRound(element_at(col("proj"), 4)).as("p3"))
-        .orderBy("vec_id")
-    }),
-
-    // Relational core: TPC-H Q1-flavor pricing summary (decimal-exact).
-    "q1_pricing" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1999-12-31 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_base_price"),
-          sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-            .cast("double").as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // Join pipeline: revenue per nation (broadcast dims, partial aggs).
-    "q_join_revenue" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(
-          sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-            .cast("double").as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy("n_name")
-    }),
-
-    // Skew-salted join surface: salting is internal plumbing (salt the
-    // big side, replicate the small side over the salt range), so the
-    // result must equal — and is oracled against — a plain equi-join.
-    "q_skew_join" -> ((s, dir) => {
-      val big = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("suppkey"), col("l_orderkey"), col("l_quantity"))
-      val small = t(s, dir, "supplier")
-        .select(col("s_suppkey").as("suppkey"), col("s_name"))
-      SkewJoin.saltedJoin(big, small, "suppkey", saltSource = "l_orderkey", buckets = 8)
-        .groupBy(col("s_name"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          count(lit(1)).as("n_items"))
-        .orderBy("s_name")
-    }),
-
-    // O-18 per-group: top-3 orders per customer by totalprice (window).
-    "q_window_topn" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), col("o_orderkey"))
-      t(s, dir, "orders")
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("o_custkey"), col("rank").cast("long").as("rank"),
-          col("o_orderkey"), col("o_totalprice"))
-        .orderBy("o_custkey", "rank")
-    }),
-
-    // O-13: auth-shaped existence semi-join.
-    "q_semi_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    }),
-
-    // Anti-join: customers with no orders.
-    "q_anti_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    }),
-
-    // Grouping sets: rollup with NULLs coalesced for oracle stability.
-    "q_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          count(lit(1)).as("n_rows"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          col("sum_qty"), col("n_rows"))
-        .orderBy("returnflag", "linestatus")
-    }),
-
-    // Grouping sets: full CUBE over two dims (§2.J).
-    "q_cube" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n"), col("total"))
-        .orderBy("status", "priority")
-    }),
-
-    // Date arithmetic: monthly revenue (date_trunc-style bucketing).
-    "q_month_revenue" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
-        .orderBy("month")
-    }),
-
-    // Pivot: returnflag quantities spread into columns.
-    "q_pivot" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_linestatus")
-        .pivot("l_returnflag", Seq("A", "N", "R"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")))
-        .select(col("l_linestatus"),
-          coalesce(col("A").cast("double"), lit(0.0)).as("qty_a"),
-          coalesce(col("N").cast("double"), lit(0.0)).as("qty_n"),
-          coalesce(col("R").cast("double"), lit(0.0)).as("qty_r"))
-        .orderBy("l_linestatus")
-    }),
-
-    // The SQL surface end-to-end: spark.sql over registered views.
-    "q_sql_surface" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-      t(s, dir, "part").createOrReplaceTempView("v_part")
-      s.sql("""
-        SELECT p.p_brand AS brand,
-               count(*) AS n_items,
-               CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        FROM v_lineitem l JOIN v_part p ON l.l_partkey = p.p_partkey
-        WHERE p.p_size <= 25
-        GROUP BY p.p_brand
-        ORDER BY brand""")
-    }),
-
-    // S-3 batch shape: tumbling 10-minute event-time windows.
-    "q_events_tumbling" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(window(col("ts"), "10 minutes").as("w"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-        .select(unix_timestamp(col("w.start")).as("window_start"),
-          col("event_type"), col("n_events"), col("sum_value"))
-        .orderBy("window_start", "event_type")
-    }),
-
-    // Statistical aggregates (engine completeness; §2.J).
-    "q_stats" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          stableRound(stddev_samp(col("l_quantity"))).as("sd_qty"),
-          stableRound(var_samp(col("l_quantity"))).as("var_qty"),
-          stableRound(corr(col("l_quantity"), col("l_extendedprice"))).as("corr_qty_price"),
-          stableRound(expr("percentile(l_quantity, 0.5D)")).as("median_qty"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Window frames: running decimal sum + lag over a total order (§2.J).
-    "q_window_running" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      t(s, dir, "orders")
-        .filter(col("o_custkey") <= 100)
-        .withColumn("running_total",
-          sum(col("o_totalprice").cast("decimal(18,2)"))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double"))
-        .withColumn("prev_price", lag(col("o_totalprice"), 1).over(w))
-        .select(col("o_custkey"), col("o_orderkey"), col("running_total"), col("prev_price"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    // As-of lookup: for every event, the most recent PRIOR error event's
-    // timestamp for the same user (composed from window built-ins — the
-    // preferred shape before any custom as-of operator).
-    // Two-table backward as-of join (purchases ← latest error per user):
-    // engine runs the single-shuffle union+window form (no join operator
-    // in the plan); the oracle is DuckDB's NATIVE `ASOF LEFT JOIN`, so
-    // the semantics pin against an independent reference implementation.
-    // Right side deduped per (user_id, ts) — keep highest event_id — so
-    // the at-or-before pick is well-defined on both engines.
-    "q_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val errors = ev.filter(col("event_type") === "error")
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy("user_id", "ts").orderBy(desc("event_id"))))
-        .filter(col("_rn") === 1)
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("err_id"), col("value").as("err_value"))
-      TemporalJoins.asofBackward(purchases, errors, Seq("user_id"), "ts",
-          Seq("err_id", "err_value"))
-        .select(col("event_id"), col("user_id"), col("err_id"), col("err_value"))
-        .orderBy("event_id")
-    }),
-
-    // Point-in-interval range join: every event landing inside the
-    // 5-minute window opened by each error, per user. Engine buckets
-    // intervals to 5-min bins → plain equi-join on (user_id, bin) +
-    // exact BETWEEN re-check (no per-key cartesian); oracle is the naive
-    // range-condition join. Integer-µs arithmetic both sides.
-    "q_range_join" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("u", unix_micros(col("ts")))
-      val points = ev.select(col("event_id"), col("user_id"), col("u"))
-      val intervals = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("u").as("s_us"),
-          (col("u") + lit(300000000L)).as("e_us"))
-      TemporalJoins.pointInInterval(points, intervals, Seq("user_id"),
-          "u", "s_us", "e_us", binSize = 300000000L)
-        .groupBy("user_id")
-        .agg(count(lit(1)).cast("long").as("n_pairs"),
-          countDistinct("event_id").as("n_points"))
-        .orderBy("user_id")
-    }),
-
-    "q_asof_error" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      events(s, dir)
-        .withColumn("last_error_ts",
-          last(when(col("event_type") === "error", unix_micros(col("ts"))), ignoreNulls = true).over(w))
-        .select(col("event_id"), col("last_error_ts"))
-        .orderBy("event_id")
-    }),
-
-    // Ranking function suite over a total order (§2.J breadth).
-    "q_rank_funcs" -> ((s, dir) => {
-      val w = Window.partitionBy("o_orderstatus").orderBy(desc("o_totalprice"), col("o_orderkey"))
-      t(s, dir, "orders")
-        .filter(col("o_custkey") <= 50)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          rank().over(w).cast("long").as("rnk"),
-          dense_rank().over(w).cast("long").as("drnk"),
-          stableRound(percent_rank().over(w)).as("prnk"),
-          ntile(4).over(w).cast("long").as("quartile"))
-        .orderBy("o_orderkey")
-    }),
-
-    // String function suite (F-4 library breadth).
-    "q_string_funcs" -> ((s, dir) => {
-      t(s, dir, "part")
-        .select(col("p_partkey"),
-          upper(col("p_name")).as("uname"),
-          substring(col("p_name"), 1, 5).as("prefix"),
-          lpad(col("p_brand"), 12, "*").as("padded"),
-          regexp_replace(col("p_type"), "[aeiou]", "_").as("devoweled"),
-          concat_ws("|", col("p_brand"), col("p_type")).as("joined"),
-          length(col("p_name")).cast("long").as("name_len"))
-        .orderBy("p_partkey")
-    }),
-
-    // F-5: JSON decode of the event props payload.
-    "q_json_extract" -> ((s, dir) => {
-      events(s, dir)
-        .select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .orderBy("event_id")
-    }))
-
-  // ---------------------------------------------------------------- //
-  // DuckDB oracles                                                   //
-  // ---------------------------------------------------------------- //
-
-  private def coreOracles: Map[String, String] = Map(
-
-    "q_chunk" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, ${dTokens("text")} AS words FROM documents
-         |), c AS (
-         |  SELECT doc_id, words,
-         |         unnest(range(0, CAST(ceil(len(words) / 32.0) AS BIGINT))) AS chunk_idx
-         |  FROM t
-         |)
-         |SELECT doc_id, chunk_idx,
-         |       array_to_string(list_slice(words, chunk_idx * 32 + 1, chunk_idx * 32 + 32), ' ') AS chunk_text
-         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q_token_stats" ->
-      s"""SELECT doc_id,
-         |       CAST(len(${dTokens("text")}) AS BIGINT) AS n_tokens,
-         |       CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS n_subwords
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // BPE encode with the fixed rank list: each word's chars are
-    // bracketed chr(2)<sym>chr(3) so replace() can only fuse WHOLE
-    // adjacent symbols, and replace()'s left-to-right non-overlapping
-    // scan is exactly Bpe.mergeOnce. n_tok counts chr(2) markers;
-    // head_tok reads word 1's first symbol.
-    "q_bpe_encode" -> {
-      def b(sym: String) = s"chr(2) || '$sym' || chr(3)"
-      val spaced = "regexp_replace(w, '(.)', chr(2) || '\\1' || chr(3), 'g')"
-      val chain = FixedBpeMerges.foldLeft(spaced) { case (acc, (x, y)) =>
-        s"replace($acc, ${b(x)} || ${b(y)}, ${b(x + y)})"
-      }
-      s"""WITH t AS (SELECT doc_id,
-         |              ${dTokens("regexp_replace(lower(text), '[\\x02\\x03]', '', 'g')")} AS words
-         |            FROM documents),
-         |e AS (SELECT doc_id, words, list_transform(words, w -> $chain) AS encs FROM t)
-         |SELECT doc_id,
-         |       CAST(coalesce(list_sum(list_transform(encs,
-         |         s -> length(s) - length(replace(s, chr(2), '')))), 0) AS BIGINT) AS n_tok,
-         |       CASE WHEN len(words) = 0 THEN NULL
-         |            ELSE string_split(replace(encs[1], chr(2), ''), chr(3))[1] END AS head_tok
-         |FROM e ORDER BY doc_id""".stripMargin
-    },
-
-    "q_cosine_topk" ->
-      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-         |s AS (
-         |  SELECT e.vec_id, ${dCosine("e.embedding", "q.qv")} AS sim
-         |  FROM embeddings e, q
-         |)
-         |SELECT vec_id, round(sim + 1.2345e-9, 6) AS sim
-         |FROM s ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin,
-
-    "q_knn_batch" ->
-      s"""WITH s AS (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS vec_id,
-         |         ${dCosine("e.embedding", "q.embedding")} AS sim
-         |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id < 5) q
-         |), r AS (
-         |  SELECT query_id, vec_id, sim,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
-         |  FROM s
-         |)
-         |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id, round(sim + 1.2345e-9, 6) AS sim
-         |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    "q_l2_normalize" ->
-      s"""SELECT vec_id,
-         |       round(${dNorm("embedding")} + 1.2345e-9, 6) AS norm,
-         |       round(CAST(embedding[1] AS DOUBLE) / (${dNorm("embedding")} + 1e-9) + 1.2345e-9, 6) AS first_elem
-         |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    // Rademacher projection: rebuild the md5-sign matrix (entry (i,j) =
-    // dMd5Sign('i_j')), fold each component in ascending-j order like
-    // the Scala DotProduct, scale by 1/sqrt(16).
-    "q_dim_reduce" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-         |           FROM embeddings),
-         |m AS (
-         |  SELECT i.range AS i, j.range AS j,
-         |         ${dMd5Sign(s"(CAST(i.range AS VARCHAR) || '_' || CAST(j.range AS VARCHAR))")} AS s
-         |  FROM range(0, 4) i, range(0, ${Schemas.EmbeddingDim}) j
-         |),
-         |p AS (SELECT i, list(s ORDER BY j) AS svec FROM m GROUP BY i),
-         |proj AS (
-         |  SELECT e.vec_id, p.i,
-         |         list_sum(list_transform(range(1, ${Schemas.EmbeddingDim + 1}),
-         |           j -> p.svec[j] * e.vec[j])) / sqrt(16.0) AS v
-         |  FROM e, p
-         |)
-         |SELECT vec_id,
-         |       round(max(CASE WHEN i = 0 THEN v END) + 1.2345e-9, 6) AS p0,
-         |       round(max(CASE WHEN i = 1 THEN v END) + 1.2345e-9, 6) AS p1,
-         |       round(max(CASE WHEN i = 2 THEN v END) + 1.2345e-9, 6) AS p2,
-         |       round(max(CASE WHEN i = 3 THEN v END) + 1.2345e-9, 6) AS p3
-         |FROM proj GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1999-12-31 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_join_revenue" ->
-      """SELECT n_name,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    // The salted join must be invisible in the result: oracle is the
-    // plain equi-join + aggregate.
-    "q_skew_join" ->
-      """SELECT s_name,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       count(*) AS n_items
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name ORDER BY s_name""".stripMargin,
-
-    "q_window_topn" ->
-      """WITH r AS (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rank
-        |  FROM orders
-        |)
-        |SELECT o_custkey, CAST(rank AS BIGINT) AS rank, o_orderkey, o_totalprice
-        |FROM r WHERE rank <= 3 ORDER BY o_custkey, rank""".stripMargin,
-
-    "q_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-        |       coalesce(l_linestatus, 'ALL') AS linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       count(*) AS n_rows
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-
-    "q_cube" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |       coalesce(o_orderpriority, 'ALL') AS priority,
-        |       count(*) AS n,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-
-    "q_month_revenue" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS month,
-        |       count(*) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders GROUP BY 1 ORDER BY month""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT l_linestatus,
-        |       coalesce(CAST(sum(CASE WHEN l_returnflag = 'A' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE), 0.0) AS qty_a,
-        |       coalesce(CAST(sum(CASE WHEN l_returnflag = 'N' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE), 0.0) AS qty_n,
-        |       coalesce(CAST(sum(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE), 0.0) AS qty_r
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-
-    "q_sql_surface" ->
-      """SELECT p.p_brand AS brand,
-        |       count(*) AS n_items,
-        |       CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE p.p_size <= 25
-        |GROUP BY p.p_brand
-        |ORDER BY brand""".stripMargin,
-
-    "q_events_tumbling" ->
-      """SELECT CAST(floor(epoch(ts) / 600) AS BIGINT) * 600 AS window_start,
-        |       event_type,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_asof_error" ->
-      """SELECT event_id,
-        |       last_value(CASE WHEN event_type = 'error' THEN epoch_us(ts) END IGNORE NULLS)
-        |         OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_error_ts
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // DuckDB's native ASOF LEFT JOIN — an independent reference
-    // implementation of the backward-inclusive semantics the engine
-    // builds from union + window.
-    "q_asof_join" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |r AS (
-        |  SELECT user_id, ts, event_id AS err_id, value AS err_value
-        |  FROM events WHERE event_type = 'error'
-        |  QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1
-        |)
-        |SELECT p.event_id, p.user_id, r.err_id, r.err_value
-        |FROM p ASOF LEFT JOIN r ON p.user_id = r.user_id AND p.ts >= r.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    // Naive range-condition join as the oracle; the engine's bin-bucketed
-    // equi-join must produce the identical pair set.
-    "q_range_join" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS u, event_type FROM events),
-        |i AS (SELECT user_id, u AS s_us, u + 300000000 AS e_us FROM e WHERE event_type = 'error'),
-        |j AS (
-        |  SELECT i.user_id, p.event_id FROM i
-        |  JOIN e p ON i.user_id = p.user_id AND p.u >= i.s_us AND p.u <= i.e_us
-        |)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |       CAST(count(DISTINCT event_id) AS BIGINT) AS n_points
-        |FROM j GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_rank_funcs" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |       CAST(rank() OVER w AS BIGINT) AS rnk,
-        |       CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-        |       round(percent_rank() OVER w + 1.2345e-9, 6) AS prnk,
-        |       CAST(ntile(4) OVER w AS BIGINT) AS quartile
-        |FROM orders WHERE o_custkey <= 50
-        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_string_funcs" ->
-      """SELECT p_partkey,
-        |       upper(p_name) AS uname,
-        |       substring(p_name, 1, 5) AS prefix,
-        |       lpad(p_brand, 12, '*') AS padded,
-        |       regexp_replace(p_type, '[aeiou]', '_', 'g') AS devoweled,
-        |       concat_ws('|', p_brand, p_type) AS joined,
-        |       CAST(length(p_name) AS BIGINT) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q_stats" ->
-      """SELECT l_returnflag,
-        |       round(stddev_samp(l_quantity) + 1.2345e-9, 6) AS sd_qty,
-        |       round(var_samp(l_quantity) + 1.2345e-9, 6) AS var_qty,
-        |       round(corr(l_quantity, l_extendedprice) + 1.2345e-9, 6) AS corr_qty_price,
-        |       round(quantile_cont(l_quantity, 0.5) + 1.2345e-9, 6) AS median_qty,
-        |       count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-        |              OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |                    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_total,
-        |       lag(o_totalprice, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_price
-        |FROM orders WHERE o_custkey <= 100
-        |ORDER BY o_custkey, o_orderkey""".stripMargin)
-
-  // ---------------------------------------------------------------- //
-  // Pipeline operators: dedup, ANN, cache, text analysis, multimodal //
-  // ---------------------------------------------------------------- //
-
-  private def collectVec(df: DataFrame, id: Long): Seq[Double] =
-    df.filter(col("vec_id") === id).select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0)
-
-  /** One query's visited (vec_id, sim) set at the single-query graph
-    * rows' beam 4 / 3 hops: [[Ann.graphSearch]] over a one-row query
-    * table. */
-  private def graphWalk(s: SparkSession, lookup: Seq[Long] => DataFrame,
-                        cents: DataFrame, queryVec: Seq[Double]): DataFrame =
-    Ann.graphSearch(s, lookup, cents, "centroid_id", "centroid_vec",
-      Ann.oneQuery(s, queryVec), "query_id", "vector", beamWidth = 4, hops = 3)
-      .drop("query_id")
-
-  /** Cache table stand-in built from the embeddings table. */
-  private def cacheTable(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").filter(col("vec_id") > 0)
-      .select(col("vec_id").as("entry_id"), col("embedding"),
-        concat(lit("resp_"), col("vec_id")).as("response"), col("label").as("freq"))
-
-  /** The staged four-tier curation chain shared by q_curation_semantic
-    * and q_curation_report (each stage is the prior's survivors):
-    * input ⊇ quality gate ⊇ exact dedup ⊇ MinHash near-dup ⊇ SemDeDup.
-    * Input = documents + 10 planted word-REVERSED paraphrases (+10000,
-    * carrying the ORIGINAL embedding) that slip the first three tiers —
-    * new fingerprint, new shingles — and die only in the vector tier,
-    * proving the composition live. Docs without an embedding row (sf0.1
-    * has 5000 docs, 2000 vectors) skip the semantic tier and pass
-    * through kept: a tier can only judge what it can see, and rows must
-    * never vanish. */
-  private case class CurationStages(all: DataFrame, gated: DataFrame,
-                                    exactDeduped: DataFrame, surv: DataFrame,
-                                    kept: DataFrame)
-  private def curationSemanticStages(s: SparkSession, dir: String): CurationStages = {
-    val docs = wide(s, dir, "documents")
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val planted = docs.filter(col("doc_id") < 10).select(
-      (col("doc_id") + 10000).as("doc_id"),
-      concat_ws(" ", reverse(tokens(col("text")))).as("text"))
-    val all = docs.select("doc_id", "text").unionByName(planted)
-    val vecs = emb.unionByName(
-      emb.filter(col("vec_id") < 10)
-        .select((col("vec_id") + 10000).as("vec_id"), col("embedding")))
-    val scored = all.select(
-      col("doc_id"), col("text"),
-      TextAnalysis.langId(col("text")).as("lang_pred"),
-      TextAnalysis.qualityScore(col("text")).as("quality"),
-      TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-      TextAnalysis.contentFingerprint(col("text")).as("fp"))
-    val gated = graft.Materialize(
-      scored.filter(col("quality") >= 0.5 && col("n_tokens") >= 20))
-    val keep = gated.groupBy("fp").agg(min("doc_id").as("doc_id"))
-    val exactDeduped = graft.Materialize(gated.join(keep, Seq("fp", "doc_id")))
-    val nearDrops = Dedup.minhashCandidates(
-        exactDeduped.select("doc_id", "text"),
-        "doc_id", "text", shingleN = 3, numHashes = 8, bands = 4)
-      .select(col("id_b").as("doc_id")).distinct()
-    val surv = graft.Materialize(
-      exactDeduped.join(nearDrops, Seq("doc_id"), "left_anti"))
-    // SemDeDup codebook at the production discipline |C| = ⌊√N⌋ over
-    // the embeddings table (size-derived on BOTH engines: Spark counts
-    // the parquet, DuckDB's scalar subquery replays it) — a pinned |C|
-    // makes cells grow linearly and the in-cell pair join quadratic
-    // (the ~20×-at-10×-data row this replaced on the sf1 curve).
-    // Assignment routes through |S| = ⌊√|C|⌋ head supers and the
-    // in-cell pair join is OR-confined to two 2-plane sign-LSH bands —
-    // the same two shape fixes as q_semantic_dedup_scaled, so the
-    // chain's semantic tier carries the full production recipe (flat
-    // assignment was N·√N dots and the unconfined in-cell term N^1.5
-    // rows — the board's worst sf1 scale row before this).
-    val nSemCents = math.max(1L, math.floor(math.sqrt(emb.count().toDouble)).toLong)
-    val nSemSupers = math.max(1L, math.floor(math.sqrt(nSemCents.toDouble)).toLong)
-    val cents = emb.filter(col("vec_id") < nSemCents)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-    // ONE collect for both bands' planes (r19): the two semPlanesIn
-    // calls each ran their own filter+sort+collect job over the
-    // embeddings — the four plane rows come back in one job and slice
-    // driver-side into the same two 2-plane bands
-    val semPlanes = emb
-      .filter(col("vec_id") >= 0 && col("vec_id") < 4).orderBy("vec_id")
-      .select(col("embedding").cast("array<double>")).collect()
-      .map(_.getSeq[Double](0)).toSeq
-    val semDrops = SemanticDedup.dedup(
-        surv.join(vecs.withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"))
-          .select(col("doc_id"), col("embedding")),
-        "doc_id", "embedding", cents, "centroid_id", "cvec", tau = 0.9,
-        nSupers = nSemSupers.toInt,
-        bands = Seq(semPlanes.take(2), semPlanes.drop(2)))
-      .filter(!col("is_kept")).select("doc_id")
-    val kept = surv.join(semDrops, Seq("doc_id"), "left_anti")
-    CurationStages(all, gated, exactDeduped, surv, kept)
-  }
-
-  private def pipelineQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // North star: the full corpus-curation pipeline every training-data
-    // job runs, chained as ONE declarative plan — quality gate → exact
-    // dedup (keep lowest id per fingerprint) → MinHash-banding near-dup
-    // removal (drop the higher id of each candidate pair) → per-language
-    // corpus stats. Each stage is an operator oracle-checked in
-    // isolation elsewhere; this checks the composition. Aggregates are
-    // order-independent (count / integer sum / min / max) so the output
-    // is stable under any partitioning.
-    "q_curation" -> ((s, dir) => {
-      val scored = wide(s, dir, "documents").select(
-        col("doc_id"), col("text"),
-        TextAnalysis.langId(col("text")).as("lang_pred"),
-        TextAnalysis.qualityScore(col("text")).as("quality"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TextAnalysis.contentFingerprint(col("text")).as("fp"))
-      // both the keep-set aggregate and the join re-read the gated rows,
-      // and the anti-join re-reads the deduped rows: materialize each
-      // once instead of re-running the scoring expressions per branch
-      val gated = graft.Materialize(
-        scored.filter(col("quality") >= 0.5 && col("n_tokens") >= 20))
-      val keep = gated.groupBy("fp").agg(min("doc_id").as("doc_id"))
-      val exactDeduped = graft.Materialize(gated.join(keep, Seq("fp", "doc_id")))
-      val dropIds = Dedup.minhashCandidates(
-          exactDeduped.select("doc_id", "text"),
-          "doc_id", "text", shingleN = 3, numHashes = 8, bands = 4)
-        .select(col("id_b").as("doc_id")).distinct()
-      exactDeduped.join(dropIds, Seq("doc_id"), "left_anti")
-        .groupBy("lang_pred")
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum("n_tokens").cast("long").as("total_tokens"),
-          min("quality").as("min_quality"),
-          max("quality").as("max_quality"))
-        .orderBy("lang_pred")
-    }),
-
-    // q_curation extended with the SEMANTIC tier — the full four-stage
-    // production chain: quality gate → exact dedup → MinHash near-dup →
-    // SemDeDup over the survivors' embeddings. Planted paraphrase
-    // stand-ins (word-REVERSED text of docs 0-9 at +10000, carrying the
-    // ORIGINAL embedding) slip through the first three tiers — new
-    // fingerprint, new shingles — and only the vector tier catches
-    // them, so the composition is live, not a no-op pass-through. Docs
-    // without an embedding row (sf0.1 has 5000 docs, 2000 vectors) skip
-    // the semantic tier and pass through kept: a tier can only judge
-    // what it can see, and rows must never vanish.
-    "q_curation_semantic" -> ((s, dir) => {
-      val st = curationSemanticStages(s, dir)
-      st.kept
-        .groupBy("lang_pred")
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum("n_tokens").cast("long").as("total_tokens"),
-          min("quality").as("min_quality"),
-          max("quality").as("max_quality"))
-        .orderBy("lang_pred")
-    }),
-
-    // Per-tier drop accounting for the same four-stage chain — the
-    // audit every curation run ships alongside its output: how many
-    // docs entered, and how many each tier admitted. Monotone
-    // non-increasing by construction; the gap between stages IS the
-    // tier's drop count, so a silently dead tier (e.g. a drifted
-    // codebook assigning nothing) is visible as a zero gap where the
-    // planted rows guarantee a nonzero one.
-    "q_curation_report" -> ((s, dir) => {
-      import s.implicits._
-      val st = curationSemanticStages(s, dir)
-      Seq((1L, "input", st.all.count()),
-          (2L, "quality_gate", st.gated.count()),
-          (3L, "exact_dedup", st.exactDeduped.count()),
-          (4L, "near_dedup", st.surv.count()),
-          (5L, "semantic_dedup", st.kept.count()))
-        .toDF("stage_no", "stage", "n_docs")
-        .orderBy("stage_no")
-    }),
-
-    // The SKETCH-TIER curation profile — the form of the report's
-    // statistics that survives 100 TB: per-language distinct-content
-    // estimates from a KMV bottom-64 over fingerprint HASHES (8-byte
-    // rows through the shuffle, never the full-width fp groupBy the
-    // exact dedup tier pays), and heavy-hitter token frequencies from
-    // a 4×256 count-min grid (depth×width counters per task, never
-    // |vocab|). Both sketches merge associatively, so the streaming
-    // twins (StreamingSketch) accumulate the same numbers one batch at
-    // a time. Estimates are deterministic md5 arithmetic — the oracle
-    // replays them bit-for-bit, including any collision overcounts.
-    // Input = the quality-gated corpus with the planted paraphrases,
-    // the same gate stage the exact report audits.
-    "q_curation_sketch" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents")
-      val planted = docs.filter(col("doc_id") < 10).select(
-        (col("doc_id") + 10000).as("doc_id"),
-        concat_ws(" ", reverse(tokens(col("text")))).as("text"))
-      val all = docs.select("doc_id", "text").unionByName(planted)
-      val scored = all.select(
-        col("doc_id"), col("text"),
-        TextAnalysis.langId(col("text")).as("lang_pred"),
-        TextAnalysis.qualityScore(col("text")).as("quality"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TextAnalysis.contentFingerprint(col("text")).as("fp"))
-      val gated = graft.Materialize(
-        scored.filter(col("quality") >= 0.5 && col("n_tokens") >= 20))
-      // KMV: estimated distinct contents per language = what the exact
-      // dedup tier would keep, without materializing the keep set
-      val kmvRows = Sketch.kmvEstimate(
-          Sketch.kmvPerGroup(gated, "lang_pred", "fp", k = 64), "lang_pred", k = 64)
-        .select(lit("distinct_fp").as("metric"), col("lang_pred").as("grp"),
-          stableRound(col("est_distinct")).as("est"))
-      // count-min: frequency estimates for the top-10 gated tokens
-      // (deterministic candidate set, vocabulary-bounded to derive)
-      val toks = gated.select(explode(tokens(lower(col("text")))).as("tok"))
-      val top = graft.Materialize(
-        toks.groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
-          .orderBy(col("exact_cnt").desc, col("tok")).limit(10))
-      val grid = Sketch.cmSketch(toks, "tok", depth = 4, width = 256)
-      val cmRows = Sketch.cmEstimates(grid, top.select("tok"), "tok",
-          depth = 4, width = 256)
-        .select(lit("heavy_token").as("metric"), col("tok").as("grp"),
-          stableRound(col("cm_est").cast("double")).as("est"))
-      kmvRows.unionByName(cmRows).orderBy("metric", "grp")
-    }),
-
-    // §2.F north star: exact dedup by content fingerprint.
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(wide(s, dir, "documents"), "doc_id", "text")
-        .orderBy("fingerprint")
-    }),
-
-    // MinHash signatures (8 md5-derived permutations over 3-gram shingles).
-    "q_minhash_sig" -> ((s, dir) => {
-      Dedup.withMinhashSignature(wide(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", shingleN = 3, numHashes = 8)
-        .select((col("doc_id") +: (0 until 8).map(k => col(s"sig_$k"))): _*)
-        .orderBy("doc_id")
-    }),
-
-    // MinHash LSH banding candidates (4 bands × 2 rows — the 2-row AND
-    // inside a band keeps common-min-shingle buckets from exploding
-    // quadratically; 1-row bands produced 90× more candidates on the
-    // shared-vocabulary corpus).
-    "q_minhash_pairs" -> ((s, dir) => {
-      Dedup.minhashCandidates(wide(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", shingleN = 3, numHashes = 8, bands = 4)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Pairwise 3-gram Jaccard within a source block, τ = 0.05, with the
-    // hot-shingle df-cap engaged (maxDf=100; testdata df tops out at ~6,
-    // so the cap changes nothing here — it guards the scale path and the
-    // oracle mirrors it exactly).
-    "q_jaccard_pairs" -> ((s, dir) => {
-      Dedup.jaccardPairs(wide(s, dir, "documents"), "doc_id", "text", "source",
-          shingleN = 3, threshold = 0.05, maxDf = 100L)
-        .orderBy("source", "id_a", "id_b")
-    }),
-
-    // 16-bit SimHash per document.
-    "q_simhash" -> ((s, dir) => {
-      wide(s, dir, "documents")
-        .select(col("doc_id"), Dedup.simhash(col("text"), 16).as("simhash"))
-        .orderBy("doc_id")
-    }),
-
-    // SimHash near-dup pairs: hamming ≤ 3 within a source block.
-    "q_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashPairs(wide(s, dir, "documents"), "doc_id", "text", "source",
-          bits = 16, maxHamming = 3)
-        .orderBy("source", "id_a", "id_b")
-    }),
-
-    // Streaming near-dup filter in batch mode (flatMapGroupsWithState
-    // runs identically over a batch Dataset): matchAll=true admits every
-    // arrival to state, so "dup" = within maxHamming of ANY earlier
-    // same-block doc — the form one SQL pass expresses. The streaming
-    // execution of the same operator is pinned by StreamingDedupSpec.
-    "q_stream_dedup" -> ((s, dir) => {
-      graft.streaming.StreamingDedup.simhashDedup(
-          wide(s, dir, "documents")
-            .select(col("doc_id"), col("source"), col("text"))
-            .withColumn("seq", col("doc_id")),
-          "doc_id", "text", "source", "seq", bits = 16, maxHamming = 3,
-          matchAll = true)
-        .toDF()
-        .select(col("block").as("source"), col("doc_id"), col("is_dup"),
-          col("dup_of"), col("hamming"))
-        .orderBy("source", "doc_id")
-    }),
-
-    // The BATCH-SAFE banded form of the streaming near-dup filter under
-    // the gate: state key = (source × simhash band) — pigeonhole over
-    // nBands = maxHamming+1 bands guarantees identical outcomes to the
-    // raw-block matchAll form (StreamingDedupSpec proves it; the oracle
-    // is the same SQL as q_stream_dedup), while a hot block fans out
-    // across band groups instead of buffering whole in one group call.
-    "q_stream_dedup_banded" -> ((s, dir) => {
-      graft.streaming.StreamingDedup.simhashDedupBanded(
-          wide(s, dir, "documents")
-            .select(col("doc_id"), col("source"), col("text"))
-            .withColumn("seq", col("doc_id")),
-          "doc_id", "text", "source", "seq", bits = 16, maxHamming = 3)
-        .toDF()
-        .select(col("block").as("source"), col("doc_id"), col("is_dup"),
-          col("dup_of"), col("hamming"))
-        .orderBy("source", "doc_id")
-    }),
-
-    // S-2 under the driver gate: conversation memory as keyed state, run
-    // batch-mode the way q_stream_dedup is — mapGroupsWithState over a
-    // batch Dataset is ONE group call per chat with empty prior state, so
-    // the result is the seq-ordered fold the streaming op performs
-    // incrementally (ref app/main.py:483-544: history render + append,
-    // bounded turns). Turns derive from orders (chat = custkey mod 50,
-    // seq = orderkey); maxTurns=5 forces real truncation at every SF.
-    // Oracle = last-5-by-seq window + seq-ordered string_agg.
-    "q_chat_memory" -> ((s, dir) => {
-      import s.implicits._
-      val msgs = t(s, dir, "orders").select(
-          (col("o_custkey") % 50).cast("string").as("chat_id"),
-          col("o_orderpriority").as("input"),
-          concat(col("o_orderstatus"), lit("#"), col("o_orderkey")).as("output"),
-          col("o_orderkey").cast("long").as("seq"))
-        .as[graft.streaming.SessionState.ChatMessage]
-      graft.streaming.SessionState.chatMemory(msgs, maxTurns = 5)
-        .toDF()
-        .select(col("chat_id"), col("history"), col("n_turns").cast("long").as("n_turns"))
-        .orderBy("chat_id")
-    }),
-
-    // S-1 under the driver gate: token egress as the assembled-answer
-    // fold (ref app/main.py:616-647,717-727 — the WS loop emits answer
-    // tokens in seq order; the client concatenates them). Token rows
-    // derive from documents (one token per word, seq = position), then
-    // assembleTokens folds them back shuffle-order-proof. Oracle =
-    // seq-ordered string_agg over the same positional split.
-    "q_token_egress" -> ((s, dir) => {
-      val toks = wide(s, dir, "documents").select(
-        col("doc_id").as("answer_id"),
-        posexplode(tokens(lower(cleanText(col("text"))))).as(Seq("seq", "token")))
-      graft.streaming.StreamingOps.assembleTokens(toks, "answer_id", "seq", "token")
-        .select(col("answer_id"), col("answer"),
-          col("n_tokens").cast("long").as("n_tokens"))
-        .orderBy("answer_id")
-    }),
-
-    // Decontamination: corpus docs sharing ≥ 5 distinct 3-grams with a
-    // "benchmark" slice (docs < 10) — per-doc hit count + worst overlap.
-    // (3-grams, not the production 8-gram default: the synthetic corpus
-    // is too short for organic 8-gram collisions.)
-    "q_decontaminate" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      val bench = docs.filter(col("doc_id") < 10)
-      Dedup.contamination(docs, bench, "doc_id", "text",
-          shingleN = 3, minShared = 5)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bench_hits"),
-          max(col("shared")).as("max_shared"))
-        .orderBy("doc_id")
-    }),
-
-    // Incremental NEAR-dup: odd-id docs arrive as the daily batch and
-    // probe the even-id corpus's persisted LSH band index — near-dup
-    // pairs straddle the split organically (same sigs as
-    // q_minhash_pairs).
-    "q_minhash_increment" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      val corpusBands = Dedup.lshBands(
-          Dedup.withMinhashSignature(docs.filter(col("doc_id") % 2 === 0),
-            "doc_id", "text", shingleN = 3, numHashes = 8),
-          "doc_id", numHashes = 8, bands = 4)
-        .select(col("band_id"), col("bucket"), col("doc_id").as("id"))
-      Dedup.minhashIncrement(docs.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", corpusBands,
-          shingleN = 3, numHashes = 8, bands = 4)
-        .orderBy("doc_id")
-    }),
-
-    // Dedup canonicalization: MinHash candidate pairs → connected
-    // components (min-label propagation) → one canonical doc per
-    // cluster. Docs with no candidate pair are their own cluster.
-    "q_dedup_clusters" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text",
-        shingleN = 3, numHashes = 8, bands = 4)
-      val cl = Dedup.clusters(pairs)
-      docs.select("doc_id")
-        .join(cl, docs("doc_id") === cl("id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-        .withColumn("is_canonical", col("cluster_id") === col("doc_id"))
-        .orderBy("doc_id")
-    }),
-
-    // PQ (product quantization) search under the driver gate — the
-    // SEARCH phase only, against a FIXED codebook (round-5 verdict
-    // item 4). The codebook is the deterministic head-k seed
-    // (headCodebooks ≡ train(iters=0), PqSpec-pinned), which is both how
-    // production runs (codebooks trained offline on a sample, persisted,
-    // loaded as a constant) and what makes the whole
-    // encode → ADC → exact-re-rank chain SQL-replayable: the oracle
-    // rebuilds the same codebook from the head rows and replays the
-    // argmin encode, the ordered ADC fold, the top-100 candidate cut and
-    // the cosine re-rank value-for-value. Lloyd TRAINING stays covered
-    // by PqSpec's recall bounds (its avg() float-summation order is the
-    // inherent reason it can't sit under a value oracle).
-    "q_pq_search" -> ((s, dir) => {
-      val index = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val cb = Pq.headCodebooks(index, "vec_id", "vec", m = 8, k = 16)
-      val enc = Pq.encode(index, "vec_id", "vec", cb)
-      val qv = index.filter(col("vec_id") === 0)
-        .select("vec").head().getSeq[Double](0).toArray
-      Pq.searchTopK(index, "vec_id", "vec", enc, cb, qv, topK = 10, candidates = 100)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-    }),
-
-    // IVF-PQ end-to-end over the cell-PARTITIONED store — the composed
-    // 100 TB ANN stack under the driver gate: coarse cells (vec_id < 8
-    // centroids) partition the written index; the probed-cell read is
-    // static partition pruning (PlanSpec pins PartitionFilters); ADC
-    // scores the byte codes inside the surviving cells; the survivors
-    // re-rank exactly. Same fixed-codebook split as q_pq_search, so the
-    // full stack now sits under the value oracle too (verdict item 5).
-    "q_ivfpq" -> ((s, dir) => {
-      val index = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val cents = index.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("vec").as("centroid_vec"))
-      val cb = Pq.headCodebooks(index, "vec_id", "vec", m = 8, k = 16)
-      val enc = Pq.encode(index, "vec_id", "vec", cb).toDF()
-        .select(col("id").as("vec_id"), col("codes"))
-      val assigned = Ann.assignCells(index, "vec_id", "vec",
-          cents, "centroid_id", "centroid_vec")
-        .select("vec_id", "vec", "cell_id")
-        .join(enc, "vec_id")
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_ivfpq$safe").getAbsolutePath
-      Ann.writeIvfIndex(assigned, idx)
-      val qv = index.filter(col("vec_id") === 0)
-        .select("vec").head().getSeq[Double](0).toArray
-      Pq.ivfPqSearchPartitioned(s, idx, "vec_id", "vec", cb,
-          cents, "centroid_id", "centroid_vec",
-          qv, topK = 10, nprobe = 2, candidates = 50)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-    }),
-
-    // MLlib BRP-LSH (Ann.fitBrpLsh / brpApproxNeighbors) is spec-gated
-    // only (AnnSpec: seed determinism + recall >= 0.7 vs brute force) —
-    // its hash planes come from MLlib's seeded RNG, which no SQL oracle
-    // can re-derive, so a queries entry could never be more than a
-    // rows-only smoke. The HASH-GATED form of the same bucketed-
-    // projection semantics is q_ann_brp_fixed below: the four hash
-    // planes are data rows (vec_id 4..7) instead of the RNG, so the
-    // oracle replays bucketing (floor of an ascending-fold dot /
-    // bucketLength, OR across tables) and the three-dot Euclidean
-    // distance exactly. bucketLength 0.05 keeps the candidate set at
-    // ~1/3 of the table at both test SFs — genuine pruning with a
-    // well-populated top-10.
-    "q_ann_brp_fixed" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val planes = e.filter(col("vec_id").between(4, 7)).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0)).toSeq
-      val qv = collectVec(e, 0)
-      Ann.brpFixedCandidates(e.select("vec_id", "embedding"), "embedding",
-          planes, bucketLength = 0.05, qv)
-        .select(col("vec_id"), stableRound(col("dist")).as("dist"))
-        .orderBy("dist", "vec_id") // rounded order = oracle's alias order
-        .limit(10)
-    }),
-
-    // Data mixing: per-source hash-sampling rates. The keep decision is
-    // an md5-derived uniform per doc id — reproducible across engines,
-    // partitionings and reruns (rand(seed) is none of those), which is
-    // why the oracle can replay it exactly.
-    "q_mix_sample" -> ((s, dir) => {
-      Sampling.stratifiedHashSample(
-          t(s, dir, "documents").select("doc_id", "source"),
-          "doc_id", "source",
-          Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.1))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_kept"))
-        .orderBy("source")
-    }),
-
-    // Deterministic epoch shuffle: every doc lands in exactly one of 8
-    // shards with a dense in-shard position — the reproducible
-    // training-order permutation (salt varies per epoch).
-    "q_shuffle_shards" -> ((s, dir) => {
-      Sampling.shuffleShards(
-          t(s, dir, "documents").select("doc_id"), "doc_id", nShards = 8, salt = "ep0")
-        .select("doc_id", "shard", "pos")
-        .orderBy("shard", "pos")
-    }),
-
-    // Temperature mixing: budget-40 α=0.5 allocation across sources,
-    // each source's quota filled by its lowest-md5-uniform docs (ties
-    // by id). Output = the SELECTED documents, so the oracle gates
-    // membership, not just per-source counts.
-    "q_temperature_mix" -> ((s, dir) => {
-      Sampling.temperatureMix(
-          t(s, dir, "documents").select("doc_id", "source"),
-          "doc_id", "source", budget = 40L, alpha = 0.5)
-        .select("doc_id", "source")
-        .orderBy("source", "doc_id")
-    }),
-
-    // Leakage-proof split: near-dup clusters (same MinHash-LSH pairs as
-    // q_dedup_clusters) split as UNITS — the md5-uniform is taken over
-    // the cluster id, so a val doc can never have a train near-dup.
-    "q_split_leakproof" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text",
-        shingleN = 3, numHashes = 8, bands = 4)
-      Sampling.leakproofSplit(docs.select("doc_id"), "doc_id", pairs,
-          valFraction = 0.2)
-        .select(col("doc_id"), col("cluster_id"), col("split"))
-        .orderBy("doc_id")
-    }),
-
-    // Semantic decontamination: corpus vectors (base + planted exact
-    // copies of the bench slice, +10000 ids) flagged when cosine vs any
-    // bench vector ≥ 0.9 — organic max cosine in the synthetic table is
-    // 0.47, so exactly the bench originals and the planted copies flag.
-    "q_semantic_decontaminate" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = base.filter(col("vec_id") < 5)
-        .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
-      SemanticDedup.contamination(base.unionByName(planted),
-          base.filter(col("vec_id") < 5),
-          "vec_id", "embedding", "vec_id", "embedding", tau = 0.9)
-        .select(col("vec_id"), col("n_bench_hits"),
-          stableRound(col("max_sim")).as("max_sim"), col("worst_bench_id"))
-        .orderBy("vec_id")
-    }),
-
-    // Decontamination at the scale where the BENCH side is itself big
-    // (many eval suites — 10^5+ items): the broadcast-NLJ fan-out of
-    // q_semantic_decontaminate is |bench| cosines per corpus doc,
-    // corpus-wide; SemanticDedup.contaminationConfined drops it to an
-    // equi-join on shared coarse cells, with the corpus side probing
-    // its top-2 cells within margin 0.05 (the dedup boundary-recovery
-    // discipline — a missed bench item here is silent eval leakage).
-    // The mixed-vector plant (0.8·a + 0.2·b) makes some contaminated
-    // rows land in a DIFFERENT cell than their bench source, so the
-    // probes are load-bearing, not decorative. The oracle replays the
-    // corpus top-2+margin rank, the bench primary rank, the cell join,
-    // and the windowed per-doc reduction.
-    "q_semantic_decontaminate_confined" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val a = base.filter(col("vec_id") < 100)
-        .select(col("vec_id"), col("embedding").as("_av"))
-      val b = base.filter(col("vec_id") >= 100 && col("vec_id") < 200)
-        .select((col("vec_id") - 100).as("vec_id"), col("embedding").as("_bv"))
-      val planted = a.join(b, "vec_id")
-        .select((col("vec_id") + 10000).as("vec_id"),
-          zip_with(col("_av"), col("_bv"),
-            (x, y) => x * lit(0.8) + y * lit(0.2)).as("embedding"))
-      val cents = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      SemanticDedup.contaminationConfined(base.unionByName(planted),
-          base.filter(col("vec_id") < 20), "vec_id", "embedding",
-          "vec_id", "embedding", cents, "centroid_id", "cvec",
-          tau = 0.9, cellProbes = 2, probeMargin = 0.05)
-        .select(col("vec_id"), col("n_bench_hits"),
-          stableRound(col("max_sim")).as("max_sim"), col("worst_bench_id"))
-        .orderBy("vec_id")
-    }),
-
-    // Shard packing: greedy token-budget layout per source in doc_id
-    // order (shard = floor(tokens-before / budget)).
-    "q_pack_shards" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-      Sampling.packShards(docs, "source", "doc_id", "n_tokens", 2000L)
-        .groupBy("source", "shard_id")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"))
-        .orderBy("source", "shard_id")
-    }),
-
-    // Embedding-cosine near-dup: top-1 neighbor per vector within label.
-    // Argmax via max_by on (sim, −id_b): a partial-aggregatable hash agg
-    // — each map task reduces its pairs to one candidate per id_a before
-    // the shuffle, instead of pushing ALL scored pairs through an
-    // Exchange + sort for a row_number window. Ties (equal sim) break to
-    // the lowest id_b, matching the oracle's row_number ordering.
-    "q_embedding_neighbors" -> ((s, dir) => {
-      val e = wide(s, dir, "embeddings").withColumn("_nrm", l2Norm(col("embedding")))
-      val a = e.select(col("label"), col("vec_id").as("id_a"), col("embedding").as("_va"),
-        col("_nrm").as("_na"))
-      val b = e.select(col("label"), col("vec_id").as("id_b"), col("embedding").as("_vb"),
-        col("_nrm").as("_nb"))
-      a.join(b, Seq("label"))
-        .filter(col("id_a") =!= col("id_b"))
-        .withColumn("sim", cosineGiven(col("_va"), col("_vb"), col("_na"), col("_nb")))
-        .groupBy("id_a")
-        .agg(max_by(struct(col("id_b"), col("sim")),
-          struct(col("sim"), -col("id_b"))).as("_best"))
-        .select(col("id_a"), col("_best.id_b").as("neighbor_id"),
-          stableRound(col("_best.sim")).as("sim"))
-        .orderBy("id_a")
-    }),
-
-    // IVF ANN: 8 head centroids, probe 2 cells, top-5.
-    "q_ann_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      // same predicate as the oracle (vec_id < 8), not head-N, so the two
-      // sides cannot diverge if ids ever have gaps
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-      val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
-      Ann.ivfCandidates(assigned, "embedding", cents, "centroid_id", "centroid_vec",
-          collectVec(e, 0), nprobe = 2)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id")) // rounded order = oracle's alias order
-        .limit(5)
-    }),
-
-    // IVF over the cell-PARTITIONED store: same result as q_ann_ivf, but
-    // the candidate scan goes through partitionBy(cell_id) + partition
-    // pruning — the end-to-end exercise of the 100 TB IVF layout.
-    "q_ann_ivf_part" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_ivf$safe").getAbsolutePath
-      val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
-      Ann.writeIvfIndex(assigned.select("vec_id", "embedding", "cell_id"), idx)
-      Ann.ivfCandidatesPartitioned(s, idx, cents, "centroid_id", "centroid_vec",
-          collectVec(e, 0), "embedding", nprobe = 2)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(5)
-    }),
-
-    // SQ8 scalar quantization (Faiss SQ8 / OpenSearch byte-vector
-    // analog): per-vector int8 codes + scale, ranked asymmetrically
-    // (full-precision query vs raw codes — the scale cancels in
-    // cosine). The 4×-less-scan-bandwidth storage tier; quantization
-    // arithmetic (floor(x/scale + 0.5), scale = maxabs/127) is
-    // replayed verbatim by the oracle, so the codes themselves are
-    // hash-pinned, not just the ranking.
-    "q_ann_sq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      Sq.searchTopK(Sq.quantize(e, "embedding"), "vec_id", collectVec(e, 0), 10)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // Two-tier SQ search: int8 prefilter top-40 → exact float re-rank
-    // of just those ids (pushed-down id filter) → top-10. The
-    // production layout where the wide scan touches only 1-byte codes
-    // and the float column is read for |candidates| rows.
-    "q_ann_sq_rerank" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      Sq.searchRerank(Sq.quantize(e, "embedding"), e, "vec_id", "embedding",
-          collectVec(e, 0), k = 10, candidates = 40)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // Matryoshka truncated-dim two-tier: prefilter ranks on the first
-    // 16 of 64 dims (4× less scan traffic), exact full-dim re-rank of
-    // the top-40 ids. Same contract discipline as q_ann_sq_rerank.
-    "q_ann_truncate" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      Ann.truncatedRerank(e, "vec_id", "embedding",
-          collectVec(e, 0), k = 10, candidates = 40, prefixDim = 16)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // GRAPH ANN — the HNSW-analog (ref app/main.py:262-283): a
-    // deterministic k-NN graph (undirected in-cell top-4 + centroid
-    // up-links + centroid clique) walked by a 3-hop beam-4 search from
-    // the centroid entry points. Unlike classic HNSW the whole walk is
-    // SQL-replayable, so the traversal itself is oracle-checked. Query
-    // vec 9 is deliberately NOT a centroid — the walk has to navigate.
-    "q_ann_graph" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-      val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
-      val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
-        cents, "centroid_id", "centroid_vec", m = 4)
-      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 9)))
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // The SAME graph build + walk at the PRODUCTION codebook discipline
-    // |C| = ⌊√N⌋ — the configuration that survives sf1 where the
-    // pinned-|C|=8 build OOMs (SCALE.md curve), and the recall-0.98
-    // point on the real corpus (SCALE.md "Graph-ANN recall at scale";
-    // the probe that measured it is in commit be29786). Everything is
-    // derived from N on BOTH sides (Spark counts the table; DuckDB's
-    // scalar subquery replays it), so one oracle serves every SF. Query
-    // vec 201 is not a centroid at any SF (√N ≤ 141 even at sf1).
-    "q_ann_graph_scaled" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val nCents = math.floor(math.sqrt(e.count().toDouble)).toLong
-      val cents = e.filter(col("vec_id") < nCents)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-      val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
-      val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
-        cents, "centroid_id", "centroid_vec", m = 4)
-      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 201)))
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // The √N build with TWO-LEVEL (coarse-quantizer) assignment —
-    // what keeps the build map-side cost from becoming the next
-    // asymptotic bottleneck after the √N codebook fix: flat assignment
-    // is N·√N dots corpus-wide (3·10^13 at N=10^9); routing through
-    // |S| = ⌊√|C|⌋ super-centroids cuts it to ~2·N^1.25. Assignment is
-    // approximate (IVF's nprobe=1 trade) but deterministic at both
-    // levels, so the oracle replays it with two windowed argmaxes —
-    // the walk replay is annGraphOracleWhere's, unchanged.
-    "q_ann_graph_hier" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val nCents = math.max(1L, math.floor(math.sqrt(e.count().toDouble)).toLong)
-      val nSupers = math.max(1L, math.floor(math.sqrt(nCents.toDouble)).toLong)
-      val cents = e.filter(col("vec_id") < nCents)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-      val assigned = Ann.assignCellsHier(e, "vec_id", "embedding",
-        cents, "centroid_id", "centroid_vec", nSupers.toInt)
-      val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
-        cents, "centroid_id", "centroid_vec", m = 4)
-      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 201)))
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // The √N build with the LSH-CONFINED edge stage — the other half of
-    // the 100 TB build story: at |C| = ⌊√N⌋ the in-cell pair set is
-    // Σ|cell|² = N^1.5 rows (the same asymptote q_ann_graph_hier removes
-    // from assignment); hashing nodes with 4 deterministic data-row
-    // planes and pairing on (cell, bucket) bounds it by the largest
-    // cell×bucket block. Candidate loss is the standard LSH trade;
-    // connectivity never depends on top-m edges (centroid up-links).
-    // The oracle replays the plane dots (q_ann_lsh's bucket CTE) inside
-    // the shared walk replay, so the confined build is hash-gated too.
-    "q_ann_graph_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val nCents = math.max(1L, math.floor(math.sqrt(e.count().toDouble)).toLong)
-      val cents = e.filter(col("vec_id") < nCents)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-      val planes = e.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0)).toSeq
-      val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
-      val edges = Ann.knnGraphLsh(assigned, "vec_id", "embedding",
-        cents, "centroid_id", "centroid_vec", m = 4, planes)
-      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 201)))
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // OR-AMPLIFIED LSH edge build (Ann.knnGraphLshBanded): two
-    // independent 2-plane bands; a pair is an edge candidate when
-    // EITHER band's sign bits fully agree — the MinHash banding
-    // construction applied to sign-LSH, recovering the recall a single
-    // band loses (measured on PMC: 0.68 one band → see SCALE.md)
-    // while each band's join stays (cell × bucket)-bounded. Planes are
-    // data rows (vec_id 0-1 band 0, 2-3 band 1) so the oracle replays
-    // both bucket columns and the OR in its pair CTE.
-    "q_ann_graph_banded" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val nCents = math.max(1L, math.floor(math.sqrt(e.count().toDouble)).toLong)
-      val cents = e.filter(col("vec_id") < nCents)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-      def planesIn(lo: Long, hi: Long) = e
-        .filter(col("vec_id") >= lo && col("vec_id") < hi).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0)).toSeq
-      val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
-      val edges = Ann.knnGraphLshBanded(assigned, "vec_id", "embedding",
-        cents, "centroid_id", "centroid_vec", m = 4,
-        Seq(planesIn(0, 2), planesIn(2, 4)))
-      Ann.persistedFor(edges)(es => graphWalk(s, Ann.edgeLookup(es), cents, collectVec(e, 201)))
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // Graph ANN over a persisted NORMALIZED layout: the same walk as
-    // q_ann_graph_part, but the edge ids and one vector row per node
-    // are persisted once and every hop filters cached batches
-    // (Ann.normalizedLookup). Same oracle: the lookup medium changes,
-    // the walk does not.
-    "q_ann_graph_warm" -> ((s, dir) => {
-      // shared pristine 8-centroid store ([[graphStores]] — built once
-      // per JVM): this row measures the layout normalization + the walk
-      // over cached batches
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = graphStores.cents(s, dir, 8)
-      val idx = graphStores.knn8(s, dir)
-      // the NORMALIZED layout: (src,dst) ids + one vector row per node
-      // — O(|V|·dim + |E|) RAM instead of the store's denormalized
-      // O(|E|·dim)
-      val raw = s.read.parquet(idx)
-      val edgeIds = raw.select("src", "dst").persist()
-      val vecs = raw.select("dst", "dst_vec").dropDuplicates("dst").persist()
-      edgeIds.count(); vecs.count()
-      // the walk runs eagerly (driver beam loop), so the returned
-      // frame is a local collection — safe to release the cache here
-      val out = graphWalk(s, Ann.normalizedLookup(edgeIds, vecs), cents, collectVec(e, 9))
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-      edgeIds.unpersist(); vecs.unpersist()
-      out
-    }),
-
-    // BATCHED graph ANN: three queries walk the bucketed store TOGETHER
-    // — per hop, ONE partition-pruned edge read serves the union of all
-    // queries' frontiers (the concurrent-ask serving shape; per-query
-    // results are pinned identical to the solo walk by AnnSpec). Oracle:
-    // the same hop-by-hop CTE replay, parameterized by query id.
-    "q_ann_graph_batch" -> ((s, dir) => {
-      // shared pristine store — this row measures the BATCHED walk
-      // (one pruned edge read per hop for the union of frontiers)
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = graphStores.cents(s, dir, 8)
-      val idx = graphStores.knn8(s, dir)
-      val queries = e.filter(col("vec_id").isin(9L, 17L, 25L))
-      val visited = Ann.graphSearch(s, Ann.storeLookup(s, idx, 16),
-        cents, "centroid_id", "centroid_vec",
-        queries, "vec_id", "embedding", beamWidth = 4, hops = 3)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      visited
-        .select(col("query_id"), col("vec_id"), stableRound(col("sim")).as("sim"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select("query_id", "rank", "vec_id", "sim")
-        .orderBy("query_id", "rank")
-    }),
-
-    // Graph ANN over the src-BUCKETED edge store: identical walk, but
-    // each hop's edge lookup goes through partitionBy(src_bucket) +
-    // partition pruning — the 100 TB layout (the q_ann_ivf_part of the
-    // graph path). Same oracle: the store changes physical layout only.
-    "q_ann_graph_part" -> ((s, dir) => {
-      // shared pristine store — this row measures the partition-pruned
-      // per-hop walk over the bucketed layout
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val cents = graphStores.cents(s, dir, 8)
-      val idx = graphStores.knn8(s, dir)
-      graphWalk(s, Ann.storeLookup(s, idx, 16), cents, collectVec(e, 9))
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // MARK-DELETE over the graph store (the HNSW tombstone discipline:
-    // hnswlib's mark_deleted, OpenSearch's delete-until-segment-merge).
-    // Every vec_id ≡ 3 (mod 10) is tombstoned — including centroid 3,
-    // the structural case: marked nodes still ROUTE the walk (the
-    // traversal below is byte-identical to q_ann_graph_part's), the
-    // bucket-pruned serve-time filter just keeps them out of results.
-    "q_graph_delete" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      // lifecycle at the PRODUCTION codebook discipline |C| = ⌊√N⌋
-      // (size-derived on both engines, like q_ann_graph_scaled).
-      // Query 201 is not a centroid at any SF (√N ≤ 141 at sf1) and
-      // not tombstoned (201 % 10 ≠ 3). The pristine store is the
-      // shared per-JVM build ([[graphStores]]); mark-delete never
-      // touches it — tombstones are a SEPARATE sidecar dir, exactly
-      // the production append-only mark store — so the measured body
-      // is the delete lifecycle: mark write + routed walk + serve-
-      // time filter.
-      val (idx, nCents) = graphStores.knnSqrt(s, dir)
-      val cents = graphStores.cents(s, dir, nCents)
-      // the mark store is append-only in production; wipe it here so
-      // repeated executions (bench warmup + passes) stay deterministic
-      val tomb = idx + "_deltomb"
-      val tp = new org.apache.hadoop.fs.Path(tomb)
-      tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
-      Ann.writeGraphTombstones(e.filter(col("vec_id") % 10 === 3).select("vec_id"),
-        "vec_id", tomb, nBuckets = 16)
-      val visited = graphWalk(s, Ann.storeLookup(s, idx, 16), cents, collectVec(e, 201))
-      Ann.filterTombstoned(s, visited, "vec_id", tomb, nBuckets = 16)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // COMPACTION — the segment-merge half: tombstones applied
-    // PHYSICALLY (marked non-centroids lose their edges and stop
-    // routing — the walk itself changes, and the oracle replays the
-    // reduced edge set), per-batch small files merged back to one per
-    // bucket, and the mark store shrunk to just the structural
-    // (centroid) marks, which the serve-time filter still drops.
-    "q_graph_compact" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      // same √N discipline as q_graph_delete; compaction MUTATES the
-      // store physically, so it works on a fresh copy of the shared
-      // pristine build — the measured body is mark write + physical
-      // compaction (edge excision, small-file merge, mark shrink) +
-      // the changed walk
-      val (pristine, nCents) = graphStores.knnSqrt(s, dir)
-      val cents = graphStores.cents(s, dir, nCents)
-      val idx = graphStores.copyOf(s, pristine, dir, "cmp")
-      val tomb = idx + "_tomb"
-      val tp = new org.apache.hadoop.fs.Path(tomb)
-      tp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tp, true)
-      Ann.writeGraphTombstones(e.filter(col("vec_id") % 10 === 3).select("vec_id"),
-        "vec_id", tomb, nBuckets = 16)
-      Ann.compactGraphIndex(s, idx, 16, tomb, protectedIds = (0L until nCents))
-      val visited = graphWalk(s, Ann.storeLookup(s, idx, 16), cents, collectVec(e, 201))
-      Ann.filterTombstoned(s, visited, "vec_id", tomb, nBuckets = 16)
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // LSH ANN via the OPTIMIZER REWRITE (graft.plans.AnnBucketPrune):
-    // the query below is written as the EXACT form — score everything,
-    // sort desc, limit — with no bucket filter anywhere; the opt-in rule
-    // recognizes the top-k-by-cosine shape over the plane-tagged bucket
-    // column and injects `lsh_bucket IN (query_bucket)` itself. Same
-    // result as q_ann_lsh's hand-written bucket filter; the oracle
-    // encodes the bucket-filtered (ANN) semantics.
-    "q_ann_rewrite" -> ((s, dir) => {
-      s.conf.set(graft.plans.AnnBucketPrune.EnabledConf, "true")
-      GraftExtensions.ensureAnnRewrite(s) // no-op under a withExtensions session
-      val e = t(s, dir, "embeddings")
-      val planes = e.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0)).toSeq
-      val qv = collectVec(e, 0)
-      Ann.withLshBucket(e.select("vec_id", "embedding"), "embedding", planes)
-        // rounded sim BEFORE the sort: rounded order == the oracle's
-        // alias order (same discipline as q_ann_lsh / q_ann_ivf)
-        .withColumn("sim", stableRound(cosine(col("embedding"), lit(qv.toArray))))
-        .orderBy(desc("sim"), col("vec_id"))
-        .limit(5)
-        // keep lsh_bucket in the output: documents which bucket served
-        // the query, and keeps the column visible to the late (foreign-
-        // session) extraOptimizations placement of the rule
-        .select("vec_id", "lsh_bucket", "sim")
-    }),
-
-    // Sign-random-projection LSH ANN: 4 planes → bucket, top-5 in-bucket.
-    "q_ann_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val planes = e.filter(col("vec_id") < 4).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0)).toSeq
-      Ann.lshCandidates(e.select("vec_id", "embedding"), "embedding",
-          planes, collectVec(e, 0))
-        .select(col("vec_id"), stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("vec_id")) // rounded order = oracle's alias order
-        .limit(5)
-    }),
-
-    // O-12: semantic cache lookup — best entry, hit iff sim ≥ τ (τ=0.3
-    // for the synthetic vectors; the reference's 0.96 applies to real
-    // embedding spaces, app/main.py:44).
-    "q_cache_lookup" -> ((s, dir) => {
-      Similarity.cacheLookup(cacheTable(s, dir), "embedding",
-          collectVec(t(s, dir, "embeddings").select("vec_id", "embedding"), 0), threshold = 0.3)
-        .select(col("entry_id"), stableRound(col("sim")).as("sim"))
-    }),
-
-    // O-12+O-16: lookup with freq bump on the hit row.
-    "q_cache_touch" -> ((s, dir) => {
-      CacheLfu.touch(cacheTable(s, dir), collectVec(t(s, dir, "embeddings"), 0), 0.3)
-        .select(col("entry_id"), col("freq").cast("long").as("freq"))
-        .orderBy("entry_id")
-    }),
-
-    // O-15: LFU eviction victim — first-seen minimum frequency.
-    "q_lfu_evict" -> ((s, dir) => {
-      CacheLfu.evictionVictim(cacheTable(s, dir))
-        .select(col("entry_id"), col("freq").cast("long").as("freq"))
-    }),
-
-    // O-14: ordered context assembly over ranked hits, grouped by lang.
-    // Limit-then-rank: orderBy+limit plans TakeOrderedAndProject (per-
-    // partition top-k heap + k-row driver merge), so the unpartitioned
-    // row_number window only ever sees the 20 survivors — ranking the
-    // whole table through a single-partition window was the round-1
-    // scale-killer.
-    "q_context_assembly" -> ((s, dir) => {
-      val hits = t(s, dir, "documents")
-        .orderBy(desc("n_chars"), col("doc_id"))
-        .limit(20)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(desc("n_chars"), col("doc_id"))))
-      Retrieval.assembleContext(hits, "lang", "rank", "text")
-        .select(col("lang"), col("best_rank").cast("long").as("best_rank"), col("context_text"))
-        .orderBy("lang")
-    }),
-
-    // F-8: prompt templating over assembled context — the full render
-    // path (context blocks + history + query), oracle-checked as plain
-    // string algebra. Same limit-then-rank hit set as q_context_assembly.
-    "q_prompt" -> ((s, dir) => {
-      val hits = t(s, dir, "documents")
-        .orderBy(desc("n_chars"), col("doc_id"))
-        .limit(20)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(desc("n_chars"), col("doc_id"))))
-      val ctx = Retrieval.renderContext(
-          Retrieval.assembleContext(hits, "lang", "rank", "text"), "lang")
-        .withColumn("query", lit("What is Ghrelin?"))
-        .withColumn("history", concat(lit("turn 1: hello lang="), col("lang")))
-      Retrieval.buildPrompt(ctx, "query", "context_block", Some("history"))
-        .select(col("lang"), col("prompt"))
-        .orderBy("lang")
-    }),
-
-    // O-3 / F-6 / F-7: upload doc_id derivation (stem_unixtime) over
-    // synthesized paths covering the three stem shapes: simple extension,
-    // multi-dot name (stem keeps the inner dots), and no extension.
-    // Timestamp injected (F-6) so the id is deterministic.
-    "q_doc_id" -> ((s, dir) => {
-      val m = pmod(col("doc_id"), lit(3))
-      val ext = when(m === 0, lit(".txt"))
-        .when(m === 1, lit(".tar.gz"))
-        .otherwise(lit(""))
-      val fname = concat(lit("/uploads/u"), m.cast("string"),
-        lit("/doc_"), col("doc_id").cast("string"), ext)
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          fname.as("file_name"),
-          Ingest.uploadDocId(fname, lit(1723400000L)).as("upload_id"))
-        .orderBy("doc_id")
-    }),
-
-    // F-3: deterministic hashed-BoW embedding (norm + first dims).
-    "q_embed_doc" -> ((s, dir) => {
-      wide(s, dir, "documents")
-        .withColumn("_raw", Embed.embedText(col("text")))
-        .withColumn("_norm", l2Norm(col("_raw")))
-        .withColumn("_n", l2NormalizeWith(col("_raw"), col("_norm")))
-        .select(col("doc_id"), stableRound(col("_norm")).as("norm"),
-          stableRound(element_at(col("_n"), 1)).as("e0"),
-          stableRound(element_at(col("_n"), 2)).as("e1"),
-          stableRound(element_at(col("_n"), 3)).as("e2"),
-          stableRound(element_at(col("_n"), 4)).as("e3"))
-        .orderBy("doc_id")
-    }),
-
-    // F-3 external-service parity path: the batched mapPartitions
-    // embedder (per-partition client setup, 64-row batches) is bitwise
-    // identical to the expression path, so it shares q_embed_doc's
-    // oracle arithmetic.
-    "q_embed_batched" -> ((s, dir) => {
-      Embed.withEmbeddingBatched(
-          wide(s, dir, "documents").select("doc_id", "text"), "text", "_n")
-        .select(col("doc_id"),
-          stableRound(element_at(col("_n"), 1)).as("e0"),
-          stableRound(element_at(col("_n"), 2)).as("e1"),
-          stableRound(element_at(col("_n"), 3)).as("e2"),
-          stableRound(element_at(col("_n"), 4)).as("e3"))
-        .orderBy("doc_id")
-    }),
-
-    // North star: corpus vocabulary stats per source — exact distinct
-    // here (oracle-able); the 100 TB path swaps countDistinct for
-    // approx_count_distinct (HLL sketch, no exact-distinct shuffle of
-    // every token) — TfIdfSpec bounds the sketch's error vs this exact.
-    // TWO-LEVEL agg, not countDistinct+count in one: the mixed
-    // distinct/non-distinct form plans an Expand that doubles every
-    // exploded token row through the shuffle; grouping by (source, tok)
-    // first gets map-side combine (shuffle rows = per-partition distinct
-    // tokens, not instances), then n_vocab = count of groups and
-    // n_tokens = sum of counts fall out of one second agg. PlanSpec
-    // pins the Expand-free shape.
-    "q_vocab_stats" -> ((s, dir) => {
-      wide(s, dir, "documents")
-        .select(col("source"), explode(tokens(lower(col("text")))).as("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("_c"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_vocab"), sum(col("_c")).as("n_tokens"))
-        .withColumn("type_token_ratio",
-          stableRound(col("n_vocab").cast("double") / col("n_tokens")))
-        .orderBy("source")
-    }),
-
-    // Count-min heavy hitters: frequency estimates from a bounded
-    // 4x256 grid — the shuffle is depth x width counters per task, never
-    // |vocab|. Probes = the exact top-20 tokens (deterministic candidate
-    // set); cm_est >= exact_cnt by construction and the overcount is
-    // deterministic md5-collision arithmetic the oracle replays.
-    "q_cm_heavy" -> ((s, dir) => {
-      val toks = wide(s, dir, "documents")
-        .select(explode(tokens(lower(col("text")))).as("tok"))
-      val top = graft.Materialize(
-        toks.groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
-          .orderBy(col("exact_cnt").desc, col("tok")).limit(20))
-      val sketch = Sketch.cmSketch(toks, "tok", depth = 4, width = 256)
-      Sketch.cmEstimates(sketch, top, "tok", depth = 4, width = 256)
-        .join(top, "tok")
-        .select(col("tok").as("token"), col("exact_cnt"), col("cm_est"),
-          (col("cm_est") - col("exact_cnt")).as("overcount"))
-        .orderBy(col("exact_cnt").desc, col("token"))
-    }),
-
-    // The count-min INCREMENTAL loop under the gate: three "daily"
-    // batches (doc_id mod 3) each write their own bounded partial grid;
-    // the merged corpus-lifetime grid must equal the one-shot grid
-    // (additive merge is exact, not approximate), so the oracle is
-    // IDENTICAL to q_cm_heavy's — the batch split must be invisible.
-    "q_cm_stream" -> ((s, dir) => {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val grid = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_cmloop$safe").getAbsolutePath
-      val p = new org.apache.hadoop.fs.Path(grid)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val toks = wide(s, dir, "documents")
-        .select(col("doc_id"), explode(tokens(lower(col("text")))).as("tok"))
-      (0 until 3).foreach { b =>
-        graft.streaming.StreamingSketch.processCmIncrement(
-          toks.filter(col("doc_id") % 3 === b), b.toLong, "tok",
-          grid, depth = 4, width = 256)
-      }
-      val merged = graft.streaming.StreamingSketch.mergedCmGrid(s, grid)
-      val top = graft.Materialize(
-        toks.groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
-          .orderBy(col("exact_cnt").desc, col("tok")).limit(20))
-      Sketch.cmEstimates(merged, top, "tok", depth = 4, width = 256)
-        .join(top, "tok")
-        .select(col("tok").as("token"), col("exact_cnt"), col("cm_est"),
-          (col("cm_est") - col("exact_cnt")).as("overcount"))
-        .orderBy(col("exact_cnt").desc, col("token"))
-    }),
-
-    // KMV bottom-k distinct sketch per source: vocabulary size estimated
-    // from the 64 smallest distinct token hashes; the only full-width
-    // stage is a hash-distinct (vocabulary-bounded), the sketch is 64
-    // rows per group. Estimate error is exact md5 arithmetic, not
-    // sampling — the oracle replays it including rel_err. The sketch
-    // and the exact count both derive from ONE shared (source, tok)
-    // vocabulary aggregate — the corpus explode+distinct exchange is
-    // planned once and reused (ReusedExchange in the physical plan),
-    // not scanned per leg; exact_distinct is then a plain count over
-    // vocabulary rows (== countDistinct over instances: explode never
-    // emits nulls).
-    "q_kmv_distinct" -> ((s, dir) => {
-      val vocab = wide(s, dir, "documents")
-        .select(col("source"), explode(tokens(lower(col("text")))).as("tok"))
-        .distinct()
-      val est = Sketch.kmvEstimate(
-        Sketch.kmvPerGroup(vocab, "source", "tok", k = 64), "source", k = 64)
-      val exact = vocab.groupBy("source")
-        .agg(count(lit(1)).as("exact_distinct"))
-      est.join(exact, "source")
-        .select(col("source"), col("n_kept"),
-          stableRound(col("est_distinct")).as("est_distinct"),
-          col("exact_distinct"),
-          stableRound((col("est_distinct") - col("exact_distinct").cast("double")) /
-            col("exact_distinct").cast("double")).as("rel_err"))
-        .orderBy("source")
-    }),
-
-    // Bloom decontamination: the broadcast, map-only form — bench
-    // n-grams fold into a 2^14-bit filter and the corpus probe is a
-    // pure scan + per-doc count, with NO join against bench grams
-    // (contrast q_decontaminate's shingle join). False positives are
-    // deterministic (both engines compute identical bits), so the
-    // oracle replays membership — including any collision hits.
-    "q_bloom_decontaminate" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      val bench = docs.filter(col("doc_id") < 10)
-      val bits = Sketch.bloomArray(
-        Sketch.bloomBits(bench, "text", shingleN = 3, numHashes = 3, mBits = 16384),
-        16384)
-      Sketch.bloomContamination(docs, "doc_id", "text", bits,
-          shingleN = 3, numHashes = 3, minHits = 5)
-        .orderBy("doc_id")
-    }),
-
-    // North star: language ID + quality scoring heuristics.
-    "q_lang_quality" -> ((s, dir) => {
-      wide(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.langId(col("text")).as("lang_pred"),
-          stableRound(TextAnalysis.punctRatio(col("text"))).as("punct_ratio"),
-          stableRound(TextAnalysis.stopwordRatio(col("text"))).as("stopword_ratio"),
-          stableRound(TextAnalysis.meanTokenLen(col("text"))).as("mean_token_len"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")
-    }),
-
-    // North star: unigram-entropy quality signal (explode + hash-agg;
-    // entropy fold over the sorted term list for portable float order).
-    "q_entropy" -> ((s, dir) => {
-      TextAnalysis.tokenEntropy(wide(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"), col("n_tokens"),
-          stableRound(col("entropy")).as("entropy"))
-        .orderBy("doc_id")
-    }),
-
-    // North star: fixed-length sequence packing — the LM dataloader
-    // layout (concat docs per source in id order, cut every 1000
-    // "tokens" — n_chars stands in — docs straddle cuts). Output rows
-    // are (doc × overlapped sequence) spans with in-sequence and
-    // in-doc positions.
-    "q_pack_sequences" -> ((s, dir) => {
-      Sampling.packSequences(
-          t(s, dir, "documents").select("doc_id", "source", "n_chars"),
-          "source", "doc_id", "n_chars", seqLen = 1000L)
-        .select(col("source"), col("doc_id"), col("seq_id"),
-          col("tok_begin"), col("tok_end"), col("doc_tok_begin"))
-        .orderBy("source", "doc_id", "seq_id")
-    }),
-
-    // Multimodal: deterministic frame sampling — every stride-th
-    // fixed-size block of the payload stands in for a decoded frame
-    // (the real mapPartitions plumbing; the codec is the documented
-    // stub). Corpus text doubles as the binary payload; it is pure
-    // ASCII at every SF, so the oracle's char slicing IS byte slicing.
-    "q_multimodal_frames" -> ((s, dir) => {
-      import s.implicits._
-      val media = t(s, dir, "documents")
-        .select(col("doc_id").as("media_id"), lit("video").as("kind"),
-          col("text").cast("binary").as("bytes"))
-        .as[Multimodal.MediaRow]
-      Multimodal.sampleFrames(media, blockSize = 64, stride = 2)
-        .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"),
-          length(col("frame_bytes")).cast("long").as("n_bytes"),
-          md5(col("frame_bytes")).as("frame_md5"))
-        .orderBy("media_id", "frame_idx")
-    }),
-
-    // North star: incremental exact dedup — a "new batch" (docs ≥ 300
-    // plus re-keyed copies of 450-469) against the fingerprint index of
-    // the accumulated corpus (docs < 400). 300-399 dup the corpus;
-    // the +10000 re-keyed copies dup their in-batch originals.
-    "q_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val existing = Dedup.exact(docs.filter(col("doc_id") < 400), "doc_id", "text")
-        .select("fingerprint")
-      val batch = docs.filter(col("doc_id") >= 300).unionByName(
-        docs.filter(col("doc_id") >= 450 && col("doc_id") < 470)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      Dedup.exactIncrement(batch, "doc_id", "text", existing)
-        .orderBy("doc_id")
-    }),
-
-    // North star: text normalization (accent fold → lower → whitespace
-    // collapse) — the canonical pre-tokenization curation pass. The
-    // synthetic corpus is pure ASCII, so accented forms are PLANTED
-    // (like q_redact_pii's PII) to force the non-ASCII path; the oracle
-    // mirrors with DuckDB's utf8proc strip_accents (char-for-char
-    // parity verified for the planted repertoire).
-    "q_normalize_text" -> ((s, dir) => {
-      wide(s, dir, "documents")
-        .withColumn("_aug", concat(col("text"),
-          lit("  Café\tNAÏVE  Zürich ñandú François øre  ")))
-        .select(col("doc_id"), normalizeText(col("_aug")).as("normalized"))
-        .orderBy("doc_id")
-    }),
-
-    // North star: unigram log-probability (the CCNet perplexity-proxy
-    // quality signal, degenerate unigram case — engine-portable).
-    // vocabSize = 32 is far under the corpus vocabulary, so both the
-    // in-vocab and the OOV smoothing-floor paths fire at every SF.
-    "q_unigram_logprob" -> ((s, dir) => {
-      TextAnalysis.unigramLogprob(wide(s, dir, "documents"),
-          "doc_id", "text", vocabSize = 32)
-        .orderBy("doc_id")
-    }),
-
-    // Bigram conditional logprob — the word-order-aware step toward
-    // the CCNet/KenLM n-gram filter. bigramTop = 64 and vocabSize = 32
-    // sit far under the corpus statistics, so the in-model, OOV-bigram,
-    // and OOV-context smoothing paths all fire at every SF.
-    "q_bigram_logprob" -> ((s, dir) => {
-      TextAnalysis.bigramLogprob(wide(s, dir, "documents"),
-          "doc_id", "text", vocabSize = 32, bigramTop = 64)
-        .orderBy("doc_id")
-    }),
-
-    // North star: DSIR-style importance weights — docs scored under a
-    // TARGET unigram model (lang='en' slice) minus the corpus model.
-    // Positive weight = looks more like the target than the crawl.
-    "q_importance_weights" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents")
-      TextAnalysis.importanceWeights(docs, "doc_id", "text",
-          target = docs.filter(col("lang") === "en"), vocabSize = 32)
-        .orderBy("doc_id")
-    }),
-
-    // Selection → packing composition: the data-selection output feeds
-    // the dataloader layout in ONE declarative plan — importance gate,
-    // then per-source fixed-length sequence stats over the kept docs.
-    "q_select_pack" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents")
-      val kept = TextAnalysis.importanceWeights(docs, "doc_id", "text",
-          target = docs.filter(col("lang") === "en"), vocabSize = 32)
-        .filter(col("weight") > 0)
-        .select("doc_id")
-        .join(t(s, dir, "documents").select("doc_id", "source", "n_chars"), "doc_id")
-      Sampling.packSequences(kept, "source", "doc_id", "n_chars", seqLen = 1000L)
-        .groupBy("source")
-        .agg(countDistinct(col("doc_id")).as("n_docs"),
-          (max(col("seq_id")) + 1).as("n_sequences"),
-          sum(col("tok_end") - col("tok_begin")).as("total_tokens"))
-        .orderBy("source")
-    }),
-
-    // North star: PII redaction (scrubbing pass over text + synthesized
-    // identifiers, so the replacement paths actually fire).
-    "q_redact_pii" -> ((s, dir) => {
-      wide(s, dir, "documents")
-        .withColumn("_aug", concat(col("text"), lit(" contact: user"), col("doc_id"),
-          lit("@example.com or 555-123-4567 from 10.0.0.1")))
-        .select(col("doc_id"), TextAnalysis.redactPii(col("_aug")).as("redacted"))
-        .orderBy("doc_id")
-    }),
-
-    // North star: Gopher-style repetition filtering signal.
-    "q_repetition" -> ((s, dir) => {
-      val ratio = TextAnalysis.repetitionRatio(col("text"), 3)
-      wide(s, dir, "documents")
-        .select(col("doc_id"),
-          stableRound(ratio).as("rep_ratio"),
-          (ratio > 0.2).as("gopher_flag"))
-        .orderBy("doc_id")
-    }),
-
-    // North star: content + min-shingle fingerprints.
-    "q_fingerprint" -> ((s, dir) => {
-      wide(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.contentFingerprint(col("text")).as("content_fp"),
-          TextAnalysis.shingleFingerprint(col("text"), 4).as("shingle_fp"))
-        .orderBy("doc_id")
-    }),
-
-    // Multimodal: binary payload metadata (real plumbing; decode stubbed).
-    "q_multimodal_meta" -> ((s, dir) => {
-      val bin = col("text").cast("binary")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          length(bin).cast("long").as("n_bytes"),
-          sha2(bin, 256).as("sha256"),
-          lower(hex(substring(bin, 1, 4))).as("magic"),
-          Multimodal.sniffFormat(bin).as("format"))
-        .orderBy("doc_id")
-    }),
-
-    // Multimodal REAL decode (round-5 verdict item 6): each doc becomes
-    // an 8×8 binary PGM whose 64 pixel bytes are 4 chained md5 blocks of
-    // the text — PnmCodec genuinely parses the header and samples
-    // (width/height below come from the decoder, not the constructor),
-    // and the md5 derivation is what lets DuckDB replay the decoded
-    // pixel histogram without a PGM parser: pixel byte value / 16 ==
-    // the byte's FIRST hex char, so the 16-bin feature histogram is a
-    // hex-digit count over the md5 strings' odd positions.
-    "q_multimodal_decode" -> ((s, dir) => {
-      import s.implicits._
-      val blocks = (0 until 4).map(i => unhex(md5(concat(col("text"), lit(s"#$i")))))
-      val img = concat(lit("P5\n8 8\n255\n".getBytes("US-ASCII")) +: blocks: _*)
-      val media = wide(s, dir, "documents")
-        .select(col("doc_id").as("media_id"), lit("image").as("kind"), img.as("bytes"))
-        .as[Multimodal.MediaRow]
-      // The 16-bin histogram goes out as scalar columns f0..f15 (the
-      // q_minhash_sig pattern): the driver's comparer cannot hash
-      // array-typed cells, and 16 scalars sort/compare everywhere.
-      Multimodal.extractFeatures(media).toDF()
-        .select(col("media_id").as("doc_id") +:
-          col("width").cast("long").as("width") +:
-          col("height").cast("long").as("height") +:
-          col("n_bytes") +:
-          (0 until 16).map(i => stableRound(col("feature").getItem(i)).as(s"f$i")): _*)
-        .orderBy("doc_id")
-    }),
-
-    // The SAME planted raster as q_multimodal_decode, carried as a real
-    // PNG payload (ImageIoCodec — javax.imageio, public JDK): pixels
-    // are the 64 md5-derived bytes, PNG is lossless, so the decoded
-    // histogram replays EXACTLY in the oracle from the md5 hex digits.
-    // What this pins beyond q_multimodal_decode: the ImageIoCodec
-    // decode path (magic gate → BufferedImage → gray raster) feeding
-    // the same codec-agnostic feature stage. n_bytes is NOT an output —
-    // the PNG container length is an encoder detail DuckDB can't see.
-    "q_multimodal_png" -> ((s, dir) => {
-      import s.implicits._
-      val blocks = (0 until 4).map(i => unhex(md5(concat(col("text"), lit(s"#$i")))))
-      val media = wide(s, dir, "documents")
-        .select(col("doc_id").as("media_id"), lit("image").as("kind"),
-          concat(blocks: _*).as("bytes"))
-        .as[Multimodal.MediaRow]
-        .map { r =>
-          Multimodal.MediaRow(r.media_id, r.kind,
-            Multimodal.ImageIoCodec.encodePng(8, 8, r.bytes.map(b => b & 0xff)))
-        }
-      Multimodal.extractFeatures(media).toDF()
-        .select(col("media_id").as("doc_id") +:
-          col("width").cast("long").as("width") +:
-          col("height").cast("long").as("height") +:
-          (0 until 16).map(i => stableRound(col("feature").getItem(i)).as(s"f$i")): _*)
-        .orderBy("doc_id")
-    }),
-
-    // §2.F: set difference for corpus versioning.
-    "q_corpus_except" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "text")
-      d.except(d.filter(pmod(col("doc_id"), lit(10)) =!= 0))
-        .orderBy("doc_id")
-    }),
-
-    // §2.F: union + distinct.
-    "q_union_distinct" -> ((s, dir) => {
-      val d = t(s, dir, "documents").select("doc_id", "lang")
-      d.unionByName(d).distinct().orderBy("doc_id")
-    }),
-
-    // §2.J join breadth: LEFT OUTER with null-preserving aggregation —
-    // customers keep a row (n_orders = 0) even with no orders.
-    "q_outer_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total_spend"))
-        .orderBy("c_custkey")
-    }),
-
-    // §2.J set ops: INTERSECT (corpus-version overlap — docs present in
-    // both slices).
-    "q_intersect" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.filter(col("doc_id") % 2 === 0).select("doc_id", "source")
-        .intersect(d.filter(col("doc_id") < 100).select("doc_id", "source"))
-        .orderBy("doc_id")
-    }),
-
-    // §2.J grouping sets beyond rollup/cube: explicit sets — per-flag,
-    // per-status, and grand total, each tagged by grouping_id.
-    "q_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("_li_gs")
-      s.sql("""
-        SELECT l_returnflag, l_linestatus,
-               CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-               count(*) AS n,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM _li_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""")
-    }),
-
-    // S-3: sliding event-time windows (10 min width, 5 min slide).
-    "q_events_sliding" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_timestamp(col("w.start")).as("window_start"),
-          col("event_type"), col("n_events"))
-        .orderBy("window_start", "event_type")
-    }),
-
-    // S-3: session windows (native session_window, 30-minute gap).
-    "q_events_session" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), unix_micros(col("w.start")).as("session_start"),
-          col("n_events"))
-        .orderBy("user_id", "session_start")
-    }),
-
-    // O-13: the reference's auth gate — broadcast semi-join against users
-    // with non-blank id+email (users table derived from customer).
-    "q_auth_semi" -> ((s, dir) => {
-      val users = t(s, dir, "customer").select(
-        col("c_custkey").cast("string").as("id"),
-        when(pmod(col("c_custkey"), lit(20)) === 0, lit(" ")).otherwise(col("c_name")).as("email"))
-      val requests = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey").cast("string").as("user_id"))
-      graft.sources.IndexStore.authorized(requests, users)
-        .select("o_orderkey", "user_id")
-        .orderBy("o_orderkey")
-    }),
-
-    // O-1/O-10: corpus scan with charset fallback (rows-only check).
-    "q_corpus_scan" -> (qCorpusScan _),
-
-    // O-2: multi-tenant upload landing-dir scan, batch twin (rows-only).
-    "q_upload_scan" -> (qUploadScan _),
-
-    // O-4/O-5: tenant-partitioned index write + pruned read-back.
-    "q_index_roundtrip" -> (qIndexRoundtrip _),
-
-    "q_index_upsert" -> (qIndexUpsert _),
-
-    // North star: Gopher/C4-style hard quality gates with per-rule
-    // attribution (QualityRules engine; thresholds tuned so the
-    // synthetic corpus actually splits on min_words / stopwords /
-    // repetition — the corpus has no punctuation, so symbol_ratio and
-    // mean_word_len pass universally and pin the all-true path).
-    "q_quality_rules" -> ((s, dir) => {
-      QualityRules.evaluate(wide(s, dir, "documents"), qualityRuleSet)
-        .select(col("doc_id"), col("r_min_words"), col("r_max_words"),
-          col("r_mean_word_len"), col("r_symbol_ratio"), col("r_stopwords"),
-          col("r_repetition"), col("passed"), col("n_failed"))
-        .orderBy("doc_id")
-    }),
-
-    // The survival report over the same rule set: one map-side-combined
-    // aggregate — total docs, survivors, per-rule kill counts.
-    "q_quality_survival" -> ((s, dir) => {
-      QualityRules.survivalStats(
-        QualityRules.evaluate(wide(s, dir, "documents"), qualityRuleSet),
-        qualityRuleSet)
-    }),
-
-    // North star: SemDeDup — coarse-cell assignment confines the
-    // pairwise cosine stage. The synthetic embeddings are near-random
-    // (max organic pairwise cosine ≈ 0.47), so the dup signal is
-    // PLANTED: exact copies of vec_id < 100 re-keyed +10000. Each copy
-    // lands in its original's cell (identical vector → identical
-    // argmax) and must be dropped with dup_of = the original.
-    "q_semantic_dedup" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = base.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
-      val cents = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      SemanticDedup.dedup(base.unionByName(planted), "vec_id", "embedding",
-          cents, "centroid_id", "cvec", tau = 0.9)
-        .orderBy("vec_id")
-    }),
-
-    // The same dedup at the SIZE-DERIVED codebook (|C| = ⌊√N⌋ on BOTH
-    // engines — a pinned |C| makes cells grow linearly and the pair
-    // join quadratic, the exact trap the r13 sf1 curve measured at
-    // 16.1×) with BOTH 100 TB shape fixes the graph build already
-    // carries — the full production recipe, hash-gated: (1) TWO-LEVEL
-    // assignment (Ann.assignCellsHier through |S| = ⌊√|C|⌋ head
-    // supers — flat assignment is N·√N dots at the √N codebook, hier
-    // is ~2·N^1.25); (2) the in-cell pair join OR-confined to two
-    // 2-plane sign-LSH bands (the Σ|cell|² = N^1.5 in-cell term drops
-    // to the largest cell×bucket block, ~R/2^b of unconfined). Exact
-    // planted copies agree on every band by construction, so the dup
-    // signal survives confinement; near-dup recall for the band recipe
-    // is measured on the real PMC corpus (SCALE.md), the buildServing
-    // discipline. The oracle replays the size-derived |C|/|S| (nested
-    // sqrt scalar subqueries), the two-level argmax (q_ann_graph_hier's
-    // CTEs) and the OR'd bucket condition (q_ann_graph_banded's), so
-    // every cell id, bucket bit, and dup_of is hash-checked.
-    "q_semantic_dedup_scaled" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = base.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
-      val nCents = math.max(1L, math.floor(math.sqrt(base.count().toDouble)).toLong)
-      val nSupers = math.max(1L, math.floor(math.sqrt(nCents.toDouble)).toLong)
-      val cents = base.filter(col("vec_id") < nCents)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      def planesIn(lo: Long, hi: Long) = base
-        .filter(col("vec_id") >= lo && col("vec_id") < hi).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0)).toSeq
-      SemanticDedup.dedup(base.unionByName(planted), "vec_id", "embedding",
-          cents, "centroid_id", "cvec", tau = 0.9,
-          nSupers = nSupers.toInt, bands = Seq(planesIn(0, 2), planesIn(2, 4)))
-        .orderBy("vec_id")
-    }),
-
-    // Multi-probe SemDeDup — the recovery of the recipe's own blind
-    // spot: a cell-confined pair stage can never score a tau-pair that
-    // straddles a coarse-cell boundary (measured on the real PMC
-    // corpus: 111/200 planted near-dups lost to the boundary ALONE —
-    // SCALE.md "Confined-pair recall"; the hier/band knobs are
-    // recall-clean, the cell wall is the whole loss). cellProbes = 2
-    // assigns the probe side of the pair join to its top-2 cells
-    // (Ann.assignCellsMulti — FAISS's nprobe applied at the cell
-    // level) and normalizes both join directions, so a boundary pair
-    // meets in the runner-up cell at ≤ 2× the single-cell candidate
-    // term. The planted dups here are MIXED vectors (0.8·a + 0.2·b
-    // element-wise, identical IEEE arithmetic on both engines) — still
-    // tau-close to a (cos ≈ 0.97 ≥ 0.9) but nudged enough that some
-    // plants argmax into a DIFFERENT cell than their original: exactly
-    // the pair class the flat build provably misses and the probes
-    // recover. The oracle replays the top-2 assignment as one windowed
-    // rank (rn <= 2) and the either-direction candidate rule as a
-    // normalized (hi, lo) projection.
-    "q_semantic_dedup_probes" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val a = base.filter(col("vec_id") < 100)
-        .select(col("vec_id"), col("embedding").as("_av"))
-      val b = base.filter(col("vec_id") >= 100 && col("vec_id") < 200)
-        .select((col("vec_id") - 100).as("vec_id"), col("embedding").as("_bv"))
-      val planted = a.join(b, "vec_id")
-        .select((col("vec_id") + 10000).as("vec_id"),
-          zip_with(col("_av"), col("_bv"),
-            (x, y) => x * lit(0.8) + y * lit(0.2)).as("embedding"))
-      val cents = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      SemanticDedup.dedup(base.unionByName(planted), "vec_id", "embedding",
-          cents, "centroid_id", "cvec", tau = 0.9, cellProbes = 2)
-        .orderBy("vec_id")
-    }),
-
-    // The probes composed with the PRODUCTION routing — multi-probe on
-    // top of the size-derived codebook and two-level assignment of
-    // q_semantic_dedup_scaled (|C| = ⌊√N⌋, |S| = ⌊√|C|⌋), PLUS the
-    // probeMargin cost lever (0.05): a runner-up cell is probed only
-    // when its sim is within the margin of the primary's — the
-    // boundary-vector confinement that keeps the pair term off hub
-    // cells (PMC margin sweep, SCALE.md). The top-2 cells come from
-    // the probed super's MEMBER set, so the oracle replays the super
-    // argmax (rn = 1 over supers), the member rank at rn <= 2, AND the
-    // margin cut (csim >= per-row max csim − 0.05, identical double
-    // arithmetic) — every probe list, both join directions, and every
-    // dup_of hash-checked. Same mixed-vector plant as
-    // q_semantic_dedup_probes.
-    "q_semantic_dedup_probes_hier" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val a = base.filter(col("vec_id") < 100)
-        .select(col("vec_id"), col("embedding").as("_av"))
-      val b = base.filter(col("vec_id") >= 100 && col("vec_id") < 200)
-        .select((col("vec_id") - 100).as("vec_id"), col("embedding").as("_bv"))
-      val planted = a.join(b, "vec_id")
-        .select((col("vec_id") + 10000).as("vec_id"),
-          zip_with(col("_av"), col("_bv"),
-            (x, y) => x * lit(0.8) + y * lit(0.2)).as("embedding"))
-      val nCents = math.max(1L, math.floor(math.sqrt(base.count().toDouble)).toLong)
-      val nSupers = math.max(1L, math.floor(math.sqrt(nCents.toDouble)).toLong)
-      val cents = base.filter(col("vec_id") < nCents)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      SemanticDedup.dedup(base.unionByName(planted), "vec_id", "embedding",
-          cents, "centroid_id", "cvec", tau = 0.9,
-          nSupers = nSupers.toInt, cellProbes = 2, probeMargin = 0.05)
-        .orderBy("vec_id")
-    }),
-
-    // The probeMargin DERIVED from the corpus's own argmax-gap
-    // distribution instead of guessed (SemanticDedup.deriveProbeMargin
-    // — one codegen map-only NearestCells top-2 pass + one exact
-    // percentile): boundaryFrac = 0.25 probes "the boundary quartile".
-    // The margin is stable-rounded to 6dp on BOTH engines (the repo's
-    // float convention) and the oracle replays the WHOLE derivation —
-    // gap = topsim − rn-2 csim per vector, quantile_cont(gaps, 0.25)
-    // (≡ Spark's exact percentile, the q_length_quantiles precedent),
-    // then the same rn <= 2 + margin-cut probe lists and
-    // either-direction rule as q_semantic_dedup_probes. Same
-    // mixed-vector plant.
-    "q_semantic_dedup_margin_derived" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val a = base.filter(col("vec_id") < 100)
-        .select(col("vec_id"), col("embedding").as("_av"))
-      val b = base.filter(col("vec_id") >= 100 && col("vec_id") < 200)
-        .select((col("vec_id") - 100).as("vec_id"), col("embedding").as("_bv"))
-      val planted = a.join(b, "vec_id")
-        .select((col("vec_id") + 10000).as("vec_id"),
-          zip_with(col("_av"), col("_bv"),
-            (x, y) => x * lit(0.8) + y * lit(0.2)).as("embedding"))
-      val cents = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      val all = base.unionByName(planted)
-      val raw = SemanticDedup.deriveProbeMargin(all, "vec_id", "embedding",
-        cents, "centroid_id", "cvec", boundaryFrac = 0.25)
-      val margin = BigDecimal(raw + 1.2345e-9)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      SemanticDedup.dedup(all, "vec_id", "embedding",
-          cents, "centroid_id", "cvec", tau = 0.9,
-          cellProbes = 2, probeMargin = margin)
-        .orderBy("vec_id")
-    }),
-
-    // Incremental semantic dedup: batch (ids >= 250, plus planted copies
-    // of corpus vectors at +20000 → dup_corpus, and of batch vectors at
-    // +30000 → dup_batch) probed against the corpus's cell-assigned
-    // vector index (ids < 250) — corpus text never re-read, probes
-    // cell-confined. Same head-8 codebook as q_semantic_dedup.
-    "q_semantic_increment" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val cents = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      val corpus = base.filter(col("vec_id") < 250)
-      val index = Ann.assignCells(corpus, "vec_id", "embedding",
-        cents, "centroid_id", "cvec")
-      val batch = base.filter(col("vec_id") >= 250)
-        .unionByName(base.filter(col("vec_id") < 50)
-          .select((col("vec_id") + 20000).as("vec_id"), col("embedding")))
-        .unionByName(base.filter(col("vec_id") >= 250 && col("vec_id") < 300)
-          .select((col("vec_id") + 30000).as("vec_id"), col("embedding")))
-      SemanticDedup.semanticIncrement(batch, "vec_id", "embedding",
-          index, cents, "centroid_id", "cvec", tau = 0.9)
-        .orderBy("vec_id")
-    }),
-
-    // The increment at the PRODUCTION shape — the daily-ingest twin of
-    // q_semantic_dedup_scaled: size-derived codebook (|C| = ⌊√N⌋ over
-    // the embeddings table, both engines), two-level assignment
-    // (|S| = ⌊√|C|⌋ head supers) on BOTH the persisted index and the
-    // new batch (parameter-drift discipline: index and probe must
-    // share the assignment recipe, or cells disagree silently), and
-    // both probe joins OR-confined to the same two sign-LSH bands —
-    // index bucket bits recomputed from stored vectors at probe time.
-    // Same planted-dup layout as q_semantic_increment; the oracle
-    // replays hier argmax + bucket folds for corpus and batch alike.
-    "q_semantic_increment_scaled" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val nCents = math.max(1L, math.floor(math.sqrt(base.count().toDouble)).toLong)
-      val nSupers = math.max(1L, math.floor(math.sqrt(nCents.toDouble)).toLong)
-      val cents = base.filter(col("vec_id") < nCents)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      def planesIn(lo: Long, hi: Long) = base
-        .filter(col("vec_id") >= lo && col("vec_id") < hi).orderBy("vec_id")
-        .select(col("embedding").cast("array<double>")).collect()
-        .map(_.getSeq[Double](0)).toSeq
-      val corpus = base.filter(col("vec_id") < 250)
-      val index = Ann.assignCellsHier(corpus, "vec_id", "embedding",
-        cents, "centroid_id", "cvec", nSupers = nSupers.toInt)
-      val batch = base.filter(col("vec_id") >= 250)
-        .unionByName(base.filter(col("vec_id") < 50)
-          .select((col("vec_id") + 20000).as("vec_id"), col("embedding")))
-        .unionByName(base.filter(col("vec_id") >= 250 && col("vec_id") < 300)
-          .select((col("vec_id") + 30000).as("vec_id"), col("embedding")))
-      SemanticDedup.semanticIncrement(batch, "vec_id", "embedding",
-          index, cents, "centroid_id", "cvec", tau = 0.9,
-          nSupers = nSupers.toInt, bands = Seq(planesIn(0, 2), planesIn(2, 4)))
-        .orderBy("vec_id")
-    }),
-
-    // Exact per-clique semantic canonicalization — the composition the
-    // SemanticDedup.dedup scaladoc prescribes over its per-tau-path
-    // approximation: same-cell tau-pairs → connected components →
-    // min-id canonical per clique. Planted copies of vectors 0-39
-    // (+20000) and second copies of 0-19 (+40000) make cliques of size
-    // 2 AND 3, so transitive closure is exercised, not just pairing.
-    "q_semantic_clusters" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val cents = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      val vecs = base
-        .unionByName(base.filter(col("vec_id") < 40)
-          .select((col("vec_id") + 20000).as("vec_id"), col("embedding")))
-        .unionByName(base.filter(col("vec_id") < 20)
-          .select((col("vec_id") + 40000).as("vec_id"), col("embedding")))
-      val prs = SemanticDedup.pairs(vecs, "vec_id", "embedding",
-        cents, "centroid_id", "cvec", tau = 0.9)
-      val cl = Dedup.clusters(prs)
-      vecs.select("vec_id")
-        .join(cl, vecs("vec_id") === cl("id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
-        .withColumn("is_canonical", col("cluster_id") === col("vec_id"))
-        .orderBy("vec_id")
-    }),
-
-    // North star: exact-substring duplication profile (Lee et al. 2022
-    // at word-5-gram granularity; 5 not the production 10 because the
-    // synthetic docs are 11-97 words). Distinct-(gram,doc) shuffle
-    // shape — see Dedup.duplicatedGramProfile.
-    "q_gram_dedup" -> ((s, dir) => {
-      Dedup.duplicatedGramProfile(wide(s, dir, "documents"),
-          "doc_id", "text", n = 5)
-        .orderBy("doc_id")
-    }),
-
-    // Lee et al. 2022 exact substring dedup: EXCISE duplicated 5-gram
-    // spans (all instances after the globally first), keep the docs.
-    // The oracle rebuilds every document's surviving token stream, so
-    // the span arithmetic — not just the counts — is hash-checked.
-    "q_excise_spans" -> ((s, dir) => {
-      Dedup.exciseDuplicateSpans(wide(s, dir, "documents"),
-          "doc_id", "text", n = 5)
-        .orderBy("doc_id")
-    }),
-
-    // Corpus profiling: per-source exact length quantiles (Spark
-    // `percentile` ≡ DuckDB `quantile_cont`, both linear-interpolated).
-    // The sketch path (percentile_approx) is StatsSpec-bounded instead —
-    // sketches are not hash-stable across engines.
-    "q_length_quantiles" -> ((s, dir) => {
-      Stats.lengthQuantiles(t(s, dir, "documents"), "source", "n_chars",
-          Seq(0.5, 0.9, 0.99))
-        .orderBy("source")
-    }),
-
-    // §3.1 end-to-end retrieval core: chunk → embed → normalize → cosine
-    // vs the embedded query → top-5 — the ask() spine, oracle-checked.
-    "q_rag_topk" -> ((s, dir) => {
-      val chunks = Ingest.chunk(wide(s, dir, "documents").select("doc_id", "text"), "text", 32)
-        .select("doc_id", "chunk_idx", "chunk_text")
-      val embedded = Embed.withEmbedding(chunks, "chunk_text", "embedding")
-      val qv = Embed.embedQuery(s, RagQueryText)
-      embedded
-        .withColumn("_raw", cosine(col("embedding"), lit(qv)))
-        .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
-          stableRound(col("_raw")).as("sim"))
-        .orderBy(desc("sim"), col("doc_id"), col("chunk_idx"))
-        .limit(5)
-    }),
-
-    // §3.1 retrieval routed through the GRAPH-ANN STORE (the ref's
-    // serving split: HNSW behind the ask, app/main.py:262-283/347-373):
-    // chunk → embed → GraphIndex.build (md5-uid ids, ⌊√N⌋ entry
-    // centroids, m=4 k-NN graph, src-bucketed store) → 3-hop beam-4
-    // walk for the flagship query → top-5. The codebook is
-    // SIZE-DERIVED on both engines (Spark counts the chunk set; the
-    // oracle's count(*) OVER () window replays it) — the production
-    // discipline that keeps cells ~√N-sized, so the in-cell quadratic
-    // edge build stays N^1.5 total instead of N²/8 (the pinned-|C|=8
-    // build OOM'd at sf1; the reference, too, sizes HNSW params by
-    // corpus — app/main.py:272-277). The EDGE stage rides
-    // GraphIndex.build's size-derived DEFAULTS: plain in-cell join
-    // below DefaultAutoBandAt nodes, OR-banded LSH-confined at/above
-    // it (the sf10 decade measured the plain join at 22.2×/decade vs
-    // banded 9.7×), and — r17 — flat assignment below DefaultAutoHierAt
-    // nodes, two-level ⌊√|C|⌋-super routing at p=2 at/above it (the
-    // remaining N^1.5 term; hier measured 16.4× vs flat's predicted
-    // 31.6× at the sf10 decade). The scale-safe shapes are the
-    // default, not knobs a caller must remember, and the oracle
-    // replays the SAME count gates so the flagship stays hash-green
-    // in every regime. The oracle replays EVERYTHING — embedding, uid
-    // derivation, graph construction incl. both gates, and the
-    // hop-by-hop walk — so the full ingest+serve path is hash-checked,
-    // not just rows-counted.
-    "q_rag_graph" -> ((s, dir) => {
-      val chunks = Ingest.chunk(wide(s, dir, "documents").select("doc_id", "text"), "text", 32)
-        .select("doc_id", "chunk_idx", "chunk_text")
-      val embedded = Embed.withEmbedding(chunks, "chunk_text", "embedding")
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val gdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_raggraph$safe").getAbsolutePath
-      // |C| = ⌊√N⌋ derived INSIDE the build from the uid guard's count
-      // (r19) — the explicit chunks.count() pre-pass re-tokenized the
-      // whole corpus once per execution just to size the codebook
-      val h = GraphIndex.build(s, embedded, Seq("doc_id", "chunk_idx"), "embedding",
-        gdir, nCentroids = GraphIndex.DeriveSqrtN, m = 4, nBuckets = 16,
-        beamWidth = 4, hops = 3)
-      h.search(s, Embed.embedQuery(s, RagQueryText).toSeq)
-        .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
-          stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("doc_id"), col("chunk_idx"))
-        .limit(5)
-    }),
-
-    // The flagship at the FULL 1000×-SCALE recipe, both size-derived
-    // defaults FORCED past their crossovers (autoBandAt = autoHierAt =
-    // 1): two-level assignment through ⌊√|C|⌋ head-of-codebook supers
-    // at p=2 (the N^1.5 → ~N^1.25 assignment fix, q_ann_graph_hier's
-    // measured 16.4× vs flat's predicted 31.6× at the sf10 decade) AND
-    // the OR-band-confined in-cell edge build (two 2-plane data-row
-    // sign-LSH bands — the Σ|cell|² = N^1.5 → ~N^0.99 edge fix). This
-    // query hash-gates the composed recipe — exactly what the default
-    // build runs at/above 10^5 nodes — at every SF: the oracle replays
-    // the super pick by cid order, both two-level argmaxes, the plane
-    // pick by uid order, both bucket folds, and the OR'd pair condition
-    // inside the same chunk→embed→build→walk replay as q_rag_graph.
-    // (r17: replaces q_rag_graph_banded, whose bands-only plan the
-    // auto-banding default had made redundant with the flagship's.)
-    "q_rag_graph_recipe" -> ((s, dir) => {
-      val chunks = Ingest.chunk(wide(s, dir, "documents").select("doc_id", "text"), "text", 32)
-        .select("doc_id", "chunk_idx", "chunk_text")
-      val embedded = Embed.withEmbedding(chunks, "chunk_text", "embedding")
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val gdir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_raggraphrcp$safe").getAbsolutePath
-      // |C| = ⌊√N⌋ derived inside the build (r19) — see q_rag_graph
-      val h = GraphIndex.build(s, embedded, Seq("doc_id", "chunk_idx"), "embedding",
-        gdir, nCentroids = GraphIndex.DeriveSqrtN, m = 4, nBuckets = 16,
-        beamWidth = 4, hops = 3, autoBandAt = 1L, autoHierAt = 1L)
-      h.search(s, Embed.embedQuery(s, RagQueryText).toSeq)
-        .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
-          stableRound(col("sim")).as("sim"))
-        .orderBy(desc("sim"), col("doc_id"), col("chunk_idx"))
-        .limit(5)
-    }),
-
-    // Retrieve → rerank: BM25 top-20 candidates rescored by the batched
-    // RerankClient (mapPartitions, per-partition setup — the real
-    // cross-encoder plumbing; the deterministic md5 stand-in scorer is
-    // what makes the path oracle-gatable).
-    "q_rerank" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      val cands = Retrieval.bm25(docs, "doc_id", "text", RagQueryText)
-        .select(col("doc_id"), stableRound(col("score")).as("score"))
-        .orderBy(desc("score"), col("doc_id")).limit(20)
-        .join(docs, "doc_id")
-      Retrieval.rerank(cands, RagQueryText, "text")
-        .select(col("doc_id"), col("score"), col("rerank_score"))
-        .orderBy(desc("rerank_score"), col("doc_id"))
-        .limit(5)
-    }),
-
-    // Okapi BM25 top-10 for the flagship query — the lexical retrieval
-    // leg (idf·tf saturation·length norm; Lucene idf variant).
-    "q_bm25" -> ((s, dir) => {
-      Retrieval.bm25(wide(s, dir, "documents").select("doc_id", "text"),
-          "doc_id", "text", RagQueryText)
-        .select(col("doc_id"), stableRound(col("score")).as("score"))
-        .orderBy(desc("score"), col("doc_id"))
-        .limit(10)
-    }),
-
-    // BM25 over the PERSISTED lexical index (Lucene's layout as a
-    // term-bucketed parquet store; postings denormalize tf+dl+df so the
-    // probe is ONE pruned read with zero joins). Same oracle as q_bm25:
-    // the serving layout changes, the scores don't — ad-hoc bm25()
-    // tokenizes the whole corpus per query, the index probe reads only
-    // the query terms' buckets.
-    "q_bm25_index" -> ((s, dir) => {
-      // probe over the shared pristine store (built once per JVM —
-      // see [[bm25Stores]]): measures the serving path, ONE pruned
-      // bucketed read, zero joins
-      val idx = bm25Stores.monoStore(s, dir)
-      Retrieval.bm25FromIndex(s, idx, "doc_id", RagQueryText)
-        .select(col("doc_id"), stableRound(col("score")).as("score"))
-        .orderBy(desc("score"), col("doc_id"))
-        .limit(10)
-    }),
-
-    // BM25 over the SEGMENTED store (append-without-rebuild: per-batch
-    // segments carry no global df/N; the probe merges them on read).
-    // Docs split into two segments by doc_id parity; scores are
-    // bitwise-identical to the ad-hoc/monolithic forms, so the oracle
-    // is q_bm25's.
-    "q_bm25_segments" -> ((s, dir) => {
-      // probe over the shared two-segment store (appended once per
-      // JVM — see [[bm25Stores]]): measures the merge-on-read path —
-      // per-segment df fold to global df/N/avgdl at probe time
-      val idx = bm25Stores.segStore(s, dir)
-      Retrieval.bm25FromSegments(s, idx, "doc_id", RagQueryText)
-        .select(col("doc_id"), stableRound(col("score")).as("score"))
-        .orderBy(desc("score"), col("doc_id"))
-        .limit(10)
-    }),
-
-    // BM25 delete lifecycle, pre-compaction: tombstoned docs (id % 7
-    // == 0) leave the hit set immediately while df/N/avgdl keep the
-    // FULL corpus' values — Lucene's delete-until-merge semantics, and
-    // the oracle proves them: it scores with full-corpus statistics
-    // and only filters the marked ids from the result.
-    "q_bm25_delete" -> ((s, dir) => {
-      // fresh copy of the shared pristine store (the build is paid
-      // once per JVM; the ~1 MB copy is the price of a private
-      // mutable store) — the measured body is the delete lifecycle:
-      // tombstone write + probe with full-corpus df/N preserved
-      val idx = bm25Stores.copyOf(s, dir, "del")
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      Retrieval.deleteBm25Docs(s, idx, docs.filter(col("doc_id") % 7 === 0))
-      Retrieval.bm25FromIndex(s, idx, "doc_id", RagQueryText)
-        .select(col("doc_id"), stableRound(col("score")).as("score"))
-        .orderBy(desc("score"), col("doc_id"))
-        .limit(10)
-    }),
-
-    // BM25 delete lifecycle, post-compaction: the tombstones fold into
-    // a fresh store whose df/N/avgdl are recomputed EXACTLY over the
-    // survivors — scores are bitwise what a fresh build over the
-    // surviving corpus produces, and the oracle computes exactly that.
-    "q_bm25_compact" -> ((s, dir) => {
-      // fresh copy of the shared pristine store (build paid once per
-      // JVM) — the measured body keeps the full compaction lifecycle:
-      // tombstone write, staged survivor rewrite with recomputed
-      // df/N/avgdl, sidecar identity guard, probe
-      val idx = bm25Stores.copyOf(s, dir, "delc")
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      Retrieval.deleteBm25Docs(s, idx, docs.filter(col("doc_id") % 7 === 0))
-      Retrieval.compactBm25Index(s, idx, idx + "_compacted")
-      Retrieval.requireBm25IndexMatches(s, idx + "_compacted",
-        docs.filter(col("doc_id") % 7 =!= 0), "doc_id")
-      Retrieval.bm25FromIndex(s, idx + "_compacted", "doc_id", RagQueryText)
-        .select(col("doc_id"), stableRound(col("score")).as("score"))
-        .orderBy(desc("score"), col("doc_id"))
-        .limit(10)
-    }),
-
-    // Hybrid retrieval: RRF fusion of the BM25 top-20 with the
-    // doc-embedding cosine top-20 (both legs cut on ROUNDED scores so
-    // the cut and the ranks are engine-portable).
-    "q_hybrid_rrf" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      val legA = Retrieval.bm25(docs, "doc_id", "text", RagQueryText)
-        .select(col("doc_id"), stableRound(col("score")).as("score"))
-        .orderBy(desc("score"), col("doc_id")).limit(20)
-      val qv = Embed.embedQuery(s, RagQueryText)
-      val legB = docs
-        .withColumn("_raw", Embed.embedText(col("text")))
-        .withColumn("_n", l2NormalizeWith(col("_raw"), l2Norm(col("_raw"))))
-        .select(col("doc_id"), stableRound(cosine(col("_n"), lit(qv))).as("score"))
-        .orderBy(desc("score"), col("doc_id")).limit(20)
-      Retrieval.rrfFuse(legA, legB, "doc_id")
-        .select(col("doc_id"), col("rank_a"), col("rank_b"),
-          stableRound(col("rrf_score")).as("rrf_score"))
-        .orderBy(desc("rrf_score"), col("doc_id"))
-        .limit(10)
-    }),
-
-    // The composed modern-RAG stack (retrieve → fuse → rerank): the
-    // q_hybrid_rrf fused top-10 rescored by the batched RerankClient
-    // (real mapPartitions plumbing, md5 stand-in scorer), context order
-    // by rerank score — the askHybrid(reranker=...) shape, driver-gated.
-    "q_hybrid_rerank" -> ((s, dir) => {
-      val docs = wide(s, dir, "documents").select("doc_id", "text")
-      val legA = Retrieval.bm25(docs, "doc_id", "text", RagQueryText)
-        .select(col("doc_id"), stableRound(col("score")).as("score"))
-        .orderBy(desc("score"), col("doc_id")).limit(20)
-      val qv = Embed.embedQuery(s, RagQueryText)
-      val legB = docs
-        .withColumn("_raw", Embed.embedText(col("text")))
-        .withColumn("_n", l2NormalizeWith(col("_raw"), l2Norm(col("_raw"))))
-        .select(col("doc_id"), stableRound(cosine(col("_n"), lit(qv))).as("score"))
-        .orderBy(desc("score"), col("doc_id")).limit(20)
-      val fused = Retrieval.rrfFuse(legA, legB, "doc_id")
-        .select(col("doc_id"), stableRound(col("rrf_score")).as("rrf_score"))
-        .orderBy(desc("rrf_score"), col("doc_id")).limit(10)
-        .join(docs, "doc_id")
-      Retrieval.rerank(fused, RagQueryText, "text")
-        .select(col("doc_id"), col("rrf_score"), col("rerank_score"))
-        .orderBy(desc("rerank_score"), col("doc_id"))
-        .limit(5)
-    }))
-
-  private val RagQueryText = "fast table scan merge join"
-
-  /** Fixed merge ranks for q_bpe_encode (corpus-independent, so the
-    * oracle SQL stays static across scale factors). Applied in order;
-    * later merges consume earlier ones' outputs ('a n' → 'an d'). */
-  private val FixedBpeMerges: Seq[(String, String)] =
-    Seq(("t", "h"), ("th", "e"), ("a", "n"), ("i", "n"), ("an", "d"))
-
-  /** The gate rule set shared by q_quality_rules / q_quality_survival
-    * (thresholds tuned to split the synthetic corpus; see query doc). */
-  private def qualityRuleSet =
-    QualityRules.gopherRules(col("text"),
-      minWords = 30, maxWords = 80, minMeanWordLen = 3.0,
-      maxMeanWordLen = 10.0, maxSymbolRatio = 0.1,
-      minStopwordHits = 2, maxRepetition = 0.1)
-
-  // ---------------------------------------------------------------- //
-  // File-surface operators (O-1/O-2/O-4/O-5): these materialize real //
-  // files under java.io.tmpdir (idempotent overwrite) so the scan /  //
-  // sink code paths run under the driver gate.                       //
-  // ---------------------------------------------------------------- //
-
-  /** O-1/O-10 + charset fallback: scan a generated corpus dir. No SQL
-    * oracle (DuckDB can't see the temp files) → rows-only check. */
-  private def qCorpusScan(s: SparkSession, dir: String): DataFrame = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_corpus_demo")
-    tmp.mkdirs()
-    java.nio.file.Files.write(new java.io.File(tmp, "PMC_a.txt").toPath,
-      "alpha beta gamma delta".getBytes("UTF-8"))
-    java.nio.file.Files.write(new java.io.File(tmp, "PMC_b.txt").toPath,
-      Array[Byte]('c', 'a', 'f', 0xE9.toByte, ' ', 'x'))
-    java.nio.file.Files.write(new java.io.File(tmp, "skip.csv").toPath,
-      "not scanned".getBytes("UTF-8"))
-    graft.sources.CorpusSource.scanWithCharsetFallback(s, tmp.getAbsolutePath, "PMC*.txt")
-      .toDF()
-      .select(col("doc_id"), col("charset"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .orderBy("doc_id")
-  }
-
-  /** O-4/O-5: tenant-partitioned index write + read-back; the files are
-    * a pass-through so per-tenant counts ARE oracle-checkable. */
-  private def qIndexRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_idx_rt$safe").getAbsolutePath
-    val embedded = t(s, dir, "embeddings").select(
-      col("vec_id").as("doc_id"), lit(0).as("chunk_idx"),
-      col("embedding"),
-      concat(lit("user"), pmod(col("label"), lit(3))).as("user_id"))
-    embedded.write.mode("overwrite").partitionBy("user_id").parquet(idx)
-    s.read.parquet(idx)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_chunks"), countDistinct(col("doc_id")).as("n_docs"))
-      .orderBy("user_id")
-  }
-
-  /** O-2 batch form: multi-tenant upload landing-dir scan (rows-only —
-    * DuckDB can't see the temp files). Two tenants × two uploads, plus a
-    * nested decoy outside the tenant glob; the projection is
-    * [[graft.streaming.StreamingOps.readUploadBatch]], the batch twin of
-    * the live upload stream (ref app/embedding_gen.py:315-409). */
-  private def qUploadScan(s: SparkSession, dir: String): DataFrame = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_upload_demo")
-    Seq("tenantA" -> Seq("a_doc1.txt" -> "alpha upload one two three",
-          "a_doc2.txt" -> "beta upload with\nnewline body"),
-        "tenantB" -> Seq("b_doc1.txt" -> "gamma tenant b payload"))
-      .foreach { case (tenant, files) =>
-        val td = new java.io.File(tmp, tenant)
-        td.mkdirs()
-        files.foreach { case (name, body) =>
-          java.nio.file.Files.write(new java.io.File(td, name).toPath,
-            body.getBytes("UTF-8"))
-        }
-      }
-    graft.streaming.StreamingOps.readUploadBatch(s, tmp.getAbsolutePath)
-      .select(col("tenant"), col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .orderBy("tenant", "doc_id")
-  }
-
-  /** O-4 upsert semantics (the reference's bulk `_id` upsert): build a
-    * two-tenant index where every doc has chunks {0,1}, then re-upload
-    * u0's docs < 10 with a SINGLE chunk_idx=9 chunk. The per-user
-    * (n_chunks, n_docs, sum_chunk_idx) signature proves replacement
-    * happened (not append) and that u1 was untouched — all derivable
-    * from the embeddings table, which is what the oracle does. */
-  private def qIndexUpsert(s: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_idx_up$safe").getAbsolutePath
-    val base = t(s, dir, "embeddings").filter(col("vec_id") < 40)
-      .select(col("vec_id").as("doc_id"),
-        concat(lit("u"), pmod(col("label"), lit(2))).as("user_id"))
-    // static overwrite = full table replace → idempotent initial state
-    base.select(col("doc_id"), explode(array(lit(0), lit(1))).as("chunk_idx"),
-        col("user_id"))
-      .write.mode("overwrite").partitionBy("user_id").parquet(idx)
-    val newDocs = base.filter(col("user_id") === "u0" && col("doc_id") < 10)
-      .select(col("doc_id"), lit(9).as("chunk_idx"))
-    graft.sources.IndexStore.upsertTenantDocs(s, idx, "u0", newDocs)
-    s.read.parquet(idx)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_chunks"),
-        countDistinct(col("doc_id")).as("n_docs"),
-        sum(col("chunk_idx")).cast("long").as("sum_chunk_idx"))
-      .orderBy("user_id")
-  }
-
-  // ---------------------------------------------------------------- //
-  // Pipeline oracles                                                 //
-  // ---------------------------------------------------------------- //
-
-  /** DuckDB: hex char value (mirror of TextFunctions.hexCharVal). */
-  private def dHexVal(c: String) = s"(strpos('0123456789abcdef', $c) - 1)"
-
-  /** DuckDB: md5-derived bucket/sign (mirror of TextFunctions). */
-  private def dMd5Bucket(e: String, n: Int) =
-    s"((${dHexVal(s"substr(md5($e), 1, 1)")} * 16 + ${dHexVal(s"substr(md5($e), 2, 1)")}) % $n)"
-  private def dMd5Sign(e: String) =
-    s"(CASE WHEN ${dHexVal(s"substr(md5($e), 3, 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-
-  /** DuckDB: the 60-bit md5-prefix row id of [[GraphIndex.uidFor]] —
-    * big-endian fold of the first 15 md5 hex chars into a BIGINT
-    * (mirrors Spark's conv(substring(md5(e),1,15),16,10)). */
-  private def dMd5Long(e: String): String = dMd5LongN(e, 15)
-
-  /** DuckDB: big-endian fold of the first `n` md5 hex chars into a
-    * BIGINT (mirror of Spark's conv(substring(md5(e),1,n),16,10) —
-    * n=15 for 60-bit bucket hashes, n=13 for the KMV 52-bit hash whose
-    * values must be exact in a double). */
-  private def dMd5LongN(e: String, n: Int): String =
-    (1 to n).map(i => dHexVal(s"substr(md5($e), $i, 1)"))
-      .foldLeft("CAST(0 AS BIGINT)")((acc, h) => s"($acc * 16 + $h)")
-
-  /** DuckDB: distinct word n-gram shingle set over a token list. */
-  /** Mirrors TextFunctions.shingleSet INCLUDING the empty-token guard:
-    * without it, list_transform over greatest(...,1) yields [NULL] for a
-    * blank doc where Spark yields []. */
-  private def dShingleSet(words: String, n: Int) =
-    s"(CASE WHEN len($words) = 0 THEN CAST([] AS VARCHAR[]) " +
-      s"ELSE list_distinct(list_transform(range(1, greatest(len($words) - ${n - 1}, 1) + 1), " +
-      s"i -> array_to_string(list_slice($words, i, i + ${n - 1}), ' '))) END)"
-
-  /** DuckDB: the BM25 CTE block over `documents` for [[RagQueryText]],
-    * ending at bm(doc_id, score). `tail` is either the final SELECT or
-    * further CTEs (comma added automatically). Mirrors
-    * [[Retrieval.bm25]]'s association order exactly: exact-long (N,
-    * Σdl), one-division avgdl, term-ordered per-doc sum; the folded
-    * constants ((k1+1), (1−b)) print as shortest-round-trip doubles, so
-    * both engines parse the identical values. */
-  private def dBm25Query(tail: String, k1: Double = 1.2, b: Double = 0.75,
-                         docPred: String = "TRUE"): String = {
-    // alnum-normalized terms, mirroring Retrieval.bm25 / alnumTokens
-    val terms = RagQueryText.toLowerCase.trim.split("\\s+")
-      .map(_.replaceAll("[^a-z0-9]", "")).filter(_.nonEmpty).distinct
-    val inList = terms.map(t => s"'$t'").mkString(", ")
-    val sep = if (tail.trim.toUpperCase.startsWith("SELECT")) "\n" else ",\n"
-    s"""WITH t AS (SELECT doc_id, ${dTokens("lower(text)")} AS w FROM documents WHERE $docPred),
-       |ta AS (
-       |  SELECT doc_id,
-       |         list_filter(list_transform(w, x -> regexp_replace(x, '[^a-z0-9]', '', 'g')),
-       |                     x -> len(x) > 0) AS w
-       |  FROM t
-       |),
-       |dl AS (SELECT doc_id, len(w) AS dl FROM ta),
-       |st AS (SELECT count(*) AS N, sum(dl) AS sumdl FROM dl),
-       |tf AS (
-       |  SELECT doc_id, tok AS term, count(*) AS tf
-       |  FROM (SELECT doc_id, unnest(w) AS tok FROM ta)
-       |  WHERE tok IN ($inList)
-       |  GROUP BY doc_id, tok
-       |),
-       |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-       |sc AS (
-       |  SELECT tf.doc_id, tf.term,
-       |         ln(1.0 + (st.N - dfq.df + 0.5) / (dfq.df + 0.5)) *
-       |         (tf.tf * ${k1 + 1.0}) /
-       |         (tf.tf + $k1 * (${1.0 - b} + $b * dl.dl / (CAST(st.sumdl AS DOUBLE) / st.N))) AS s
-       |  FROM tf
-       |  JOIN dfq ON tf.term = dfq.term
-       |  JOIN dl ON tf.doc_id = dl.doc_id, st
-       |),
-       |bm AS (SELECT doc_id, list_sum(list(s ORDER BY term)) AS score FROM sc GROUP BY doc_id)""".stripMargin +
-      sep + tail
-  }
-
-  /** DuckDB: the hybrid-retrieval fusion chain shared by q_hybrid_rrf /
-    * q_hybrid_rerank — BM25 top-20 + doc-embedding cosine top-20, RRF
-    * fused, ending at f(doc_id, rank_a, rank_b, rrf). `tail` is the
-    * final SELECT or further CTEs (comma added automatically). */
-  private def dHybridFusedSql(tail: String): String = {
-    val embedVec =
-      s"""list_transform(range(0, ${Schemas.EmbeddingDim}), j ->
-         |        coalesce(list_sum(list_transform(pr, e -> CASE WHEN e.b = j THEN e.s ELSE 0.0 END)), 0.0))""".stripMargin
-    val sep = if (tail.trim.toUpperCase.startsWith("SELECT")) "\n" else ",\n"
-    dBm25Query(
-      s"""bm20 AS (
-         |  SELECT doc_id, round(score + 1.2345e-9, 6) AS score
-         |  FROM bm ORDER BY score DESC, doc_id LIMIT 20
-         |),
-         |dp AS (SELECT doc_id, list_transform(w, x ->
-         |         struct_pack(b := ${dMd5Bucket("x", Schemas.EmbeddingDim)},
-         |                     s := ${dMd5Sign("x")})) AS pr FROM t),
-         |dv AS (SELECT doc_id, $embedVec AS vec FROM dp),
-         |dn AS (SELECT doc_id,
-         |         list_transform(vec, x -> x / (sqrt(list_sum(list_transform(vec, y -> y * y))) + 1e-9)) AS nv
-         |       FROM dv),
-         |qt AS (SELECT ${dTokens(s"lower('$RagQueryText')")} AS toks),
-         |qp AS (SELECT list_transform(toks, x ->
-         |         struct_pack(b := ${dMd5Bucket("x", Schemas.EmbeddingDim)},
-         |                     s := ${dMd5Sign("x")})) AS pr FROM qt),
-         |qv AS (SELECT $embedVec AS vec FROM qp),
-         |qn AS (SELECT list_transform(vec, x -> x / (sqrt(list_sum(list_transform(vec, y -> y * y))) + 1e-9)) AS nv
-         |       FROM qv),
-         |cs AS (SELECT dn.doc_id, round(${dCosine("dn.nv", "q.nv")} + 1.2345e-9, 6) AS score
-         |       FROM dn, qn q),
-         |cb20 AS (SELECT doc_id, score FROM cs ORDER BY score DESC, doc_id LIMIT 20),
-         |ra AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank_a FROM bm20),
-         |rb AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank_b FROM cb20),
-         |f AS (
-         |  SELECT coalesce(ra.doc_id, rb.doc_id) AS doc_id,
-         |         CAST(ra.rank_a AS BIGINT) AS rank_a,
-         |         CAST(rb.rank_b AS BIGINT) AS rank_b,
-         |         coalesce(1.0 / (60 + ra.rank_a), 0) + coalesce(1.0 / (60 + rb.rank_b), 0) AS rrf
-         |  FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id
-         |)""".stripMargin + sep + tail)
-  }
-
-  private def dStopHits(words: String, list: Seq[String]) =
-    s"len(list_filter($words, w -> list_contains([${list.map(w => s"'$w'").mkString(", ")}], w)))"
-
-  /** DuckDB: majority-vote md5 SimHash over a token list — the single
-    * mirror of `Dedup.simhash` shared by every simhash oracle. */
-  private def dSimhash(words: String, bits: Int) =
-    s"""CAST(list_sum(list_transform(range(0, $bits), j ->
-       |    CASE WHEN list_sum(list_transform($words, x ->
-       |      2 * (CAST(floor(${dHexVal("substr(md5(x), CAST(j // 4 AS INT) + 1, 1)")} / pow(2, 3 - (j % 4))) AS INT) % 2) - 1
-       |    )) > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END
-       |  )) AS BIGINT)""".stripMargin
-
-  /** DuckDB: the hashed-BoW embedding CTE chain shared by q_embed_doc /
-    * q_embed_batched — doc_id + normalized components e0..e3, plus the
-    * pre-normalization norm when `withNorm`. */
-  private def dEmbedOracle(withNorm: Boolean, W: String): String = {
-    val normCol = if (withNorm) " round(nrm + 1.2345e-9, 6) AS norm," else ""
-    s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-       |p AS (SELECT doc_id, list_transform(w, x ->
-       |        struct_pack(b := ${dMd5Bucket("x", Schemas.EmbeddingDim)},
-       |                    s := ${dMd5Sign("x")})) AS pr FROM t),
-       |v AS (SELECT doc_id, list_transform(range(0, ${Schemas.EmbeddingDim}), j ->
-       |        coalesce(list_sum(list_transform(pr, e -> CASE WHEN e.b = j THEN e.s ELSE 0.0 END)), 0.0)) AS vec
-       |      FROM p),
-       |n AS (SELECT doc_id, vec, sqrt(list_sum(list_transform(vec, x -> x * x))) AS nrm FROM v)
-       |SELECT doc_id,$normCol
-       |       round(vec[1] / (nrm + 1e-9) + 1.2345e-9, 6) AS e0,
-       |       round(vec[2] / (nrm + 1e-9) + 1.2345e-9, 6) AS e1,
-       |       round(vec[3] / (nrm + 1e-9) + 1.2345e-9, 6) AS e2,
-       |       round(vec[4] / (nrm + 1e-9) + 1.2345e-9, 6) AS e3
-       |FROM n ORDER BY doc_id""".stripMargin
-  }
-
-  /** Shared by q_ann_ivf and q_ann_ivf_part: the partitioned store
-    * changes only the physical layout, never the candidate set. */
-  private def annIvfOracle: String =
-    s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
-       |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-       |asg AS (
-       |  SELECT vec_id, embedding, cid,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-       |  FROM (SELECT e.vec_id, e.embedding, c.cid,
-       |               ${dCosine("e.embedding", "c.cv")} AS csim
-       |        FROM embeddings e, c)
-       |),
-       |cells AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1),
-       |probe AS (
-       |  SELECT cid FROM c, q ORDER BY ${dCosine("c.cv", "q.qv")} DESC, cid LIMIT 2
-       |),
-       |scored AS (
-       |  SELECT cells.vec_id, ${dCosine("cells.embedding", "q.qv")} AS sim
-       |  FROM cells, q WHERE cells.cell_id IN (SELECT cid FROM probe)
-       |)
-       |SELECT vec_id, round(sim + 1.2345e-9, 6) AS sim
-       |FROM scored ORDER BY sim DESC, vec_id LIMIT 5""".stripMargin
-
-  /** Shared by q_ann_graph / q_ann_graph_part / q_ann_graph_warm (store
-    * layout / lookup medium change, the walk doesn't) and, filtered, by
-    * the lifecycle queries: replay the exact beam walk — build the edge
-    * set, score every node once (`sims`), then chain frontier (f) /
-    * visited (v) CTEs per hop. `edgeCond` filters the edge set
-    * (q_graph_compact replays PHYSICAL deletion — the walk itself
-    * changes); `resultCond` filters the final visited set
-    * (q_graph_delete replays MARK deletion — tombstoned nodes still
-    * route, they just never surface). `edgesCtes`, when set, REPLACES
-    * the `edges` CTE wholesale (still reading from `edges0`) — used by
-    * q_graph_compact to replay the compaction's orphan re-anchoring on
-    * top of the physical drop. */
-  private def annGraphOracleWhere(edgeCond: String, resultCond: String,
-                                  edgesCtes: Option[String] = None,
-                                  centPred: String = "vec_id < 8",
-                                  queryId: Long = 9,
-                                  assignCtes: Option[String] = None,
-                                  pairExtraCond: String = ""): String = {
-    val edgeWhere = if (edgeCond.isEmpty) "" else s" WHERE $edgeCond"
-    val edgesBlock = edgesCtes.getOrElse(
-      s"edges AS (SELECT src, dst FROM edges0$edgeWhere)")
-    val resultWhere = if (resultCond.isEmpty) "" else s" WHERE $resultCond"
-    // the assignment block yields `cells(vec_id, embedding, cell_id)`;
-    // overridable so the hierarchical (two-level) routing can replay
-    // its own argmax chain while sharing the whole walk replay
-    val assignBlock = assignCtes.getOrElse(
-      s"""asg AS (
-         |  SELECT vec_id, embedding, cid,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-         |  FROM (SELECT e.vec_id, e.embedding, c.cid,
-         |               ${dCosine("e.embedding", "c.cv")} AS csim
-         |        FROM embeddings e, c)
-         |),
-         |cells AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1)""".stripMargin)
-    s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE $centPred),
-       |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $queryId),
-       |$assignBlock,
-       |pair AS (
-       |  SELECT a.vec_id AS src, b.vec_id AS dst,
-       |         row_number() OVER (PARTITION BY a.vec_id
-       |           ORDER BY ${dCosine("a.embedding", "b.embedding")} DESC, b.vec_id) AS rn
-       |  FROM cells a JOIN cells b
-       |    ON a.cell_id = b.cell_id AND a.vec_id <> b.vec_id$pairExtraCond
-       |),
-       |edges0 AS (
-       |  SELECT src, dst FROM pair WHERE rn <= 4
-       |  UNION
-       |  SELECT dst, src FROM pair WHERE rn <= 4
-       |  UNION
-       |  SELECT vec_id, cell_id FROM cells WHERE vec_id <> cell_id
-       |  UNION
-       |  SELECT c1.cid, c2.cid FROM c c1, c c2 WHERE c1.cid <> c2.cid
-       |),
-       |$edgesBlock,
-       |sims AS (SELECT e.vec_id AS id, ${dCosine("e.embedding", "q.qv")} AS sim
-       |         FROM embeddings e, q),
-       |v0 AS (SELECT id, sim FROM sims WHERE id IN (SELECT cid FROM c)
-       |       ORDER BY sim DESC, id LIMIT 4),
-       |f0 AS (SELECT id FROM v0 ORDER BY sim DESC, id LIMIT 4),
-       |v1 AS (SELECT id, sim FROM sims WHERE id IN (SELECT id FROM v0)
-       |          OR id IN (SELECT dst FROM edges WHERE src IN (SELECT id FROM f0))),
-       |f1 AS (SELECT id FROM v1 ORDER BY sim DESC, id LIMIT 4),
-       |v2 AS (SELECT id, sim FROM sims WHERE id IN (SELECT id FROM v1)
-       |          OR id IN (SELECT dst FROM edges WHERE src IN (SELECT id FROM f1))),
-       |f2 AS (SELECT id FROM v2 ORDER BY sim DESC, id LIMIT 4),
-       |v3 AS (SELECT id, sim FROM sims WHERE id IN (SELECT id FROM v2)
-       |          OR id IN (SELECT dst FROM edges WHERE src IN (SELECT id FROM f2)))
-       |SELECT id AS vec_id, round(sim + 1.2345e-9, 6) AS sim
-       |FROM v3$resultWhere ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
-  }
-
-  private def annGraphOracle: String = annGraphOracleWhere("", "")
-
-  /** The size-derived codebook cardinality ⌊√N⌋ as a DuckDB scalar
-    * subquery — the oracle half of the production discipline (Spark
-    * side: `floor(sqrt(e.count()))`). One SQL serves every SF. */
-  private def scaledCentCount: String =
-    "(SELECT CAST(floor(sqrt(count(*))) AS BIGINT) FROM embeddings)"
-
-  /** Centroid predicate for √N-codebook oracles: head-⌊√N⌋ vec_ids. */
-  private def scaledCentPred: String = s"vec_id < $scaledCentCount"
-
-  /** q_semantic_dedup / q_semantic_dedup_scaled: replay SemanticDedup
-    * .dedup (nearest-centroid assignment, cell-confined lower-id
-    * tau-pair argmin, left join back) for a head-`nCents` codebook —
-    * the SAME SQL serves any |C|, which is what lets the scaled
-    * (production-discipline) codebook be hash-gated too. */
-  private def semanticDedupOracle(nCents: Int): String =
-    s"""WITH all_v AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding FROM embeddings WHERE vec_id < 100
-       |),
-       |c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < $nCents),
-       |asg AS (
-       |  SELECT vec_id, embedding, cid,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-       |  FROM (SELECT v.vec_id, v.embedding, c.cid,
-       |               ${dCosine("v.embedding", "c.cv")} AS csim
-       |        FROM all_v v, c)
-       |),
-       |cells AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1),
-       |dups AS (
-       |  SELECT x.vec_id, min(y.vec_id) AS dup_of
-       |  FROM cells x JOIN cells y ON x.cell_id = y.cell_id AND y.vec_id < x.vec_id
-       |  WHERE ${dCosine("x.embedding", "y.embedding")} >= 0.9
-       |  GROUP BY 1
-       |)
-       |SELECT cells.vec_id, cells.cell_id, d.dup_of IS NULL AS is_kept, d.dup_of
-       |FROM cells LEFT JOIN dups d ON cells.vec_id = d.vec_id
-       |ORDER BY cells.vec_id""".stripMargin
-
-  /** Shared hier-assignment + band-bucket CTE block for the scaled
-    * semantic-dedup oracles: routes `srcCte`(idCol, embedding) through
-    * the head-`nSupers` supers of the head-`nCents` codebook
-    * (q_ann_graph_hier's two-level argmax replay), then folds the two
-    * 2-plane sign-LSH bucket columns (q_ann_graph_banded's dDot CASE
-    * sums over data-row planes 0-1 / 2-3). Emits `outCte` with
-    * (idCol, embedding, cell_id, lb0, lb1); c/sup/pl0/pl1 CTEs are
-    * emitted once by the caller via [[semanticHierHeadCtes]]. */
-  private def semanticHierHeadCtes: String =
-    s"""c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
-       |      WHERE vec_id < greatest(1, (SELECT CAST(floor(sqrt(count(*))) AS BIGINT)
-       |                                  FROM embeddings))),
-       |sup AS (SELECT vec_id AS sid, embedding AS sv FROM embeddings
-       |        WHERE vec_id < greatest(1, (SELECT CAST(floor(sqrt(floor(sqrt(count(*))))) AS BIGINT)
-       |                                    FROM embeddings))),
-       |c2s AS (SELECT cid, sid FROM (
-       |  SELECT c.cid, sup.sid,
-       |         row_number() OVER (PARTITION BY c.cid
-       |           ORDER BY ${dCosine("c.cv", "sup.sv")} DESC, sup.sid) AS rn
-       |  FROM c, sup) WHERE rn = 1),
-       |pl0 AS (SELECT vec_id AS pid, embedding AS pv FROM embeddings WHERE vec_id < 2),
-       |pl1 AS (SELECT vec_id AS pid, embedding AS pv FROM embeddings
-       |        WHERE vec_id >= 2 AND vec_id < 4)""".stripMargin
-
-  private def semanticHierAssignCtes(srcCte: String, outCte: String,
-                                     idCol: String = "vec_id"): String =
-    s"""${srcCte}_v2s AS (SELECT $idCol, sid FROM (
-       |  SELECT v.$idCol, sup.sid,
-       |         row_number() OVER (PARTITION BY v.$idCol
-       |           ORDER BY ${dCosine("v.embedding", "sup.sv")} DESC, sup.sid) AS rn
-       |  FROM $srcCte v, sup) WHERE rn = 1),
-       |${srcCte}_asg AS (
-       |  SELECT $idCol, embedding, cid AS cell_id FROM (
-       |    SELECT v.$idCol, v.embedding, c.cid,
-       |           row_number() OVER (PARTITION BY v.$idCol
-       |             ORDER BY ${dCosine("v.embedding", "c.cv")} DESC, c.cid) AS rn
-       |    FROM $srcCte v
-       |    JOIN ${srcCte}_v2s s ON v.$idCol = s.$idCol
-       |    JOIN c2s ON c2s.sid = s.sid
-       |    JOIN c ON c.cid = c2s.cid) x WHERE rn = 1
-       |),
-       |${srcCte}_b0 AS (
-       |  SELECT a.$idCol, a.embedding, a.cell_id,
-       |         CAST(sum(CASE WHEN ${dDot("a.embedding", "pl0.pv")} > 0
-       |                       THEN CAST(pow(2, pl0.pid) AS BIGINT) ELSE 0 END) AS BIGINT) AS lb0
-       |  FROM ${srcCte}_asg a, pl0 GROUP BY a.$idCol, a.embedding, a.cell_id
-       |),
-       |$outCte AS (
-       |  SELECT b.$idCol, b.embedding, b.cell_id, b.lb0,
-       |         CAST(sum(CASE WHEN ${dDot("b.embedding", "pl1.pv")} > 0
-       |                       THEN CAST(pow(2, pl1.pid - 2) AS BIGINT) ELSE 0 END) AS BIGINT) AS lb1
-       |  FROM ${srcCte}_b0 b, pl1 GROUP BY b.$idCol, b.embedding, b.cell_id, b.lb0
-       |)""".stripMargin
-
-  /** q_semantic_dedup_scaled: the production recipe — two-level
-    * assignment through head supers + OR'd two-band confinement of the
-    * lower-id tau-pair argmin — replayed end to end, so cell ids,
-    * bucket bits, and dup_of all hash-check. */
-  private def semanticDedupHierBandedOracle: String =
-    s"""WITH all_v AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding FROM embeddings WHERE vec_id < 100
-       |),
-       |$semanticHierHeadCtes,
-       |${semanticHierAssignCtes("all_v", "cells")},
-       |dups AS (
-       |  SELECT x.vec_id, min(y.vec_id) AS dup_of
-       |  FROM cells x JOIN cells y ON x.cell_id = y.cell_id AND y.vec_id < x.vec_id
-       |   AND (x.lb0 = y.lb0 OR x.lb1 = y.lb1)
-       |  WHERE ${dCosine("x.embedding", "y.embedding")} >= 0.9
-       |  GROUP BY 1
-       |)
-       |SELECT cells.vec_id, cells.cell_id, d.dup_of IS NULL AS is_kept, d.dup_of
-       |FROM cells LEFT JOIN dups d ON cells.vec_id = d.vec_id
-       |ORDER BY cells.vec_id""".stripMargin
-
-  /** Shared mixed-vector plant for the multi-probe oracles: doubles
-    * everywhere, each planted element computed as a[i]*0.8 + b[i]*0.2
-    * — the exact IEEE ops (same order) the Spark side's zip_with
-    * lambda runs, so planted vectors are bitwise identical across
-    * engines. */
-  private def mixedPlantCtes: String =
-    s"""bse AS (SELECT vec_id,
-       |               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
-       |        FROM embeddings),
-       |all_v AS (
-       |  SELECT vec_id, embedding FROM bse
-       |  UNION ALL
-       |  SELECT a.vec_id + 10000 AS vec_id,
-       |         list_transform(range(1, ${Schemas.EmbeddingDim + 1}),
-       |           i -> a.embedding[i] * CAST(0.8 AS DOUBLE)
-       |              + b.embedding[i] * CAST(0.2 AS DOUBLE)) AS embedding
-       |  FROM bse a JOIN bse b ON b.vec_id = a.vec_id + 100
-       |  WHERE a.vec_id < 100
-       |)""".stripMargin
-
-  /** The multi-probe candidate + verdict tail shared by both probes
-    * oracles: `prob` (each vector × its top-2 cells) joins `prim`
-    * (primary cells only) — either direction — and every tau-hit is
-    * normalized to (hi, lo), replaying SemanticDedup.dedup's
-    * cellProbes > 1 rule exactly (min over the direction/probe-overlap
-    * multiset = min over the set). */
-  private def probesVerdictTail: String =
-    s"""cand AS (
-       |  SELECT CASE WHEN x.vec_id > y.vec_id THEN x.vec_id ELSE y.vec_id END AS hi,
-       |         CASE WHEN x.vec_id > y.vec_id THEN y.vec_id ELSE x.vec_id END AS lo
-       |  FROM prob x JOIN prim y ON x.cell_id = y.cell_id AND x.vec_id <> y.vec_id
-       |  WHERE ${dCosine("x.embedding", "y.embedding")} >= 0.9
-       |),
-       |dups AS (SELECT hi AS vec_id, min(lo) AS dup_of FROM cand GROUP BY 1)
-       |SELECT prim.vec_id, prim.cell_id, d.dup_of IS NULL AS is_kept, d.dup_of
-       |FROM prim LEFT JOIN dups d ON prim.vec_id = d.vec_id
-       |ORDER BY prim.vec_id""".stripMargin
-
-  /** q_semantic_dedup_probes: flat head-8 codebook, every vector's
-    * top-2 cells as one windowed rank (rn <= 2 where the flat oracle
-    * keeps rn = 1). */
-  private def semanticDedupProbesOracle: String =
-    s"""WITH $mixedPlantCtes,
-       |c AS (SELECT vec_id AS cid, embedding AS cv FROM bse WHERE vec_id < 8),
-       |asg AS (
-       |  SELECT vec_id, embedding, cid,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-       |  FROM (SELECT v.vec_id, v.embedding, c.cid,
-       |               ${dCosine("v.embedding", "c.cv")} AS csim
-       |        FROM all_v v, c)
-       |),
-       |prim AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1),
-       |prob AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn <= 2),
-       |$probesVerdictTail""".stripMargin
-
-  /** q_semantic_dedup_margin_derived: the probes oracle with the
-    * margin DERIVED in-query — gap = topsim − the rn-2 csim per
-    * vector, margin = quantile_cont(gaps, 0.25) stable-rounded to 6dp
-    * (Spark's exact percentile uses the same linear interpolation —
-    * the q_length_quantiles cross-engine precedent), then the same
-    * rn <= 2 + inclusive margin-cut probe list as the hier oracle. */
-  private def semanticDedupMarginDerivedOracle: String =
-    s"""WITH $mixedPlantCtes,
-       |c AS (SELECT vec_id AS cid, embedding AS cv FROM bse WHERE vec_id < 8),
-       |asg AS (
-       |  SELECT vec_id, embedding, cid, csim,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn,
-       |         max(csim) OVER (PARTITION BY vec_id) AS topsim
-       |  FROM (SELECT v.vec_id, v.embedding, c.cid,
-       |               ${dCosine("v.embedding", "c.cv")} AS csim
-       |        FROM all_v v, c)
-       |),
-       |mg AS (SELECT round(quantile_cont(topsim - csim, 0.25) + 1.2345e-9, 6) AS m
-       |       FROM asg WHERE rn = 2),
-       |prim AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1),
-       |prob AS (SELECT vec_id, embedding, cid AS cell_id FROM asg, mg
-       |         WHERE rn <= 2 AND csim >= topsim - mg.m),
-       |$probesVerdictTail""".stripMargin
-
-  /** q_semantic_dedup_probes_hier: the probes on top of the two-level
-    * production routing — size-derived |C|/|S| (nested sqrt
-    * subqueries), super argmax at rn = 1, then the top-2 MEMBER cells
-    * of the probed super (rn <= 2 over the routed candidate set — the
-    * q_ann_graph_hier CTE pattern widened by one rank). */
-  private def semanticDedupProbesHierOracle: String =
-    s"""WITH $mixedPlantCtes,
-       |c AS (SELECT vec_id AS cid, embedding AS cv FROM bse
-       |      WHERE vec_id < greatest(1, (SELECT CAST(floor(sqrt(count(*))) AS BIGINT)
-       |                                  FROM embeddings))),
-       |sup AS (SELECT vec_id AS sid, embedding AS sv FROM bse
-       |        WHERE vec_id < greatest(1, (SELECT CAST(floor(sqrt(floor(sqrt(count(*))))) AS BIGINT)
-       |                                    FROM embeddings))),
-       |c2s AS (SELECT cid, sid FROM (
-       |  SELECT c.cid, sup.sid,
-       |         row_number() OVER (PARTITION BY c.cid
-       |           ORDER BY ${dCosine("c.cv", "sup.sv")} DESC, sup.sid) AS rn
-       |  FROM c, sup) WHERE rn = 1),
-       |v2s AS (SELECT vec_id, sid FROM (
-       |  SELECT v.vec_id, sup.sid,
-       |         row_number() OVER (PARTITION BY v.vec_id
-       |           ORDER BY ${dCosine("v.embedding", "sup.sv")} DESC, sup.sid) AS rn
-       |  FROM all_v v, sup) WHERE rn = 1),
-       |rk AS (
-       |  SELECT vec_id, embedding, cid, csim,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn,
-       |         max(csim) OVER (PARTITION BY vec_id) AS topsim
-       |  FROM (SELECT v.vec_id, v.embedding, c.cid,
-       |               ${dCosine("v.embedding", "c.cv")} AS csim
-       |        FROM all_v v
-       |        JOIN v2s s ON v.vec_id = s.vec_id
-       |        JOIN c2s ON c2s.sid = s.sid
-       |        JOIN c ON c.cid = c2s.cid)
-       |),
-       |prim AS (SELECT vec_id, embedding, cid AS cell_id FROM rk WHERE rn = 1),
-       |prob AS (SELECT vec_id, embedding, cid AS cell_id FROM rk
-       |         WHERE rn <= 2 AND csim >= topsim - CAST(0.05 AS DOUBLE)),
-       |$probesVerdictTail""".stripMargin
-
-  /** q_ann_graph_batch: the same hop-by-hop walk replay as
-    * [[annGraphOracle]], but every walk CTE carries `qid` — three
-    * queries traverse in parallel, frontier windows partition by qid.
-    * Frontier selection compares RAW sims (dCosine replays the exact
-    * fold, so raw doubles agree bitwise); only the final rank uses the
-    * rounded sim, mirroring the Spark side's round-then-rank. */
-  private def annGraphBatchOracle: String =
-    s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
-       |qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id IN (9, 17, 25)),
-       |asg AS (
-       |  SELECT vec_id, embedding, cid,
-       |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-       |  FROM (SELECT e.vec_id, e.embedding, c.cid,
-       |               ${dCosine("e.embedding", "c.cv")} AS csim
-       |        FROM embeddings e, c)
-       |),
-       |cells AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1),
-       |pair AS (
-       |  SELECT a.vec_id AS src, b.vec_id AS dst,
-       |         row_number() OVER (PARTITION BY a.vec_id
-       |           ORDER BY ${dCosine("a.embedding", "b.embedding")} DESC, b.vec_id) AS rn
-       |  FROM cells a JOIN cells b
-       |    ON a.cell_id = b.cell_id AND a.vec_id <> b.vec_id
-       |),
-       |edges AS (
-       |  SELECT src, dst FROM pair WHERE rn <= 4
-       |  UNION
-       |  SELECT dst, src FROM pair WHERE rn <= 4
-       |  UNION
-       |  SELECT vec_id, cell_id FROM cells WHERE vec_id <> cell_id
-       |  UNION
-       |  SELECT c1.cid, c2.cid FROM c c1, c c2 WHERE c1.cid <> c2.cid
-       |),
-       |sims AS (SELECT qs.qid, e.vec_id AS id, ${dCosine("e.embedding", "qs.qv")} AS sim
-       |         FROM embeddings e, qs),
-       |v0 AS (SELECT qid, id, sim FROM (
-       |         SELECT qid, id, sim,
-       |                row_number() OVER (PARTITION BY qid ORDER BY sim DESC, id) AS rn
-       |         FROM sims WHERE id < 8) WHERE rn <= 4),
-       |f0 AS (SELECT qid, id FROM v0),
-       |v1 AS (SELECT DISTINCT s.qid, s.id, s.sim FROM sims s
-       |       WHERE EXISTS (SELECT 1 FROM v0 WHERE v0.qid = s.qid AND v0.id = s.id)
-       |          OR EXISTS (SELECT 1 FROM f0 JOIN edges ON edges.src = f0.id
-       |                     WHERE f0.qid = s.qid AND edges.dst = s.id)),
-       |f1 AS (SELECT qid, id FROM (
-       |         SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, id) AS rn
-       |         FROM v1) WHERE rn <= 4),
-       |v2 AS (SELECT DISTINCT s.qid, s.id, s.sim FROM sims s
-       |       WHERE EXISTS (SELECT 1 FROM v1 WHERE v1.qid = s.qid AND v1.id = s.id)
-       |          OR EXISTS (SELECT 1 FROM f1 JOIN edges ON edges.src = f1.id
-       |                     WHERE f1.qid = s.qid AND edges.dst = s.id)),
-       |f2 AS (SELECT qid, id FROM (
-       |         SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, id) AS rn
-       |         FROM v2) WHERE rn <= 4),
-       |v3 AS (SELECT DISTINCT s.qid, s.id, s.sim FROM sims s
-       |       WHERE EXISTS (SELECT 1 FROM v2 WHERE v2.qid = s.qid AND v2.id = s.id)
-       |          OR EXISTS (SELECT 1 FROM f2 JOIN edges ON edges.src = f2.id
-       |                     WHERE f2.qid = s.qid AND edges.dst = s.id)),
-       |r AS (SELECT qid, id, round(sim + 1.2345e-9, 6) AS rsim,
-       |             row_number() OVER (PARTITION BY qid
-       |               ORDER BY round(sim + 1.2345e-9, 6) DESC, id) AS rank
-       |      FROM v3)
-       |SELECT qid AS query_id, CAST(rank AS BIGINT) AS rank, id AS vec_id, rsim AS sim
-       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** DuckDB: the fixed-codebook PQ machinery shared by q_pq_search and
-    * q_ivfpq (m=8 subspaces × subDim=8 over dim 64, k=16). Rebuilds the
-    * head-16 seed codebook (≡ [[graft.operators.Pq.headCodebooks]]),
-    * replays the per-subspace argmin encode (L2, ties to lowest cid),
-    * builds the query's m×k inner-product LUT and folds the ADC score in
-    * ascending-subspace order — every float op in the same sequence as
-    * the Scala loops, so scores are bitwise equal and candidate cuts
-    * agree exactly. Yields CTEs `e(vec_id, vec)`, `q(vec)` and
-    * `adc(vec_id, score)`; `tail` continues the query. */
-  private def dPqCtes(tail: String): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-       |  FROM embeddings
-       |),
-       |subs AS (SELECT unnest(range(0, 8)) AS sub),
-       |seeds AS (
-       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, vec
-       |  FROM e ORDER BY vec_id LIMIT 16
-       |),
-       |cb AS (
-       |  SELECT subs.sub, seeds.cid,
-       |         list_slice(seeds.vec, subs.sub * 8 + 1, subs.sub * 8 + 8) AS cvec
-       |  FROM seeds, subs
-       |),
-       |sv AS (
-       |  SELECT e.vec_id, subs.sub,
-       |         list_slice(e.vec, subs.sub * 8 + 1, subs.sub * 8 + 8) AS subvec
-       |  FROM e, subs
-       |),
-       |dist AS (
-       |  SELECT sv.vec_id, sv.sub, cb.cid,
-       |         list_sum(list_transform(range(1, 9),
-       |           j -> (sv.subvec[j] - cb.cvec[j]) * (sv.subvec[j] - cb.cvec[j]))) AS d
-       |  FROM sv JOIN cb USING (sub)
-       |),
-       |codes AS (
-       |  SELECT vec_id, sub, cid FROM (
-       |    SELECT vec_id, sub, cid,
-       |           row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, cid) AS rn
-       |    FROM dist)
-       |  WHERE rn = 1
-       |),
-       |q AS (SELECT vec FROM e WHERE vec_id = 0),
-       |qsv AS (
-       |  SELECT subs.sub, list_slice(q.vec, subs.sub * 8 + 1, subs.sub * 8 + 8) AS qsub
-       |  FROM q, subs
-       |),
-       |lut AS (
-       |  SELECT qsv.sub, cb.cid,
-       |         list_sum(list_transform(range(1, 9), j -> qsv.qsub[j] * cb.cvec[j])) AS ip
-       |  FROM qsv JOIN cb USING (sub)
-       |),
-       |adc AS (
-       |  SELECT c.vec_id, list_sum(list(l.ip ORDER BY c.sub)) AS score
-       |  FROM codes c JOIN lut l ON c.sub = l.sub AND c.cid = l.cid
-       |  GROUP BY c.vec_id
-       |),
-       |$tail""".stripMargin
-
-  private def pipelineOracles: Map[String, String] = {
-    val W = dTokens("lower(text)")
-
-    // One replay text for BOTH count-min queries: q_cm_heavy (one-shot
-    // grid) and q_cm_stream (merged batch partials) — the additive merge
-    // is exact, so a single oracle proves the streamed loop leaves no
-    // trace of the batch split.
-    val dCmHeavySql: String =
-      s"""WITH t AS (SELECT unnest($W) AS tok FROM documents),
-         |e AS (SELECT tok, count(*) AS exact_cnt FROM t GROUP BY 1),
-         |top AS (SELECT * FROM e ORDER BY exact_cnt DESC, tok LIMIT 20),
-         |rb AS (SELECT j, ${dMd5LongN("CAST(j AS VARCHAR) || '|' || tok", 15)} % 256 AS bucket
-         |       FROM t CROSS JOIN range(4) AS r(j)),
-         |g AS (SELECT j, bucket, count(*) AS cnt FROM rb GROUP BY 1, 2),
-         |pb AS (SELECT top.tok, top.exact_cnt, r.j,
-         |              ${dMd5LongN("CAST(r.j AS VARCHAR) || '|' || top.tok", 15)} % 256 AS bucket
-         |       FROM top CROSS JOIN range(4) AS r(j)),
-         |est AS (SELECT pb.tok, pb.exact_cnt, min(COALESCE(g.cnt, 0)) AS cm_est
-         |        FROM pb LEFT JOIN g ON pb.j = g.j AND pb.bucket = g.bucket
-         |        GROUP BY 1, 2)
-         |SELECT tok AS token, CAST(exact_cnt AS BIGINT) AS exact_cnt,
-         |       CAST(cm_est AS BIGINT) AS cm_est,
-         |       CAST(cm_est - exact_cnt AS BIGINT) AS overcount
-         |FROM est ORDER BY exact_cnt DESC, token""".stripMargin
-
-    // Shared CTE chain for the q_importance_weights / q_select_pack
-    // oracles: per-doc mean log-prob under the lang='en' TARGET unigram
-    // model (t*) and the corpus model (c*), joined as `j`.
-    val dImportanceCte: String = {
-      def score(vocabSrc: String, alias: String) =
-        s"""${alias}v AS (SELECT tok, count(*) AS cnt
-           |  FROM (SELECT unnest($W) AS tok FROM documents $vocabSrc)
-           |  GROUP BY 1 ORDER BY cnt DESC, tok LIMIT 32),
-           |${alias}s AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n,
-           |              CAST(count(*) + 1 AS DOUBLE) AS v1 FROM ${alias}v),
-           |${alias}g AS (
-           |  SELECT doc_id,
-           |         list_sort(list(struct_pack(tok := dt.tok, dcnt := dcnt,
-           |           lp := ln((CAST(COALESCE(v.cnt, 0) AS DOUBLE) + 1.0) / (s.n + s.v1))))) AS terms,
-           |         sum(dcnt) AS nt
-           |  FROM dt LEFT JOIN ${alias}v v ON dt.tok = v.tok, ${alias}s s
-           |  GROUP BY doc_id)""".stripMargin
-      def fold(rel: String) =
-        s"round(list_sum(list_transform($rel.terms, e -> CAST(e.dcnt AS DOUBLE) * e.lp))" +
-          s" / CAST($rel.nt AS DOUBLE) + 1.2345e-9, 6)"
-      s"""WITH toks AS (SELECT doc_id, unnest($W) AS tok FROM documents),
-         |dt AS (SELECT doc_id, tok, count(*) AS dcnt FROM toks GROUP BY 1, 2),
-         |${score("WHERE lang = 'en'", "t")},
-         |${score("", "c")},
-         |j AS (
-         |  SELECT tg.doc_id, CAST(tg.nt AS BIGINT) AS n_tokens,
-         |         ${fold("tg")} AS target_lp,
-         |         ${fold("cg")} AS corpus_lp
-         |  FROM tg JOIN cg ON tg.doc_id = cg.doc_id)""".stripMargin
-    }
-
-    // Shared CTE chain for the q_quality_rules / q_quality_survival
-    // oracles: one boolean per rule, mirroring QualityRules.gopherRules
-    // with the gate thresholds (30/80 words, [3,10] mean len, 0.1
-    // symbols, 2 stopword hits, 0.1 repetition) over the exact same
-    // fragments q_lang_quality proved (dTokens, dStopHits, punct class).
-    val qualityRulesCte: String = {
-      val allStops = TextAnalysis.StopwordProfiles.flatMap(_._2).distinct
-      val rep3 = s"list_transform(range(1, greatest(len(w) - 2, 1) + 1), " +
-        s"i -> array_to_string(list_slice(w, i, i + 2), ' '))"
-      s"""WITH t AS (SELECT doc_id, trim(replace(text, chr(10), ' ')) AS tc, $W AS w FROM documents),
-         |s AS (
-         |  SELECT doc_id, len(w) AS nw,
-         |         CASE WHEN len(w) = 0 THEN 0.0
-         |              ELSE CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) END AS mtl,
-         |         CASE WHEN length(tc) = 0 THEN 0.0
-         |              ELSE CAST(length(regexp_replace(tc, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE) / length(tc) END AS pr,
-         |         ${dStopHits("w", allStops)} AS hits,
-         |         $rep3 AS sh
-         |  FROM t
-         |),
-         |r AS (
-         |  SELECT doc_id,
-         |         nw >= 30 AS r_min_words,
-         |         nw <= 80 AS r_max_words,
-         |         (mtl >= 3.0 AND mtl <= 10.0) AS r_mean_word_len,
-         |         pr <= 0.1 AS r_symbol_ratio,
-         |         hits >= 2 AS r_stopwords,
-         |         (CASE WHEN len(sh) = 0 THEN 0.0
-         |               ELSE CAST(len(sh) - len(list_distinct(sh)) AS DOUBLE) / len(sh) END) <= 0.1 AS r_repetition
-         |  FROM s
-         |),
-         |rr AS (
-         |  SELECT *,
-         |         (r_min_words AND r_max_words AND r_mean_word_len AND r_symbol_ratio
-         |          AND r_stopwords AND r_repetition) AS passed,
-         |         CAST((CASE WHEN r_min_words THEN 0 ELSE 1 END) +
-         |              (CASE WHEN r_max_words THEN 0 ELSE 1 END) +
-         |              (CASE WHEN r_mean_word_len THEN 0 ELSE 1 END) +
-         |              (CASE WHEN r_symbol_ratio THEN 0 ELSE 1 END) +
-         |              (CASE WHEN r_stopwords THEN 0 ELSE 1 END) +
-         |              (CASE WHEN r_repetition THEN 0 ELSE 1 END) AS BIGINT) AS n_failed
-         |  FROM r
-         |)""".stripMargin
-    }
-
-    // Shared CTE chain (t → surv) of the curation oracles: quality gate
-    // → exact dedup → MinHash banding drops, over `src`(doc_id, text).
-    // Reuses the exact scoring / fingerprint / banding fragments of
-    // q_lang_quality, q_dedup_exact and q_minhash_pairs.
-    def dCurationSurv(src: String): String = {
-      val langs = TextAnalysis.StopwordProfiles.map(_._1)
-      val hits = TextAnalysis.StopwordProfiles
-        .map { case (lang, words) => s"${dStopHits("w", words)} AS h_$lang" }
-        .mkString(",\n              ")
-      val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
-      val caseChain = langs.map(l => s"WHEN h_$l = best THEN '$l'").mkString(" ")
-      val punct = "(CASE WHEN length(tc) = 0 THEN 0.0 " +
-        "ELSE CAST(length(regexp_replace(tc, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE) / length(tc) END)"
-      val mtl = "(CASE WHEN len(w) = 0 THEN 0.0 " +
-        "ELSE CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) END)"
-      val quality = s"round(least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.4 + " +
-        s"greatest(1.0 - $punct * 5.0, 0.0) * 0.3 + " +
-        s"least($mtl / 8.0, 1.0) * 0.3 + 1.2345e-9, 6)"
-      val sigCols = (0 until 8)
-        .map(k => s"list_min(list_transform(sh, x -> md5('$k|' || x))) AS sig_$k")
-        .mkString(", ")
-      val bandRows = (0 until 4)
-        .map(b => s"SELECT doc_id, $b AS band_id, md5(sig_${2 * b} || '#' || sig_${2 * b + 1}) AS bucket FROM sigs")
-        .mkString("\n  UNION ALL ")
-      s"""t AS (SELECT doc_id, text, trim(replace(text, chr(10), ' ')) AS tc, $W AS w FROM $src),
-         |s AS (
-         |  SELECT doc_id, w,
-         |         CASE WHEN best <= 0 THEN 'und' $caseChain ELSE 'und' END AS lang_pred,
-         |         $quality AS quality,
-         |         len(w) AS n_tokens,
-         |         md5(tc) AS fp
-         |  FROM (SELECT *,
-         |              $hits,
-         |              $best AS best
-         |        FROM t) x
-         |),
-         |g AS (SELECT * FROM s WHERE quality >= 0.5 AND n_tokens >= 20),
-         |k AS (SELECT fp, min(doc_id) AS doc_id FROM g GROUP BY fp),
-         |e AS (SELECT g.* FROM g JOIN k ON g.fp = k.fp AND g.doc_id = k.doc_id),
-         |d3 AS (SELECT doc_id, ${dShingleSet("w", 3)} AS sh FROM e),
-         |sigs AS (SELECT doc_id, $sigCols FROM d3 WHERE len(sh) > 0),
-         |bands AS (
-         |  $bandRows
-         |),
-         |drops AS (
-         |  SELECT DISTINCT b.doc_id FROM bands a
-         |  JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-         |),
-         |surv AS (SELECT * FROM e WHERE doc_id NOT IN (SELECT doc_id FROM drops))""".stripMargin
-    }
-    val dCurationStats =
-      """SELECT lang_pred, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-        |       min(quality) AS min_quality, max(quality) AS max_quality""".stripMargin
-    // The semantic-tier extension: planted-paraphrase input, the shared
-    // t → surv chain, then SemDeDup over survivors that HAVE an
-    // embedding row (vectorless pass through) at the PRODUCTION recipe —
-    // the SAME shared CTE blocks the scaled-dedup oracles use
-    // (semanticHierHeadCtes: size-derived c/sup + routing + band
-    // planes; semanticHierAssignCtes: two-level argmax + bucket folds,
-    // keyed here by doc_id), so the recipe replay cannot drift between
-    // the curation chain and the standalone queries.
-    val dCurationSemanticCtes: String =
-      s"""docs0 AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 10000 AS doc_id,
-         |         array_to_string(list_reverse(${dTokens("text")}), ' ') AS text
-         |  FROM documents WHERE doc_id < 10
-         |),
-         |${dCurationSurv("docs0")},
-         |emb AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 10000 AS vec_id, embedding FROM embeddings WHERE vec_id < 10
-         |),
-         |$semanticHierHeadCtes,
-         |sv AS (SELECT surv.doc_id, emb.embedding FROM surv JOIN emb ON surv.doc_id = emb.vec_id),
-         |${semanticHierAssignCtes("sv", "asgB", "doc_id")},
-         |sdrops AS (
-         |  SELECT DISTINCT y.doc_id FROM asgB y
-         |  JOIN asgB x ON y.cell_id = x.cell_id AND x.doc_id < y.doc_id
-         |   AND (x.lb0 = y.lb0 OR x.lb1 = y.lb1)
-         |  WHERE ${dCosine("x.embedding", "y.embedding")} >= 0.9
-         |),
-         |kept AS (SELECT * FROM surv WHERE doc_id NOT IN (SELECT doc_id FROM sdrops))""".stripMargin
-
-    Map(
-      // Curation pipeline: stage-by-stage CTE mirror of the engine's
-      // chained plan.
-      "q_curation" ->
-        s"""WITH ${dCurationSurv("documents")}
-           |$dCurationStats
-           |FROM surv GROUP BY lang_pred ORDER BY lang_pred""".stripMargin,
-
-      // Curation + the SEMANTIC tier: same chain over documents plus the
-      // word-reversed planted paraphrases (+10000, original embedding),
-      // then SemDeDup's assignment + lower-id tau-drop over survivors
-      // that HAVE an embedding row; vectorless survivors pass through.
-      "q_curation_semantic" ->
-        s"""WITH $dCurationSemanticCtes
-           |$dCurationStats
-           |FROM kept GROUP BY lang_pred ORDER BY lang_pred""".stripMargin,
-
-      // Sketch-tier curation profile: the same planted-input gate stage
-      // (docs0 → g), then the KMV bottom-64 replay over fingerprint
-      // hashes per language and the count-min grid replay over gated
-      // tokens for the exact top-10 probe set — all deterministic md5
-      // arithmetic, so estimates (including collisions) hash-match.
-      "q_curation_sketch" ->
-        s"""WITH docs0 AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 10000 AS doc_id,
-           |         array_to_string(list_reverse(${dTokens("text")}), ' ') AS text
-           |  FROM documents WHERE doc_id < 10
-           |),
-           |${dCurationSurv("docs0")},
-           |fh AS (SELECT DISTINCT lang_pred, ${dMd5LongN("fp", 13)} AS h FROM g),
-           |fr AS (SELECT lang_pred, h,
-           |              row_number() OVER (PARTITION BY lang_pred ORDER BY h) AS rk
-           |       FROM fh),
-           |fk AS (SELECT lang_pred, count(*) AS n_kept, max(h) AS maxh
-           |       FROM fr WHERE rk <= 64 GROUP BY lang_pred),
-           |kmvrows AS (
-           |  SELECT 'distinct_fp' AS metric, lang_pred AS grp,
-           |         round((CASE WHEN n_kept < 64 THEN CAST(n_kept AS DOUBLE)
-           |                ELSE 63.0 / (CAST(maxh AS DOUBLE) / 4503599627370496.0) END)
-           |               + 1.2345e-9, 6) AS est
-           |  FROM fk),
-           |gt AS (SELECT unnest(w) AS tok FROM g),
-           |ge AS (SELECT tok, count(*) AS cnt FROM gt GROUP BY 1),
-           |gtop AS (SELECT tok FROM ge ORDER BY cnt DESC, tok LIMIT 10),
-           |grb AS (SELECT j, ${dMd5LongN("CAST(j AS VARCHAR) || '|' || tok", 15)} % 256 AS bucket
-           |        FROM gt CROSS JOIN range(4) AS r(j)),
-           |gg AS (SELECT j, bucket, count(*) AS cnt FROM grb GROUP BY 1, 2),
-           |gpb AS (SELECT gtop.tok, r.j,
-           |               ${dMd5LongN("CAST(r.j AS VARCHAR) || '|' || gtop.tok", 15)} % 256 AS bucket
-           |        FROM gtop CROSS JOIN range(4) AS r(j)),
-           |cmrows AS (
-           |  SELECT 'heavy_token' AS metric, gpb.tok AS grp,
-           |         round(CAST(min(COALESCE(gg.cnt, 0)) AS DOUBLE) + 1.2345e-9, 6) AS est
-           |  FROM gpb LEFT JOIN gg ON gpb.j = gg.j AND gpb.bucket = gg.bucket
-           |  GROUP BY 1, 2)
-           |SELECT metric, grp, est FROM kmvrows
-           |UNION ALL SELECT metric, grp, est FROM cmrows
-           |ORDER BY metric, grp""".stripMargin,
-
-      // Per-tier drop accounting over the same chain.
-      "q_curation_report" ->
-        s"""WITH $dCurationSemanticCtes
-           |SELECT CAST(1 AS BIGINT) AS stage_no, 'input' AS stage, CAST(count(*) AS BIGINT) AS n_docs FROM docs0
-           |UNION ALL SELECT CAST(2 AS BIGINT), 'quality_gate', CAST(count(*) AS BIGINT) FROM g
-           |UNION ALL SELECT CAST(3 AS BIGINT), 'exact_dedup', CAST(count(*) AS BIGINT) FROM e
-           |UNION ALL SELECT CAST(4 AS BIGINT), 'near_dedup', CAST(count(*) AS BIGINT) FROM surv
-           |UNION ALL SELECT CAST(5 AS BIGINT), 'semantic_dedup', CAST(count(*) AS BIGINT) FROM kept
-           |ORDER BY stage_no""".stripMargin,
-
-      "q_dedup_exact" ->
-        """SELECT md5(trim(replace(text, chr(10), ' '))) AS fingerprint,
-          |       min(doc_id) AS keep_id, count(*) AS n_copies
-          |FROM documents GROUP BY 1 ORDER BY fingerprint""".stripMargin,
-
-      "q_minhash_sig" -> {
-        val sigCols = (0 until 8)
-          .map(k => s"list_min(list_transform(sh, x -> md5('$k|' || x))) AS sig_$k")
-          .mkString(",\n       ")
-        s"""WITH t AS (SELECT doc_id, ${dShingleSet(W, 3)} AS sh FROM documents)
-           |SELECT doc_id,
-           |       $sigCols
-           |FROM t WHERE len(sh) > 0 ORDER BY doc_id""".stripMargin
-      },
-
-      "q_minhash_pairs" -> {
-        val sigCols = (0 until 8)
-          .map(k => s"list_min(list_transform(sh, x -> md5('$k|' || x))) AS sig_$k")
-          .mkString(", ")
-        val bandRows = (0 until 4)
-          .map(b => s"SELECT doc_id, $b AS band_id, md5(sig_${2 * b} || '#' || sig_${2 * b + 1}) AS bucket FROM sigs")
-          .mkString("\n  UNION ALL ")
-        s"""WITH t AS (SELECT doc_id, ${dShingleSet(W, 3)} AS sh FROM documents),
-           |sigs AS (SELECT doc_id, $sigCols FROM t WHERE len(sh) > 0),
-           |bands AS (
-           |  $bandRows
-           |)
-           |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
-           |WHERE a.doc_id < b.doc_id
-           |ORDER BY id_a, id_b""".stripMargin
-      },
-
-      // Corpus and bench sides both explode distinct shingle sets, so
-      // count(*) after the equi-join counts distinct shared 3-grams.
-      "q_decontaminate" ->
-        s"""WITH d AS (SELECT doc_id, ${dShingleSet(W, 3)} AS sh FROM documents),
-           |c AS (SELECT doc_id, unnest(sh) AS s FROM d WHERE len(sh) > 0),
-           |b AS (SELECT doc_id AS bench_id, unnest(sh) AS s FROM d
-           |      WHERE doc_id < 10 AND len(sh) > 0),
-           |ov AS (
-           |  SELECT c.doc_id, b.bench_id, count(*) AS shared
-           |  FROM c JOIN b ON c.s = b.s
-           |  GROUP BY c.doc_id, b.bench_id
-           |)
-           |SELECT doc_id, count(*) AS n_bench_hits,
-           |       CAST(max(shared) AS BIGINT) AS max_shared
-           |FROM ov WHERE shared >= 5
-           |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-      // Same candidate pairs as q_minhash_pairs, then connected
-      // components via a recursive transitive-closure CTE (fine at
-      // oracle scale; the engine side uses min-label propagation).
-      "q_dedup_clusters" -> {
-        val sigCols = (0 until 8)
-          .map(k => s"list_min(list_transform(sh, x -> md5('$k|' || x))) AS sig_$k")
-          .mkString(", ")
-        val bandRows = (0 until 4)
-          .map(b => s"SELECT doc_id, $b AS band_id, md5(sig_${2 * b} || '#' || sig_${2 * b + 1}) AS bucket FROM sigs")
-          .mkString("\n  UNION ALL ")
-        s"""WITH RECURSIVE t AS (SELECT doc_id, ${dShingleSet(W, 3)} AS sh FROM documents),
-           |sigs AS (SELECT doc_id, $sigCols FROM t WHERE len(sh) > 0),
-           |bands AS (
-           |  $bandRows
-           |),
-           |pr AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
-           |  WHERE a.doc_id < b.doc_id
-           |),
-           |e AS (SELECT id_a AS src, id_b AS dst FROM pr
-           |      UNION SELECT id_b, id_a FROM pr),
-           |reach AS (
-           |  SELECT src, dst FROM e
-           |  UNION
-           |  SELECT r.src, e2.dst FROM reach r JOIN e e2 ON r.dst = e2.src
-           |),
-           |cl AS (SELECT src AS doc_id, min(dst) AS mr FROM reach GROUP BY src)
-           |SELECT d.doc_id,
-           |       least(d.doc_id, coalesce(cl.mr, d.doc_id)) AS cluster_id,
-           |       (least(d.doc_id, coalesce(cl.mr, d.doc_id)) = d.doc_id) AS is_canonical
-           |FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      "q_jaccard_pairs" ->
-        s"""WITH d AS (SELECT doc_id, source, ${dShingleSet(W, 3)} AS sh FROM documents),
-           |e0 AS (SELECT DISTINCT source, doc_id, unnest(sh) AS s FROM d WHERE len(sh) > 0),
-           |e AS (SELECT e0.source, e0.doc_id, e0.s FROM e0
-           |      JOIN (SELECT source, s FROM e0 GROUP BY source, s HAVING count(*) <= 100) k
-           |        ON e0.source = k.source AND e0.s = k.s),
-           |sz AS (SELECT source, doc_id, count(*) AS n FROM e GROUP BY source, doc_id),
-           |inter AS (
-           |  SELECT a.source AS source, a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-           |  FROM e a JOIN e b ON a.source = b.source AND a.s = b.s AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2, 3
-           |)
-           |SELECT i.source AS source, i.id_a, i.id_b,
-           |       round(CAST(i.i AS DOUBLE) / (sa.n + sb.n - i.i) + 1.2345e-9, 6) AS jaccard
-           |FROM inter i
-           |JOIN sz sa ON i.source = sa.source AND i.id_a = sa.doc_id
-           |JOIN sz sb ON i.source = sb.source AND i.id_b = sb.doc_id
-           |WHERE CAST(i.i AS DOUBLE) / (sa.n + sb.n - i.i) >= 0.05
-           |ORDER BY i.source, id_a, id_b""".stripMargin,
-
-      "q_simhash" ->
-        s"""WITH t AS (SELECT doc_id, $W AS w FROM documents)
-           |SELECT doc_id,
-           |  ${dSimhash("w", 16)} AS simhash
-           |FROM t ORDER BY doc_id""".stripMargin,
-
-      "q_simhash_pairs" -> {
-        s"""WITH t AS (SELECT doc_id, source, $W AS w FROM documents),
-           |h AS (SELECT doc_id, source, ${dSimhash("w", 16)} AS sh FROM t)
-           |SELECT a.source, a.doc_id AS id_a, b.doc_id AS id_b,
-           |       CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-           |FROM h a JOIN h b ON a.source = b.source AND a.doc_id < b.doc_id
-           |WHERE bit_count(xor(a.sh, b.sh)) <= 3
-           |ORDER BY a.source, id_a, id_b""".stripMargin
-      },
-
-      // Batch-mode chat memory: one fold per chat with empty prior state
-      // == keep the LAST maxTurns=5 turns by seq, render them seq-ordered
-      // as "Human: <in>\nAI: <out>" joined by newline (app/main.py:515-516).
-      "q_chat_memory" ->
-        """WITH m AS (
-          |  SELECT CAST(o_custkey % 50 AS VARCHAR) AS chat_id,
-          |         o_orderpriority AS input,
-          |         o_orderstatus || '#' || CAST(o_orderkey AS VARCHAR) AS output,
-          |         o_orderkey AS seq
-          |  FROM orders
-          |), r AS (
-          |  SELECT *, row_number() OVER (PARTITION BY chat_id ORDER BY seq DESC) AS rn
-          |  FROM m
-          |)
-          |SELECT chat_id,
-          |       string_agg('Human: ' || input || chr(10) || 'AI: ' || output,
-          |                  chr(10) ORDER BY seq) AS history,
-          |       CAST(count(*) AS BIGINT) AS n_turns
-          |FROM r WHERE rn <= 5
-          |GROUP BY chat_id ORDER BY chat_id""".stripMargin,
-
-      // Token egress: lower(text) tokens with 1-based ordinality, folded
-      // back by seq — docs with zero tokens vanish on BOTH sides (Spark
-      // posexplode of an empty array emits no rows, as does unnest here).
-      "q_token_egress" ->
-        s"""WITH t AS (SELECT doc_id AS answer_id, $W AS w FROM documents),
-           |tok AS (
-           |  SELECT answer_id, r.i AS seq, w[r.i] AS token
-           |  FROM t, unnest(range(1, len(w) + 1)) AS r(i)
-           |)
-           |SELECT answer_id,
-           |       string_agg(token, ' ' ORDER BY seq) AS answer,
-           |       CAST(count(*) AS BIGINT) AS n_tokens
-           |FROM tok GROUP BY answer_id ORDER BY answer_id""".stripMargin,
-
-      // Arrival order = doc_id order, every arrival admitted to state
-      // (matchAll), so: dup iff ANY earlier same-block doc within
-      // maxHamming; dup_of = min-hamming partner, ties to smallest id.
-      "q_stream_dedup" -> {
-        s"""WITH t AS (SELECT doc_id, source, $W AS w FROM documents),
-           |h AS (SELECT doc_id, source, ${dSimhash("w", 16)} AS sh FROM t),
-           |p AS (
-           |  SELECT b.doc_id, a.doc_id AS cand,
-           |         CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS ham
-           |  FROM h b JOIN h a ON a.source = b.source AND a.doc_id < b.doc_id
-           |  WHERE bit_count(xor(a.sh, b.sh)) <= 3
-           |), best AS (
-           |  SELECT doc_id, cand, ham,
-           |         row_number() OVER (PARTITION BY doc_id ORDER BY ham, cand) AS rn
-           |  FROM p
-           |)
-           |SELECT h.source, h.doc_id,
-           |       (best.doc_id IS NOT NULL) AS is_dup,
-           |       coalesce(best.cand, CAST(-1 AS BIGINT)) AS dup_of,
-           |       coalesce(best.ham, CAST(-1 AS BIGINT)) AS hamming
-           |FROM h LEFT JOIN best ON h.doc_id = best.doc_id AND best.rn = 1
-           |ORDER BY h.source, h.doc_id""".stripMargin
-      },
-
-      // the banded batch-safe form is outcome-identical by construction
-      // (pigeonhole over maxHamming+1 bands; StreamingDedupSpec) — same
-      // oracle as the raw-block form
-      "q_stream_dedup_banded" -> {
-        s"""WITH t AS (SELECT doc_id, source, $W AS w FROM documents),
-           |h AS (SELECT doc_id, source, ${dSimhash("w", 16)} AS sh FROM t),
-           |p AS (
-           |  SELECT b.doc_id, a.doc_id AS cand,
-           |         CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS ham
-           |  FROM h b JOIN h a ON a.source = b.source AND a.doc_id < b.doc_id
-           |  WHERE bit_count(xor(a.sh, b.sh)) <= 3
-           |), best AS (
-           |  SELECT doc_id, cand, ham,
-           |         row_number() OVER (PARTITION BY doc_id ORDER BY ham, cand) AS rn
-           |  FROM p
-           |)
-           |SELECT h.source, h.doc_id,
-           |       (best.doc_id IS NOT NULL) AS is_dup,
-           |       coalesce(best.cand, CAST(-1 AS BIGINT)) AS dup_of,
-           |       coalesce(best.ham, CAST(-1 AS BIGINT)) AS hamming
-           |FROM h LEFT JOIN best ON h.doc_id = best.doc_id AND best.rn = 1
-           |ORDER BY h.source, h.doc_id""".stripMargin
-      },
-
-      "q_embedding_neighbors" ->
-        s"""WITH s AS (
-           |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           |         ${dCosine("a.embedding", "b.embedding")} AS sim
-           |  FROM embeddings a JOIN embeddings b
-           |    ON a.label = b.label AND a.vec_id <> b.vec_id
-           |), r AS (
-           |  SELECT id_a, id_b, sim,
-           |         row_number() OVER (PARTITION BY id_a ORDER BY sim DESC, id_b) AS rn
-           |  FROM s
-           |)
-           |SELECT id_a, id_b AS neighbor_id, round(sim + 1.2345e-9, 6) AS sim
-           |FROM r WHERE rn = 1 ORDER BY id_a""".stripMargin,
-
-      "q_ann_ivf" -> annIvfOracle,
-
-      // identical result contract: the partitioned store changes the
-      // physical layout, never the candidate set
-      "q_ann_ivf_part" -> annIvfOracle,
-
-      // SQ8: replay the quantization itself (maxabs → scale →
-      // floor(x/scale + 0.5) codes; floor(+0.5) because round-half
-      // rules differ across engines) and rank codes against the
-      // full-precision query — the scale cancels in cosine, exactly
-      // as the Spark side never multiplies it back in.
-      "q_ann_sq" ->
-        s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |sc AS (
-           |  SELECT vec_id, embedding,
-           |         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS s
-           |  FROM embeddings
-           |),
-           |sq AS (
-           |  SELECT vec_id,
-           |         list_transform(embedding, x -> CASE WHEN s = 0 THEN 0.0
-           |           ELSE floor(CAST(x AS DOUBLE) / s + 0.5) END) AS code
-           |  FROM sc
-           |),
-           |scored AS (SELECT sq.vec_id, ${dCosine("sq.code", "q.qv")} AS sim FROM sq, q)
-           |SELECT vec_id, round(sim + 1.2345e-9, 6) AS sim
-           |FROM scored ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin,
-
-      // Matryoshka truncated-dim two-tier: prefilter cosine over the
-      // first-16 list slice, exact full-dim re-rank of the top-40.
-      "q_ann_truncate" ->
-        s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |cand AS (
-           |  SELECT e.vec_id FROM embeddings e, q
-           |  ORDER BY ${dCosine("(e.embedding[1:16])", "(q.qv[1:16])", 16)} DESC, e.vec_id LIMIT 40
-           |),
-           |scored AS (
-           |  SELECT e.vec_id, ${dCosine("e.embedding", "q.qv")} AS sim
-           |  FROM embeddings e JOIN cand USING (vec_id), q
-           |)
-           |SELECT vec_id, round(sim + 1.2345e-9, 6) AS sim
-           |FROM scored ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin,
-
-      // Two-tier SQ: int8 top-40 prefilter, exact float re-rank of the
-      // candidate ids, top-10 — the unrounded double sims order both
-      // stages on both engines.
-      "q_ann_sq_rerank" ->
-        s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |sc AS (
-           |  SELECT vec_id, embedding,
-           |         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS s
-           |  FROM embeddings
-           |),
-           |sq AS (
-           |  SELECT vec_id,
-           |         list_transform(embedding, x -> CASE WHEN s = 0 THEN 0.0
-           |           ELSE floor(CAST(x AS DOUBLE) / s + 0.5) END) AS code
-           |  FROM sc
-           |),
-           |cand AS (
-           |  SELECT sq.vec_id FROM sq, q
-           |  ORDER BY ${dCosine("sq.code", "q.qv")} DESC, sq.vec_id LIMIT 40
-           |),
-           |scored AS (
-           |  SELECT e.vec_id, ${dCosine("e.embedding", "q.qv")} AS sim
-           |  FROM embeddings e JOIN cand USING (vec_id), q
-           |)
-           |SELECT vec_id, round(sim + 1.2345e-9, 6) AS sim
-           |FROM scored ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin,
-
-      // Graph ANN: replay the exact beam walk — edges (in-cell top-4 by
-      // cosine + node→centroid up-links + centroid clique), entry = top-4
-      // centroids vs the query, then 3 expand-the-beam hops where the
-      // frontier is the top-4 of everything visited. `sims` scores each
-      // node once, so hop CTEs select ids only; sim per id is functional
-      // and identical to Spark's per-edge recompute.
-      "q_ann_graph" -> annGraphOracle,
-      "q_ann_graph_scaled" -> annGraphOracleWhere("", "",
-        centPred = scaledCentPred, queryId = 201),
-
-      // Two-level assignment replay: sup = head-⌊√|C|⌋ centroids,
-      // c2s routes each centroid to its nearest super, v2s routes each
-      // vector, and the final argmax runs only over the centroids
-      // sharing the vector's super — all with the flat oracle's
-      // (sim DESC, id) tie-break, so it mirrors NearestCells' two-level
-      // lowest-index semantics exactly. Walk replay unchanged.
-      "q_ann_graph_hier" -> annGraphOracleWhere("", "",
-        centPred = scaledCentPred, queryId = 201,
-        assignCtes = Some(
-          s"""sup AS (SELECT vec_id AS sid, embedding AS sv FROM embeddings
-             |       WHERE vec_id < greatest(1, (SELECT CAST(floor(sqrt(floor(sqrt(count(*))))) AS BIGINT)
-             |                                   FROM embeddings))),
-             |c2s AS (SELECT cid, sid FROM (
-             |  SELECT c.cid, sup.sid,
-             |         row_number() OVER (PARTITION BY c.cid
-             |           ORDER BY ${dCosine("c.cv", "sup.sv")} DESC, sup.sid) AS rn
-             |  FROM c, sup) WHERE rn = 1),
-             |v2s AS (SELECT vec_id, sid FROM (
-             |  SELECT e.vec_id, sup.sid,
-             |         row_number() OVER (PARTITION BY e.vec_id
-             |           ORDER BY ${dCosine("e.embedding", "sup.sv")} DESC, sup.sid) AS rn
-             |  FROM embeddings e, sup) WHERE rn = 1),
-             |asg AS (
-             |  SELECT vec_id, embedding, cid,
-             |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-             |  FROM (SELECT e.vec_id, e.embedding, c.cid,
-             |               ${dCosine("e.embedding", "c.cv")} AS csim
-             |        FROM embeddings e
-             |        JOIN v2s ON e.vec_id = v2s.vec_id
-             |        JOIN c2s ON c2s.sid = v2s.sid
-             |        JOIN c ON c.cid = c2s.cid)
-             |),
-             |cells AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1)""".stripMargin)),
-
-      // LSH-confined edge build: the default assignment CTEs extended
-      // with the q_ann_lsh bucket fold (4 data-row planes, strict > 0
-      // sign bits), and the pair join additionally requires bucket
-      // equality — exactly knnGraphLsh's (cell_id, bucket) key.
-      "q_ann_graph_lsh" -> annGraphOracleWhere("", "",
-        centPred = scaledCentPred, queryId = 201,
-        assignCtes = Some(
-          s"""pl AS (SELECT vec_id AS pid, embedding AS pv FROM embeddings WHERE vec_id < 4),
-             |asg AS (
-             |  SELECT vec_id, embedding, cid,
-             |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-             |  FROM (SELECT e.vec_id, e.embedding, c.cid,
-             |               ${dCosine("e.embedding", "c.cv")} AS csim
-             |        FROM embeddings e, c)
-             |),
-             |cells0 AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1),
-             |cells AS (
-             |  SELECT c0.vec_id, c0.embedding, c0.cell_id,
-             |         CAST(sum(CASE WHEN ${dDot("c0.embedding", "pl.pv")} > 0
-             |                       THEN CAST(pow(2, pl.pid) AS BIGINT) ELSE 0 END) AS BIGINT) AS lb
-             |  FROM cells0 c0, pl GROUP BY c0.vec_id, c0.embedding, c0.cell_id
-             |)""".stripMargin),
-        pairExtraCond = " AND a.lb = b.lb"),
-
-      // banded OR-amplification: two bucket columns, pair keeps when
-      // EITHER band agrees — same assignment/walk replay otherwise
-      "q_ann_graph_banded" -> annGraphOracleWhere("", "",
-        centPred = scaledCentPred, queryId = 201,
-        assignCtes = Some(
-          s"""pl0 AS (SELECT vec_id AS pid, embedding AS pv FROM embeddings WHERE vec_id < 2),
-             |pl1 AS (SELECT vec_id AS pid, embedding AS pv FROM embeddings
-             |        WHERE vec_id >= 2 AND vec_id < 4),
-             |asg AS (
-             |  SELECT vec_id, embedding, cid,
-             |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-             |  FROM (SELECT e.vec_id, e.embedding, c.cid,
-             |               ${dCosine("e.embedding", "c.cv")} AS csim
-             |        FROM embeddings e, c)
-             |),
-             |cells0 AS (SELECT vec_id, embedding, cid AS cell_id FROM asg WHERE rn = 1),
-             |cellsA AS (
-             |  SELECT c0.vec_id, c0.embedding, c0.cell_id,
-             |         CAST(sum(CASE WHEN ${dDot("c0.embedding", "pl0.pv")} > 0
-             |                       THEN CAST(pow(2, pl0.pid) AS BIGINT) ELSE 0 END) AS BIGINT) AS lb0
-             |  FROM cells0 c0, pl0 GROUP BY c0.vec_id, c0.embedding, c0.cell_id
-             |),
-             |cells AS (
-             |  SELECT ca.vec_id, ca.embedding, ca.cell_id, ca.lb0,
-             |         CAST(sum(CASE WHEN ${dDot("ca.embedding", "pl1.pv")} > 0
-             |                       THEN CAST(pow(2, pl1.pid - 2) AS BIGINT) ELSE 0 END) AS BIGINT) AS lb1
-             |  FROM cellsA ca, pl1 GROUP BY ca.vec_id, ca.embedding, ca.cell_id, ca.lb0
-             |)""".stripMargin),
-        pairExtraCond = " AND (a.lb0 = b.lb0 OR a.lb1 = b.lb1)"),
-
-      // mark-delete: the walk is untouched (tombstoned nodes still
-      // route); only the final visited set is filtered. Lifecycle rows
-      // run at the production √N codebook (same size-derived centPred
-      // as q_ann_graph_scaled; query 201 is never a centroid).
-      "q_graph_delete" -> annGraphOracleWhere("", "id % 10 <> 3",
-        centPred = scaledCentPred, queryId = 201),
-
-      // compaction: marked NON-centroids (id >= |C|) lose their edges —
-      // the walk replays over the reduced edge set — while marked
-      // centroids keep routing (structural) and are filtered at the
-      // end. The orphan-repair CTEs replay compactGraphIndex's
-      // re-anchoring: a live id whose every in-edge rode a dead src
-      // (`orph`) gets one down-link back from the smallest surviving
-      // protected dst among its own out-edges (`anch`). |C| is the
-      // same size-derived scalar subquery as the centPred.
-      "q_graph_compact" -> annGraphOracleWhere("", "id % 10 <> 3", Some(
-        s"""edges1 AS (SELECT src, dst FROM edges0
-          |  WHERE NOT (src >= $scaledCentCount AND src % 10 = 3)
-          |    AND NOT (dst >= $scaledCentCount AND dst % 10 = 3)),
-          |orph AS (SELECT DISTINCT dst FROM edges0
-          |  WHERE NOT (dst >= $scaledCentCount AND dst % 10 = 3)
-          |    AND dst NOT IN (SELECT dst FROM edges1)),
-          |anch AS (SELECT src AS o, min(dst) AS a FROM edges1
-          |  WHERE src IN (SELECT dst FROM orph) AND dst < $scaledCentCount GROUP BY src),
-          |edges AS (SELECT src, dst FROM edges1 UNION SELECT a, o FROM anch)""".stripMargin),
-        centPred = scaledCentPred, queryId = 201),
-      "q_ann_graph_batch" -> annGraphBatchOracle,
-
-      // identical result contract: the src-bucketed store changes the
-      // physical layout, never the walk
-      "q_ann_graph_part" -> annGraphOracle,
-
-      // identical result contract again: the normalized layout changes
-      // the hop lookup medium (cached batches vs parquet reads), never
-      // the walk
-      "q_ann_graph_warm" -> annGraphOracle,
-
-      // Fixed-codebook PQ search: ADC top-100 candidates, exact cosine
-      // re-rank top-10 (was rows-only while the codebook came from
-      // Lloyd training — the head-seed codebook made it replayable).
-      "q_pq_search" -> dPqCtes(
-        s"""cand AS (SELECT vec_id FROM adc ORDER BY score DESC, vec_id LIMIT 100)
-           |SELECT e.vec_id, round(${dCosine("e.vec", "q.vec")} + 1.2345e-9, 6) AS sim
-           |FROM e JOIN cand USING (vec_id), q
-           |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin),
-
-      // IVF-PQ: coarse cells = head-8 centroids (annIvfOracle's
-      // assignment), nprobe=2, ADC within the probed cells only
-      // (per-row scores are independent, so filtering the full-corpus
-      // adc CTE to in-cell rows is the same computation), top-50
-      // candidates, exact re-rank top-10.
-      "q_ivfpq" -> dPqCtes(
-        s"""c AS (SELECT vec_id AS ccid, vec AS cv FROM e WHERE vec_id < 8),
-           |asg AS (
-           |  SELECT vec_id, ccid,
-           |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, ccid) AS rn
-           |  FROM (SELECT e.vec_id, c.ccid, ${dCosine("e.vec", "c.cv")} AS csim
-           |        FROM e, c)
-           |),
-           |cells AS (SELECT vec_id, ccid AS cell_id FROM asg WHERE rn = 1),
-           |probe AS (
-           |  SELECT ccid FROM c, q ORDER BY ${dCosine("c.cv", "q.vec")} DESC, ccid LIMIT 2
-           |),
-           |incell AS (
-           |  SELECT vec_id FROM cells WHERE cell_id IN (SELECT ccid FROM probe)
-           |),
-           |cand AS (
-           |  SELECT adc.vec_id FROM adc JOIN incell USING (vec_id)
-           |  ORDER BY score DESC, vec_id LIMIT 50
-           |)
-           |SELECT e.vec_id, round(${dCosine("e.vec", "q.vec")} + 1.2345e-9, 6) AS sim
-           |FROM e JOIN cand USING (vec_id), q
-           |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin),
-
-      "q_ann_lsh" ->
-        s"""WITH p AS (SELECT vec_id AS pid, embedding AS pv FROM embeddings WHERE vec_id < 4),
-           |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |b AS (
-           |  SELECT e.vec_id, e.embedding,
-           |         CAST(sum(CASE WHEN ${dDot("e.embedding", "p.pv")} > 0
-           |                       THEN CAST(pow(2, p.pid) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
-           |  FROM embeddings e, p GROUP BY e.vec_id, e.embedding
-           |),
-           |scored AS (
-           |  SELECT b.vec_id, ${dCosine("b.embedding", "q.qv")} AS sim
-           |  FROM b, q WHERE b.bucket = (SELECT bucket FROM b WHERE vec_id = 0)
-           |)
-           |SELECT vec_id, round(sim + 1.2345e-9, 6) AS sim
-           |FROM scored ORDER BY sim DESC, vec_id LIMIT 5""".stripMargin,
-
-      // Same ANN-bucket semantics as q_ann_lsh (the engine side reaches
-      // them via the AnnBucketPrune optimizer rewrite instead of an
-      // explicit filter); output additionally names the serving bucket.
-      "q_ann_rewrite" ->
-        s"""WITH p AS (SELECT vec_id AS pid, embedding AS pv FROM embeddings WHERE vec_id < 4),
-           |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |b AS (
-           |  SELECT e.vec_id, e.embedding,
-           |         CAST(sum(CASE WHEN ${dDot("e.embedding", "p.pv")} > 0
-           |                       THEN CAST(pow(2, p.pid) AS BIGINT) ELSE 0 END) AS BIGINT) AS lsh_bucket
-           |  FROM embeddings e, p GROUP BY e.vec_id, e.embedding
-           |),
-           |scored AS (
-           |  SELECT b.vec_id, b.lsh_bucket, ${dCosine("b.embedding", "q.qv")} AS sim
-           |  FROM b, q WHERE b.lsh_bucket = (SELECT lsh_bucket FROM b WHERE vec_id = 0)
-           |)
-           |SELECT vec_id, lsh_bucket, round(sim + 1.2345e-9, 6) AS sim
-           |FROM scored ORDER BY sim DESC, vec_id LIMIT 5""".stripMargin,
-
-      // Euclidean BRP-LSH with data-row planes: bucket = floor(dot/0.05)
-      // per plane, candidate iff ANY plane matches the query's bucket,
-      // exact three-dot distance re-rank. Folds mirror the Spark side
-      // (ascending index order), so floor() sees bit-identical doubles.
-      // (bool_or over a plane join, not EXISTS — DuckDB lambdas can't
-      // reach correlated outer columns.)
-      "q_ann_brp_fixed" ->
-        s"""WITH p AS (SELECT vec_id AS pid, embedding AS pv FROM embeddings WHERE vec_id BETWEEN 4 AND 7),
-           |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |hits AS (
-           |  SELECT e.vec_id,
-           |         bool_or(CAST(floor(${dDot("e.embedding", "p.pv")} / 0.05) AS BIGINT)
-           |               = CAST(floor(${dDot("q.qv", "p.pv")} / 0.05) AS BIGINT)) AS hit
-           |  FROM embeddings e, p, q GROUP BY e.vec_id
-           |),
-           |cand AS (
-           |  SELECT e.vec_id, e.embedding
-           |  FROM embeddings e JOIN hits USING (vec_id) WHERE hits.hit
-           |),
-           |scored AS (
-           |  SELECT vec_id,
-           |         sqrt(greatest(${dDot("cand.embedding", "cand.embedding")}
-           |              - 2.0 * ${dDot("cand.embedding", "q.qv")}
-           |              + ${dDot("q.qv", "q.qv")}, 0.0)) AS dist
-           |  FROM cand, q
-           |)
-           |SELECT vec_id, round(dist + 1.2345e-9, 6) AS dist
-           |FROM scored ORDER BY dist, vec_id LIMIT 10""".stripMargin,
-
-      "q_cache_lookup" ->
-        s"""WITH cache AS (SELECT vec_id AS entry_id, embedding FROM embeddings WHERE vec_id > 0),
-           |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |best AS (
-           |  SELECT entry_id, ${dCosine("cache.embedding", "q.qv")} AS sim
-           |  FROM cache, q ORDER BY sim DESC, entry_id DESC LIMIT 1
-           |)
-           |SELECT entry_id, round(sim + 1.2345e-9, 6) AS sim FROM best WHERE sim >= 0.3""".stripMargin,
-
-      "q_cache_touch" ->
-        s"""WITH cache AS (SELECT vec_id AS entry_id, embedding, label AS freq FROM embeddings WHERE vec_id > 0),
-           |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           |scored AS (
-           |  SELECT entry_id, freq, ${dCosine("cache.embedding", "q.qv")} AS sim
-           |  FROM cache, q
-           |),
-           |best AS (
-           |  SELECT entry_id FROM (SELECT * FROM scored ORDER BY sim DESC, entry_id DESC LIMIT 1)
-           |  WHERE sim >= 0.3
-           |)
-           |SELECT s.entry_id,
-           |       CAST(s.freq + CASE WHEN b.entry_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS freq
-           |FROM scored s LEFT JOIN best b ON s.entry_id = b.entry_id
-           |ORDER BY s.entry_id""".stripMargin,
-
-      "q_lfu_evict" ->
-        """SELECT vec_id AS entry_id, CAST(label AS BIGINT) AS freq
-          |FROM embeddings WHERE vec_id > 0
-          |ORDER BY label, vec_id DESC LIMIT 1""".stripMargin,
-
-      "q_context_assembly" ->
-        """WITH r AS (
-          |  SELECT lang, text, row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rank
-          |  FROM documents
-          |)
-          |SELECT lang, CAST(min(rank) AS BIGINT) AS best_rank,
-          |       string_agg(text, chr(10) ORDER BY rank) AS context_text
-          |FROM r WHERE rank <= 20 GROUP BY lang ORDER BY lang""".stripMargin,
-
-      // Prompt templating: identical hit set / grouping as
-      // q_context_assembly, then the render is pure string concatenation
-      // mirrored term-for-term (newlines via chr(10) on both sides).
-      "q_prompt" ->
-        """WITH r AS (
-          |  SELECT lang, text, row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rank
-          |  FROM documents
-          |),
-          |c AS (
-          |  SELECT lang, string_agg(text, chr(10) ORDER BY rank) AS context_text
-          |  FROM r WHERE rank <= 20 GROUP BY lang
-          |)
-          |SELECT lang,
-          |       concat('You are a helpful medical assistant. Use ONLY the provided context to answer.',
-          |              chr(10), chr(10),
-          |              'Conversation so far:', chr(10), 'turn 1: hello lang=', lang, chr(10), chr(10),
-          |              'User Query:', chr(10), 'What is Ghrelin?', chr(10), chr(10),
-          |              'Context:', chr(10),
-          |              '--- Document ID: ', lang, ' ---', chr(10), context_text,
-          |              chr(10), chr(10), 'Answer:') AS prompt
-          |FROM c ORDER BY lang""".stripMargin,
-
-      // stem_unixtime doc ids: the stem regex keeps inner dots and strips
-      // only the final .ext segment — same RE2 pattern both engines.
-      "q_doc_id" ->
-        """WITH f AS (
-          |  SELECT doc_id,
-          |         concat('/uploads/u', doc_id % 3, '/doc_', doc_id,
-          |                CASE doc_id % 3 WHEN 0 THEN '.txt' WHEN 1 THEN '.tar.gz' ELSE '' END) AS file_name
-          |  FROM documents
-          |)
-          |SELECT doc_id, file_name,
-          |       concat(regexp_extract(file_name, '([^/]+?)(\.[^./]*)?$', 1), '_', 1723400000) AS upload_id
-          |FROM f ORDER BY doc_id""".stripMargin,
-
-      "q_embed_doc" -> dEmbedOracle(withNorm = true, W),
-
-      // Mirrors Sampling.uniformByHash: value of the first 4 md5 hex
-      // chars / 65536 — the engine's md5-hex discipline, replayed in SQL.
-      "q_mix_sample" -> {
-        def h(i: Int) = dHexVal(s"substr(md5(CAST(doc_id AS VARCHAR)), $i, 1)")
-        s"""WITH u AS (
-           |  SELECT doc_id, source,
-           |         (((${h(1)} * 16 + ${h(2)}) * 16 + ${h(3)}) * 16 + ${h(4)}) / 65536.0 AS u
-           |  FROM documents
-           |)
-           |SELECT source, count(*) AS n_kept
-           |FROM u
-           |WHERE u < CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.5
-           |                      WHEN 'src2' THEN 0.25 WHEN 'src3' THEN 0.1
-           |                      ELSE 0.0 END
-           |GROUP BY source ORDER BY source""".stripMargin
-      },
-
-      // Epoch shuffle: shard = 16-bit md5 bucket of 'ep0'||id mod 8,
-      // pos = rank within shard by (full md5 hex, id).
-      "q_shuffle_shards" -> {
-        def h(i: Int) = dHexVal(s"substr(hx, $i, 1)")
-        s"""WITH t AS (
-           |  SELECT doc_id, md5('ep0' || CAST(doc_id AS VARCHAR)) AS hx FROM documents
-           |),
-           |s AS (
-           |  SELECT doc_id, hx,
-           |         CAST((((${h(1)} * 16 + ${h(2)}) * 16 + ${h(3)}) * 16 + ${h(4)}) % 8 AS BIGINT) AS shard
-           |  FROM t
-           |)
-           |SELECT doc_id, shard,
-           |       row_number() OVER (PARTITION BY shard ORDER BY hx, doc_id) AS pos
-           |FROM s ORDER BY shard, pos""".stripMargin
-      },
-
-      // Targets: floor((budget · √n_i) / Σ√n_j) with the total folded
-      // over the SORTED weight list (portable float order, the
-      // q_entropy trick); quota filled by (md5-uniform, doc_id) rank.
-      "q_temperature_mix" -> {
-        def h(i: Int) = dHexVal(s"substr(md5(CAST(doc_id AS VARCHAR)), $i, 1)")
-        s"""WITH n AS (SELECT source, count(*) AS n FROM documents GROUP BY source),
-           |w AS (SELECT source, sqrt(CAST(n AS DOUBLE)) AS w FROM n),
-           |tot AS (SELECT list_sum(list_sort(list(w))) AS t FROM w),
-           |tgt AS (SELECT source, CAST(floor((40.0 * w) / t) AS BIGINT) AS target
-           |        FROM w, tot),
-           |u AS (
-           |  SELECT doc_id, source,
-           |         (((${h(1)} * 16 + ${h(2)}) * 16 + ${h(3)}) * 16 + ${h(4)}) / 65536.0 AS u
-           |  FROM documents
-           |),
-           |r AS (
-           |  SELECT doc_id, source,
-           |         row_number() OVER (PARTITION BY source ORDER BY u, doc_id) AS rk
-           |  FROM u
-           |)
-           |SELECT r.doc_id, r.source
-           |FROM r JOIN tgt ON r.source = tgt.source
-           |WHERE r.rk <= tgt.target
-           |ORDER BY r.source, r.doc_id""".stripMargin
-      },
-
-      // Corpus probe = band-bucket equi-join (even ids); within-batch =
-      // lower-odd-id bucket collision; docs with no shingles stay `new`.
-      "q_minhash_increment" -> {
-        val sigCols = (0 until 8)
-          .map(k => s"list_min(list_transform(sh, x -> md5('$k|' || x))) AS sig_$k")
-          .mkString(", ")
-        val bandRows = (0 until 4)
-          .map(b => s"SELECT doc_id, $b AS band_id, md5(sig_${2 * b} || '#' || sig_${2 * b + 1}) AS bucket FROM sigs")
-          .mkString("\n  UNION ALL ")
-        s"""WITH t AS (SELECT doc_id, ${dShingleSet(W, 3)} AS sh FROM documents),
-           |sigs AS (SELECT doc_id, $sigCols FROM t WHERE len(sh) > 0),
-           |bands AS (
-           |  $bandRows
-           |),
-           |cb AS (SELECT band_id, bucket, doc_id FROM bands WHERE doc_id % 2 = 0),
-           |bb AS (SELECT band_id, bucket, doc_id FROM bands WHERE doc_id % 2 = 1),
-           |ch AS (
-           |  SELECT b.doc_id, min(c.doc_id) AS corpus_of
-           |  FROM bb b JOIN cb c ON b.band_id = c.band_id AND b.bucket = c.bucket
-           |  GROUP BY b.doc_id
-           |),
-           |bh AS (
-           |  SELECT b.doc_id, min(a.doc_id) AS batch_of
-           |  FROM bb b JOIN bb a ON a.band_id = b.band_id AND a.bucket = b.bucket
-           |                     AND a.doc_id < b.doc_id
-           |  GROUP BY b.doc_id
-           |)
-           |SELECT d.doc_id,
-           |       CASE WHEN ch.corpus_of IS NOT NULL THEN 'dup_corpus'
-           |            WHEN bh.batch_of IS NOT NULL THEN 'dup_batch'
-           |            ELSE 'new' END AS status,
-           |       coalesce(ch.corpus_of, bh.batch_of) AS dup_of
-           |FROM documents d
-           |LEFT JOIN ch ON d.doc_id = ch.doc_id
-           |LEFT JOIN bh ON d.doc_id = bh.doc_id
-           |WHERE d.doc_id % 2 = 1
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      // Same connected components as q_dedup_clusters, then the split
-      // is the md5-uniform of the CLUSTER id — cluster members land
-      // together by construction.
-      "q_split_leakproof" -> {
-        val sigCols = (0 until 8)
-          .map(k => s"list_min(list_transform(sh, x -> md5('$k|' || x))) AS sig_$k")
-          .mkString(", ")
-        val bandRows = (0 until 4)
-          .map(b => s"SELECT doc_id, $b AS band_id, md5(sig_${2 * b} || '#' || sig_${2 * b + 1}) AS bucket FROM sigs")
-          .mkString("\n  UNION ALL ")
-        def h(i: Int) = dHexVal(s"substr(md5(CAST(cluster_id AS VARCHAR)), $i, 1)")
-        s"""WITH RECURSIVE t AS (SELECT doc_id, ${dShingleSet(W, 3)} AS sh FROM documents),
-           |sigs AS (SELECT doc_id, $sigCols FROM t WHERE len(sh) > 0),
-           |bands AS (
-           |  $bandRows
-           |),
-           |pr AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.bucket = b.bucket
-           |  WHERE a.doc_id < b.doc_id
-           |),
-           |e AS (SELECT id_a AS src, id_b AS dst FROM pr
-           |      UNION SELECT id_b, id_a FROM pr),
-           |reach AS (
-           |  SELECT src, dst FROM e
-           |  UNION
-           |  SELECT r.src, e2.dst FROM reach r JOIN e e2 ON r.dst = e2.src
-           |),
-           |cl AS (SELECT src AS doc_id, min(dst) AS mr FROM reach GROUP BY src),
-           |x AS (
-           |  SELECT d.doc_id,
-           |         least(d.doc_id, coalesce(cl.mr, d.doc_id)) AS cluster_id
-           |  FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id
-           |)
-           |SELECT doc_id, cluster_id,
-           |       CASE WHEN (((${h(1)} * 16 + ${h(2)}) * 16 + ${h(3)}) * 16 + ${h(4)}) / 65536.0 < 0.2
-           |            THEN 'val' ELSE 'train' END AS split
-           |FROM x ORDER BY doc_id""".stripMargin
-      },
-
-      // Flagged = sim ≥ 0.9 vs any bench vector; worst_bench_id = the
-      // max-sim bench item, ties to the lowest id (matches max_by's
-      // (sim, −bid) key).
-      "q_semantic_decontaminate" ->
-        s"""WITH c AS (
-           |  SELECT vec_id, embedding FROM embeddings
-           |  UNION ALL
-           |  SELECT vec_id + 10000 AS vec_id, embedding FROM embeddings WHERE vec_id < 5
-           |), b AS (
-           |  SELECT vec_id AS bid, embedding AS bv FROM embeddings WHERE vec_id < 5
-           |), s AS (
-           |  SELECT c.vec_id, b.bid, ${dCosine("c.embedding", "b.bv")} AS sim
-           |  FROM c, b
-           |), f AS (SELECT * FROM s WHERE sim >= 0.9)
-           |SELECT vec_id, n_bench_hits, max_sim, worst_bench_id FROM (
-           |  SELECT vec_id, bid AS worst_bench_id,
-           |         CAST(count(*) OVER (PARTITION BY vec_id) AS BIGINT) AS n_bench_hits,
-           |         round(max(sim) OVER (PARTITION BY vec_id) + 1.2345e-9, 6) AS max_sim,
-           |         row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, bid) AS rn
-           |  FROM f)
-           |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-      "q_semantic_decontaminate_confined" ->
-        s"""WITH $mixedPlantCtes,
-           |c AS (SELECT vec_id AS cid, embedding AS cv FROM bse WHERE vec_id < 8),
-           |crk AS (
-           |  SELECT vec_id, embedding, cid, csim,
-           |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn,
-           |         max(csim) OVER (PARTITION BY vec_id) AS topsim
-           |  FROM (SELECT v.vec_id, v.embedding, c.cid,
-           |               ${dCosine("v.embedding", "c.cv")} AS csim
-           |        FROM all_v v, c)
-           |),
-           |cprob AS (SELECT vec_id, embedding, cid AS cell_id FROM crk
-           |          WHERE rn <= 2 AND csim >= topsim - CAST(0.05 AS DOUBLE)),
-           |brk AS (
-           |  SELECT vec_id, embedding, cid,
-           |         row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS rn
-           |  FROM (SELECT v.vec_id, v.embedding, c.cid,
-           |               ${dCosine("v.embedding", "c.cv")} AS csim
-           |        FROM (SELECT vec_id, embedding FROM bse WHERE vec_id < 20) v, c)
-           |),
-           |bprim AS (SELECT vec_id AS bid, embedding AS bv, cid AS cell_id
-           |          FROM brk WHERE rn = 1),
-           |f AS (
-           |  SELECT x.vec_id, y.bid, ${dCosine("x.embedding", "y.bv")} AS sim
-           |  FROM cprob x JOIN bprim y ON x.cell_id = y.cell_id
-           |  WHERE ${dCosine("x.embedding", "y.bv")} >= 0.9
-           |)
-           |SELECT vec_id, n_bench_hits, max_sim, worst_bench_id FROM (
-           |  SELECT vec_id, bid AS worst_bench_id,
-           |         CAST(count(*) OVER (PARTITION BY vec_id) AS BIGINT) AS n_bench_hits,
-           |         round(max(sim) OVER (PARTITION BY vec_id) + 1.2345e-9, 6) AS max_sim,
-           |         row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, bid) AS rn
-           |  FROM f)
-           |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-      "q_pack_shards" ->
-        s"""WITH t AS (SELECT doc_id, source, len($W) AS n_tokens FROM documents),
-           |c AS (SELECT doc_id, source, n_tokens,
-           |        sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-           |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |      FROM t)
-           |SELECT source, CAST((cum - n_tokens) // 2000 AS BIGINT) AS shard_id,
-           |       count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-           |FROM c GROUP BY source, shard_id ORDER BY source, shard_id""".stripMargin,
-
-      // Entropy fold mirrors the engine: terms sorted lexicographically,
-      // left-fold sum (list_sum ≡ Spark aggregate over the same order).
-      "q_entropy" ->
-        s"""WITH t AS (SELECT doc_id, unnest($W) AS tok FROM documents),
-           |c AS (SELECT doc_id, tok, count(*) AS cnt FROM t GROUP BY doc_id, tok),
-           |g AS (SELECT doc_id,
-           |        list_sort(list(struct_pack(tok := tok, cnt := cnt))) AS terms,
-           |        sum(cnt) AS n
-           |      FROM c GROUP BY doc_id)
-           |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-           |       round(-(list_sum(list_transform(terms, e ->
-           |         (CAST(e.cnt AS DOUBLE) / CAST(n AS DOUBLE))
-           |           * ln(CAST(e.cnt AS DOUBLE) / CAST(n AS DOUBLE))))) + 1.2345e-9, 6) AS entropy
-           |FROM g ORDER BY doc_id""".stripMargin,
-
-      "q_pack_sequences" ->
-        """WITH t AS (
-          |  SELECT source, doc_id, n_chars,
-          |         CAST(sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
-          |                                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-          |  FROM documents WHERE n_chars > 0
-          |),
-          |o AS (SELECT source, doc_id, n_chars, cum, cum - n_chars AS off FROM t),
-          |x AS (
-          |  SELECT source, doc_id, s AS seq_id, off, cum, s * 1000 AS sbase
-          |  FROM o, unnest(range(off // 1000, (cum - 1) // 1000 + 1)) AS r(s)
-          |)
-          |SELECT source, doc_id, seq_id,
-          |       greatest(off, sbase) - sbase AS tok_begin,
-          |       least(cum, sbase + 1000) - sbase AS tok_end,
-          |       greatest(off, sbase) - off AS doc_tok_begin
-          |FROM x ORDER BY source, doc_id, seq_id""".stripMargin,
-
-      "q_multimodal_frames" ->
-        """WITH t AS (SELECT doc_id, text, length(text) AS n FROM documents),
-          |f AS (
-          |  SELECT doc_id, i AS frame_idx, substring(text, i * 64 + 1, 64) AS frame
-          |  FROM t, unnest(range(0, (n + 63) // 64, 2)) AS r(i)
-          |)
-          |SELECT doc_id AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-          |       CAST(length(frame) AS BIGINT) AS n_bytes, md5(frame) AS frame_md5
-          |FROM f ORDER BY media_id, frame_idx""".stripMargin,
-
-      "q_dedup_incremental" ->
-        """WITH existing AS (
-          |  SELECT DISTINCT md5(trim(replace(text, chr(10), ' '))) AS fp
-          |  FROM documents WHERE doc_id < 400
-          |),
-          |batch AS (
-          |  SELECT doc_id, text FROM documents WHERE doc_id >= 300
-          |  UNION ALL
-          |  SELECT doc_id + 10000 AS doc_id, text FROM documents
-          |  WHERE doc_id >= 450 AND doc_id < 470
-          |),
-          |fp AS (SELECT doc_id, md5(trim(replace(text, chr(10), ' '))) AS fingerprint FROM batch),
-          |firsts AS (SELECT fingerprint, min(doc_id) AS first_id FROM fp GROUP BY 1)
-          |SELECT fp.doc_id, fp.fingerprint,
-          |       CASE WHEN e.fp IS NOT NULL THEN 'dup_corpus'
-          |            WHEN fp.doc_id <> f.first_id THEN 'dup_batch'
-          |            ELSE 'new' END AS status
-          |FROM fp
-          |JOIN firsts f ON fp.fingerprint = f.fingerprint
-          |LEFT JOIN existing e ON fp.fingerprint = e.fp
-          |ORDER BY fp.doc_id""".stripMargin,
-
-      "q_normalize_text" ->
-        """WITH t AS (
-          |  SELECT doc_id,
-          |         text || '  Café' || chr(9) || 'NAÏVE  Zürich ñandú François øre  ' AS aug
-          |  FROM documents
-          |)
-          |SELECT doc_id,
-          |       trim(regexp_replace(lower(strip_accents(aug)), '\s+', ' ', 'g')) AS normalized
-          |FROM t ORDER BY doc_id""".stripMargin,
-
-      "q_importance_weights" ->
-        s"""$dImportanceCte
-           |SELECT doc_id, n_tokens, target_lp, corpus_lp,
-           |       round(target_lp - corpus_lp + 1.2345e-9, 6) AS weight
-           |FROM j ORDER BY doc_id""".stripMargin,
-
-      // Selection → packing composition: keep docs the importance model
-      // prefers (weight > 0), then the per-source sequence layout
-      // reduces to closed-form aggregates (SamplingSpec proves the span
-      // algebra: Σ spans = Σ tokens, max seq = (T-1) div L).
-      "q_select_pack" ->
-        s"""$dImportanceCte,
-           |kept AS (
-           |  SELECT d.source, d.n_chars
-           |  FROM j JOIN documents d ON j.doc_id = d.doc_id
-           |  WHERE round(target_lp - corpus_lp + 1.2345e-9, 6) > 0
-           |)
-           |SELECT source,
-           |       CAST(count(*) AS BIGINT) AS n_docs,
-           |       CAST((CAST(sum(n_chars) AS BIGINT) - 1) // 1000 + 1 AS BIGINT) AS n_sequences,
-           |       CAST(sum(n_chars) AS BIGINT) AS total_tokens
-           |FROM kept GROUP BY source ORDER BY source""".stripMargin,
-
-      // Bigram conditional logprob: bigrams via the same list ops as
-      // Spark's indexed transform (slice + zip — no positional
-      // self-join); context totals derive FROM the kept top-64 bigram
-      // table so c ≤ ctx and P < 1 by construction; the per-doc fold
-      // replays over the identically sorted (w1, w2, dcnt, lp) list.
-      "q_bigram_logprob" ->
-        s"""WITH d AS (SELECT doc_id, $W AS w FROM documents),
-           |p AS (SELECT doc_id, unnest(list_zip(w[1:len(w)-1], w[2:len(w)])) AS pr
-           |      FROM d WHERE len(w) >= 2),
-           |bi AS (SELECT doc_id, pr[1] AS w1, pr[2] AS w2 FROM p),
-           |bg AS (SELECT w1, w2, count(*) AS bcnt FROM bi GROUP BY 1, 2
-           |       ORDER BY bcnt DESC, w1, w2 LIMIT 64),
-           |ctx AS (SELECT w1, sum(bcnt) AS ccnt FROM bg GROUP BY 1),
-           |c AS (SELECT tok, count(*) AS cnt
-           |      FROM (SELECT unnest($W) AS tok FROM documents) GROUP BY 1),
-           |uv AS (SELECT tok FROM c ORDER BY cnt DESC, tok LIMIT 32),
-           |stats AS (SELECT CAST(count(*) + 1 AS DOUBLE) AS v1 FROM uv),
-           |dt AS (SELECT doc_id, w1, w2, count(*) AS dcnt FROM bi GROUP BY 1, 2, 3),
-           |sc AS (SELECT dt.doc_id, dt.w1, dt.w2, dt.dcnt,
-           |              ln((CAST(COALESCE(b.bcnt, 0) AS DOUBLE) + 1.0) /
-           |                 (CAST(COALESCE(c2.ccnt, 0) AS DOUBLE) + s.v1)) AS lp
-           |       FROM dt LEFT JOIN bg b ON dt.w1 = b.w1 AND dt.w2 = b.w2
-           |               LEFT JOIN ctx c2 ON dt.w1 = c2.w1, stats s),
-           |g AS (SELECT doc_id,
-           |             list_sort(list(struct_pack(w1 := w1, w2 := w2, dcnt := dcnt, lp := lp))) AS terms,
-           |             sum(dcnt) AS n_bigrams
-           |      FROM sc GROUP BY doc_id)
-           |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
-           |       round(list_sum(list_transform(terms, e -> CAST(e.dcnt AS DOUBLE) * e.lp))
-           |             / CAST(n_bigrams AS DOUBLE) + 1.2345e-9, 6) AS logprob
-           |FROM g ORDER BY doc_id""".stripMargin,
-
-      "q_unigram_logprob" ->
-        s"""WITH t AS (SELECT doc_id, unnest($W) AS tok FROM documents),
-           |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
-           |vocab AS (SELECT tok, cnt FROM c ORDER BY cnt DESC, tok LIMIT 32),
-           |stats AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n,
-           |                 CAST(count(*) + 1 AS DOUBLE) AS v1 FROM vocab),
-           |dt AS (SELECT doc_id, tok, count(*) AS dcnt FROM t GROUP BY 1, 2),
-           |sc AS (SELECT dt.doc_id, dt.tok, dt.dcnt,
-           |              ln((CAST(COALESCE(v.cnt, 0) AS DOUBLE) + 1.0) / (s.n + s.v1)) AS lp
-           |       FROM dt LEFT JOIN vocab v ON dt.tok = v.tok, stats s),
-           |g AS (SELECT doc_id,
-           |             list_sort(list(struct_pack(tok := tok, dcnt := dcnt, lp := lp))) AS terms,
-           |             sum(dcnt) AS n_tokens
-           |      FROM sc GROUP BY doc_id)
-           |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-           |       round(list_sum(list_transform(terms, e -> CAST(e.dcnt AS DOUBLE) * e.lp))
-           |             / CAST(n_tokens AS DOUBLE) + 1.2345e-9, 6) AS logprob
-           |FROM g ORDER BY doc_id""".stripMargin,
-
-      "q_vocab_stats" ->
-        s"""WITH t AS (SELECT source, unnest($W) AS tok FROM documents)
-           |SELECT source,
-           |       count(DISTINCT tok) AS n_vocab,
-           |       count(*) AS n_tokens,
-           |       round(CAST(count(DISTINCT tok) AS DOUBLE) / count(*) + 1.2345e-9, 6) AS type_token_ratio
-           |FROM t GROUP BY source ORDER BY source""".stripMargin,
-
-      // Count-min grid replay: same salted 60-bit md5 buckets, same
-      // min-over-rows estimate — overcounts reproduce exactly.
-      "q_cm_heavy" -> dCmHeavySql,
-
-      // The streamed loop merges partial grids ADDITIVELY, which is
-      // exact — so its oracle is the q_cm_heavy one-shot replay, and a
-      // hash match proves the batch split left no trace.
-      "q_cm_stream" -> dCmHeavySql,
-
-      // KMV replay: 52-bit hashes (13 hex chars — exact in a double),
-      // bottom-64 per source, (k-1)/frac estimate, same division order.
-      "q_kmv_distinct" ->
-        s"""WITH t AS (SELECT source, unnest($W) AS tok FROM documents),
-           |h AS (SELECT DISTINCT source, ${dMd5LongN("tok", 13)} AS h FROM t),
-           |r AS (SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS rk FROM h),
-           |kk AS (SELECT source, count(*) AS n_kept, max(h) AS maxh
-           |       FROM r WHERE rk <= 64 GROUP BY source),
-           |x AS (SELECT source, count(DISTINCT tok) AS exact_distinct FROM t GROUP BY source),
-           |est AS (SELECT kk.source, kk.n_kept,
-           |               CASE WHEN kk.n_kept < 64 THEN CAST(kk.n_kept AS DOUBLE)
-           |                    ELSE 63.0 / (CAST(kk.maxh AS DOUBLE) / 4503599627370496.0) END AS est_raw,
-           |               x.exact_distinct
-           |        FROM kk JOIN x ON kk.source = x.source)
-           |SELECT source, CAST(n_kept AS BIGINT) AS n_kept,
-           |       round(est_raw + 1.2345e-9, 6) AS est_distinct,
-           |       CAST(exact_distinct AS BIGINT) AS exact_distinct,
-           |       round((est_raw - CAST(exact_distinct AS DOUBLE)) / CAST(exact_distinct AS DOUBLE)
-           |             + 1.2345e-9, 6) AS rel_err
-           |FROM est ORDER BY source""".stripMargin,
-
-      // Bloom replay: bench shingles -> distinct bit positions; a corpus
-      // gram hits iff all 3 salted positions are set (count(*)=3 after
-      // the pos join — bits.pos is distinct, so each j matches at most
-      // once); docs with >= 5 hit grams survive. False positives land
-      // identically on both engines.
-      "q_bloom_decontaminate" ->
-        s"""WITH d AS (SELECT doc_id, ${dShingleSet(W, 3)} AS sh FROM documents),
-           |c AS (SELECT doc_id, unnest(sh) AS s FROM d WHERE len(sh) > 0),
-           |bits AS (SELECT DISTINCT ${dMd5LongN("CAST(j AS VARCHAR) || '|' || s", 15)} % 16384 AS pos
-           |         FROM (SELECT unnest(sh) AS s FROM d WHERE doc_id < 10 AND len(sh) > 0)
-           |         CROSS JOIN range(3) AS r(j)),
-           |cp AS (SELECT doc_id, s, ${dMd5LongN("CAST(j AS VARCHAR) || '|' || s", 15)} % 16384 AS pos
-           |       FROM c CROSS JOIN range(3) AS r(j)),
-           |hits AS (SELECT doc_id, s FROM cp JOIN bits ON cp.pos = bits.pos
-           |         GROUP BY doc_id, s HAVING count(*) = 3)
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hit
-           |FROM hits GROUP BY doc_id HAVING count(*) >= 5 ORDER BY doc_id""".stripMargin,
-
-      // Batched mapPartitions embedder ≡ expression path bitwise, so the
-      // oracle is the same hashed-BoW arithmetic (minus the norm column).
-      "q_embed_batched" -> dEmbedOracle(withNorm = false, W),
-
-      "q_lang_quality" -> {
-        val hits = TextAnalysis.StopwordProfiles
-          .map { case (lang, words) => s"${dStopHits("w", words)} AS h_$lang" }
-          .mkString(",\n         ")
-        val langs = TextAnalysis.StopwordProfiles.map(_._1)
-        val caseChain = langs.map(l => s"WHEN h_$l = best THEN '$l'").mkString(" ")
-        val allStops = TextAnalysis.StopwordProfiles.flatMap(_._2).distinct
-        s"""WITH t AS (SELECT doc_id, text, trim(replace(text, chr(10), ' ')) AS tc, $W AS w FROM documents),
-           |s AS (
-           |  SELECT doc_id, text, tc, w,
-           |         ${hits},
-           |         greatest(${langs.map(l => s"${dStopHits("w", TextAnalysis.StopwordProfiles.toMap.apply(l))}").mkString(", ")}) AS best
-           |  FROM t
-           |)
-           |SELECT doc_id,
-           |       CASE WHEN best <= 0 THEN 'und' $caseChain ELSE 'und' END AS lang_pred,
-           |       round(CASE WHEN length(tc) = 0 THEN 0.0
-           |             ELSE CAST(length(regexp_replace(tc, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE) / length(tc) END + 1.2345e-9, 6) AS punct_ratio,
-           |       round(CASE WHEN len(w) = 0 THEN 0.0
-           |             ELSE CAST(${dStopHits("w", allStops)} AS DOUBLE) / len(w) END + 1.2345e-9, 6) AS stopword_ratio,
-           |       round(CASE WHEN len(w) = 0 THEN 0.0
-           |             ELSE CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) END + 1.2345e-9, 6) AS mean_token_len,
-           |       round(
-           |         least(CAST(len(w) AS DOUBLE) / 100.0, 1.0) * 0.4 +
-           |         greatest(1.0 - (CASE WHEN length(tc) = 0 THEN 0.0
-           |                         ELSE CAST(length(regexp_replace(tc, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE) / length(tc) END) * 5.0, 0.0) * 0.3 +
-           |         least((CASE WHEN len(w) = 0 THEN 0.0
-           |                ELSE CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) END) / 8.0, 1.0) * 0.3 + 1.2345e-9, 6) AS quality
-           |FROM s ORDER BY doc_id""".stripMargin
-      },
-
-      "q_redact_pii" ->
-        """WITH t AS (
-          |  SELECT doc_id,
-          |         text || ' contact: user' || CAST(doc_id AS VARCHAR) ||
-          |         '@example.com or 555-123-4567 from 10.0.0.1' AS aug
-          |  FROM documents
-          |)
-          |SELECT doc_id,
-          |       regexp_replace(
-          |         regexp_replace(
-          |           regexp_replace(
-          |             regexp_replace(aug, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |             '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b', '<SSN>', 'g'),
-          |           '\b[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}\b', '<PHONE>', 'g'),
-          |         '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g') AS redacted
-          |FROM t ORDER BY doc_id""".stripMargin,
-
-      "q_repetition" -> {
-        val allSh = s"list_transform(range(1, greatest(len($W) - 2, 1) + 1), " +
-          s"i -> array_to_string(list_slice($W, i, i + 2), ' '))"
-        s"""WITH t AS (SELECT doc_id, $allSh AS sh FROM documents)
-           |SELECT doc_id,
-           |       round(CAST(len(sh) - len(list_distinct(sh)) AS DOUBLE) / len(sh) + 1.2345e-9, 6) AS rep_ratio,
-           |       (CAST(len(sh) - len(list_distinct(sh)) AS DOUBLE) / len(sh)) > 0.2 AS gopher_flag
-           |FROM t ORDER BY doc_id""".stripMargin
-      },
-
-      "q_quality_rules" -> (s"$qualityRulesCte\nSELECT doc_id, r_min_words, " +
-        "r_max_words, r_mean_word_len, r_symbol_ratio, r_stopwords, " +
-        "r_repetition, passed, n_failed FROM rr ORDER BY doc_id"),
-
-      "q_quality_survival" -> (s"$qualityRulesCte\n" +
-        """SELECT CAST(count(*) AS BIGINT) AS n_docs,
-          |       CAST(sum(CASE WHEN passed THEN 1 ELSE 0 END) AS BIGINT) AS n_passed,
-          |       CAST(sum(CASE WHEN r_min_words THEN 0 ELSE 1 END) AS BIGINT) AS killed_by_min_words,
-          |       CAST(sum(CASE WHEN r_max_words THEN 0 ELSE 1 END) AS BIGINT) AS killed_by_max_words,
-          |       CAST(sum(CASE WHEN r_mean_word_len THEN 0 ELSE 1 END) AS BIGINT) AS killed_by_mean_word_len,
-          |       CAST(sum(CASE WHEN r_symbol_ratio THEN 0 ELSE 1 END) AS BIGINT) AS killed_by_symbol_ratio,
-          |       CAST(sum(CASE WHEN r_stopwords THEN 0 ELSE 1 END) AS BIGINT) AS killed_by_stopwords,
-          |       CAST(sum(CASE WHEN r_repetition THEN 0 ELSE 1 END) AS BIGINT) AS killed_by_repetition
-          |FROM rr""".stripMargin),
-
-      "q_semantic_dedup" -> semanticDedupOracle(8),
-
-      // the SCALED codebook at the full production recipe: two-level
-      // assignment (|S|=8 head supers) + two-band OR'd confinement of
-      // the pair join — every cell id, bucket bit, and dup_of replayed
-      "q_semantic_dedup_scaled" -> semanticDedupHierBandedOracle,
-      "q_semantic_dedup_probes" -> semanticDedupProbesOracle,
-      "q_semantic_dedup_probes_hier" -> semanticDedupProbesHierOracle,
-      "q_semantic_dedup_margin_derived" -> semanticDedupMarginDerivedOracle,
-
-      // Incremental semantic dedup: same nearest-centroid assignment CTE
-      // shape as q_semantic_dedup (row_number over csim DESC, cid = the
-      // codegen argmax's lowest-id tie-break), applied to corpus and
-      // batch separately; corpus-hit takes min corpus id, batch-hit min
-      // lower batch id, both cell-confined.
-      "q_semantic_increment" ->
-        s"""WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
-           |corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 250),
-           |batch AS (
-           |  SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 250
-           |  UNION ALL
-           |  SELECT vec_id + 20000 AS vec_id, embedding FROM embeddings WHERE vec_id < 50
-           |  UNION ALL
-           |  SELECT vec_id + 30000 AS vec_id, embedding FROM embeddings WHERE vec_id >= 250 AND vec_id < 300
-           |),
-           |casg AS (
-           |  SELECT vec_id, embedding, cid AS cell_id FROM (
-           |    SELECT v.vec_id, v.embedding, c.cid,
-           |           row_number() OVER (PARTITION BY v.vec_id
-           |             ORDER BY ${dCosine("v.embedding", "c.cv")} DESC, c.cid) AS rn
-           |    FROM corpus v, c) WHERE rn = 1
-           |),
-           |basg AS (
-           |  SELECT vec_id, embedding, cid AS cell_id FROM (
-           |    SELECT v.vec_id, v.embedding, c.cid,
-           |           row_number() OVER (PARTITION BY v.vec_id
-           |             ORDER BY ${dCosine("v.embedding", "c.cv")} DESC, c.cid) AS rn
-           |    FROM batch v, c) WHERE rn = 1
-           |),
-           |corpus_hit AS (
-           |  SELECT b.vec_id, min(x.vec_id) AS corpus_of
-           |  FROM basg b JOIN casg x ON b.cell_id = x.cell_id
-           |  WHERE ${dCosine("b.embedding", "x.embedding")} >= 0.9
-           |  GROUP BY 1
-           |),
-           |batch_hit AS (
-           |  SELECT y.vec_id, min(x.vec_id) AS batch_of
-           |  FROM basg y JOIN basg x ON y.cell_id = x.cell_id AND x.vec_id < y.vec_id
-           |  WHERE ${dCosine("x.embedding", "y.embedding")} >= 0.9
-           |  GROUP BY 1
-           |)
-           |SELECT b.vec_id, b.cell_id,
-           |       CASE WHEN ch.corpus_of IS NOT NULL THEN 'dup_corpus'
-           |            WHEN bh.batch_of IS NOT NULL THEN 'dup_batch'
-           |            ELSE 'new' END AS status,
-           |       coalesce(ch.corpus_of, bh.batch_of) AS dup_of
-           |FROM basg b LEFT JOIN corpus_hit ch ON b.vec_id = ch.vec_id
-           |LEFT JOIN batch_hit bh ON b.vec_id = bh.vec_id
-           |ORDER BY b.vec_id""".stripMargin,
-
-      // The increment at the production recipe: corpus index AND batch
-      // both routed through the two-level argmax, both probe joins
-      // OR-confined to the two bands — the daily-ingest twin of
-      // q_semantic_dedup_scaled, hash-gated with the same CTE blocks.
-      "q_semantic_increment_scaled" ->
-        s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 250),
-           |batch AS (
-           |  SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 250
-           |  UNION ALL
-           |  SELECT vec_id + 20000 AS vec_id, embedding FROM embeddings WHERE vec_id < 50
-           |  UNION ALL
-           |  SELECT vec_id + 30000 AS vec_id, embedding FROM embeddings WHERE vec_id >= 250 AND vec_id < 300
-           |),
-           |$semanticHierHeadCtes,
-           |${semanticHierAssignCtes("corpus", "casg")},
-           |${semanticHierAssignCtes("batch", "basg")},
-           |corpus_hit AS (
-           |  SELECT b.vec_id, min(x.vec_id) AS corpus_of
-           |  FROM basg b JOIN casg x ON b.cell_id = x.cell_id
-           |   AND (b.lb0 = x.lb0 OR b.lb1 = x.lb1)
-           |  WHERE ${dCosine("b.embedding", "x.embedding")} >= 0.9
-           |  GROUP BY 1
-           |),
-           |batch_hit AS (
-           |  SELECT y.vec_id, min(x.vec_id) AS batch_of
-           |  FROM basg y JOIN basg x ON y.cell_id = x.cell_id AND x.vec_id < y.vec_id
-           |   AND (y.lb0 = x.lb0 OR y.lb1 = x.lb1)
-           |  WHERE ${dCosine("x.embedding", "y.embedding")} >= 0.9
-           |  GROUP BY 1
-           |)
-           |SELECT b.vec_id, b.cell_id,
-           |       CASE WHEN ch.corpus_of IS NOT NULL THEN 'dup_corpus'
-           |            WHEN bh.batch_of IS NOT NULL THEN 'dup_batch'
-           |            ELSE 'new' END AS status,
-           |       coalesce(ch.corpus_of, bh.batch_of) AS dup_of
-           |FROM basg b LEFT JOIN corpus_hit ch ON b.vec_id = ch.vec_id
-           |LEFT JOIN batch_hit bh ON b.vec_id = bh.vec_id
-           |ORDER BY b.vec_id""".stripMargin,
-
-      // Semantic clusters: assignment CTE + same-cell tau-pairs, then the
-      // same recursive-CTE transitive closure as q_dedup_clusters.
-      "q_semantic_clusters" ->
-        s"""WITH RECURSIVE c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
-           |v AS (
-           |  SELECT vec_id, embedding FROM embeddings
-           |  UNION ALL
-           |  SELECT vec_id + 20000 AS vec_id, embedding FROM embeddings WHERE vec_id < 40
-           |  UNION ALL
-           |  SELECT vec_id + 40000 AS vec_id, embedding FROM embeddings WHERE vec_id < 20
-           |),
-           |asg AS (
-           |  SELECT vec_id, embedding, cid AS cell_id FROM (
-           |    SELECT v.vec_id, v.embedding, c.cid,
-           |           row_number() OVER (PARTITION BY v.vec_id
-           |             ORDER BY ${dCosine("v.embedding", "c.cv")} DESC, c.cid) AS rn
-           |    FROM v, c) x WHERE rn = 1
-           |),
-           |pr AS (
-           |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-           |  FROM asg a JOIN asg b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-           |  WHERE ${dCosine("a.embedding", "b.embedding")} >= 0.9
-           |),
-           |e AS (SELECT id_a AS src, id_b AS dst FROM pr
-           |      UNION SELECT id_b, id_a FROM pr),
-           |reach AS (
-           |  SELECT src, dst FROM e
-           |  UNION
-           |  SELECT r.src, e2.dst FROM reach r JOIN e e2 ON r.dst = e2.src
-           |),
-           |cl AS (SELECT src AS vec_id, min(dst) AS mr FROM reach GROUP BY src)
-           |SELECT v.vec_id,
-           |       least(v.vec_id, coalesce(cl.mr, v.vec_id)) AS cluster_id,
-           |       (least(v.vec_id, coalesce(cl.mr, v.vec_id)) = v.vec_id) AS is_canonical
-           |FROM v LEFT JOIN cl ON v.vec_id = cl.vec_id
-           |ORDER BY v.vec_id""".stripMargin,
-
-      // Span excision: same instance/first-key machinery as
-      // q_gram_dedup, then covered-index union and a per-doc rebuild
-      // of the surviving token stream.
-      "q_excise_spans" ->
-        s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-           |g AS (
-           |  SELECT doc_id, len(w) AS lw,
-           |         list_transform(range(1, greatest(len(w) - 4, 1) + 1),
-           |                        i -> array_to_string(list_slice(w, i, i + 4), ' ')) AS sh
-           |  FROM t
-           |),
-           |inst AS (
-           |  SELECT doc_id, lw, CAST(i AS BIGINT) - 1 AS pos, substring(md5(sh[i]), 1, 16) AS h
-           |  FROM g, unnest(range(1, len(sh) + 1)) AS r(i)
-           |),
-           |keyed AS (SELECT doc_id, lw, pos, h, doc_id * 1048576 + pos AS key FROM inst),
-           |firsts AS (SELECT h, min(key) AS firstkey FROM keyed GROUP BY 1),
-           |flagged AS (SELECT doc_id, lw, pos FROM keyed JOIN firsts USING (h) WHERE key <> firstkey),
-           |cov AS (
-           |  SELECT DISTINCT doc_id, CAST(idx AS BIGINT) AS idx
-           |  FROM flagged, unnest(range(pos, least(pos + 5, lw))) AS r(idx)
-           |),
-           |covl AS (SELECT doc_id, list_sort(list(idx)) AS cv FROM cov GROUP BY 1)
-           |SELECT t.doc_id,
-           |       -- COALESCE: DuckDB's array_to_string([]) is NULL where
-           |       -- Spark's array_join([]) is '' (fully excised docs)
-           |       COALESCE(array_to_string(
-           |         list_filter(
-           |           list_transform(range(1, len(w) + 1),
-           |             i -> CASE WHEN covl.cv IS NULL OR NOT list_contains(covl.cv, i - 1)
-           |                  THEN w[i] ELSE NULL END),
-           |           x -> x IS NOT NULL), ' '), '') AS clean_text,
-           |       CAST(len(w) AS BIGINT) AS n_tokens,
-           |       CAST(CASE WHEN covl.cv IS NULL THEN 0 ELSE len(covl.cv) END AS BIGINT) AS n_removed
-           |FROM t LEFT JOIN covl USING (doc_id)
-           |ORDER BY doc_id""".stripMargin,
-
-      "q_gram_dedup" ->
-        s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-           |g AS (
-           |  SELECT doc_id,
-           |         list_transform(range(1, greatest(len(w) - 4, 1) + 1),
-           |                        i -> array_to_string(list_slice(w, i, i + 4), ' ')) AS sh
-           |  FROM t
-           |),
-           |inst AS (
-           |  SELECT doc_id, CAST(i AS BIGINT) - 1 AS pos, substring(md5(sh[i]), 1, 16) AS h
-           |  FROM g, unnest(range(1, len(sh) + 1)) AS r(i)
-           |),
-           |grp AS (
-           |  SELECT h, doc_id, count(*) AS cnt, min(doc_id * 1048576 + pos) AS minkey
-           |  FROM inst GROUP BY 1, 2
-           |),
-           |firsts AS (SELECT h, min(minkey) AS firstkey FROM grp GROUP BY 1)
-           |SELECT grp.doc_id,
-           |       CAST(sum(cnt) AS BIGINT) AS n_grams,
-           |       CAST(sum(cnt - CASE WHEN grp.minkey = firsts.firstkey THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-           |       round(CAST(sum(cnt - CASE WHEN grp.minkey = firsts.firstkey THEN 1 ELSE 0 END) AS DOUBLE)
-           |             / sum(cnt) + 1.2345e-9, 6) AS dup_fraction
-           |FROM grp JOIN firsts ON grp.h = firsts.h
-           |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "q_length_quantiles" ->
-        """SELECT source,
-          |       CAST(count(*) AS BIGINT) AS n,
-          |       round(avg(CAST(n_chars AS DOUBLE)) + 1.2345e-9, 6) AS mean,
-          |       round(quantile_cont(CAST(n_chars AS DOUBLE), 0.5) + 1.2345e-9, 6) AS p50,
-          |       round(quantile_cont(CAST(n_chars AS DOUBLE), 0.9) + 1.2345e-9, 6) AS p90,
-          |       round(quantile_cont(CAST(n_chars AS DOUBLE), 0.99) + 1.2345e-9, 6) AS p99
-          |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-      "q_fingerprint" ->
-        s"""WITH t AS (SELECT doc_id, text, ${dShingleSet(W, 4)} AS sh FROM documents)
-           |SELECT doc_id,
-           |       md5(trim(replace(text, chr(10), ' '))) AS content_fp,
-           |       CASE WHEN len(sh) = 0 THEN md5('')
-           |            ELSE list_min(list_transform(sh, x -> md5(x))) END AS shingle_fp
-           |FROM t ORDER BY doc_id""".stripMargin,
-
-      // byte-based slicing (first 8 hex chars of the encoded BLOB ==
-      // Spark's binary substring(1,4)) and the full sniffFormat CASE — a
-      // char-based substr or hardcoded 'unknown' would diverge on
-      // multibyte-leading or magic-prefixed documents
-      "q_multimodal_meta" ->
-        """WITH b AS (
-          |  SELECT doc_id, text, encode(text) AS bin,
-          |         upper(left(hex(encode(text)), 8)) AS magic_uc
-          |  FROM documents
-          |)
-          |SELECT doc_id,
-          |       CAST(octet_length(bin) AS BIGINT) AS n_bytes,
-          |       sha256(text) AS sha256,
-          |       lower(magic_uc) AS magic,
-          |       CASE WHEN magic_uc LIKE 'FFD8FF%'   THEN 'jpeg'
-          |            WHEN magic_uc LIKE '89504E47%' THEN 'png'
-          |            WHEN magic_uc LIKE '47494638%' THEN 'gif'
-          |            WHEN magic_uc LIKE '52494646%' THEN 'riff'
-          |            WHEN magic_uc LIKE '25504446%' THEN 'pdf'
-          |            WHEN left(magic_uc, 4) IN ('5032', '5035')
-          |                 AND substr(magic_uc, 5, 2) IN ('09', '0A', '0D', '20') THEN 'pgm'
-          |            WHEN left(magic_uc, 4) IN ('5033', '5036')
-          |                 AND substr(magic_uc, 5, 2) IN ('09', '0A', '0D', '20') THEN 'ppm'
-          |            ELSE 'unknown' END AS format
-          |FROM b ORDER BY doc_id""".stripMargin,
-
-      // Replays the REAL PGM decode without a PGM parser: the payload's
-      // 64 pixel bytes are 4 md5 blocks of the text, and PnmCodec's
-      // 16-bin histogram bins by v*16/256 == the byte's high nibble ==
-      // the hex string's odd-position chars — so the decoded feature is
-      // a hex-digit count over md5 output, which DuckDB can compute.
-      // Header "P5\n8 8\n255\n" is 11 bytes + 64 pixels = 75 n_bytes;
-      // width/height come from the decoder parsing that header. The
-      // histogram is emitted as 16 scalar columns f0..f15 (DuckDB lists
-      // are 1-indexed) so the comparer never sees an array cell.
-      "q_multimodal_decode" ->
-        ("""WITH b AS (
-          |  SELECT doc_id,
-          |         md5(text || '#0') || md5(text || '#1') ||
-          |         md5(text || '#2') || md5(text || '#3') AS hx
-          |  FROM documents
-          |),
-          |h AS (
-          |  SELECT doc_id,
-          |         list_transform(range(0, 16), d ->
-          |           CAST(len(list_filter(range(0, 64), i ->
-          |             strpos('0123456789abcdef', substr(hx, CAST(2*i+1 AS INT), 1)) - 1 = d)) AS DOUBLE)) AS hist
-          |  FROM b
-          |),
-          |n AS (
-          |  SELECT doc_id, hist,
-          |         sqrt(list_sum(list_transform(hist, y -> y * y))) + 1e-9 AS nrm
-          |  FROM h
-          |)
-          |SELECT doc_id, CAST(8 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
-          |       CAST(75 AS BIGINT) AS n_bytes,
-          |""".stripMargin +
-          (0 until 16).map(i => s"       round(hist[${i + 1}] / nrm + 1.2345e-9, 6) AS f$i")
-            .mkString(",\n") +
-          "\nFROM n ORDER BY doc_id"),
-
-      // identical raster to q_multimodal_decode (PNG is lossless), so
-      // the oracle is the same hex-digit histogram without n_bytes
-      "q_multimodal_png" ->
-        ("""WITH b AS (
-          |  SELECT doc_id,
-          |         md5(text || '#0') || md5(text || '#1') ||
-          |         md5(text || '#2') || md5(text || '#3') AS hx
-          |  FROM documents
-          |),
-          |h AS (
-          |  SELECT doc_id,
-          |         list_transform(range(0, 16), d ->
-          |           CAST(len(list_filter(range(0, 64), i ->
-          |             strpos('0123456789abcdef', substr(hx, CAST(2*i+1 AS INT), 1)) - 1 = d)) AS DOUBLE)) AS hist
-          |  FROM b
-          |),
-          |n AS (
-          |  SELECT doc_id, hist,
-          |         sqrt(list_sum(list_transform(hist, y -> y * y))) + 1e-9 AS nrm
-          |  FROM h
-          |)
-          |SELECT doc_id, CAST(8 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
-          |""".stripMargin +
-          (0 until 16).map(i => s"       round(hist[${i + 1}] / nrm + 1.2345e-9, 6) AS f$i")
-            .mkString(",\n") +
-          "\nFROM n ORDER BY doc_id"),
-
-      "q_corpus_except" ->
-        """SELECT doc_id, text FROM documents
-          |EXCEPT
-          |SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0
-          |ORDER BY doc_id""".stripMargin,
-
-      "q_union_distinct" ->
-        """SELECT DISTINCT doc_id, lang FROM (
-          |  SELECT doc_id, lang FROM documents
-          |  UNION ALL
-          |  SELECT doc_id, lang FROM documents
-          |) ORDER BY doc_id""".stripMargin,
-
-      "q_intersect" ->
-        """SELECT doc_id, source FROM documents WHERE doc_id % 2 = 0
-          |INTERSECT
-          |SELECT doc_id, source FROM documents WHERE doc_id < 100
-          |ORDER BY doc_id""".stripMargin,
-
-      // count(o_orderkey) skips nulls → 0 for order-less customers;
-      // sum of an empty group stays NULL on both engines.
-      "q_outer_join" ->
-        """SELECT c_custkey, count(o_orderkey) AS n_orders,
-          |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-          |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-
-      "q_grouping_sets" ->
-        """SELECT l_returnflag, l_linestatus,
-          |       CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-          |       count(*) AS n,
-          |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-          |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-      "q_events_sliding" ->
-        """WITH x AS (
-          |  SELECT event_type,
-          |         unnest([CAST(floor(epoch(ts) / 300) AS BIGINT) * 300,
-          |                 CAST(floor(epoch(ts) / 300) AS BIGINT) * 300 - 300]) AS window_start
-          |  FROM events
-          |)
-          |SELECT window_start, event_type, count(*) AS n_events
-          |FROM x GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-
-      "q_events_session" ->
-        """WITH o AS (
-          |  SELECT user_id, epoch_us(ts) AS tus,
-          |         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)) AS prev
-          |  FROM events
-          |), m AS (
-          |  SELECT user_id, tus,
-          |         sum(CASE WHEN prev IS NULL OR tus - prev >= 1800000000 THEN 1 ELSE 0 END)
-          |           OVER (PARTITION BY user_id ORDER BY tus ROWS UNBOUNDED PRECEDING) AS sid
-          |  FROM o
-          |)
-          |SELECT user_id, min(tus) AS session_start, count(*) AS n_events
-          |FROM m GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-
-      "q_index_roundtrip" ->
-        """SELECT 'user' || CAST(label % 3 AS VARCHAR) AS user_id,
-          |       count(*) AS n_chunks, count(DISTINCT vec_id) AS n_docs
-          |FROM embeddings GROUP BY 1 ORDER BY user_id""".stripMargin,
-
-      // Post-upsert state derived straight from the embeddings table:
-      // u0 docs < 10 were replaced by one chunk_idx=9 chunk; everything
-      // else keeps chunks {0,1}.
-      "q_index_upsert" ->
-        """WITH b AS (SELECT vec_id AS doc_id, 'u' || CAST(label % 2 AS VARCHAR) AS user_id
-          |           FROM embeddings WHERE vec_id < 40),
-          |st AS (SELECT doc_id, user_id,
-          |          CASE WHEN user_id = 'u0' AND doc_id < 10 THEN 1 ELSE 2 END AS nch,
-          |          CASE WHEN user_id = 'u0' AND doc_id < 10 THEN 9 ELSE 1 END AS sci
-          |       FROM b)
-          |SELECT user_id, CAST(sum(nch) AS BIGINT) AS n_chunks,
-          |       count(DISTINCT doc_id) AS n_docs,
-          |       CAST(sum(sci) AS BIGINT) AS sum_chunk_idx
-          |FROM st GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-      "q_auth_semi" ->
-        """SELECT o_orderkey, CAST(o_custkey AS VARCHAR) AS user_id
-          |FROM orders
-          |WHERE EXISTS (
-          |  SELECT 1 FROM customer
-          |  WHERE CAST(c_custkey AS VARCHAR) = CAST(o_custkey AS VARCHAR)
-          |    AND trim(CAST(c_custkey AS VARCHAR)) <> ''
-          |    AND trim(CASE WHEN c_custkey % 20 = 0 THEN ' ' ELSE c_name END) <> '')
-          |ORDER BY o_orderkey""".stripMargin,
-
-      // BM25 with exact-integer corpus stats (N, Σdl as longs; avgdl one
-      // division) and the per-doc term sum folded in term order — the
-      // constants fold identically ((k1+1)=2.2, (1−b)=0.25 land on the
-      // same doubles as the literals), so scores hash-match.
-      "q_bm25" -> dBm25Query(
-        s"""SELECT doc_id, round(score + 1.2345e-9, 6) AS score
-           |FROM bm ORDER BY score DESC, doc_id LIMIT 10""".stripMargin),
-
-      // identical result contract: the persisted postings store changes
-      // the serving layout only (bucketed probe vs corpus scan)
-      "q_bm25_index" -> dBm25Query(
-        s"""SELECT doc_id, round(score + 1.2345e-9, 6) AS score
-           |FROM bm ORDER BY score DESC, doc_id LIMIT 10""".stripMargin),
-
-      // identical result contract: the segmented store + merge-on-read
-      // df/N reproduces the union corpus's scores bitwise
-      "q_bm25_segments" -> dBm25Query(
-        s"""SELECT doc_id, round(score + 1.2345e-9, 6) AS score
-           |FROM bm ORDER BY score DESC, doc_id LIMIT 10""".stripMargin),
-
-      // Lucene delete-until-merge: full-corpus statistics, marked ids
-      // filtered only from the final hit set
-      "q_bm25_delete" -> dBm25Query(
-        s"""SELECT doc_id, round(score + 1.2345e-9, 6) AS score
-           |FROM bm WHERE doc_id % 7 <> 0
-           |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin),
-
-      // post-compaction: every statistic (df, N, avgdl) recomputed over
-      // the surviving corpus — the oracle scores exactly that corpus
-      "q_bm25_compact" -> dBm25Query(
-        s"""SELECT doc_id, round(score + 1.2345e-9, 6) AS score
-           |FROM bm ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-        docPred = "doc_id % 7 <> 0"),
-
-      // Rerank stand-in = first-4-hex md5("query|text")/65536 — the
-      // engine's md5-uniform arithmetic over the raw text.
-      "q_rerank" -> {
-        def h(i: Int) =
-          dHexVal(s"substr(md5('$RagQueryText|' || d.text), $i, 1)")
-        dBm25Query(
-          s"""bm20 AS (
-             |  SELECT doc_id, round(score + 1.2345e-9, 6) AS score
-             |  FROM bm ORDER BY score DESC, doc_id LIMIT 20
-             |)
-             |SELECT b.doc_id, b.score,
-             |       (((${h(1)} * 16 + ${h(2)}) * 16 + ${h(3)}) * 16 + ${h(4)}) / 65536.0 AS rerank_score
-             |FROM bm20 b JOIN documents d ON b.doc_id = d.doc_id
-             |ORDER BY rerank_score DESC, b.doc_id LIMIT 5""".stripMargin)
-      },
-
-      "q_hybrid_rrf" -> dHybridFusedSql(
-        """SELECT doc_id, rank_a, rank_b, round(rrf + 1.2345e-9, 6) AS rrf_score
-          |FROM f ORDER BY rrf_score DESC, doc_id LIMIT 10""".stripMargin),
-
-      // Full modern-RAG composition: fuse → top-10 → rerank stand-in
-      // (first-4-hex md5("query|text")/65536) → top-5.
-      "q_hybrid_rerank" -> {
-        def h(i: Int) =
-          dHexVal(s"substr(md5('$RagQueryText|' || d.text), $i, 1)")
-        dHybridFusedSql(
-          s"""f10 AS (
-             |  SELECT doc_id, round(rrf + 1.2345e-9, 6) AS rrf_score
-             |  FROM f ORDER BY rrf_score DESC, doc_id LIMIT 10
-             |)
-             |SELECT b.doc_id, b.rrf_score,
-             |       (((${h(1)} * 16 + ${h(2)}) * 16 + ${h(3)}) * 16 + ${h(4)}) / 65536.0 AS rerank_score
-             |FROM f10 b JOIN documents d ON b.doc_id = d.doc_id
-             |ORDER BY rerank_score DESC, b.doc_id LIMIT 5""".stripMargin)
-      },
-
-      "q_rag_topk" ->
-        s"""WITH $dChunkEmbedCtes,
-           |s AS (SELECT cn.doc_id, cn.chunk_idx, ${dCosine("cn.nv", "q.nv")} AS sim
-           |      FROM cn, qn q)
-           |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-           |       round(sim + 1.2345e-9, 6) AS sim
-           |FROM s ORDER BY sim DESC, doc_id, chunk_idx LIMIT 5""".stripMargin,
-
-      // Graph-routed retrieval: the same chunk/embed CTEs, then the FULL
-      // GraphIndex replay — md5-uid ids, ⌊√N⌋ lowest-uid entry
-      // centroids (size-derived via the count(*) OVER () window, the
-      // same N the Spark side counts — one oracle serves every SF),
-      // nearest-cell assignment, undirected in-cell top-4 edges +
-      // up-links + centroid clique, and the 3-hop beam-4 walk (the
-      // annGraphOracle CTE chain, re-keyed to chunk uids).
-      "q_rag_graph" -> ragGraphOracle(mode = "auto"),
-      "q_rag_graph_recipe" -> ragGraphOracle(mode = "always"))
-  }
-
-  /** The flagship chunk→embed→uid→build→walk replay. `bandMode`
-    * selects the edge-stage discipline inside the same template:
-    *  - "always": the q_ann_graph_banded shape — the 4 lowest-uid
-    *    chunk embeddings become two 2-plane sign-LSH bands (bucket
-    *    folds lb0/lb1 over the dot signs, identical arithmetic to
-    *    Ann.lshBucket), and the in-cell pair join gains the OR'd
-    *    agreement condition — one join with OR ≡ the Spark side's
-    *    per-band joins deduped (dense_rank over the duplicated
-    *    multiset = row_number over the set; duplicates share the exact
-    *    order key);
-    *  - "auto": GraphIndex.build's SIZE-DERIVED default, replayed —
-    *    the same band CTEs, but both bucket folds collapse to the
-    *    constant 0 when count(*) < DefaultAutoBandAt (the OR condition
-    *    is then vacuously true = the plain unbanded join), and carry
-    *    the real sign buckets at/above it. One SQL template covers
-    *    both regimes of the default, so the flagship stays hash-green
-    *    at every SF the default build can encounter. */
-  private def ragGraphOracle(mode: String): String = {
-    require(Set("auto", "always")(mode), s"ragGraphOracle: $mode")
-    val uid = dMd5Long("doc_id || '#' || CAST(chunk_idx AS VARCHAR)")
-    val auto = mode == "auto"
-    // the size gates: in auto mode the band fold AND the two-level
-    // assignment are live only at/above the crossovers the Spark
-    // defaults derive from the same count (DefaultAutoBandAt /
-    // DefaultAutoHierAt); in always mode both run unconditionally —
-    // the composed 100 TB recipe, hash-gated end to end
-    val ncCte = if (auto) "\nnc AS (SELECT count(*) AS n FROM u)," else ""
-    val ncSrc = if (auto) ", nc" else ""
-    val ncGrp = if (auto) ", nc.n" else ""
-    def fold(expr: String) =
-      if (auto)
-        s"CASE WHEN nc.n >= ${operators.GraphIndex.DefaultAutoBandAt} THEN $expr ELSE 0 END"
-      else expr
-    val lb0 = fold(s"CAST(sum(CASE WHEN pl.prn <= 2 AND ${dDot("c.nv", "pl.nv")} > 0 " +
-      "THEN CAST(pow(2, pl.prn - 1) AS BIGINT) ELSE 0 END) AS BIGINT)")
-    val lb1 = fold(s"CAST(sum(CASE WHEN pl.prn >= 3 AND ${dDot("c.nv", "pl.nv")} > 0 " +
-      "THEN CAST(pow(2, pl.prn - 3) AS BIGINT) ELSE 0 END) AS BIGINT)")
-    // nc is defined once, up with cents (both the hier candidate gate
-    // and the band fold read it in auto mode)
-    val bandCtes =
-      s"""
-         |pl AS MATERIALIZED (
-         |  SELECT nv, prn FROM (
-         |    SELECT nv, row_number() OVER (ORDER BY uid) AS prn FROM u)
-         |  WHERE prn <= 4),
-         |cb AS MATERIALIZED (
-         |  SELECT c.uid, c.nv, c.cell_id,
-         |         $lb0 AS lb0,
-         |         $lb1 AS lb1
-         |  FROM cells c, pl$ncSrc GROUP BY c.uid, c.nv, c.cell_id$ncGrp),""".stripMargin
-    val pairSrc = "cb"
-    val bandCond = "\n            AND (a.lb0 = b.lb0 OR a.lb1 = b.lb1)"
-    // the two-level assignment replay (GraphIndex.DefaultAutoHierAt /
-    // explicit hier): sup = head-⌊√|C|⌋ centroids in cid order (the
-    // codebook-index order hierRouting takes them in), c2s routes each
-    // centroid to its nearest super (ties → lowest sid, the scorer's
-    // index tie-break), v2s routes each vector to its TOP-2 supers (the
-    // build's superProbes default; ties → lowest sid), and the argmax
-    // candidate set is flat below the gate / the probed supers'
-    // members at/above it (always mode: hier only)
-    val candFlat =
-      s"SELECT u.uid AS uid, c.cid AS cid FROM u, cents c$ncSrc" +
-        (if (auto) s" WHERE nc.n < ${operators.GraphIndex.DefaultAutoHierAt}" else "")
-    val candHier =
-      s"SELECT v.uid AS uid, cs.cid AS cid FROM v2s v JOIN c2s cs USING (sid)$ncSrc" +
-        (if (auto) s" WHERE nc.n >= ${operators.GraphIndex.DefaultAutoHierAt}" else "")
-    val candCte =
-      if (auto) s"cand AS ($candFlat\n  UNION ALL\n  $candHier)"
-      else s"cand AS ($candHier)"
-    s"""WITH u AS MATERIALIZED (
-       |  WITH $dChunkOnlyCtes
-       |  SELECT doc_id, chunk_idx, nv, $uid AS uid FROM cn),
-       |qn AS MATERIALIZED (
-       |  WITH ${dQueryEmbedCtes("qn0")}
-       |  SELECT nv FROM qn0),
-       |cents AS MATERIALIZED (
-       |  SELECT uid AS cid, nv AS cv FROM (
-       |    SELECT uid, nv, row_number() OVER (ORDER BY uid) AS crn,
-       |           count(*) OVER () AS cn_total FROM u)
-       |  WHERE crn <= greatest(1, CAST(floor(sqrt(cn_total)) AS BIGINT))),$ncCte
-       |sup AS (
-       |  SELECT cid AS sid, cv AS sv FROM (
-       |    SELECT cid, cv, row_number() OVER (ORDER BY cid) AS srn,
-       |           count(*) OVER () AS c_total FROM cents)
-       |  WHERE srn <= greatest(1, CAST(floor(sqrt(c_total)) AS BIGINT))),
-       |c2s AS (
-       |  SELECT cid, sid FROM (
-       |    SELECT c.cid, s.sid,
-       |           row_number() OVER (PARTITION BY c.cid
-       |             ORDER BY ${dCosine("c.cv", "s.sv")} DESC, s.sid) AS rn
-       |    FROM cents c, sup s) WHERE rn = 1),
-       |v2s AS (
-       |  SELECT uid, sid FROM (
-       |    SELECT u.uid, s.sid,
-       |           row_number() OVER (PARTITION BY u.uid
-       |             ORDER BY ${dCosine("u.nv", "s.sv")} DESC, s.sid) AS rn
-       |    FROM u, sup s) WHERE rn <= 2),
-       |$candCte,
-       |asg AS (
-       |  SELECT uid, nv, cid,
-       |         row_number() OVER (PARTITION BY uid ORDER BY csim DESC, cid) AS rn
-       |  FROM (SELECT u.uid, u.nv, c.cid, ${dCosine("u.nv", "c.cv")} AS csim
-       |        FROM u JOIN cand ON cand.uid = u.uid
-       |               JOIN cents c ON c.cid = cand.cid)
-       |),
-       |cells AS MATERIALIZED (SELECT uid, nv, cid AS cell_id FROM asg WHERE rn = 1),$bandCtes
-       |pair AS MATERIALIZED (
-       |  -- sim is PROJECTED before the window so the sort carries
-       |  -- (src, dst, sim) triples, not two 64-double vectors per
-       |  -- pair row — without this (and the MATERIALIZED marks that
-       |  -- stop CTE-inlining re-computation) DuckDB's spill on the
-       |  -- sf0.1 quadratic pair set exceeded 80 GB
-       |  SELECT src, dst, rn FROM (
-       |    SELECT src, dst,
-       |           row_number() OVER (PARTITION BY src
-       |             ORDER BY sim DESC, dst) AS rn
-       |    FROM (SELECT a.uid AS src, b.uid AS dst,
-       |                 ${dCosine("a.nv", "b.nv")} AS sim
-       |          FROM $pairSrc a JOIN $pairSrc b
-       |            ON a.cell_id = b.cell_id AND a.uid <> b.uid$bandCond))
-       |),
-       |edges AS MATERIALIZED (
-       |  SELECT src, dst FROM pair WHERE rn <= 4
-       |  UNION
-       |  SELECT dst, src FROM pair WHERE rn <= 4
-       |  UNION
-       |  SELECT uid, cell_id FROM cells WHERE uid <> cell_id
-       |  UNION
-       |  SELECT c1.cid, c2.cid FROM cents c1, cents c2 WHERE c1.cid <> c2.cid
-       |),
-       |sims AS MATERIALIZED (
-       |  SELECT u.uid AS id, u.doc_id, u.chunk_idx, ${dCosine("u.nv", "q.nv")} AS sim
-       |  FROM u, qn q),
-       |v0 AS (SELECT id, sim FROM sims WHERE id IN (SELECT cid FROM cents)
-       |       ORDER BY sim DESC, id LIMIT 4),
-       |f0 AS (SELECT id FROM v0 ORDER BY sim DESC, id LIMIT 4),
-       |v1 AS (SELECT id, sim FROM sims WHERE id IN (SELECT id FROM v0)
-       |          OR id IN (SELECT dst FROM edges WHERE src IN (SELECT id FROM f0))),
-       |f1 AS (SELECT id FROM v1 ORDER BY sim DESC, id LIMIT 4),
-       |v2 AS (SELECT id, sim FROM sims WHERE id IN (SELECT id FROM v1)
-       |          OR id IN (SELECT dst FROM edges WHERE src IN (SELECT id FROM f1))),
-       |f2 AS (SELECT id FROM v2 ORDER BY sim DESC, id LIMIT 4),
-       |v3 AS (SELECT id, sim FROM sims WHERE id IN (SELECT id FROM v2)
-       |          OR id IN (SELECT dst FROM edges WHERE src IN (SELECT id FROM f2)))
-       |SELECT s.doc_id, CAST(s.chunk_idx AS BIGINT) AS chunk_idx,
-       |       round(v3.sim + 1.2345e-9, 6) AS sim
-       |FROM v3 JOIN sims s ON s.id = v3.id
-       |ORDER BY sim DESC, doc_id, chunk_idx LIMIT 5""".stripMargin
-  }
-
-  private def dEmbedVec: String =
-    s"""list_transform(range(0, ${Schemas.EmbeddingDim}), j ->
-       |        coalesce(list_sum(list_transform(pr, e -> CASE WHEN e.b = j THEN e.s ELSE 0.0 END)), 0.0))""".stripMargin
-
-  /** DuckDB: 32-word chunks of cleaned documents text, hashed-BoW
-    * embedding, L2 normalize (ε=1e-9) — yields `cn(doc_id, chunk_idx,
-    * nv)`. */
-  private def dChunkOnlyCtes: String =
-    s"""t AS (SELECT doc_id, ${dTokens("text")} AS words FROM documents),
-       |c AS (SELECT doc_id, words,
-       |        unnest(range(0, CAST(ceil(len(words) / 32.0) AS BIGINT))) AS chunk_idx
-       |      FROM t),
-       |ct AS (SELECT doc_id, chunk_idx,
-       |         list_transform(list_slice(words, chunk_idx * 32 + 1, chunk_idx * 32 + 32),
-       |                        x -> lower(x)) AS ctoks
-       |       FROM c),
-       |cp AS (SELECT doc_id, chunk_idx, list_transform(ctoks, x ->
-       |         struct_pack(b := ${dMd5Bucket("x", Schemas.EmbeddingDim)},
-       |                     s := ${dMd5Sign("x")})) AS pr FROM ct),
-       |cv AS (SELECT doc_id, chunk_idx, $dEmbedVec AS vec FROM cp),
-       |cn AS (SELECT doc_id, chunk_idx,
-       |         list_transform(vec, x -> x / (sqrt(list_sum(list_transform(vec, y -> y * y))) + 1e-9)) AS nv
-       |       FROM cv)""".stripMargin
-
-  /** DuckDB: the embedded + normalized flagship query, as CTE `<out>(nv)`. */
-  private def dQueryEmbedCtes(out: String): String =
-    s"""qt AS (SELECT ${dTokens(s"lower('$RagQueryText')")} AS toks),
-       |qp AS (SELECT list_transform(toks, x ->
-       |         struct_pack(b := ${dMd5Bucket("x", Schemas.EmbeddingDim)},
-       |                     s := ${dMd5Sign("x")})) AS pr FROM qt),
-       |qv AS (SELECT $dEmbedVec AS vec FROM qp),
-       |$out AS (SELECT list_transform(vec, x -> x / (sqrt(list_sum(list_transform(vec, y -> y * y))) + 1e-9)) AS nv
-       |       FROM qv)""".stripMargin
-
-  /** The combined chunk + query replay (`cn` and `qn`) — the shared
-    * prefix of the retrieval oracles. */
-  private def dChunkEmbedCtes: String =
-    dChunkOnlyCtes + ",\n" + dQueryEmbedCtes("qn")
+  val registry: Seq[Q] = Q.registry(
+    RelationalQueries.all, TextQueries.all, DedupQueries.all, SemanticDedupQueries.all,
+    AnnQueries.all, GraphQueries.all, RetrievalQueries.all, ServingQueries.all,
+    CurationQueries.all, SketchQueries.all, FileQueries.all)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+
+  val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
 }

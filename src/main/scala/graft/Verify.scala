@@ -22,8 +22,7 @@ object Verify {
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
       "spark.log.level" -> "WARN")
     val failed = dump(spark, sfDir, outDir, names.map(n => n -> all(n)))
-    writeOracleSql(outDir,
-      SparkEntry.oracleSql.toSeq.filter { case (n, _) => named.forall(_.contains(n)) })
+    writeOracleSql(outDir, names.map(n => n -> SparkEntry.oracleSql(n)))
     spark.stop()
     if (named.isDefined && failed.nonEmpty) sys.exit(1)
   }

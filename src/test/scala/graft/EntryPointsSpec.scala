@@ -36,6 +36,33 @@ class EntryPointsSpec extends AnyFunSuite {
     sql.foreach { case (name, q) => assert(back.path(name).asText() == q, name) }
   }
 
+  test("a registry declaring one query name twice refuses to build") {
+    val q = queries.Q("q_twice", (s, _) => s.range(1).toDF(), "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      queries.Q.registry(Seq(q), Seq(q.copy(oracle = "SELECT 2"))))
+    assert(e.getMessage.contains("q_twice"))
+  }
+
+  test("every driver query carries a non-blank oracle") {
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 137)
+    SparkEntry.oracleSql.foreach { case (name, sql) => assert(sql.trim.nonEmpty, name) }
+  }
+
+  test("file-writing queries leave no graft_* path directly under java.io.tmpdir") {
+    val s = spark // its own warehouse dir is made before the snapshot
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftPaths = tmp.listFiles().filter(_.getName.startsWith("graft_"))
+      .map(f => f.getName -> f.lastModified).toMap
+    val before = graftPaths
+    Seq("q_upload_scan", "q_corpus_scan", "q_cm_stream").foreach { name =>
+      assert(SparkEntry.queries(name)(s, "/root/testdata/sf0.001").count() > 0, name)
+    }
+    val after = graftPaths
+    assert(after == before,
+      s"added or rewritten: ${(after.toSet -- before.toSet).map(_._1).toSeq.sorted}")
+  }
+
   test("Bench's stdout line stays under 1 KB and parses, whatever the query count") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     assert(names.size > 100)

@@ -37,13 +37,13 @@ class PlanSpec extends AnyFunSuite {
     spark.range(10000).selectExpr("id", "cast(id as string) as s")
       .repartition(par).write.parquet(dir)
     val preSplit = spark.read.parquet(dir)
-    val wide = SparkEntry.widen(spark, preSplit)
+    val wide = queries.QueryHelpers.widen(spark, preSplit)
     assert(!plan(wide).contains("Exchange"),
       s"a scan already yielding >= parallelism splits must NOT reshuffle:\n${plan(wide)}")
     // the single-file case still spreads across the cores
     val oneFile = spark.read.parquet(s"$sf/documents.parquet")
     assert(oneFile.rdd.getNumPartitions < par, "precondition: single-split input")
-    val spread = SparkEntry.widen(spark, oneFile)
+    val spread = queries.QueryHelpers.widen(spark, oneFile)
     assert(spread.rdd.getNumPartitions == par,
       "an under-split input must be spread to defaultParallelism")
   }
