@@ -80,9 +80,12 @@ object ClusterCheck {
           docs.filter(operators.Ingest.nonBlank(col("text"))), "text", 32)
         .select("doc_id", "chunk_idx", "chunk_text")
       val embedded = operators.Embed.withEmbedding(chunks, "chunk_text", "embedding")
-      val dir = java.nio.file.Files.createTempDirectory("graft_clck").toString
+      val dir = java.nio.file.Files.createTempDirectory("graft_clck").toFile
+      // deleted at exit, after Spark's own shutdown hook stops the context
+      org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+        () => org.apache.hadoop.fs.FileUtil.fullyDelete(dir), 10)
       val h = operators.GraphIndex.build(spark, embedded,
-        Seq("doc_id", "chunk_idx"), "embedding", dir,
+        Seq("doc_id", "chunk_idx"), "embedding", dir.toString,
         nCentroids = 16, m = 16, nBuckets = 16, beamWidth = 32, hops = 3)
 
       val queries = Seq("fast table scan merge join",

@@ -6,7 +6,8 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The Spark jobs and shuffle traffic of one block of driver code: each
   * job's span, call site, task count and scheduler pool, and every
@@ -20,7 +21,12 @@ object JobTrace {
 
   /** `seconds` is the job's span by event time; a job still running
     * at the fence is measured up to the fence. `site` names each stage
-    * by its first graft frame (or the stage name) with its task count. */
+    * by its first graft frame with its task count. A stage submitted
+    * from one of AQE's async threads has no graft frame of its own; it
+    * takes the first graft frame of the SQL execution the job belongs
+    * to (the `spark.sql.execution.id` job property, resolved through the
+    * execution's start event, or its root execution's), and the stage
+    * name only when neither has one. */
   final case class Job(id: Int, seconds: Double, site: String, tasks: Int, pool: String)
 
   final case class Trace(jobs: Seq[Job], shuffleReadBytes: Long,
@@ -48,22 +54,35 @@ object JobTrace {
     * published through the latch. */
   private final class Recorder(val fence: String) extends SparkListener {
     private val open = mutable.LinkedHashMap.empty[Int, Open]
+    private val execFrames = mutable.Map.empty[Long, String]
     private val ended = mutable.ArrayBuffer.empty[Job]
     private var fenceJob = -1
     private var read, write, records = 0L
     @volatile var trace: Trace = _
     val fenced = new CountDownLatch(1)
 
+    private def graftFrame(stack: String): Option[String] =
+      Option(stack).flatMap(_.linesIterator
+        .find(l => l.contains("graft.") && !l.contains("graft.JobTrace"))
+        .map(_.trim.stripPrefix("at ")))
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        graftFrame(s.details)
+          .orElse(s.rootExecutionId.flatMap(execFrames.get))
+          .foreach(execFrames(s.executionId) = _)
+      case _ =>
+    }
+
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val props = Option(e.properties)
       if (props.exists(_.getProperty(FenceKey) == fence)) fenceJob = e.jobId
       else {
-        // the first graft frame of the stage's call stack names what the
-        // job materialized, even on an async SQL-execution thread
+        val execFrame = props
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => execFrames.get(id.toLong))
         val site = e.stageInfos.map { si =>
-          val frame = si.details.linesIterator
-            .find(l => l.contains("graft.") && !l.contains("graft.JobTrace"))
-            .map(_.trim.stripPrefix("at ")).getOrElse(si.name)
+          val frame = graftFrame(si.details).orElse(execFrame).getOrElse(si.name)
           s"$frame[${si.numTasks}]"
         }.mkString(" | ")
         open(e.jobId) = Open(e.time, site, e.stageInfos.map(_.numTasks).sum,

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.{Sidecar, TableLoader}
+
 /** Context assembly + prompt build + the end-to-end ask pipeline
   * (SURVEY.md §2 O-14, F-8; lifecycle §3.1).
   *
@@ -240,7 +242,8 @@ object Retrieval {
     *    denormalize-on-disk discipline);
     *  - partitioned by the md5 term bucket: a query's ≤|terms| buckets
     *    prune at the file listing, the term filter pushes to parquet;
-    *  - `stats/`: the one (N, Σdl) row.
+    *  - `meta.json` and `stats.json`: the layout and corpus identity,
+    *    and the (N, Σdl) pair, as driver-side [[Sidecar]]s.
     *
     * Denormalizing df/N trades append-ability for probe speed: new docs
     * shift df and N globally, so this index REBUILDS on a cadence (like
@@ -266,14 +269,11 @@ object Retrieval {
     // would not error on its own — [[rrfFuse]] scores missing legs 0 —
     // so hybrid callers verify this via [[requireBm25IndexMatches]],
     // the same drift-refusal discipline as the PQ codebook sidecar.
-    docs.agg(
-        count(lit(1)).cast("long").as("n_docs"),
-        sum(xxhash64(col(idCol)).cast("decimal(38,0)")).cast("string").as("id_hash"))
-      .withColumn("n_buckets", lit(nBuckets))
-      .withColumn("id_col", lit(idCol))
-      .coalesce(1).write.mode("overwrite").parquet(dir + "/meta")
-    withDl.agg(count(lit(1)).as("_N"), sum(col("_dl")).as("_sumdl"))
-      .coalesce(1).write.mode("overwrite").parquet(dir + "/stats")
+    // One job computes both: N is the doc count.
+    val (nDocs, idHash, sumdl) = corpusStats(withDl, idCol)
+    Sidecar.write(docs.sparkSession, dir + "/meta.json", "n_buckets" -> nBuckets,
+      "id_col" -> idCol, "n_docs" -> nDocs, "id_hash" -> idHash)
+    Sidecar.write(docs.sparkSession, dir + "/stats.json", "_N" -> nDocs, "_sumdl" -> sumdl)
     val tf = withDl
       .select(col(idCol), col("_dl"), explode(col("_toks")).as("_t"))
       .groupBy(col(idCol), col("_dl"), col("_t"))
@@ -290,6 +290,34 @@ object Retrieval {
     docs.select(col(idCol)).write.mode("overwrite").parquet(dir + "/docs")
   }
 
+  /** (doc count, order-independent id fingerprint, Σdl) of a frame
+    * carrying the id column and `_dl`, in one job: the corpus identity
+    * [[requireBm25IndexMatches]] checks and the (N, Σdl) a probe scores
+    * with. */
+  private def corpusStats(withDl: DataFrame, idCol: String): (Long, String, Long) = {
+    val r = withDl.agg(
+      count(lit(1)).cast("long"),
+      sum(xxhash64(col(idCol)).cast("decimal(38,0)")).cast("string"),
+      coalesce(sum(col("_dl")), lit(0L))).head()
+    (r.getLong(0), r.getString(1), r.getLong(2))
+  }
+
+  /** The BM25 score of every (doc, term) posting row, with the corpus
+    * (N, Σdl) as literals, folded per doc over its sorted terms. */
+  private def bm25Scores(post: DataFrame, idCol: String, n: Long, sumdl: Long,
+                         k1: Double, b: Double): DataFrame =
+    post
+      .withColumn("_avgdl", lit(sumdl).cast("double") / lit(n))
+      .withColumn("_idf",
+        log(lit(1.0) + (lit(n) - col("_df") + lit(0.5)) / (col("_df") + lit(0.5))))
+      .withColumn("_s",
+        col("_idf") * (col("_tf") * lit(k1 + 1.0)) /
+          (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl"))))
+      .groupBy(col(idCol))
+      .agg(aggregate(
+        array_sort(collect_list(struct(col("_t").as("t"), col("_s").as("s")))),
+        lit(0.0), (acc, x) => acc + x.getField("s")).as("score"))
+
   // ------------------------------------------------------------------ //
   // Monolithic BM25 store lifecycle: tombstone delete + compaction     //
   // ------------------------------------------------------------------ //
@@ -297,7 +325,7 @@ object Retrieval {
   private def bm25Tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(dir + "/tombstones")
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(spark.read.parquet(dir + "/tombstones"))
+      Some(TableLoader.read(spark, dir + "/tombstones"))
     else None
   }
 
@@ -323,8 +351,7 @@ object Retrieval {
     * and retry-idempotence only holds under the single-writer
     * assumption. */
   def deleteBm25Docs(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val meta = spark.read.parquet(dir + "/meta").head()
-    val idCol = meta.getAs[String]("id_col")
+    val idCol = Sidecar.read(spark, dir + "/meta.json").string("id_col")
     require(ids.columns.contains(idCol),
       s"deleteBm25Docs: ids must carry the store's id column '$idCol'")
     // one annotated pass instead of three (r19): the old shape ran the
@@ -340,7 +367,7 @@ object Retrieval {
     // so the left join cannot fan out; the tombstone side CAN carry
     // duplicates (append-only retries) and is distinct'd — it is
     // delete-sized, never corpus-sized
-    val docsFlag = spark.read.parquet(dir + "/docs")
+    val docsFlag = TableLoader.read(spark, dir + "/docs")
       .withColumn("_known", lit(true))
     val tombFlag = bm25Tombstones(spark, dir)
       .map(_.select(col(idCol)).distinct().withColumn("_dead", lit(true)))
@@ -371,17 +398,18 @@ object Retrieval {
     * counts, not text). */
   def compactBm25Index(spark: SparkSession, dir: String, outDir: String): Unit = {
     requireDistinctDirs(spark, dir, outDir, "compactBm25Index")
-    val meta = spark.read.parquet(dir + "/meta").head()
-    val idCol = meta.getAs[String]("id_col")
-    val nBuckets = meta.getAs[Int]("n_buckets")
+    val meta = Sidecar.read(spark, dir + "/meta.json")
+    val idCol = meta.string("id_col")
+    val nBuckets = meta.int("n_buckets")
+    val docs = TableLoader.read(spark, dir + "/docs")
     // empty fallback takes the docs sidecar's schema, so the anti-join
     // never type-coerces (stores keyed by string chunk ids exist)
     val tombs = bm25Tombstones(spark, dir)
       .map(_.select(col(idCol)).distinct())
-      .getOrElse(spark.read.parquet(dir + "/docs").limit(0))
-    val survDocs = spark.read.parquet(dir + "/docs")
+      .getOrElse(docs.limit(0))
+    val survDocs = docs
       .join(broadcast(tombs), Seq(idCol), "left_anti")
-    val survTf = spark.read.parquet(dir + "/postings")
+    val survTf = TableLoader.read(spark, dir + "/postings")
       .join(broadcast(tombs), Seq(idCol), "left_anti")
       .select(col(idCol), col("_dl"), col("_t"), col("_tf"))
     // ONE action computes both sidecar aggregates (r19): the doc
@@ -398,14 +426,10 @@ object Retrieval {
       .crossJoin(survTf.select(col(idCol), col("_dl")).distinct()
         .agg(coalesce(sum(col("_dl")), lit(0L)).as("_sumdl")))
       .head()
-    val sumdl = survMeta.getLong(2)
-    spark.range(1)
-      .select(lit(nBuckets).as("n_buckets"), lit(idCol).as("id_col"),
-        lit(survMeta.getLong(0)).as("n_docs"), lit(survMeta.getString(1)).as("id_hash"))
-      .coalesce(1).write.mode("overwrite").parquet(outDir + "/meta")
-    spark.range(1)
-      .select(lit(survMeta.getLong(0)).as("_N"), lit(sumdl).as("_sumdl"))
-      .coalesce(1).write.mode("overwrite").parquet(outDir + "/stats")
+    Sidecar.write(spark, outDir + "/meta.json", "n_buckets" -> nBuckets, "id_col" -> idCol,
+      "n_docs" -> survMeta.getLong(0), "id_hash" -> survMeta.getString(1))
+    Sidecar.write(spark, outDir + "/stats.json",
+      "_N" -> survMeta.getLong(0), "_sumdl" -> survMeta.getLong(2))
     val dfT = survTf.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
     survTf.join(dfT, "_t")
       .withColumn("_bucket", termBucketCol(col("_t"), nBuckets))
@@ -432,15 +456,15 @@ object Retrieval {
     * rebuild. Lucene's actual answer is segments + merge-on-read, and
     * this is that layout on parquet:
     *
-    *  - `<dir>/meta`: n_buckets + id_col, written by the FIRST append —
+    *  - `<dir>/meta.json`: n_buckets + id_col, written by the FIRST append —
     *    every later segment hashes terms with the same modulus (the
     *    layout-drift refusal of the monolithic store, enforced here);
     *  - `<dir>/segments/<name>/postings`: (id, _dl, _t, _tf) bucketed
     *    and partitioned by the md5 term bucket — NO df, NO corpus
     *    stats: nothing global lives on segment rows, which is exactly
     *    what makes the append O(batch);
-    *  - `<dir>/segments/<name>/stats`: the segment's (_N, _sumdl);
-    *  - `<dir>/segments/<name>/meta`: (n_docs, id_hash) fingerprint,
+    *  - `<dir>/segments/<name>/stats.json`: the segment's (_N, _sumdl);
+    *  - `<dir>/segments/<name>/meta.json`: (n_docs, id_hash) fingerprint,
     *    summed at compaction into the monolithic guard meta;
     *  - `<dir>/segments/<name>/docs`: the batch's doc ids — the
     *    disjointness source of truth compaction validates against.
@@ -504,20 +528,12 @@ object Retrieval {
     val leasePath = new org.apache.hadoop.fs.Path(s"$dir/_append_lease")
     acquireAppendLease(fs, leasePath, dir)
     try {
-    val metaPath = new org.apache.hadoop.fs.Path(dir + "/meta")
-    val buckets =
-      if (!fs.exists(metaPath)) {
-        spark.range(1)
-          .select(lit(nBuckets).as("n_buckets"), lit(idCol).as("id_col"))
-          .coalesce(1).write.mode("overwrite").parquet(dir + "/meta")
-        nBuckets
-      } else {
-        val m = spark.read.parquet(dir + "/meta").head()
-        require(m.getAs[String]("id_col") == idCol,
-          s"segmented bm25 store at '$dir' is keyed by id_col=" +
-            s"'${m.getAs[String]("id_col")}', refusing an append keyed by '$idCol'")
-        m.getAs[Int]("n_buckets")
-      }
+    Sidecar.createIfAbsent(spark, dir + "/meta.json", "n_buckets" -> nBuckets, "id_col" -> idCol)
+    val m = Sidecar.read(spark, dir + "/meta.json")
+    require(m.string("id_col") == idCol,
+      s"segmented bm25 store at '$dir' is keyed by id_col=" +
+        s"'${m.string("id_col")}', refusing an append keyed by '$idCol'")
+    val buckets = m.int("n_buckets")
     val segDir = s"$dir/segments/$segment"
     require(!fs.exists(new org.apache.hadoop.fs.Path(segDir)),
       s"segment '$segment' already exists in '$dir' — appends never overwrite")
@@ -635,7 +651,7 @@ object Retrieval {
       if (g.getLong(2) > 0L && priorSegs.nonEmpty) {
         // suspects only: bloom hits (or the whole batch when no bloom)
         val nDup = batchIds.withColumn("_hit", hitCol).filter(col("_hit").isNotNull)
-          .join(priorSegs.map(s => spark.read.parquet(s + "/docs")).reduce(_ unionByName _),
+          .join(priorSegs.map(s => TableLoader.read(spark, s + "/docs")).reduce(_ unionByName _),
             Seq(idCol), "left_semi")
           .count()
         require(nDup == 0L,
@@ -656,12 +672,9 @@ object Retrieval {
     val withDl = docs
       .select(col(idCol), alnumTokens(col(textCol)).as("_toks"))
       .withColumn("_dl", size(col("_toks")).cast("long"))
-    withDl.agg(count(lit(1)).as("_N"), sum(col("_dl")).as("_sumdl"))
-      .coalesce(1).write.mode("overwrite").parquet(segDir + "/stats")
-    docs.agg(
-        count(lit(1)).cast("long").as("n_docs"),
-        sum(xxhash64(col(idCol)).cast("decimal(38,0)")).cast("string").as("id_hash"))
-      .coalesce(1).write.mode("overwrite").parquet(segDir + "/meta")
+    val (nDocs, idHash, sumdl) = corpusStats(withDl, idCol)
+    Sidecar.write(spark, segDir + "/stats.json", "_N" -> nDocs, "_sumdl" -> sumdl)
+    Sidecar.write(spark, segDir + "/meta.json", "n_docs" -> nDocs, "id_hash" -> idHash)
     // the disjointness source of truth: every doc id in the batch,
     // including token-less docs that produce no postings rows
     docs.select(col(idCol)).write.mode("overwrite").parquet(segDir + "/docs")
@@ -884,7 +897,7 @@ object Retrieval {
     }
     val ids =
       if (oldWords.isEmpty && priorSegs.nonEmpty)
-        priorSegs.map(s => spark.read.parquet(s + "/docs")).reduce(_ unionByName _)
+        priorSegs.map(s => TableLoader.read(spark, s + "/docs")).reduce(_ unionByName _)
           .unionByName(batchIds)
       else batchIds
     // fold at the STORED geometry when a filter exists: an existing
@@ -1013,10 +1026,10 @@ object Retrieval {
       .split("\\s+").map(_.replaceAll("[^a-z0-9]", ""))
       .filter(_.nonEmpty).distinct.toSeq
     require(terms.nonEmpty, "query has no terms")
-    val meta = spark.read.parquet(dir + "/meta").head()
-    require(meta.getAs[String]("id_col") == idCol,
-      s"store id_col='${meta.getAs[String]("id_col")}' != probe '$idCol'")
-    val nBuckets = meta.getAs[Int]("n_buckets")
+    val meta = Sidecar.read(spark, dir + "/meta.json")
+    require(meta.string("id_col") == idCol,
+      s"store id_col='${meta.string("id_col")}' != probe '$idCol'")
+    val nBuckets = meta.int("n_buckets")
     val buckets = terms.map(termBucket(_, nBuckets)).distinct.map(Long.box)
     val segs = listBm25Segments(spark, dir)
     // probe latency rides segment count (one pruned read per segment per
@@ -1028,29 +1041,21 @@ object Retrieval {
         "per-segment; run compactBm25SegmentsInPlace (or leave " +
         "appendBm25Segment's autoCompactAt hook enabled)")
     val post = segs.map { s =>
-      spark.read.parquet(s + "/postings")
+      TableLoader.read(spark, s + "/postings")
         .filter(col("_bucket").isin(buckets: _*))
         .filter(col("_t").isin(terms: _*))
     }.reduce(_ unionByName _)
-    val stats = segs.map(s => spark.read.parquet(s + "/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("_N")).as("_N"), sum(col("_sumdl")).as("_sumdl"))
+    val (n, sumdl) = summedStats(spark, segs)
     // df merge-on-read: segments are doc-disjoint, so the global df of
     // a term is the plain row count of its matched postings
     val dfT = post.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
-    post
-      .join(broadcast(dfT), "_t")
-      .crossJoin(broadcast(stats))
-      .withColumn("_avgdl", col("_sumdl").cast("double") / col("_N"))
-      .withColumn("_idf",
-        log(lit(1.0) + (col("_N") - col("_df") + lit(0.5)) / (col("_df") + lit(0.5))))
-      .withColumn("_s",
-        col("_idf") * (col("_tf") * lit(k1 + 1.0)) /
-          (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl"))))
-      .groupBy(col(idCol))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("_t").as("t"), col("_s").as("s")))),
-        lit(0.0), (acc, x) => acc + x.getField("s")).as("score"))
+    bm25Scores(post.join(broadcast(dfT), "_t"), idCol, n, sumdl, k1, b)
+  }
+
+  /** The union corpus's (N, Σdl): the segments' stats sidecars summed. */
+  private def summedStats(spark: SparkSession, segs: Seq[String]): (Long, Long) = {
+    val stats = segs.map(s => Sidecar.read(spark, s + "/stats.json"))
+    (stats.map(_.long("_N")).sum, stats.map(_.long("_sumdl")).sum)
   }
 
   /** Fold a segmented store into the MONOLITHIC [[writeBm25Index]]
@@ -1068,20 +1073,17 @@ object Retrieval {
     * corpus passes. */
   def compactBm25Segments(spark: SparkSession, dir: String, outDir: String): Unit = {
     requireDistinctDirs(spark, dir, outDir, "compactBm25Segments")
-    val meta = spark.read.parquet(dir + "/meta").head()
-    val idCol = meta.getAs[String]("id_col")
-    val nBuckets = meta.getAs[Int]("n_buckets")
+    val meta = Sidecar.read(spark, dir + "/meta.json")
+    val idCol = meta.string("id_col")
+    val nBuckets = meta.int("n_buckets")
     val segs = listBm25Segments(spark, dir)
-    val post = segs.map(s => spark.read.parquet(s + "/postings"))
+    val post = segs.map(s => TableLoader.read(spark, s + "/postings"))
       .reduce(_ unionByName _)
     val (nDocs, idHash) = validateDisjointSegments(spark, dir, segs, idCol)
-    spark.range(1)
-      .select(lit(nBuckets).as("n_buckets"), lit(idCol).as("id_col"),
-        lit(nDocs).as("n_docs"), lit(idHash).as("id_hash"))
-      .coalesce(1).write.mode("overwrite").parquet(outDir + "/meta")
-    segs.map(s => spark.read.parquet(s + "/stats")).reduce(_ unionByName _)
-      .agg(sum(col("_N")).as("_N"), sum(col("_sumdl")).as("_sumdl"))
-      .coalesce(1).write.mode("overwrite").parquet(outDir + "/stats")
+    Sidecar.write(spark, outDir + "/meta.json", "n_buckets" -> nBuckets, "id_col" -> idCol,
+      "n_docs" -> nDocs, "id_hash" -> idHash)
+    val (n, sumdl) = summedStats(spark, segs)
+    Sidecar.write(spark, outDir + "/stats.json", "_N" -> n, "_sumdl" -> sumdl)
     val dfT = post.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
     post.join(dfT, "_t")
       .select(col(idCol), col("_dl"), col("_t"), col("_tf"), col("_df"))
@@ -1090,7 +1092,7 @@ object Retrieval {
       .write.mode("overwrite").partitionBy("_bucket").parquet(outDir + "/postings")
     // the monolithic output supports the delete lifecycle
     // (deleteBm25Docs validates against the docs sidecar)
-    segs.map(s => spark.read.parquet(s + "/docs")).reduce(_ unionByName _)
+    segs.map(s => TableLoader.read(spark, s + "/docs")).reduce(_ unionByName _)
       .write.mode("overwrite").parquet(outDir + "/docs")
   }
 
@@ -1102,11 +1104,11 @@ object Retrieval {
   private def validateDisjointSegments(spark: SparkSession, dir: String,
                                        segs: Seq[String],
                                        idCol: String): (Long, String) = {
-    val segMetas = segs.map(s => spark.read.parquet(s + "/meta").head())
-    val nDocs = segMetas.map(_.getAs[Long]("n_docs")).sum
-    val idHash = segMetas.map(m => BigDecimal(m.getAs[String]("id_hash")))
+    val segMetas = segs.map(s => Sidecar.read(spark, s + "/meta.json"))
+    val nDocs = segMetas.map(_.long("n_docs")).sum
+    val idHash = segMetas.map(m => BigDecimal(m.string("id_hash")))
       .sum.toBigInt.toString
-    val idAgg = segs.map(s => spark.read.parquet(s + "/docs"))
+    val idAgg = segs.map(s => TableLoader.read(spark, s + "/docs"))
       .reduce(_ unionByName _)
       .agg(count(lit(1)).as("_n"), count_distinct(col(idCol)).as("_nd")).head()
     require(idAgg.getLong(0) == idAgg.getLong(1) && idAgg.getLong(0) == nDocs,
@@ -1147,8 +1149,7 @@ object Retrieval {
     * the delete surface. */
   def compactBm25SegmentsInPlace(spark: SparkSession, dir: String): Unit = {
     recoverBm25Compaction(spark, dir) // finish any interrupted prior swap first
-    val meta = spark.read.parquet(dir + "/meta").head()
-    val idCol = meta.getAs[String]("id_col")
+    val idCol = Sidecar.read(spark, dir + "/meta.json").string("id_col")
     val segs = listBm25Segments(spark, dir)
     if (segs.length <= 1) return
     val (nDocs, idHash) = validateDisjointSegments(spark, dir, segs, idCol)
@@ -1164,16 +1165,13 @@ object Retrieval {
     val tmpRoot = new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp")
     fs.delete(tmpRoot, true)
     val tmp = s"$dir/_compact_tmp/$merged"
-    segs.map(s => spark.read.parquet(s + "/postings")).reduce(_ unionByName _)
+    segs.map(s => TableLoader.read(spark, s + "/postings")).reduce(_ unionByName _)
       .repartition(col("_bucket"))
       .write.mode("overwrite").partitionBy("_bucket").parquet(tmp + "/postings")
-    segs.map(s => spark.read.parquet(s + "/stats")).reduce(_ unionByName _)
-      .agg(sum(col("_N")).as("_N"), sum(col("_sumdl")).as("_sumdl"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp + "/stats")
-    spark.range(1)
-      .select(lit(nDocs).as("n_docs"), lit(idHash).as("id_hash"))
-      .coalesce(1).write.mode("overwrite").parquet(tmp + "/meta")
-    segs.map(s => spark.read.parquet(s + "/docs")).reduce(_ unionByName _)
+    val (n, sumdl) = summedStats(spark, segs)
+    Sidecar.write(spark, tmp + "/stats.json", "_N" -> n, "_sumdl" -> sumdl)
+    Sidecar.write(spark, tmp + "/meta.json", "n_docs" -> nDocs, "id_hash" -> idHash)
+    segs.map(s => TableLoader.read(spark, s + "/docs")).reduce(_ unionByName _)
       .write.mode("overwrite").parquet(tmp + "/docs")
     // swap: all reads above are materialized (the writes completed), so
     // deleting the inputs is safe. The marker goes down FIRST — from
@@ -1277,16 +1275,16 @@ object Retrieval {
     * materialized chunk set. */
   def requireBm25IndexMatches(spark: SparkSession, dir: String,
                               docs: DataFrame, idCol: String): Unit = {
-    val meta = spark.read.parquet(dir + "/meta").head()
+    val meta = Sidecar.read(spark, dir + "/meta.json")
     val mine = docs.agg(
       count(lit(1)).cast("long").as("n"),
       sum(xxhash64(col(idCol)).cast("decimal(38,0)")).cast("string").as("h")).head()
-    require(meta.getAs[String]("id_col") == idCol &&
-        meta.getAs[Long]("n_docs") == mine.getLong(0) &&
-        meta.getAs[String]("id_hash") == mine.getString(1),
+    require(meta.string("id_col") == idCol &&
+        meta.long("n_docs") == mine.getLong(0) &&
+        meta.string("id_hash") == mine.getString(1),
       s"bm25 index at '$dir' was built over a different corpus than this " +
-        s"probe's (store: id_col=${meta.getAs[String]("id_col")}, " +
-        s"n_docs=${meta.getAs[Long]("n_docs")}; probe: id_col=$idCol, " +
+        s"probe's (store: id_col=${meta.string("id_col")}, " +
+        s"n_docs=${meta.long("n_docs")}; probe: id_col=$idCol, " +
         s"n_docs=${mine.getLong(0)}) — a mismatched store silently zeroes " +
         "or skews the lexical leg; rebuild it with writeBm25Index")
   }
@@ -1303,24 +1301,13 @@ object Retrieval {
       .split("\\s+").map(_.replaceAll("[^a-z0-9]", ""))
       .filter(_.nonEmpty).distinct.toSeq
     require(terms.nonEmpty, "query has no terms")
-    val nBuckets = spark.read.parquet(dir + "/meta")
-      .select(col("n_buckets").cast("int")).head().getInt(0)
+    val nBuckets = Sidecar.read(spark, dir + "/meta.json").int("n_buckets")
     val buckets = terms.map(termBucket(_, nBuckets)).distinct.map(Long.box)
-    val post = spark.read.parquet(dir + "/postings")
+    val post = TableLoader.read(spark, dir + "/postings")
       .filter(col("_bucket").isin(buckets: _*))
       .filter(col("_t").isin(terms: _*))
-    val stats = spark.read.parquet(dir + "/stats")
-    val scored = post.crossJoin(broadcast(stats))
-      .withColumn("_avgdl", col("_sumdl").cast("double") / col("_N"))
-      .withColumn("_idf",
-        log(lit(1.0) + (col("_N") - col("_df") + lit(0.5)) / (col("_df") + lit(0.5))))
-      .withColumn("_s",
-        col("_idf") * (col("_tf") * lit(k1 + 1.0)) /
-          (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl"))))
-      .groupBy(col(idCol))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("_t").as("t"), col("_s").as("s")))),
-        lit(0.0), (acc, x) => acc + x.getField("s")).as("score"))
+    val stats = Sidecar.read(spark, dir + "/stats.json")
+    val scored = bm25Scores(post, idCol, stats.long("_N"), stats.long("_sumdl"), k1, b)
     // delete lifecycle gate: tombstoned docs leave the hit set NOW;
     // df/N stay the build's until compaction (Lucene's merge trade).
     // The mark set is delete-sized and compaction-bounded — broadcast.

@@ -89,16 +89,23 @@ object QueryHelpers {
     /** Fresh private copy of the pristine store for a mutating query:
       * delete-then-copy so no file from a previous mutation survives. */
     def copyOf(s: SparkSession, dir: String, suffix: String): String =
-      copyStore(s, monoStore(s, dir), scratch("bm25" + suffix, dir))
+      copyStore(monoStore(s, dir), scratch("bm25" + suffix, dir))
   }
 
-  private[queries] def copyStore(s: SparkSession, src: String, dst: String): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(src)
-    val dstP = new org.apache.hadoop.fs.Path(dst)
-    val fs = dstP.getFileSystem(conf)
-    fs.delete(dstP, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, srcP, fs, dstP, false, conf)
+  /** Copy a store under the local [[scratch]] root to `dst`, keeping
+    * each file's modification time (as `cp -p` does): a part whose files
+    * are unchanged keeps its identity for
+    * [[graft.sources.TableLoader.read]]'s schema memo. A plain file-tree
+    * copy: Hadoop's local `FileUtil.copy` forks a process per file to set
+    * permissions, ~0.2 s for a 56-file BM25 store against ~5 ms here. */
+  private[queries] def copyStore(src: String, dst: String): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val (from, to) = (Paths.get(src), Paths.get(dst))
+    org.apache.hadoop.fs.FileUtil.fullyDelete(to.toFile)
+    val tree = Files.walk(from)
+    try tree.forEach(p =>
+      Files.copy(p, to.resolve(from.relativize(p)), StandardCopyOption.COPY_ATTRIBUTES))
+    finally tree.close()
     dst
   }
 
@@ -157,7 +164,7 @@ object QueryHelpers {
 
     /** Fresh private copy for a physically-mutating query (compaction). */
     def copyOf(s: SparkSession, srcIdx: String, dir: String, suffix: String): String =
-      copyStore(s, srcIdx, scratch("knng" + suffix, dir))
+      copyStore(srcIdx, scratch("knng" + suffix, dir))
   }
 
   /** events.parquet has shipped as TIMESTAMP(NANOS)→BIGINT-nanos,

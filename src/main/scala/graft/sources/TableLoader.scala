@@ -60,9 +60,80 @@ object TableLoader {
 
   /** Load `dir/name.parquet` with drift normalization applied. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalize(spark.read.parquet(s"$dir/$name.parquet"))
+    normalize(read(spark, s"$dir/$name.parquet"))
 
   /** Load the events table with both normalizations applied to `ts`. */
   def loadEvents(spark: SparkSession, dir: String): DataFrame =
     normalizeEventTime(load(spark, dir, "events"))
+
+  /** `spark.read.parquet(path)` without the schema-inference job when
+    * this session has already inferred the schema of exactly these files.
+    * Inference is a Spark job (a footer read) on every open; a table or
+    * store part opened again unchanged is read with the remembered schema
+    * instead, which runs none. The memo key is the qualified path, the
+    * session conf that shapes inference, and every visible leaf file
+    * (relative path, length, modification time), so an overwrite or an
+    * append at the same path re-infers. The memo lives per session:
+    * another session may read the same files differently. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val key = memoKey(spark, path)
+    key.flatMap(k => Option(schemas(spark).get(k))) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(schemas(spark).put(_, df.schema))
+        df
+    }
+  }
+
+  /** Session conf that changes what parquet schema inference returns. */
+  private val InferenceConf = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private val memo =
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, StructType]]()
+
+  private def schemas(spark: SparkSession) = memo.synchronized {
+    memo.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+  }
+
+  /** None when `path` is missing or holds no visible file: Spark's own
+    * read then raises its error. Visibility follows Spark's listing:
+    * names starting with `.`, or with `_` unless they hold `=` (a
+    * partition directory) or name a parquet summary file, are skipped.
+    * The walk uses `listStatus`, never `listFiles`: on the local
+    * filesystem without the native library a `LocatedFileStatus` forks
+    * a process per file for its permissions (~5 ms each), which made a
+    * memo hit on a 22-file store cost more than the job it saved. */
+  private def memoKey(spark: SparkSession, path: String): Option[String] = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(root)
+    def hidden(name: String) =
+      !name.startsWith("_metadata") && !name.startsWith("_common_metadata") &&
+        (name.startsWith(".") || name.endsWith("._COPYING_") ||
+          (name.startsWith("_") && !name.contains("=")))
+    def leaves(dir: Path, rel: String): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { f =>
+        val name = f.getPath.getName
+        if (hidden(name)) Nil
+        else if (f.isDirectory) leaves(f.getPath, s"$rel$name/")
+        else Seq(s"$rel$name:${f.getLen}:${f.getModificationTime}")
+      }
+    val files =
+      try leaves(qualified, "").sorted
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    // a digest, so a table of many files costs the memo 64 bytes
+    if (files.isEmpty) None
+    else Some(java.security.MessageDigest.getInstance("SHA-256")
+      .digest((qualified.toString +: InferenceConf.map(k => s"$k=${spark.conf.getOption(k)}") ++:
+        files).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString)
+  }
 }

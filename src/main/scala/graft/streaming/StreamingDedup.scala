@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.TextFunctions.cleanText
+import graft.sources.Sidecar
 
 /** Streaming deduplication for continuous corpus ingest (north-star: the
   * dedup tier of a training-data pipeline run as a stream instead of a
@@ -298,20 +299,19 @@ object StreamingDedup {
     val spark = batch.sparkSession
     val bandPath = new org.apache.hadoop.fs.Path(bandDir)
     val fs = bandPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // `_params` sidecar (underscore prefix → invisible to parquet scans
-    // of bandDir): an index built with different (shingleN, numHashes,
-    // bands) produces buckets that NEVER collide with this probe's, so
-    // a drifted prober would silently mark everything `new` — fail
-    // loudly instead of corrupting the audit
-    val paramsPath = new org.apache.hadoop.fs.Path(s"$bandDir/_params")
-    if (fs.exists(paramsPath)) {
-      val p = spark.read.parquet(paramsPath.toString)
-        .select("shingle_n", "num_hashes", "bands").head()
-      require(p.getInt(0) == shingleN && p.getInt(1) == numHashes && p.getInt(2) == bands,
-        s"incrementalNearDupStream: band index at $bandDir was built with " +
-          s"(shingleN=${p.getInt(0)}, numHashes=${p.getInt(1)}, bands=${p.getInt(2)}); " +
-          s"this probe uses (shingleN=$shingleN, numHashes=$numHashes, bands=$bands)")
+    // `_params.json` sidecar (underscore prefix → invisible to parquet
+    // scans of bandDir): an index built with different (shingleN,
+    // numHashes, bands) produces buckets that NEVER collide with this
+    // probe's, so a drifted prober would silently mark everything `new`
+    // — fail loudly instead of corrupting the audit
+    val paramsPath = s"$bandDir/_params.json"
+    val params = Seq("shingle_n" -> shingleN, "num_hashes" -> numHashes, "bands" -> bands)
+    def guard(): Unit = requireParams(spark, paramsPath, params) { p =>
+      s"incrementalNearDupStream: band index at $bandDir was built with " +
+        s"(shingleN=${p(0)}, numHashes=${p(1)}, bands=${p(2)}); " +
+        s"this probe uses (shingleN=$shingleN, numHashes=$numHashes, bands=$bands)"
     }
+    guard()
     val existing: DataFrame =
       if (fs.exists(bandPath))
         spark.read.parquet(bandDir)
@@ -337,13 +337,9 @@ object StreamingDedup {
       .select(col("band_id"), col("bucket"), col(idCol).as("id"))
     newBands.write.mode("overwrite").parquet(s"$bandDir/batch_id=$batchId")
     // persist the parameter tuple once the index exists (idempotent on
-    // replay: same call → same params, validated above)
-    if (!fs.exists(paramsPath)) {
-      import spark.implicits._
-      Seq((shingleN, numHashes, bands))
-        .toDF("shingle_n", "num_hashes", "bands")
-        .coalesce(1).write.mode("overwrite").parquet(paramsPath.toString)
-    }
+    // replay: same call → same params), then validate whichever tuple won
+    Sidecar.createIfAbsent(spark, paramsPath, params: _*)
+    guard()
   }
 
   /** The SEMANTIC incremental loop — the third tier of the
@@ -608,7 +604,7 @@ object StreamingDedup {
     * Exactly-once: the [[processIncrement]] machinery verbatim —
     * batch-keyed partition dirs written with OVERWRITE, the probe
     * excludes the current batch's own partition, Hadoop FileSystem
-    * path resolution. A `_params` sidecar guards (n, hashHexChars)
+    * path resolution. A `_params.json` sidecar guards (n, hashHexChars)
     * drift: an index accumulated under different gram parameters
     * would silently excise nothing. */
   def incrementalExciseStream(docs: DataFrame, idCol: String, textCol: String,
@@ -632,15 +628,14 @@ object StreamingDedup {
     val spark = batch.sparkSession
     val gramPath = new org.apache.hadoop.fs.Path(gramDir)
     val fs = gramPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paramsPath = new org.apache.hadoop.fs.Path(s"$gramDir/_params")
-    if (fs.exists(paramsPath)) {
-      val p = spark.read.parquet(paramsPath.toString)
-        .select("gram_n", "hash_hex_chars").head()
-      require(p.getInt(0) == n && p.getInt(1) == hashHexChars,
-        s"incrementalExciseStream: gram index at $gramDir was accumulated " +
-          s"with (n=${p.getInt(0)}, hashHexChars=${p.getInt(1)}); this " +
-          s"probe uses (n=$n, hashHexChars=$hashHexChars)")
+    val paramsPath = s"$gramDir/_params.json"
+    val params = Seq("gram_n" -> n, "hash_hex_chars" -> hashHexChars)
+    def guard(): Unit = requireParams(spark, paramsPath, params) { p =>
+      s"incrementalExciseStream: gram index at $gramDir was accumulated " +
+        s"with (n=${p(0)}, hashHexChars=${p(1)}); this " +
+        s"probe uses (n=$n, hashHexChars=$hashHexChars)"
     }
+    guard()
     val existing: DataFrame =
       if (fs.exists(gramPath))
         spark.read.parquet(gramDir)
@@ -657,10 +652,18 @@ object StreamingDedup {
     graft.operators.Dedup.gramHashes(batch, idCol, textCol, n, hashHexChars)
       .join(existing, Seq("_h"), "left_anti")
       .write.mode("overwrite").parquet(s"$gramDir/batch_id=$batchId")
-    if (!fs.exists(paramsPath))
-      spark.range(1)
-        .select(lit(n).cast("int").as("gram_n"),
-          lit(hashHexChars).cast("int").as("hash_hex_chars"))
-        .coalesce(1).write.mode("overwrite").parquet(paramsPath.toString)
+    Sidecar.createIfAbsent(spark, paramsPath, params: _*)
+    guard()
   }
+
+  /** Refuse a batch whose parameters differ from the store's
+    * `_params.json` sidecar, when the store has one; `msg` renders the
+    * stored values. The streaming sketch loops share it. */
+  private[streaming] def requireParams(spark: SparkSession, path: String, fields: Seq[(String, Int)])(
+      msg: Seq[Int] => String): Unit =
+    if (Sidecar.exists(spark, path)) {
+      val p = Sidecar.read(spark, path)
+      val stored = fields.map(f => p.int(f._1))
+      require(stored == fields.map(_._2), msg(stored))
+    }
 }

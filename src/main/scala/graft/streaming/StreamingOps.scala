@@ -40,11 +40,15 @@ object StreamingOps {
     * same filename rule as [[readDocumentStream]], so batch backfill and
     * the live stream share one contract; ref app/embedding_gen.py:315-409
     * uploads land per-user). Map-only: at 100 TB this is a parallel file
-    * scan with no shuffle; downstream writers partition by tenant. */
+    * scan with no shuffle; downstream writers partition by tenant.
+    * The landing dir is listed recursively rather than globbed: a glob
+    * path is probed for a streaming-sink metadata dir as a literal name,
+    * which logs a spurious `FileNotFoundException`. */
   def readUploadBatch(spark: SparkSession, landingDir: String): DataFrame =
     spark.read
       .option("wholetext", "true")
-      .text(landingDir + "/*")
+      .option("recursiveFileLookup", "true")
+      .text(landingDir)
       .select(
         regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1).as("tenant"),
         regexp_extract(input_file_name(), "([^/]+)$", 1).as("doc_id"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Sketch
+import graft.sources.{Sidecar, TableLoader}
 
 /** The sketch tier as incremental loops — the sixth incremental family
   * (after exact / LSH-band / semantic / graph / span-excision in
@@ -43,52 +44,23 @@ object StreamingSketch {
   // ------------------------------------------------------------------ //
 
   /** Validate (or, on first write, record) the sketch geometry at
-    * `dir/_params`. Fields is a (name → value) list; mismatch refuses
-    * with the accumulated-vs-probe message the other loops use.
+    * `dir/_params.json`. Fields is a (name → value) list; mismatch
+    * refuses with the accumulated-vs-probe message the other loops use.
     *
-    * First write: params are staged to a temp dir and published with a
-    * FileSystem.rename. Correctness does NOT rest on rename atomicity —
-    * semantics differ per filesystem (local renameTo refuses an
-    * existing non-empty target; HDFS's dir-onto-existing-dir rename
-    * instead moves the source INTO the target, "succeeding" while
-    * nesting a stale `_params_tmp_*` under `_params`). It rests on the
-    * UNCONDITIONAL validation below: whatever sidecar content wins,
-    * every writer re-reads it and refuses a geometry mismatch, closing
-    * the exists/write TOCTOU window the old check-then-write had.
-    * Post-publish we sweep any `_params_tmp_*` leftovers (the HDFS
-    * nested-move case and the local lost-race case) so no garbage dir
-    * lingers; parquet would ignore the underscore-prefixed child
-    * anyway, the sweep just keeps the store clean. */
+    * The first write publishes by create-if-absent ([[Sidecar]]), and
+    * correctness rests on the UNCONDITIONAL re-read below: whichever
+    * writer's sidecar exists, every writer validates against it and
+    * refuses a geometry mismatch, so there is no exists/write window. */
   private def guardParams(spark: SparkSession, dir: String, loop: String,
                           fields: Seq[(String, Int)]): Unit = {
-    val paramsPath = new org.apache.hadoop.fs.Path(s"$dir/_params")
-    val fs = paramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(paramsPath)) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$dir/_params_tmp_${java.util.UUID.randomUUID}")
-      spark.range(1)
-        .select(fields.map { case (n, v) => lit(v).cast("int").as(n) }: _*)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val won = try fs.rename(tmp, paramsPath)
-        catch { case _: java.io.IOException => false }
-      if (!won) fs.delete(tmp, true) // lost the race — validate below
-      // sweep stale tmp dirs: ours if the rename "succeeded" by moving
-      // it INSIDE an existing _params (HDFS semantics), or any other
-      // writer's leftovers
-      // (globStatus returns null when the glob's parent is absent)
-      Seq(s"$dir/_params_tmp_*", s"$dir/_params/_params_tmp_*")
-        .flatMap(g => Option(fs.globStatus(new org.apache.hadoop.fs.Path(g)))
-          .getOrElse(Array.empty).toSeq)
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-    val p = spark.read.parquet(paramsPath.toString)
-      .select(fields.map(f => col(f._1)): _*).head()
-    val stored = fields.indices.map(p.getInt)
-    require(stored == fields.map(_._2),
+    val path = s"$dir/_params.json"
+    Sidecar.createIfAbsent(spark, path, fields: _*)
+    StreamingDedup.requireParams(spark, path, fields) { stored =>
       s"$loop: sketch store at $dir was accumulated with " +
         fields.map(_._1).zip(stored).map { case (n, v) => s"$n=$v" }.mkString("(", ", ", ")") +
         "; this batch uses " +
-        fields.map { case (n, v) => s"$n=$v" }.mkString("(", ", ", ")"))
+        fields.map { case (n, v) => s"$n=$v" }.mkString("(", ", ", ")")
+    }
   }
 
   // ------------------------------------------------------------------ //
@@ -127,7 +99,7 @@ object StreamingSketch {
     * map-side — a metadata-sized query however much data the batches
     * carried. Feed straight into [[Sketch.cmEstimates]]. */
   def mergedCmGrid(spark: SparkSession, gridDir: String): DataFrame =
-    spark.read.parquet(gridDir)
+    TableLoader.read(spark, gridDir)
       .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
 
   // ------------------------------------------------------------------ //
@@ -165,7 +137,7 @@ object StreamingSketch {
   def mergedKmv(spark: SparkSession, sketchDir: String, groupCol: String,
                 k: Int): DataFrame = {
     val w = Window.partitionBy(groupCol).orderBy("h")
-    spark.read.parquet(sketchDir)
+    TableLoader.read(spark, sketchDir)
       .select(col(groupCol), col("h")).distinct()
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
@@ -204,5 +176,5 @@ object StreamingSketch {
     * positions (SketchSpec's OR-merge property). Feed through
     * [[Sketch.bloomArray]] into [[Sketch.bloomContamination]]. */
   def mergedBloomBits(spark: SparkSession, bitsDir: String): DataFrame =
-    spark.read.parquet(bitsDir).select("pos").distinct()
+    TableLoader.read(spark, bitsDir).select("pos").distinct()
 }

@@ -229,7 +229,7 @@ class AnnRewriteSpec extends AnyFunSuite {
 
   test("partitioned LSH store: injected predicate becomes partition pruning") {
     val planes = planesOf(extSpark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshidx").toString
+    val dir = TestDirs.create("graft_lshidx").toString
     Ann.writeLshIndex(
       Ann.withLshBucket(embeddings(extSpark).select("vec_id", "embedding"),
         "embedding", planes), dir)

@@ -57,14 +57,14 @@ class AnnSpec extends AnyFunSuite {
     val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "cvec")
     val assigned = Ann.assignCells(vecs, "id", "vec", cents, "cid", "cvec")
     val workload = Seq((0L, onCircle(0))).toDF("qid", "qvec")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfgate").toString
+    val dir = TestDirs.create("graft_ivfgate").toString
     val r = Ann.writeIvfIndexGated(spark, assigned, "id", "vec",
       cents, "cid", "cvec", dir, workload,
       nprobe = 2, k = 10, recallFloor = 0.9)
     assert(r == 1.0, s"full-width IVF recall must be exact, got $r")
     assert(new java.io.File(dir).exists(), "passing store must be published")
     // nprobe = 1: only the x-cell's 6 rows can surface — recall 0.6
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivfgate2").toString
+    val dir2 = TestDirs.create("graft_ivfgate2").toString
     val err = intercept[IllegalStateException] {
       Ann.writeIvfIndexGated(spark, assigned, "id", "vec",
         cents, "cid", "cvec", dir2, workload,
@@ -90,14 +90,14 @@ class AnnSpec extends AnyFunSuite {
       "failed rebuild must clean its staging dir")
     // tiny-but-perfect store: 12 rows probed at k=20 with full width IS
     // the exact answer — recall must divide by min(k, |truth|), not k
-    val dir4 = java.nio.file.Files.createTempDirectory("graft_ivfgate4").toString
+    val dir4 = TestDirs.create("graft_ivfgate4").toString
     val r4 = Ann.writeIvfIndexGated(spark, assigned, "id", "vec",
       cents, "cid", "cvec", dir4, workload,
       nprobe = 2, k = 20, recallFloor = 0.9)
     assert(r4 == 1.0,
       s"a store smaller than k whose probe is exact must measure 1.0, got $r4")
     // an empty workload refuses loudly instead of NaN-ing past the gate
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_ivfgate3").toString
+    val dir3 = TestDirs.create("graft_ivfgate3").toString
     val empty = Seq.empty[(Long, Seq[Double])].toDF("qid", "qvec")
     val e2 = intercept[IllegalArgumentException] {
       Ann.writeIvfIndexGated(spark, assigned, "id", "vec",
@@ -536,7 +536,7 @@ class AnnSpec extends AnyFunSuite {
       cents, "centroid_id", "centroid_vec", m = 8)
     val qv = vecOf(e, 9)
     lazy val idx = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_knng").toString + "/idx"
+      val dir = TestDirs.create("graft_knng").toString + "/idx"
       Ann.writeGraphIndex(edges, dir, nBuckets = 16)
       dir
     }
@@ -713,7 +713,7 @@ class AnnSpec extends AnyFunSuite {
     val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
     val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
       cents, "centroid_id", "centroid_vec", m = 4)
-    val idx = java.nio.file.Files.createTempDirectory("graft_knng_batch").toString + "/idx"
+    val idx = TestDirs.create("graft_knng_batch").toString + "/idx"
     Ann.writeGraphIndex(edges, idx, nBuckets = 16)
     val qids = Seq(9L, 17L, 25L)
     val queries = e.filter(col("vec_id").isin(qids.map(Long.box): _*))
@@ -757,7 +757,7 @@ class AnnSpec extends AnyFunSuite {
     val asgE = Ann.assignCells(existing, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
     val asgB = Ann.assignCells(batch, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
     val edges0 = Ann.knnGraph(asgE, "vec_id", "embedding", cents, "centroid_id", "centroid_vec", m = 4)
-    val idx = java.nio.file.Files.createTempDirectory("graft_knng_ins").toString + "/idx"
+    val idx = TestDirs.create("graft_knng_ins").toString + "/idx"
     Ann.writeGraphIndex(edges0, idx, nBuckets = 16)
     val n0 = spark.read.parquet(idx).count()
     val newEdges = Ann.graphInsert(asgE, asgB, "vec_id", "embedding", m = 4)
@@ -791,7 +791,7 @@ class AnnSpec extends AnyFunSuite {
       cents, "centroid_id", "centroid_vec", m = 1)
     assert(edges.filter(col("dst") === 2).select("src").as[Long].collect().toSeq == Seq(1L),
       "precondition: x's in-edges must be exactly {a→x} or this test proves nothing")
-    val dir = java.nio.file.Files.createTempDirectory("graft_knng_rep").toString
+    val dir = TestDirs.create("graft_knng_rep").toString
     val idx = dir + "/idx"; val tomb = dir + "/tomb"
     Ann.writeGraphIndex(edges, idx, nBuckets = 4)
     Ann.writeGraphTombstones(Seq(1L).toDF("vec_id"), "vec_id", tomb, nBuckets = 4)
@@ -814,7 +814,7 @@ class AnnSpec extends AnyFunSuite {
     val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
     val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
       cents, "centroid_id", "centroid_vec", m = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_knng_empty").toString
+    val dir = TestDirs.create("graft_knng_empty").toString
     val idx = dir + "/idx"; val tomb = dir + "/tomb"
     Ann.writeGraphIndex(edges, idx, nBuckets = 4)
     Ann.writeGraphTombstones(Seq(0L, 1L).toDF("vec_id"), "vec_id", tomb, nBuckets = 4)
@@ -1033,7 +1033,7 @@ class AnnSpec extends AnyFunSuite {
     val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
     val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
       cents, "centroid_id", "centroid_vec", m = 4)
-    val idx = java.nio.file.Files.createTempDirectory("graft_walk_parity").toString + "/idx"
+    val idx = TestDirs.create("graft_walk_parity").toString + "/idx"
     Ann.writeGraphIndex(edges, idx, nBuckets = 16)
     val edgeIds = spark.read.parquet(idx).select("src", "dst").persist()
     val vecs = e.select(col("vec_id").as("dst"), col("embedding").as("dst_vec")).persist()
@@ -1073,7 +1073,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("measureRecall: the probe-table exact side equals the crossJoin exact side") {
     val e = pinned
-    val dir = java.nio.file.Files.createTempDirectory("graft_recall_parity").toString
+    val dir = TestDirs.create("graft_recall_parity").toString
     val h = GraphIndex.build(spark, e, Seq("vec_id"), "embedding", dir,
       nCentroids = 8, m = 8, nBuckets = 8, beamWidth = 8, hops = 2)
     val withUid = e.withColumn("_muid", GraphIndex.uidFor(Seq("vec_id")))
@@ -1151,7 +1151,7 @@ class AnnSpec extends AnyFunSuite {
     val e = pinned
     val cents = Ann.headCentroids(e, "vec_id", "embedding", 8)
     val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_parity").toString
+    val dir = TestDirs.create("graft_ivf_parity").toString
     Ann.writeIvfIndex(assigned, s"$dir/store")
     val workload = e.filter(col("vec_id") % 40 === 9)
       .select(col("vec_id").as("_qid"), col("embedding").cast("array<double>").as("_qv"))

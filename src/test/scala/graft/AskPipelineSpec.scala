@@ -74,7 +74,7 @@ class AskPipelineSpec extends AnyFunSuite {
       "fused exact-path prompt diverged from the declarative tail")
     // graph path (the hot serving shape): askGraph's DataFrame tail vs
     // the fused askStateless over the same store
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuse").toString
+    val dir = TestDirs.create("graft_fuse").toString
     val h = operators.GraphIndex.build(spark, index, Seq("doc_id", "chunk_idx"),
       "embedding", dir, nCentroids = 4, m = 4, nBuckets = 4, beamWidth = 8, hops = 3)
     val hot = operators.GraphIndex.hot(spark, h)
@@ -96,7 +96,7 @@ class AskPipelineSpec extends AnyFunSuite {
   test("resident-text tier: zero-job retrieval tail is byte-identical to the DataFrame tail") {
     import org.apache.spark.sql.functions._
     val query = "spark join tuning"
-    val dir = java.nio.file.Files.createTempDirectory("graft_rtext").toString
+    val dir = TestDirs.create("graft_rtext").toString
     val h = operators.GraphIndex.build(spark, index, Seq("doc_id", "chunk_idx"),
       "embedding", dir, nCentroids = 4, m = 4, nBuckets = 4, beamWidth = 8, hops = 3)
     val plain = operators.GraphIndex.hot(spark, h)
@@ -332,7 +332,7 @@ class AskPipelineSpec extends AnyFunSuite {
   }
 
   test("askBatch routed through the graph store equals the exact batch") {
-    val gdir = java.nio.file.Files.createTempDirectory("graft_askb").toString
+    val gdir = TestDirs.create("graft_askb").toString
     val h = operators.GraphIndex.build(spark, index, Seq("doc_id", "chunk_idx"),
       "embedding", gdir, nCentroids = 4, m = 4, nBuckets = 8, beamWidth = 16, hops = 3)
     val (exact, _) = AskPipeline.askBatch(spark, index, emptyCache, batchQueries)

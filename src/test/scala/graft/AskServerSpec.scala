@@ -54,7 +54,7 @@ class AskServerSpec extends AnyFunSuite {
   private def withResidentServer(f: AskServer => Unit): Unit = {
     val (embedded, dfreq, n) = Embed.withTfIdfEmbedding(chunks, "chunk_text", "embedding")
     val tfIndex = Materialize(embedded)
-    val dir = java.nio.file.Files.createTempDirectory("graft_askresident").toString
+    val dir = TestDirs.create("graft_askresident").toString
     val h = operators.GraphIndex.build(spark, tfIndex, Seq("doc_id", "chunk_idx"),
       "embedding", dir, nCentroids = 2, m = 4, nBuckets = 4, beamWidth = 8, hops = 2)
     val hot = operators.GraphIndex.hot(spark, h, residentText = true)
@@ -107,7 +107,7 @@ class AskServerSpec extends AnyFunSuite {
 
   test("staleCheck=refuse answers 503 once the graph snapshot goes stale; log serves on") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_askstale").toString
+    val dir = TestDirs.create("graft_askstale").toString
     val h = operators.GraphIndex.build(spark, index, Seq("doc_id", "chunk_idx"),
       "embedding", dir, nCentroids = 2, m = 4, nBuckets = 4, beamWidth = 8, hops = 2)
     def delete(n: Int): Unit = {

@@ -27,8 +27,8 @@ class AskServingSpec extends AnyFunSuite {
   test("streaming ask: batched answers, cross-batch cache hit, replay idempotence") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val serveDir = java.nio.file.Files.createTempDirectory("graft_serve").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_serve_ck").toString
+    val serveDir = TestDirs.create("graft_serve").toString
+    val ckpt = TestDirs.create("graft_serve_ck").toString
     val input = MemoryStream[(Long, String)]
     val q = AskServing.askStream(
       input.toDF().toDF("query_id", "query"), index, serveDir, ckpt)

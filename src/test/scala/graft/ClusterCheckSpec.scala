@@ -19,7 +19,7 @@ class ClusterCheckSpec extends AnyFunSuite {
     val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx4g", "-Dspark.ui.enabled=false",
       "-cp", sys.props("java.class.path"), "graft.ClusterCheck")).toList
-    val outFile = java.nio.file.Files.createTempFile("graft_clck", ".log").toFile
+    val outFile = TestDirs.file("graft_clck", ".log").toFile
     val pb = new ProcessBuilder(cmd: _*)
     // the standalone Worker's executor launcher needs the Scala version
     // env that load-spark-env.sh would normally export

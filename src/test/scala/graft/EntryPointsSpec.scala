@@ -12,7 +12,7 @@ class EntryPointsSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   test("Verify.dump: a query that throws leaves no output, never an older run's parquet") {
-    val out = Files.createTempDirectory("graft_verify").toString
+    val out = TestDirs.create("graft_verify").toString
     spark.range(5).toDF("stale").coalesce(1).write.parquet(s"$out/q_throws")
     assert(Files.exists(Paths.get(s"$out/q_throws")))
     val failed = Verify.dump(spark, "/unused", out, Seq(
@@ -25,7 +25,7 @@ class EntryPointsSpec extends AnyFunSuite {
   }
 
   test("Verify.writeOracleSql: control characters survive a JSON round trip") {
-    val out = Files.createTempDirectory("graft_oracle").toString
+    val out = TestDirs.create("graft_oracle").toString
     val sql = Seq(
       "q_tab" -> "SELECT 1\tAS a",
       "q_cr" -> "SELECT 2\r\nAS \"b\\c\"",

@@ -27,7 +27,7 @@ class GraphIndexSpec extends AnyFunSuite {
   }
 
   private lazy val handle = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gidx").toString
+    val dir = TestDirs.create("graft_gidx").toString
     // nc=16/m=16/beam=32: the cheapest point of a settings sweep where
     // the graph walk's top-3 equals exact top-3 on every demo query
     // below — near-uniform synthetic vectors need the wide beam (real
@@ -107,7 +107,7 @@ class GraphIndexSpec extends AnyFunSuite {
 
   test("build refuses duplicate natural keys (silent node merge)") {
     val dup = embedded.limit(4).unionAll(embedded.limit(2))
-    val dir = java.nio.file.Files.createTempDirectory("graft_gdup").toString
+    val dir = TestDirs.create("graft_gdup").toString
     val e = intercept[IllegalArgumentException] {
       GraphIndex.build(spark, dup, Seq("doc_id", "chunk_idx"), "embedding", dir)
     }
@@ -121,7 +121,7 @@ class GraphIndexSpec extends AnyFunSuite {
     val held = embedded.select("doc_id").orderBy("doc_id").head().getString(0)
     val base = embedded.filter(col("doc_id") =!= held)
     val upload = embedded.filter(col("doc_id") === held)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gins").toString
+    val dir = TestDirs.create("graft_gins").toString
     val h = GI.build(spark, base, Seq("doc_id", "chunk_idx"), "embedding",
       dir, nCentroids = 16, m = 16, nBuckets = 16, beamWidth = 32, hops = 3)
     // query with the held-out doc's own first chunk text: a perfect-sim
@@ -374,7 +374,7 @@ class GraphIndexSpec extends AnyFunSuite {
     // a NARROW-beam store: the entry set is a strict subset of the
     // cells, so dropped cross-shard clique edges genuinely cost recall
     // (mid-walk re-routing into un-entered cells is confined away)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gshrec").toString
+    val dir = TestDirs.create("graft_gshrec").toString
     val h = GI.build(spark, embedded, Seq("doc_id", "chunk_idx"), "embedding",
       dir, nCentroids = 16, m = 4, nBuckets = 16, beamWidth = 2, hops = 2)
     val keys = Seq("doc_id", "chunk_idx")
@@ -429,7 +429,7 @@ class GraphIndexSpec extends AnyFunSuite {
     val held = embedded.select("doc_id").orderBy("doc_id").head().getString(0)
     val base = embedded.filter(col("doc_id") =!= held)
     val upload = embedded.filter(col("doc_id") === held)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gstale").toString
+    val dir = TestDirs.create("graft_gstale").toString
     val h = GI.build(spark, base, Seq("doc_id", "chunk_idx"), "embedding",
       dir, nCentroids = 16, m = 16, nBuckets = 16, beamWidth = 32, hops = 3)
     val hot0 = GI.hot(spark, h)
@@ -498,7 +498,7 @@ class GraphIndexSpec extends AnyFunSuite {
   /** A private store per lifecycle test — these mutate, and the shared
     * `handle` must stay pristine for the serving tests. */
   private def freshHandle(): GraphIndex.Handle = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_glc").toString
+    val dir = TestDirs.create("graft_glc").toString
     GraphIndex.build(spark, embedded, Seq("doc_id", "chunk_idx"), "embedding",
       dir, nCentroids = 16, m = 16, nBuckets = 16, beamWidth = 32, hops = 3)
   }
@@ -627,7 +627,7 @@ class GraphIndexSpec extends AnyFunSuite {
       .as[String].collect()
     val (heldOut, baseIds) = docIds.splitAt(2)
     // incremental history: build on the base, insert the held-out docs
-    val incDir = java.nio.file.Files.createTempDirectory("graft_grb_inc").toString
+    val incDir = TestDirs.create("graft_grb_inc").toString
     val hInc = GI.build(spark, embedded.filter(col("doc_id").isin(baseIds: _*)),
       Seq("doc_id", "chunk_idx"), "embedding",
       incDir, nCentroids = 16, m = 16, nBuckets = 16, beamWidth = 32, hops = 3)
@@ -643,7 +643,7 @@ class GraphIndexSpec extends AnyFunSuite {
     val hReb = GI.rebuild(spark, hInc, nCentroids = 16, m = 16,
       nBuckets = 16, beamWidth = 32, hops = 3)
     // fresh-build twin over exactly the surviving rows
-    val freshDir = java.nio.file.Files.createTempDirectory("graft_grb_fresh").toString
+    val freshDir = TestDirs.create("graft_grb_fresh").toString
     val hFresh = GI.build(spark,
       embedded.filter(!(col("doc_id") === victim._1 && col("chunk_idx") === victim._2)),
       Seq("doc_id", "chunk_idx"), "embedding",
@@ -670,7 +670,7 @@ class GraphIndexSpec extends AnyFunSuite {
     val docIds = embedded.select("doc_id").distinct().orderBy("doc_id")
       .as[String].collect()
     val (heldOut, baseIds) = docIds.splitAt(2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gdrift").toString
+    val dir = TestDirs.create("graft_gdrift").toString
     val h = GI.build(spark, embedded.filter(col("doc_id").isin(baseIds: _*)),
       Seq("doc_id", "chunk_idx"), "embedding",
       dir, nCentroids = 16, m = 16, nBuckets = 16, beamWidth = 32, hops = 3)
@@ -727,7 +727,7 @@ class GraphIndexSpec extends AnyFunSuite {
     val docIds = embedded.select("doc_id").distinct().orderBy("doc_id")
       .as[String].collect()
     val (heldOut, baseIds) = docIds.splitAt(2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gcmp").toString
+    val dir = TestDirs.create("graft_gcmp").toString
     val h = GI.build(spark, embedded.filter(col("doc_id").isin(baseIds: _*)),
       Seq("doc_id", "chunk_idx"), "embedding",
       dir, nCentroids = 16, m = 16, nBuckets = 16, beamWidth = 32, hops = 3)
@@ -820,7 +820,7 @@ class GraphIndexSpec extends AnyFunSuite {
   }
 
   test("buildServing: derives the sqrt-N codebook, gates on recall, refuses below the floor") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gserve").toString
+    val dir = TestDirs.create("graft_gserve").toString
     // floor 0: always publishes; the returned recall is the evidence
     val (h, recall) = GraphIndex.buildServing(spark, embedded,
       Seq("doc_id", "chunk_idx"), "embedding", dir,
@@ -838,7 +838,7 @@ class GraphIndexSpec extends AnyFunSuite {
       .head().getSeq[Double](0)).count() > 0)
     // an unreachable floor refuses AND removes the store — a
     // below-floor index must never be left lying around to serve
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_gserve2").toString
+    val dir2 = TestDirs.create("graft_gserve2").toString
     val err = intercept[IllegalStateException] {
       GraphIndex.buildServing(spark, embedded, Seq("doc_id", "chunk_idx"),
         "embedding", dir2, m = 16, nBuckets = 16, beamWidth = 32, hops = 3,
@@ -861,7 +861,7 @@ class GraphIndexSpec extends AnyFunSuite {
 
   test("size-derived hier: small-corpus default ≡ flat bit-for-bit; past the crossover ≡ explicit two-level; composes with banding; rebuild invariant holds") {
     import operators.{GraphIndex => GI}
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = TestDirs.create(p).toString
     def snap(h: GraphIndex.Handle) = (cellSnapshot(h), edgeSnapshot(h))
     // BELOW the crossover (fixture ≪ DefaultAutoHierAt): the default is
     // the historical flat assignment, bit-for-bit
@@ -914,7 +914,7 @@ class GraphIndexSpec extends AnyFunSuite {
 
   test("size-derived banding: small-corpus default ≡ plain build bit-for-bit; past the crossover ≡ explicit bands") {
     import operators.{GraphIndex => GI}
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = TestDirs.create(p).toString
     // BELOW the crossover (this fixture ≪ DefaultAutoBandAt): the
     // default build must be the historical plain build, bit-for-bit —
     // compare against autoBandAt = MaxValue (auto-banding suppressed)
@@ -987,7 +987,7 @@ class GraphIndexSpec extends AnyFunSuite {
     val docIds = embedded.select("doc_id").distinct().orderBy("doc_id")
       .as[String].collect()
     val (heldOut, baseIds) = docIds.splitAt(3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gdrift2").toString
+    val dir = TestDirs.create("graft_gdrift2").toString
     val h = GI.build(spark, embedded.filter(col("doc_id").isin(baseIds: _*)),
       Seq("doc_id", "chunk_idx"), "embedding",
       dir, nCentroids = 16, m = 16, nBuckets = 16, beamWidth = 32, hops = 3)
@@ -1042,7 +1042,7 @@ class GraphIndexSpec extends AnyFunSuite {
       "a just-probed store must not probe again until `every` more inserts")
     // trackDrift=false: the insert lands but the counter stays put
     val more = embedded.filter(col("doc_id") === baseIds.head)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_gdrift3").toString
+    val dir2 = TestDirs.create("graft_gdrift3").toString
     val h2 = GI.build(spark, embedded.filter(col("doc_id").isin(baseIds.tail: _*)),
       keyCols, "embedding", dir2, nCentroids = 16, m = 16, nBuckets = 16,
       beamWidth = 32, hops = 3)

@@ -33,7 +33,7 @@ class GraphLifecycleSpec extends AnyFunSuite {
     val allDocs = embedded.select("doc_id").distinct().orderBy("doc_id")
       .as[String].collect().toSeq
     val (baseDocs, pending0) = allDocs.splitAt(allDocs.length / 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_glife").toString
+    val dir = TestDirs.create("graft_glife").toString
     val h = GraphIndex.build(spark, embedded.filter(col("doc_id").isin(baseDocs: _*)),
       Seq("doc_id", "chunk_idx"), "embedding",
       dir, nCentroids = 8, m = 8, nBuckets = 16, beamWidth = 16, hops = 3)
@@ -89,7 +89,7 @@ class GraphLifecycleSpec extends AnyFunSuite {
     // trailing rebuild == fresh build over exactly the surviving rows
     val hReb = GraphIndex.rebuild(spark, h, nCentroids = 8)
     val live = liveChunks()
-    val freshDir = java.nio.file.Files.createTempDirectory("graft_glife_fresh").toString
+    val freshDir = TestDirs.create("graft_glife_fresh").toString
     val survivors = embedded
       .withColumn("_k", struct(col("doc_id"), col("chunk_idx")))
       .filter(col("doc_id").isin(liveDocs.toSeq: _*))

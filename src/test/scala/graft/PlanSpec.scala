@@ -33,7 +33,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("widen() is split-aware: pre-split input passes through with no Exchange") {
     val par = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("graft_widen").toString + "/t"
+    val dir = TestDirs.create("graft_widen").toString + "/t"
     spark.range(10000).selectExpr("id", "cast(id as string) as s")
       .repartition(par).write.parquet(dir)
     val preSplit = spark.read.parquet(dir)
@@ -189,7 +189,7 @@ class PlanSpec extends AnyFunSuite {
     val e = spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "embedding")
     val cents = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_plan").toString + "/idx"
+    val idx = TestDirs.create("graft_ivf_plan").toString + "/idx"
     val assigned = graft.operators.Ann.assignCells(e, "vec_id", "embedding",
       cents, "centroid_id", "centroid_vec")
     graft.operators.Ann.writeIvfIndex(assigned.select("vec_id", "embedding", "cell_id"), idx)
@@ -215,7 +215,7 @@ class PlanSpec extends AnyFunSuite {
     val assigned = Ann.assignCells(e, "vec_id", "embedding", cents, "centroid_id", "centroid_vec")
     val edges = Ann.knnGraph(assigned, "vec_id", "embedding",
       cents, "centroid_id", "centroid_vec", m = 4)
-    val idx = java.nio.file.Files.createTempDirectory("graft_knng_plan").toString + "/idx"
+    val idx = TestDirs.create("graft_knng_plan").toString + "/idx"
     Ann.writeGraphIndex(edges, idx, nBuckets = 16)
     // the exact read shape Ann.storeLookup issues for one hop
     val frontier = Seq(0L, 3L, 5L)
@@ -235,7 +235,7 @@ class PlanSpec extends AnyFunSuite {
   test("GraphIndex serving: sidecar re-attach prunes to the visited uid buckets") {
     import graft.operators.GraphIndex
     val e = spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_gidx_plan").toString
+    val dir = TestDirs.create("graft_gidx_plan").toString
     val h = GraphIndex.build(spark, e, Seq("vec_id"), "embedding", dir,
       nCentroids = 8, m = 4, nBuckets = 16, beamWidth = 4, hops = 2)
     val qv = e.filter(col("vec_id") === 9)
@@ -256,7 +256,7 @@ class PlanSpec extends AnyFunSuite {
   test("tombstone gate: the mark-store read prunes to the visited buckets") {
     import graft.operators.Ann
     import spark.implicits._
-    val idx = java.nio.file.Files.createTempDirectory("graft_tomb_plan").toString + "/t"
+    val idx = TestDirs.create("graft_tomb_plan").toString + "/t"
     Ann.writeGraphTombstones((0L until 64L).toDF("vec_id"), "vec_id", idx, 16)
     // the exact shape filterTombstoned issues for a KB-sized visited set
     val visited = Seq((3L, 0.9), (19L, 0.8)).toDF("vec_id", "sim")
@@ -281,7 +281,7 @@ class PlanSpec extends AnyFunSuite {
     val cb = Pq.train(e, "vec_id", "vec", m = 8, k = 8, iters = 1)
     val enc = Pq.encode(e, "vec_id", "vec", cb).toDF()
       .select(col("id").as("vec_id"), col("codes"))
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_plan").toString + "/idx"
+    val idx = TestDirs.create("graft_ivfpq_plan").toString + "/idx"
     Ann.writeIvfIndex(
       Ann.assignCells(e, "vec_id", "vec", cents, "centroid_id", "centroid_vec")
         .select("vec_id", "vec", "cell_id").join(enc, "vec_id"), idx)
@@ -298,8 +298,8 @@ class PlanSpec extends AnyFunSuite {
     // persist a fingerprint index carrying extra columns (as a real
     // accumulated index would), then verify the corpus probe's scan is
     // pruned to the fingerprint — 100 TB of indexed text never loads
-    val idxDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_fp_index_planspec").getAbsolutePath
+    // a short name: the scan's Location is abbreviated to 100 characters
+    val idxDir = TestDirs.create("fpidx").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     graft.operators.Dedup.exact(docs, "doc_id", "text")
       .join(docs, docs("doc_id") === col("keep_id"))
@@ -309,7 +309,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(graft.operators.Dedup.exactIncrement(
       docs.limit(10), "doc_id", "text", existing))
     val idxScan = p.linesIterator
-      .find(l => l.contains("Scan parquet") && l.contains("graft_fp_index_planspec"))
+      .find(l => l.contains("Scan parquet") && l.contains("/fpidx"))
     assert(idxScan.isDefined, s"no index scan found:\n$p")
     assert(idxScan.get.contains("ReadSchema: struct<fingerprint:string>"),
       s"index scan reads more than the fingerprint:\n${idxScan.get}")

@@ -94,7 +94,7 @@ class PqSpec extends AnyFunSuite {
     val assignedEncoded = Ann.assignCells(vecs, "id", "vec", cents, "cid", "cvec")
       .join(enc, "id")
     val workload = Seq((0L, onCircle(0))).toDF("qid", "qvec")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpqgate").toString
+    val dir = TestDirs.create("graft_ivfpqgate").toString
     val r = Pq.writeIvfPqIndexGated(spark, assignedEncoded, "id", "vec", cb2,
       cents, "cid", "cvec", dir, workload,
       nprobe = 2, candidates = 12, k = 10, recallFloor = 0.9)
@@ -139,7 +139,7 @@ class PqSpec extends AnyFunSuite {
     assert(old.size == table.length * k)
     assert(now == old)
     // a null query vector is refused before anything is staged
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_nullq").toString + "/s"
+    val dir = TestDirs.create("graft_ivfpq_nullq").toString + "/s"
     val withNull = workload.union(
       Seq((-1L, null.asInstanceOf[Seq[Double]])).toDF("qid", "qvec"))
     val err = intercept[IllegalArgumentException](

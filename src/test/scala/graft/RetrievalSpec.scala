@@ -97,7 +97,7 @@ class RetrievalSpec extends AnyFunSuite {
       (3L, "join of the tables in the warehouse by the planner"),
       (4L, "nothing relevant here at all"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25idx").toString
+    val idx = TestDirs.create("graft_bm25idx").toString
     Retrieval.writeBm25Index(docs, "doc_id", "text", idx, nBuckets = 8)
     val adhoc = Retrieval.bm25(docs, "doc_id", "text", "spark join")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -122,7 +122,7 @@ class RetrievalSpec extends AnyFunSuite {
       (5L, "??? !!! ..."), // token-less: no postings, sidecar-only
       (6L, "spark spark join join planner"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25del").toString
+    val idx = TestDirs.create("graft_bm25del").toString
     Retrieval.writeBm25Index(docs, "doc_id", "text", idx, nBuckets = 8)
     val before = Retrieval.bm25FromIndex(spark, idx, "doc_id", "spark join")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -151,7 +151,7 @@ class RetrievalSpec extends AnyFunSuite {
       (5L, "??? !!! ..."),
       (6L, "spark spark join join planner"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25cmp").toString
+    val idx = TestDirs.create("graft_bm25cmp").toString
     Retrieval.writeBm25Index(docs, "doc_id", "text", idx, nBuckets = 8)
     // delete a posting-bearing doc AND a token-less doc: both must
     // fold out of every statistic (N, id_hash) at compaction
@@ -161,7 +161,7 @@ class RetrievalSpec extends AnyFunSuite {
     val survivors = docs.filter(!col("doc_id").isin(2L, 5L))
     // fingerprint meta matches the surviving corpus exactly
     Retrieval.requireBm25IndexMatches(spark, out, survivors, "doc_id")
-    val fresh = java.nio.file.Files.createTempDirectory("graft_bm25fre").toString
+    val fresh = TestDirs.create("graft_bm25fre").toString
     Retrieval.writeBm25Index(survivors, "doc_id", "text", fresh, nBuckets = 8)
     val compacted = Retrieval.bm25FromIndex(spark, out, "doc_id", "spark join")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -221,7 +221,7 @@ class RetrievalSpec extends AnyFunSuite {
     val chunks = Ingest.chunk(docs.filter(Ingest.nonBlank(col("text"))), "text", 8)
       .select(col("doc_id"), col("chunk_idx"), col("chunk_text"))
       .withColumn("_ck", concat(col("doc_id"), lit("#"), col("chunk_idx")))
-    val idx = java.nio.file.Files.createTempDirectory("graft_hyidx").toString
+    val idx = TestDirs.create("graft_hyidx").toString
     Retrieval.writeBm25Index(chunks, "_ck", "chunk_text", idx, nBuckets = 8)
     val adhoc = Retrieval.askHybrid(spark, docs, "ERRCODE_7731 shuffle", topK = 2,
       chunkSize = 8).select("prompt").head().getString(0)
@@ -246,7 +246,7 @@ class RetrievalSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val segA = docs.filter(col("doc_id") <= 2)
     val segB = docs.filter(col("doc_id") > 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25seg").toString
+    val dir = TestDirs.create("graft_bm25seg").toString
     Retrieval.appendBm25Segment(segA, "doc_id", "text", dir, "s0001", nBuckets = 8)
     Retrieval.appendBm25Segment(segB, "doc_id", "text", dir, "s0002", nBuckets = 8)
     def scores(df: org.apache.spark.sql.DataFrame) =
@@ -261,7 +261,7 @@ class RetrievalSpec extends AnyFunSuite {
     // compaction folds to the monolithic layout: same scores, and the
     // guard meta equals a from-scratch monolithic build's (drift guard
     // passes against the union corpus)
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25cmp").toString
+    val out = TestDirs.create("graft_bm25cmp").toString
     Retrieval.compactBm25Segments(spark, dir, out)
     assert(scores(Retrieval.bm25FromIndex(spark, out, "doc_id", "spark join")) == adhoc)
     Retrieval.requireBm25IndexMatches(spark, out, docs.select("doc_id"), "doc_id")
@@ -296,7 +296,7 @@ class RetrievalSpec extends AnyFunSuite {
       (6L, "the spark planner joins the join"),
       (7L, "warehouse filler text"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25auto").toString
+    val dir = TestDirs.create("graft_bm25auto").toString
     def nSegs: Int = {
       val p = new java.io.File(s"$dir/segments")
       p.listFiles().count(_.isDirectory)
@@ -335,10 +335,10 @@ class RetrievalSpec extends AnyFunSuite {
       (2L, "spark join"),
       (6L, "·—·—· ≈≈≈"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25tok").toString
+    val dir = TestDirs.create("graft_bm25tok").toString
     Retrieval.appendBm25Segment(docs.filter(col("doc_id") === 1L), "doc_id", "text", dir, "s1")
     Retrieval.appendBm25Segment(docs.filter(col("doc_id") > 1L), "doc_id", "text", dir, "s2")
-    val out = java.nio.file.Files.createTempDirectory("graft_bm25tokc").toString
+    val out = TestDirs.create("graft_bm25tokc").toString
     Retrieval.compactBm25Segments(spark, dir, out) // legal store: must not refuse
     Retrieval.requireBm25IndexMatches(spark, out, docs.select("doc_id"), "doc_id")
     // masked duplicate: doc 2 appears AGAIN alongside a token-less doc.
@@ -347,7 +347,7 @@ class RetrievalSpec extends AnyFunSuite {
     // (the old behavior left the duplicate segment durably on disk,
     // double-counting df/N in every probe until compaction finally
     // refused).
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_bm25mask").toString
+    val dir2 = TestDirs.create("graft_bm25mask").toString
     Retrieval.appendBm25Segment(docs, "doc_id", "text", dir2, "s1")
     val err = intercept[IllegalArgumentException] {
       Retrieval.appendBm25Segment(docs.filter(col("doc_id") === 2L), "doc_id", "text", dir2, "s2")
@@ -376,7 +376,7 @@ class RetrievalSpec extends AnyFunSuite {
     }
     val errCmp = intercept[IllegalArgumentException] {
       Retrieval.compactBm25Segments(spark, dir2,
-        java.nio.file.Files.createTempDirectory("graft_bm25maskc").toString)
+        TestDirs.create("graft_bm25maskc").toString)
     }
     assert(errCmp.getMessage.contains("disjoint"), errCmp.getMessage)
   }
@@ -386,7 +386,7 @@ class RetrievalSpec extends AnyFunSuite {
       (1L, "spark shuffle partitions tune the join"),
       (2L, "spark join broadcast threshold"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25lease").toString
+    val dir = TestDirs.create("graft_bm25lease").toString
     // first append creates the store and must leave NO lease behind
     Retrieval.appendBm25Segment(docs.filter(col("doc_id") === 1L),
       "doc_id", "text", dir, "s1")
@@ -406,13 +406,13 @@ class RetrievalSpec extends AnyFunSuite {
     // FRESH store a held lease refuses before even the meta bootstrap
     // write — two racing first-appenders can no longer both write meta
     // (the loser clobbering the holder's n_buckets/id_col)
-    val freshDir = java.nio.file.Files.createTempDirectory("graft_bm25lease0").toString
+    val freshDir = TestDirs.create("graft_bm25lease0").toString
     assert(new java.io.File(s"$freshDir/_append_lease").createNewFile())
     intercept[IllegalStateException] {
       Retrieval.appendBm25Segment(docs.filter(col("doc_id") === 1L),
         "doc_id", "text", freshDir, "s1")
     }
-    assert(!new java.io.File(s"$freshDir/meta").exists(),
+    assert(!new java.io.File(s"$freshDir/meta.json").exists(),
       "a lease refusal on a fresh store must not bootstrap meta")
     // the documented crash recovery re-opens the store
     Retrieval.releaseBm25AppendLease(spark, dir)
@@ -435,7 +435,7 @@ class RetrievalSpec extends AnyFunSuite {
       (2L, "spark join"),
       (3L, "broadcast the small side"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25bloom").toString
+    val dir = TestDirs.create("graft_bm25bloom").toString
     def app(sel: org.apache.spark.sql.Column, seg: String) =
       Retrieval.appendBm25Segment(docs.filter(sel), "doc_id", "text", dir, seg,
         idBloom = true)
@@ -488,7 +488,7 @@ class RetrievalSpec extends AnyFunSuite {
       (2L, "spark join"),
       (3L, "broadcast the small side"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25bloomstore").toString
+    val dir = TestDirs.create("graft_bm25bloomstore").toString
     Retrieval.appendBm25Segment(docs.filter(col("doc_id") === 1L),
       "doc_id", "text", dir, "s1", idBloom = true)
     // DEFAULT-flag append: must keep maintaining the store's bloom
@@ -542,7 +542,7 @@ class RetrievalSpec extends AnyFunSuite {
       (2L, "spark join"),
       (3L, "broadcast the small side"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25bloomcorrupt").toString
+    val dir = TestDirs.create("graft_bm25bloomcorrupt").toString
     Retrieval.appendBm25Segment(docs.filter(col("doc_id") === 1L),
       "doc_id", "text", dir, "s1", idBloom = true)
     def corruptParams(): Unit = {
@@ -584,7 +584,7 @@ class RetrievalSpec extends AnyFunSuite {
       (2L, "spark join"),
       (3L, "broadcast the small side"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25rec").toString
+    val dir = TestDirs.create("graft_bm25rec").toString
     for (id <- 1L to 3L)
       Retrieval.appendBm25Segment(docs.filter(col("doc_id") === id),
         "doc_id", "text", dir, f"s$id%04d", nBuckets = 8, autoCompactAt = 0)
@@ -636,7 +636,7 @@ class RetrievalSpec extends AnyFunSuite {
     val stale = Ingest.chunk(docs.filter(col("doc_id") < 3), "text", 8)
       .select(col("doc_id"), col("chunk_idx"), col("chunk_text"))
       .withColumn("_ck", concat(col("doc_id"), lit("#"), col("chunk_idx")))
-    val idx = java.nio.file.Files.createTempDirectory("graft_hydrift").toString
+    val idx = TestDirs.create("graft_hydrift").toString
     Retrieval.writeBm25Index(stale, "_ck", "chunk_text", idx, nBuckets = 8)
     val err = intercept[IllegalArgumentException] {
       Retrieval.askHybrid(spark, docs, "ERRCODE_7731 shuffle", topK = 2,

@@ -12,7 +12,7 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("charset fallback: strict utf-8, latin-1 for invalid byte streams") {
-    val dir = Files.createTempDirectory("graft_corpus").toFile
+    val dir = TestDirs.create("graft_corpus").toFile
     Files.write(new java.io.File(dir, "PMC_utf8.txt").toPath,
       "café text".getBytes("UTF-8"))
     // 0xE9 alone is invalid UTF-8 but is 'é' in latin-1
@@ -27,7 +27,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("corpus scan: whole file per row, filename as doc_id, glob filter") {
-    val dir = Files.createTempDirectory("graft_corpus2").toFile
+    val dir = TestDirs.create("graft_corpus2").toFile
     Files.writeString(new java.io.File(dir, "PMC1.txt").toPath, "line1\nline2")
     Files.writeString(new java.io.File(dir, "skip.csv").toPath, "nope")
     val docs = CorpusSource.scan(spark, dir.getAbsolutePath, "PMC*.txt")
@@ -36,7 +36,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("tenant index: partitionBy(user_id) layout and partition-pruned read") {
-    val idx = Files.createTempDirectory("graft_idx").toString + "/index"
+    val idx = TestDirs.create("graft_idx").toString + "/index"
     val rows = Seq(
       ("d1", 0, "text a", Seq(1f, 0f), "alice"),
       ("d2", 0, "text b", Seq(0f, 1f), "bob"))
@@ -59,7 +59,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("tenant upsert: replaced doc's chunks swap, other docs/tenants intact") {
-    val idx = Files.createTempDirectory("graft_upsert").toString + "/index"
+    val idx = TestDirs.create("graft_upsert").toString + "/index"
     IndexStore.appendToIndex(Seq(
       ("d1", 0, "old d1 c0", Seq(1f, 0f), "alice"),
       ("d1", 1, "old d1 c1", Seq(1f, 1f), "alice"),
@@ -93,7 +93,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("tenant delete: named docs drop, last-doc delete purges the partition dir") {
-    val idx = Files.createTempDirectory("graft_del").toString + "/index"
+    val idx = TestDirs.create("graft_del").toString + "/index"
     IndexStore.appendToIndex(Seq(
       ("d1", 0, "erase me c0", Seq(1f, 0f), "alice"),
       ("d1", 1, "erase me c1", Seq(1f, 1f), "alice"),
@@ -116,7 +116,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("purgeTenant: path-hostile tenant id (Spark percent-escapes the dir) still erases") {
-    val idx = Files.createTempDirectory("graft_esc").toString + "/index"
+    val idx = TestDirs.create("graft_esc").toString + "/index"
     // ':' and ' ' are in Spark's escapePathName charset — the partition
     // dir on disk is NOT literally "user_id=ten:ant 7"
     val hostile = "ten:ant 7"
@@ -138,7 +138,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compactPartitioned: per-append small files merge, content and pruning intact") {
-    val idx = Files.createTempDirectory("graft_cmp").toString + "/index"
+    val idx = TestDirs.create("graft_cmp").toString + "/index"
     // three upload batches = three file sets per tenant dir
     (0 until 3).foreach { i =>
       IndexStore.appendToIndex(Seq(
@@ -168,7 +168,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("clustered layout: disjoint per-file key ranges + pushed key filter") {
-    val dir = Files.createTempDirectory("graft_clustered").toString + "/tbl"
+    val dir = TestDirs.create("graft_clustered").toString + "/tbl"
     val rows = spark.range(0, 10000).toDF("k")
       .withColumn("payload", md5(col("k").cast("string")))
     IndexStore.writeClustered(rows, dir, "k", numFiles = 8)
@@ -197,7 +197,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("hasAnyData gate: false for missing/empty, true after append") {
-    val idx = Files.createTempDirectory("graft_idx2").toString + "/index"
+    val idx = TestDirs.create("graft_idx2").toString + "/index"
     assert(!IndexStore.hasAnyData(spark, idx))
     IndexStore.appendToIndex(
       Seq(("d1", 0, "t", Seq(1f), "u")).toDF("doc_id", "chunk_idx", "text", "embedding", "user_id"),

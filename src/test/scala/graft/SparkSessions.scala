@@ -15,7 +15,7 @@ object SparkSessions {
       // fresh warehouse per JVM: managed-table locations from a previous
       // test run would otherwise collide with the fresh in-memory catalog
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        TestDirs.create("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -96,7 +96,7 @@ class SqSpec extends AnyFunSuite {
   }
 
   test("int8 tier is materially smaller on disk than the float tier") {
-    val dir = java.nio.file.Files.createTempDirectory("sq_size").toString
+    val dir = TestDirs.create("sq_size").toString
     embeddings.select("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/fp32")
     Sq.quantize(embeddings, "embedding").select("vec_id", "sq_code", "sq_scale")
@@ -124,7 +124,7 @@ class SqSpec extends AnyFunSuite {
       (1L, Seq(1.0, 0.002))   // code (127, 0); exact winner for q
     ).toDF("id", "vec")
     val workload = Seq((0L, Seq(1.0, 0.004))).toDF("qid", "qvec")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sqgate").toString
+    val dir = TestDirs.create("graft_sqgate").toString
     // healthy knobs first: candidates=2 re-ranks both ties exactly
     val r = Sq.writeIndexGated(spark, rows, "id", "vec", dir, workload,
       k = 1, candidates = 2, recallFloor = 0.9)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -175,7 +173,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("incremental-dedup loop: each micro-batch probes the grown index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_incloop").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_incloop").toFile.getAbsolutePath
     val input = MemoryStream[(Long, String)]
     val q = StreamingDedup.incrementalDedupStream(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text",
@@ -206,7 +204,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("near-dup incremental loop: micro-batches probe the grown band index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_nearloop").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_nearloop").toFile.getAbsolutePath
     def doc(i: Int) = (0 until 24).map(j => s"w${i}_$j").mkString(" ")
     val input = MemoryStream[(Long, String)]
     val q = StreamingDedup.incrementalNearDupStream(
@@ -260,7 +258,7 @@ class StreamingDedupSpec extends AnyFunSuite {
         .collect().map(_.toString).sorted.toSeq)
 
     // reference: both batches complete without interruption
-    val clean = Files.createTempDirectory("graft_ndclean").toFile.getAbsolutePath
+    val clean = TestDirs.create("graft_ndclean").toFile.getAbsolutePath
     StreamingDedup.processNearDupIncrement(b0, 0L, "doc_id", "text",
       s"$clean/bands", s"$clean/out", 3, 8, 8)
     StreamingDedup.processNearDupIncrement(b1, 1L, "doc_id", "text",
@@ -270,7 +268,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // the verdict write and BEFORE the band write — reproduce that torn
     // on-disk state literally (out/batch_id=1 present, bands/batch_id=1
     // absent), exactly what the op's first write leaves behind
-    val crash = Files.createTempDirectory("graft_ndcrash").toFile.getAbsolutePath
+    val crash = TestDirs.create("graft_ndcrash").toFile.getAbsolutePath
     StreamingDedup.processNearDupIncrement(b0, 0L, "doc_id", "text",
       s"$crash/bands", s"$crash/out", 3, 8, 8)
     val priorIdx = spark.read.parquet(s"$crash/bands")
@@ -292,16 +290,15 @@ class StreamingDedupSpec extends AnyFunSuite {
       3L -> "dup_corpus", 4L -> "new"), s"got $statuses")
 
     // second crash point: batch 0 dies between the band write and the
-    // _params write (index exists, sidecar missing) — replay must also
-    // converge and leave the sidecar in place
-    val crash2 = Files.createTempDirectory("graft_ndcrash2").toFile.getAbsolutePath
+    // _params.json write (index exists, sidecar missing) — replay must
+    // also converge and leave the sidecar in place
+    val crash2 = TestDirs.create("graft_ndcrash2").toFile.getAbsolutePath
     StreamingDedup.processNearDupIncrement(b0, 0L, "doc_id", "text",
       s"$crash2/bands", s"$crash2/out", 3, 8, 8)
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(s"$crash2/bands/_params"))
+    assert(new java.io.File(s"$crash2/bands/_params.json").delete())
     StreamingDedup.processNearDupIncrement(b0, 0L, "doc_id", "text",
       s"$crash2/bands", s"$crash2/out", 3, 8, 8)
-    assert(new java.io.File(s"$crash2/bands/_params").exists)
+    assert(new java.io.File(s"$crash2/bands/_params.json").exists)
     val s0 = spark.read.parquet(s"$crash2/out").select("doc_id", "status")
       .as[(Long, String)].collect().toMap
     assert(s0 == Map(1L -> "new", 2L -> "new"))
@@ -309,7 +306,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("near-dup loop: parameter drift against a persisted index fails loudly") {
     def doc(i: Int) = (0 until 24).map(j => s"w${i}_$j").mkString(" ")
-    val root = Files.createTempDirectory("graft_nddrift").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_nddrift").toFile.getAbsolutePath
     val b0 = Seq((1L, doc(1))).toDF("doc_id", "text")
     StreamingDedup.processNearDupIncrement(b0, 0L, "doc_id", "text",
       s"$root/bands", s"$root/out", 3, 8, 8)
@@ -323,7 +320,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 
   test("incremental-dedup loop: checkpoint replay of a batch is idempotent") {
-    val root = Files.createTempDirectory("graft_increplay").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_increplay").toFile.getAbsolutePath
     val (index, out) = (s"$root/index", s"$root/out")
     def snapshot() = (
       spark.read.parquet(out).select("doc_id", "status", "batch_id")
@@ -365,7 +362,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("semantic incremental loop: micro-batches probe the grown vector index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_semloop").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_semloop").toFile.getAbsolutePath
     val input = MemoryStream[(Long, Seq[Double])]
     val q = StreamingDedup.incrementalSemanticStream(
       input.toDF().toDF("vec_id", "vec"), "vec_id", "vec",
@@ -417,12 +414,12 @@ class StreamingDedupSpec extends AnyFunSuite {
       spark.read.parquet(s"$root/index").select("vec_id", "cell_id", "batch_id")
         .collect().map(_.toString).sorted.toSeq)
 
-    val clean = Files.createTempDirectory("graft_semclean").toFile.getAbsolutePath
+    val clean = TestDirs.create("graft_semclean").toFile.getAbsolutePath
     run(clean, b0, 0L); run(clean, b1, 1L)
 
     // crashed run: batch 1's first attempt dies AFTER the verdict write
     // and BEFORE the index write — reproduce that torn state literally
-    val crash = Files.createTempDirectory("graft_semcrash").toFile.getAbsolutePath
+    val crash = TestDirs.create("graft_semcrash").toFile.getAbsolutePath
     run(crash, b0, 0L)
     val prior = spark.read.parquet(s"$crash/index")
       .filter(col("batch_id") < 1L).select("vec_id", "vec", "cell_id")
@@ -442,7 +439,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
     // second crash point: batch 0 dies between the index write and the
     // _codebook write — replay must converge and leave the sidecar
-    val crash2 = Files.createTempDirectory("graft_semcrash2").toFile.getAbsolutePath
+    val crash2 = TestDirs.create("graft_semcrash2").toFile.getAbsolutePath
     run(crash2, b0, 0L)
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(s"$crash2/index/_codebook"))
@@ -454,7 +451,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 
   test("semantic loop: codebook drift fails loudly even with identical centroid ids") {
-    val root = Files.createTempDirectory("graft_semdrift").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_semdrift").toFile.getAbsolutePath
     val b0 = Seq((1L, onCircle(0))).toDF("vec_id", "vec")
     StreamingDedup.processSemanticIncrement(b0, 0L, "vec_id", "vec",
       semCents, "cid", "cvec", s"$root/index", s"$root/out", tau = 0.98)
@@ -476,7 +473,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // different recipe, so the _recipe sidecar must refuse a mismatched
     // probe exactly like codebook drift
     val ySign = Seq(Seq(0.0, 1.0)); val xSign = Seq(Seq(1.0, 0.0))
-    val root = Files.createTempDirectory("graft_semrecipe").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_semrecipe").toFile.getAbsolutePath
     def run(b: org.apache.spark.sql.DataFrame, id: Long,
             nSupers: Int, bands: Seq[Seq[Seq[Double]]]): Unit =
       StreamingDedup.processSemanticIncrement(b, id, "vec_id", "vec",
@@ -516,7 +513,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // changes NO stored assignment (primary cells are identical), so
     // mixed-p batches against one store must all be ACCEPTED by the
     // recipe guard — it is a probe-time knob like tau, not a recipe.
-    val root = Files.createTempDirectory("graft_semprobes").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_semprobes").toFile.getAbsolutePath
     def run(b: org.apache.spark.sql.DataFrame, id: Long, p: Int): Unit =
       StreamingDedup.processSemanticIncrement(b, id, "vec_id", "vec",
         semCents, "cid", "cvec", s"$root/index", s"$root/out", tau = 0.999,
@@ -549,7 +546,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("excise loop: spans duplicated against earlier batches are removed; stream ≡ batch on id-ordered input") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_exloop").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_exloop").toFile.getAbsolutePath
     val b0 = Seq((1L, "a b c q r s"), (2L, "m n o p q"))
     val b1 = Seq((3L, "x y z a b c"), (4L, "fresh words only here"))
     val input = MemoryStream[(Long, String)]
@@ -596,7 +593,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.Ann
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_gloop").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_gloop").toFile.getAbsolutePath
     val input = MemoryStream[(Long, Seq[Double])]
     val q = StreamingDedup.incrementalGraphStream(
       input.toDF().toDF("vec_id", "vec"), "vec_id", "vec",
@@ -637,12 +634,12 @@ class StreamingDedupSpec extends AnyFunSuite {
       spark.read.parquet(s"$root/edges").select("src", "dst", "batch_id")
         .collect().map(_.toString).sorted.toSeq)
 
-    val clean = Files.createTempDirectory("graft_gclean").toFile.getAbsolutePath
+    val clean = TestDirs.create("graft_gclean").toFile.getAbsolutePath
     run(clean, b0, 0L); run(clean, b1, 1L)
 
     // crashed run: batch 1 dies AFTER its edge write, BEFORE its node
     // write — reproduce that torn state literally, then restart
-    val crash = Files.createTempDirectory("graft_gcrash").toFile.getAbsolutePath
+    val crash = TestDirs.create("graft_gcrash").toFile.getAbsolutePath
     run(crash, b0, 0L)
     val prior = spark.read.parquet(s"$crash/nodes")
       .filter(col("batch_id") < 1L).select("vec_id", "vec", "cell_id")
@@ -660,7 +657,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 
   test("graph loop: codebook drift is refused by the sidecar") {
-    val root = Files.createTempDirectory("graft_gdrift").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_gdrift").toFile.getAbsolutePath
     val b0 = Seq((1L, onCircle(0))).toDF("vec_id", "vec")
     StreamingDedup.processGraphIncrement(b0, 0L, "vec_id", "vec",
       semCents, "cid", "cvec", s"$root/nodes", s"$root/edges", m = 2, nBuckets = 4)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +21,7 @@ class StreamingSketchSpec extends AnyFunSuite {
   test("streamed count-min grid merges by addition to the one-shot grid") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = Files.createTempDirectory("graft_cmloop").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_cmloop").toFile.getAbsolutePath
     val input = MemoryStream[String]
     val q = StreamingSketch.cmSketchStream(
       input.toDF().toDF("tok"), "tok",
@@ -68,7 +66,7 @@ class StreamingSketchSpec extends AnyFunSuite {
   test("streamed KMV partials union-merge to the one-shot bottom-k") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = Files.createTempDirectory("graft_kmvloop").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_kmvloop").toFile.getAbsolutePath
     val input = MemoryStream[(String, String)]
     // k=3 < the 9-token vocabulary, so the estimator path (not the
     // exact small-domain path) is what the merge must preserve
@@ -97,7 +95,7 @@ class StreamingSketchSpec extends AnyFunSuite {
   test("streamed Bloom partials OR-merge to the one-shot filter") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = Files.createTempDirectory("graft_bloomloop").toFile.getAbsolutePath
+    val root = TestDirs.create("graft_bloomloop").toFile.getAbsolutePath
     def doc(words: Seq[String]) = words.mkString(" ")
     val b0 = Seq(doc(Seq("alpha", "beta", "gamma", "delta")))
     val b1 = Seq(doc(Seq("gamma", "delta", "epsilon", "zeta")))

@@ -13,9 +13,9 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("incremental ingest: streamed files land in the index, exactly once") {
-    val landing = Files.createTempDirectory("graft_landing").toFile
-    val index = Files.createTempDirectory("graft_index").toString + "/idx"
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString + "/ck"
+    val landing = TestDirs.create("graft_landing").toFile
+    val index = TestDirs.create("graft_index").toString + "/idx"
+    val ckpt = TestDirs.create("graft_ckpt").toString + "/ck"
     Files.writeString(new java.io.File(landing, "doc1.txt").toPath,
       Seq.fill(40)("alpha beta gamma delta").mkString(" "))
     Files.writeString(new java.io.File(landing, "doc2.txt").toPath, "tiny doc")
@@ -42,7 +42,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = graft.sources.TableLoader.loadEvents(spark, dir)
     val schema = batch.schema
     // stage the converted events as a streamable parquet dir
-    val staged = Files.createTempDirectory("graft_events").toString + "/ev"
+    val staged = TestDirs.create("graft_events").toString + "/ev"
     batch.write.parquet(staged)
 
     val stream = StreamingOps.readEventStream(spark, staged, schema)
@@ -111,8 +111,8 @@ class StreamingSpec extends AnyFunSuite {
         .select("doc_id", "chunk_idx", "chunk_text"),
       "chunk_text", "embedding")
 
-    val qDir = Files.createTempDirectory("graft_q").toString + "/q"
-    val ckpt = Files.createTempDirectory("graft_qck").toString + "/ck"
+    val qDir = TestDirs.create("graft_q").toString + "/q"
+    val ckpt = TestDirs.create("graft_qck").toString + "/ck"
     Seq((1L, "spark join tuning"), (2L, "pizza dough"))
       .toDF("query_id", "query").write.parquet(qDir)
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +19,7 @@ class TableLoaderSpec extends AnyFunSuite {
   private val micros = 1704067201234567L
 
   private def roundtrip(writeDf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val dir = Files.createTempDirectory("graft_tl").toString
+    val dir = TestDirs.create("graft_tl").toString
     writeDf.write.mode("overwrite").parquet(s"$dir/events.parquet")
     TableLoader.loadEvents(spark, dir)
   }
